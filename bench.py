@@ -282,23 +282,6 @@ def tiled_stencil_bench(spark) -> dict[str, float]:
         best = min(best, time.time() - t0)
     out["slope_tiled_bucket"] = round(best, 3)
 
-    # compiled JVM kernel on the shuffle (100-TB) path — quantifies
-    # what deleting Python/Arrow entirely is worth (build is
-    # idempotent; silently absent without a JDK)
-    import subprocess
-    if tiled.jvm_kernels_jar() is None:
-        subprocess.run(["sh", "scripts/build_jvm_kernels.sh"],
-                       capture_output=True, cwd=os.path.dirname(__file__) or ".")
-    if tiled.jvm_kernels_jar() is not None:
-        spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
-        tiled.slope_tiled_jvm(tdf).write.mode("overwrite").format("noop").save()
-        best = float("inf")
-        for _ in range(REPS):
-            t0 = time.time()
-            tiled.slope_tiled_jvm(tdf).write.mode("overwrite").format("noop").save()
-            best = min(best, time.time() - t0)
-        out["slope_tiled_jvm"] = round(best, 3)
-        spark.conf.unset("spark.xrspatial.halo.strategy")
     tiled.table_scan_conf(spark)  # restore the narrow-table batch
     return out
 

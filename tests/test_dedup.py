@@ -102,10 +102,14 @@ def test_embedding_neardup(spark):
     vecs = list(base)
     vecs.append(base[4] + rng.normal(scale=0.01, size=16).astype(np.float32))  # id 20 ~ id 4
     vecs.append(base[4].copy())  # id 21 == id 4
-    pdf = pd.DataFrame({"vec_id": range(len(vecs)), "embedding": [list(map(float, v)) for v in vecs]})
+    ids = list(range(len(vecs)))
+    vecs.append(base[7].copy())  # a second row carrying id 7
+    ids.append(7)
+    pdf = pd.DataFrame({"vec_id": ids, "embedding": [list(map(float, v)) for v in vecs]})
     df = spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>")
-    got = {(r["id_a"], r["id_b"]): r["cosine"]
-           for r in dedup.embedding_neardup_pairs(df, threshold=0.95).collect()}
+    rows = dedup.embedding_neardup_pairs(df, threshold=0.95).collect()
+    assert all(r["id_a"] != r["id_b"] for r in rows)  # no self-pairs
+    got = {(r["id_a"], r["id_b"]): r["cosine"] for r in rows}
     assert (4, 21) in got and got[(4, 21)] == pytest.approx(1.0)
     assert (4, 20) in got
     # random gaussian pairs in dim 16 essentially never reach 0.95

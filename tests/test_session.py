@@ -1,0 +1,33 @@
+"""Session defaults fit the host: no JVM is started here."""
+
+import os
+
+from xarray_spatial_spark import session
+
+
+def test_default_cpus_follow_affinity(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_cpus() == 3
+
+
+def test_default_driver_memory_fits_physical_ram(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    phys_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 20
+    heap = session.default_driver_memory()
+    assert heap.endswith("m")
+    assert int(heap[:-1]) == min(16 << 10, phys_mb // 4)
+    assert int(heap[:-1]) < phys_mb  # pre-touched heap must fit the host
+
+
+def test_default_driver_memory_capped_and_overridable(monkeypatch):
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    page = 4096
+    fake = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": (512 << 30) // page}
+    monkeypatch.setattr(session.os, "sysconf", lambda k: fake[k])
+    assert session.default_driver_memory() == "16384m"
+    fake["SC_PHYS_PAGES"] = (8 << 30) // page
+    assert session.default_driver_memory() == "2048m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "6g")
+    assert session.default_driver_memory() == "6g"

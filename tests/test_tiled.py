@@ -191,11 +191,13 @@ def test_focal_mean_multipass_fused(spark, arr):
             + plan.count("FlatMapGroupsInArrow")) == 2  # pack + one stencil
 
 
-def test_broadcast_halo_matches_shuffle(spark, arr):
+@pytest.mark.parametrize("dtype", [np.float64, np.float32])
+def test_broadcast_halo_matches_shuffle(spark, arr, dtype):
     """Broadcast-strips halo (zero shuffle) must equal the shuffle
-    path bit-for-bit, ragged edge tiles and NaN blobs included."""
+    path bit-for-bit, ragged edge tiles and NaN blobs included, on
+    float64 and float32 blobs."""
     df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=32, tile_w=32).persist()
+    tdf = tiled.tile(df, tile_h=32, tile_w=32, dtype=dtype).persist()
     try:
         base = tiled.numpy_from_tiled(surface.slope(tdf), value_col="value")
         spark.conf.set("spark.xrspatial.halo.strategy", "broadcast")
@@ -248,11 +250,13 @@ def test_broadcast_halo_cap(spark, arr):
         spark.conf.unset("spark.xrspatial.halo.broadcast.maxBytes")
 
 
-def test_bucket_halo_matches_shuffle(spark, arr):
+@pytest.mark.parametrize("dtype", [np.float64, np.float32])
+def test_bucket_halo_matches_shuffle(spark, arr, dtype):
     """Co-partitioned (bucket) halo == shuffle path bit-for-bit,
-    cross-super-tile regions, ragged edges and NaN blobs included."""
+    cross-super-tile regions, ragged edges and NaN blobs included, on
+    float64 and float32 blobs."""
     df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=16, tile_w=16).persist()
+    tdf = tiled.tile(df, tile_h=16, tile_w=16, dtype=dtype).persist()
     try:
         base = tiled.numpy_from_tiled(surface.slope(tdf), value_col="value")
         spark.conf.set("spark.xrspatial.halo.strategy", "bucket")
@@ -326,21 +330,6 @@ def test_focal_stats_float32_high_dynamic_range(spark):
     np.testing.assert_allclose(got, exp, rtol=1e-4, equal_nan=True)
 
 
-def test_arrow_assemble_matches_pandas(spark, arr):
-    """The applyInArrow assemble (zero-copy blob reads) must equal the
-    applyInPandas twin bit-for-bit on the shuffle strategy."""
-    df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=32, tile_w=32)
-    outs = {}
-    for flag in ("true", "false"):
-        spark.conf.set("spark.xrspatial.halo.arrow", flag)
-        try:
-            outs[flag] = tiled.numpy_from_tiled(surface.slope(tdf))
-        finally:
-            spark.conf.unset("spark.xrspatial.halo.arrow")
-    np.testing.assert_array_equal(outs["true"], outs["false"])
-
-
 def test_heterogeneous_fused_chain_matches_sequential(spark, arr):
     """smooth -> slope -> smooth as ONE fused exchange == the three
     operators run sequentially (3 exchanges), using the public kernel
@@ -384,31 +373,6 @@ def test_auto_dispatch_bucket_for_bucketed_table(spark, arr, tmp_path):
         spark.conf.unset("spark.xrspatial.halo.strategy")
         spark.sql("DROP TABLE IF EXISTS t_auto_bucket")
         tiled.table_scan_conf(spark)
-
-
-def test_slope_tiled_jvm_matches_python(spark, arr):
-    """Compiled JVM slope kernel (jvm/xss_kernels.jar) == the Python
-    kernel to float32 ulp (atan comes from different libms), same NaN
-    domain edges.  Builds the jar on first run; skips if no JDK."""
-    import subprocess
-
-    if tiled.jvm_kernels_jar() is None:
-        import os
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        r = subprocess.run(["sh", "scripts/build_jvm_kernels.sh"],
-                           capture_output=True, cwd=repo)
-        if r.returncode != 0 or tiled.jvm_kernels_jar() is None:
-            pytest.skip("JDK/javac unavailable; JVM kernel not built")
-    df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=32, tile_w=32, dtype=np.float32)
-    spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
-    try:
-        py = tiled.numpy_from_tiled(surface.slope(tdf))
-        jv = tiled.numpy_from_tiled(tiled.slope_tiled_jvm(tdf))
-    finally:
-        spark.conf.unset("spark.xrspatial.halo.strategy")
-    assert (np.isnan(py) == np.isnan(jv)).all()
-    np.testing.assert_allclose(jv, py, atol=1e-4, equal_nan=True)
 
 
 def test_two_bucketed_tables_different_blocks_coexist(spark, arr, tmp_path):

@@ -759,6 +759,8 @@ def embedding_neardup_pairs(
             dots = np.cumsum(prod.astype(np.float64), axis=1)[:, -1]
             cos = dots / (norms[ja] * norms[jb])
             keep = cos >= thr
+            # two rows repeating one id in a bucket are not a pair
+            keep &= ids[ja] != ids[jb]
             out_a.append(ids[ja[keep]])
             out_b.append(ids[jb[keep]])
             out_c.append(cos[keep])

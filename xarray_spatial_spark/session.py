@@ -33,18 +33,40 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(str(zpath))
 
 
+_MAX_HEAP_MB = 16 << 10
+
+
+def default_cpus() -> int:
+    """Cores this process may run on (its CPU affinity, which honours
+    container/cgroup pinning), unless ``SPARK_GRAFT_CPUS`` overrides."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """Driver heap: ``SPARK_DRIVER_MEMORY`` if set, else a quarter of
+    physical RAM (the JVM's own default max-heap share) capped at 16g.
+    The heap is committed and pre-touched at start-up (see below), so
+    it must fit the host's free memory, not just its address space."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(_MAX_HEAP_MB, (phys >> 20) // 4)}m"
+
+
 def get_spark(
     app_name: str = "xarray_spatial_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{default_cpus()}]"
     if shuffle_partitions is None:
         # local[N] or local[*]
-        n = master[master.index("[") + 1: -1] if "[" in master else "32"
-        shuffle_partitions = os.cpu_count() if n == "*" else int(n)
+        n = master[master.index("[") + 1: -1] if "[" in master else "*"
+        shuffle_partitions = default_cpus() if n == "*" else int(n)
+    heap = default_driver_memory()
 
     builder = (
         SparkSession.builder.master(master)
@@ -64,12 +86,12 @@ def get_spark(
         # EVERYTHING every pass — measured +20-45% on small pure-
         # Catalyst queries).  Cached classes are tiny; hold thousands.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
-        # 16g, NOT bigger: on this VM an oversized heap collapses
-        # 32-thread throughput ~7x (first-touch page faults across a
-        # huge young gen dominate; measured sha2-100M: 48g->24s,
+        # at most 16g: an oversized heap collapses 32-thread
+        # throughput ~7x (first-touch page faults across a huge young
+        # gen dominate; measured sha2-100M on a 32-core VM: 48g->24s,
         # 16g->2.8s at local[32]). Real clusters size executors the
         # same way: several smaller JVMs beat one giant heap.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", heap)
         # -Xms = -Xmx + AlwaysPreTouch: commit the whole heap at
         # startup.  Lazy heap growth page-faults DURING jobs (measured:
         # 60%+ kernel time bursts and 2-5x run-to-run variance on the
@@ -78,9 +100,8 @@ def get_spark(
         # humongous-allocation path.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:+AlwaysPreTouch -XX:+UseG1GC -Xms"
-            + os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-            + " -XX:G1HeapRegionSize=32m",
+            f"-XX:+AlwaysPreTouch -XX:+UseG1GC -Xms{heap}"
+            " -XX:G1HeapRegionSize=32m",
         )
         # NOTE on spark.sql.parquet.columnarReaderBatchSize: the 4096
         # default is right for narrow tables (8-row batches cost a

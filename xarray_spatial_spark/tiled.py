@@ -35,6 +35,7 @@ from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,8 +53,8 @@ def is_tiled(df: DataFrame) -> bool:
 _DTYPES = {8: np.float64, 4: np.float32}
 
 
-def _decode(buf: bytes, h: int, w: int) -> np.ndarray:
-    """Blob -> (h, w) array; dtype inferred from the byte length, so
+def _decode(buf: bytes | pa.Buffer, h: int, w: int) -> np.ndarray:
+    """Blob -> (h, w) view; dtype inferred from the byte length, so
     float32 and float64 rasters share one format (float32 halves scan,
     shuffle, and Arrow bytes; the reference's surface kernels compute
     in float32 anyway, xrspatial/slope.py:58)."""
@@ -284,7 +285,7 @@ def _jvm_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
 
 def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
     """Fallback message emitter for radius > EDGE (or inputs without
-    edge blobs): decodes each tile in Python and emits all 9 messages.
+    edge blobs): views each tile in Python and emits all 9 messages.
     One extra JVM->Python crossing of the raster; correct for any
     radius <= tile size."""
     msg_schema = (
@@ -292,18 +293,17 @@ def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
         "iscenter int, transposed int, th int, tw int, "
         + ", ".join(f"{b} binary" for b in bands)
     )
+    target = _arrow_schema_of(msg_schema)
 
-    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in MSG_FIELDS}
-            for b in bands:
-                rows[b] = []
-            for rec in pdf.itertuples(index=False):
-                ty, tx = int(rec.ty), int(rec.tx)
-                h, w = int(rec.h), int(rec.w)
-                th, tw = int(rec.th), int(rec.tw)
+    def _emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            keys = _key_arrays(rb)
+            blobs = {b: rb.column(b) for b in bands}
+            rows: dict[str, list] = {f.name: [] for f in target}
+            for i in range(rb.num_rows):
+                ty, tx, h, w, th, tw = (int(keys[c][i]) for c in TILE_KEY_COLS)
                 gy, gx = ty * th, tx * tw
-                arrs = {b: _decode(getattr(rec, b), h, w) for b in bands}
+                arrs = {b: _blob_view(blobs[b], i, h, w) for b in bands}
                 for dy in (-1, 0, 1):
                     for dx in (-1, 0, 1):
                         dty, dtx = ty + dy, tx + dx
@@ -315,37 +315,15 @@ def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
                         chi = min(w, (dtx * tw + tw + r) - gx)
                         if rlo >= rhi or clo >= chi:
                             continue
-                        center = dy == 0 and dx == 0
-                        rows["ty"].append(dty)
-                        rows["tx"].append(dtx)
-                        rows["gy0"].append(gy + rlo)
-                        rows["gx0"].append(gx + clo)
-                        rows["sh"].append(rhi - rlo)
-                        rows["sw"].append(chi - clo)
-                        rows["iscenter"].append(1 if center else 0)
-                        rows["transposed"].append(0)
-                        rows["th"].append(th)
-                        rows["tw"].append(tw)
+                        msg = (dty, dtx, gy + rlo, gx + clo, rhi - rlo,
+                               chi - clo, int(dy == 0 and dx == 0), 0, th, tw)
+                        for k, v in zip(MSG_FIELDS, msg):
+                            rows[k].append(v)
                         for b in bands:
-                            rows[b].append(
-                                getattr(rec, b) if center
-                                else arrs[b][rlo:rhi, clo:chi].tobytes()
-                            )
-            yield pd.DataFrame(rows)
+                            rows[b].append(arrs[b][rlo:rhi, clo:chi].tobytes())
+            yield pa.RecordBatch.from_pydict(rows, schema=target)
 
-    return tdf.mapInPandas(_emit, schema=msg_schema)
-
-
-_PD_TYPES = {"long": np.int64, "int": np.int32, "double": np.float64,
-             "binary": object, "string": object}
-
-
-def _empty_frame(schema: str) -> pd.DataFrame:
-    cols = {}
-    for part in schema.split(", "):
-        name, typ = part.rsplit(" ", 1)
-        cols[name] = pd.Series(dtype=_PD_TYPES.get(typ, object))
-    return pd.DataFrame(cols)
+    return tdf.mapInArrow(_emit, schema=msg_schema)
 
 
 def _strip_rows(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
@@ -418,22 +396,77 @@ def _clip_place(pad, oy0, ox0, gy0, gx0, sh, sw, src) -> None:
         src[slo_y:shi_y, slo_x:shi_x]
 
 
-def _strip_entries(rec, bands, r) -> dict:
-    """Strip-row record -> {band: {kind: (buf, gy0, gx0, sh, sw,
-    transposed)}} with each strip's own global coords."""
-    h, w = int(rec.h), int(rec.w)
-    gy = int(rec.ty) * int(rec.th)
-    gx = int(rec.tx) * int(rec.tw)
-    toph, lc = min(r, h), min(r, w)
-    out = {}
-    for b in bands:
-        out[b] = {
-            "top": (getattr(rec, f"{b}__top"), gy, gx, toph, w, 0),
-            "bot": (getattr(rec, f"{b}__bot"), gy + h - toph, gx, toph, w, 0),
-            "l": (getattr(rec, f"{b}__l"), gy, gx, h, lc, 1),
-            "r": (getattr(rec, f"{b}__r"), gy, gx + w - lc, h, lc, 1),
+# Every halo strategy assembles a tile from the same parts: the centre
+# block plus neighbour "pieces" (gy0, gx0, sh, sw, {band: array}) —
+# whole sibling tiles, shuffled messages or perimeter strips — each a
+# zero-copy view of an Arrow binary cell.  The strategies differ only
+# in how they gather the pieces.
+
+def _blob_view(col, i: int, sh: int, sw: int,
+               transposed: bool = False) -> np.ndarray:
+    """Zero-copy (sh, sw) view of row ``i`` of an Arrow binary column:
+    ``_decode`` reads the cell's buffer in place (no Python ``bytes``
+    copy).  Transposed strips are stored (sw, sh) row-major."""
+    buf = col[i].as_buffer()
+    return _decode(buf, sw, sh).T if transposed else _decode(buf, sh, sw)
+
+
+def _key_arrays(tbl) -> dict[str, np.ndarray]:
+    """The tile-key columns of an Arrow table / record batch as numpy."""
+    return {c: tbl.column(c).to_numpy(zero_copy_only=False)
+            for c in TILE_KEY_COLS}
+
+
+def _reduce_tile(meta: dict, centre: dict, pieces, r: int, reduce_fn,
+                 target: pa.Schema) -> pa.RecordBatch:
+    """Assemble one tile and reduce it: NaN-pad the centre blocks by
+    ``r``, clip every neighbour piece into place, run ``reduce_fn``
+    (all-NaN windows' RuntimeWarnings silenced) and convert its pandas
+    frame to the ``target`` Arrow schema."""
+    h, w = meta["h"], meta["w"]
+    oy0, ox0 = meta["ty"] * meta["th"] - r, meta["tx"] * meta["tw"] - r
+    padded = {}
+    for b, blk in centre.items():
+        pad = np.full((h + 2 * r, w + 2 * r), np.nan, dtype=blk.dtype)
+        pad[r:r + h, r:r + w] = blk
+        padded[b] = pad
+    for gy0, gx0, sh, sw, srcs in pieces:
+        for b, src in srcs.items():
+            _clip_place(padded[b], oy0, ox0, gy0, gx0, sh, sw, src)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", category=RuntimeWarning)
+        pdf = reduce_fn(meta, padded)
+    return pa.RecordBatch.from_arrays(_arrow_arrays(pdf, target), schema=target)
+
+
+def _strip_lookup(tbl, bands: Sequence[str], r: int):
+    """Arrow table of ``_strip_rows`` rows -> ``piece(tile, kind)``,
+    the tile's ``kind`` strip as a piece with its own global coords, or
+    None when the table has no such tile."""
+    keys = _key_arrays(tbl)
+    row = {t: i for i, t in enumerate(zip(keys["ty"].tolist(),
+                                          keys["tx"].tolist()))}
+    cols = {(b, kind): tbl.column(f"{b}__{kind}")
+            for b in bands for kind in ("top", "bot", "l", "r")}
+
+    def piece(t: tuple, kind: str):
+        i = row.get(t)
+        if i is None:
+            return None
+        h, w = int(keys["h"][i]), int(keys["w"][i])
+        gy, gx = t[0] * int(keys["th"][i]), t[1] * int(keys["tw"][i])
+        toph, lc = min(r, h), min(r, w)
+        gy0, gx0, sh, sw, tr = {
+            "top": (gy, gx, toph, w, False),
+            "bot": (gy + h - toph, gx, toph, w, False),
+            "l": (gy, gx, h, lc, True),
+            "r": (gy, gx + w - lc, h, lc, True),
+        }[kind]
+        return gy0, gx0, sh, sw, {
+            b: _blob_view(cols[(b, kind)], i, sh, sw, tr) for b in bands
         }
-    return out
+
+    return piece
 
 
 # block key: tiles group into (block x block) super-tiles; the bucket
@@ -517,7 +550,7 @@ def _block_strip_rows(
     # fresh aliases (s_*) on every carried column: both cogroup sides
     # descend from the same scan, and Spark's self-join attribute
     # dedup otherwise prunes the strip side's tile-key columns away
-    # before the pandas UDF sees them
+    # before the Arrow UDF sees them
     return s.select(
         F.explode(dests).alias("bk"),
         *[F.col(c).alias(f"s_{c}") for c in s.columns],
@@ -543,6 +576,7 @@ def _halo_bucket(
         "bk", block_key_col(block)
     )
     strips = _block_strip_rows(tdf, r, bands, block)
+    target = _arrow_schema_of(out_schema)
 
     def _check_block(key0: int, t: tuple) -> None:
         want = (t[0] // block) * _BK + t[1] // block
@@ -558,109 +592,43 @@ def _halo_bucket(
                 "block size"
             )
 
-    def _asm_core(tiles: dict, meta: dict, sdict: dict) -> pd.DataFrame:
-        outs = []
-        for t, arrs in tiles.items():
-            h, w, th, tw = meta[t]
-            oy0, ox0 = t[0] * th - r, t[1] * tw - r
-            padded = {}
-            for b in bands:
-                pad = np.full((h + 2 * r, w + 2 * r), np.nan,
-                              dtype=arrs[b].dtype)
-                pad[r:r + h, r:r + w] = arrs[b]
-                padded[b] = pad
-            for dy, dx in _NBRS8:
-                nb = (t[0] + dy, t[1] + dx)
-                if nb in tiles:
-                    nh, nw, nth, ntw = meta[nb]
-                    for b in bands:
-                        _clip_place(padded[b], oy0, ox0,
-                                    nb[0] * nth, nb[1] * ntw,
-                                    nh, nw, tiles[nb][b])
-                elif nb in sdict:
-                    kind = _NBR_STRIP[(dy, dx)]
-                    for b in bands:
-                        buf, gy0, gx0, sh, sw, tr = sdict[nb][b][kind]
-                        src = (_decode(buf, sw, sh).T if tr
-                               else _decode(buf, sh, sw))
-                        _clip_place(padded[b], oy0, ox0, gy0, gx0,
-                                    sh, sw, src)
-            m = {"ty": t[0], "tx": t[1], "h": h, "w": w, "th": th, "tw": tw}
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore", category=RuntimeWarning)
-                outs.append(reduce_fn(m, padded))
-        return pd.concat(outs, ignore_index=True)
-
-    def _strips_dict(strips_pdf: pd.DataFrame) -> dict:
-        sp = strips_pdf.rename(
-            columns={c: c[2:] for c in strips_pdf.columns
-                     if c.startswith("s_")}
-        )
-        return {
-            (int(rec.ty), int(rec.tx)): _strip_entries(rec, bands, r)
-            for rec in sp.itertuples(index=False)
-        }
-
-    if _arrow_assemble_enabled(tdf.sparkSession):
-        import pyarrow as pa
-
-        target = _arrow_schema_of(out_schema)
-
-        def _asm_arrow(key, main_tbl, strips_tbl):
-            if main_tbl.num_rows == 0:
-                return target.empty_table()
-            key0 = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
-            scal = {c: main_tbl.column(
-                        main_tbl.schema.get_field_index(c)
-                    ).to_numpy(zero_copy_only=False)
-                    for c in ("ty", "tx", "h", "w", "th", "tw")}
-            blob_cols = {b: main_tbl.column(
-                             main_tbl.schema.get_field_index(b)
-                         ).combine_chunks() for b in bands}
-            tiles: dict = {}
-            meta: dict = {}
-            for i in range(main_tbl.num_rows):
-                t = (int(scal["ty"][i]), int(scal["tx"][i]))
-                _check_block(key0, t)
-                h, w = int(scal["h"][i]), int(scal["w"][i])
-                meta[t] = (h, w, int(scal["th"][i]), int(scal["tw"][i]))
-                blocks = {}
-                for b in bands:
-                    buf = blob_cols[b][i].as_buffer()
-                    isz = buf.size // (h * w) if h * w else 8
-                    blocks[b] = np.frombuffer(
-                        buf, dtype=_DTYPES[isz]).reshape(h, w)
-                tiles[t] = blocks
-            # strips are perimeter-scale: pandas conversion is cheap
-            sdict = _strips_dict(strips_tbl.to_pandas())
-            return pa.Table.from_arrays(
-                _arrow_arrays(_asm_core(tiles, meta, sdict), target),
-                schema=target,
-            )
-
-        return (
-            main.groupBy("bk")
-            .cogroup(strips.groupBy("bk"))
-            .applyInArrow(_asm_arrow, schema=out_schema)
-        )
-
-    def _asm(key, main_pdf: pd.DataFrame, strips_pdf: pd.DataFrame):
-        if len(main_pdf) == 0:
-            return _empty_frame(out_schema)
+    def _asm(key: tuple, main_tbl: pa.Table, strips_tbl: pa.Table) -> pa.Table:
+        if main_tbl.num_rows == 0:
+            return target.empty_table()
+        key0 = int(key[0].as_py())
+        keys = _key_arrays(main_tbl)
+        blobs = {b: main_tbl.column(b) for b in bands}
         tiles: dict = {}
-        meta: dict = {}
-        for rec in main_pdf.itertuples(index=False):
-            t = (int(rec.ty), int(rec.tx))
-            _check_block(int(key[0]), t)
-            h, w = int(rec.h), int(rec.w)
-            meta[t] = (h, w, int(rec.th), int(rec.tw))
-            tiles[t] = {b: _decode(getattr(rec, b), h, w) for b in bands}
-        return _asm_core(tiles, meta, _strips_dict(strips_pdf))
+        for i in range(main_tbl.num_rows):
+            meta = {c: int(keys[c][i]) for c in TILE_KEY_COLS}
+            t = (meta["ty"], meta["tx"])
+            _check_block(key0, t)
+            tiles[t] = (meta, {b: _blob_view(blobs[b], i, meta["h"], meta["w"])
+                               for b in bands})
+        strip = _strip_lookup(
+            strips_tbl.rename_columns([c.removeprefix("s_")
+                                       for c in strips_tbl.column_names]),
+            bands, r,
+        )
+        outs = []
+        for (ty, tx), (meta, centre) in tiles.items():
+            pieces = []
+            for dy, dx in _NBRS8:
+                nb = (ty + dy, tx + dx)
+                if nb in tiles:
+                    m, arrs = tiles[nb]
+                    pieces.append((nb[0] * m["th"], nb[1] * m["tw"],
+                                   m["h"], m["w"], arrs))
+                elif (p := strip(nb, _NBR_STRIP[(dy, dx)])) is not None:
+                    pieces.append(p)
+            outs.append(_reduce_tile(meta, centre, pieces, r, reduce_fn,
+                                     target))
+        return pa.Table.from_batches(outs, schema=target)
 
     return (
         main.groupBy("bk")
         .cogroup(strips.groupBy("bk"))
-        .applyInPandas(_asm, schema=out_schema)
+        .applyInArrow(_asm, schema=out_schema)
     )
 
 
@@ -673,7 +641,7 @@ def _halo_broadcast(
     max_bytes: int,
 ) -> DataFrame:
     """Shuffle-free halo exchange: ONE perimeter-scale collect of the
-    strip projection -> broadcast -> mapInPandas assembles each padded
+    strip projection -> broadcast -> mapInArrow assembles each padded
     block from its own row plus the 8 neighbors' broadcast strips.
 
     Trade vs the shuffle path: the input is SCANNED twice (strip
@@ -698,93 +666,24 @@ def _halo_broadcast(
             f"halo strips ({int(est) >> 20} MiB) exceed the broadcast cap "
             f"({max_bytes >> 20} MiB); use halo strategy 'shuffle'"
         )
-    rows = sdf.collect()
-    strips: dict = {}
-    total = 0
-    for rec in rows:
-        ent = _strip_entries(rec, bands, r)
-        for b in bands:
-            total += sum(len(ent[b][k][0]) for k in ent[b])
-        strips[(int(rec["ty"]), int(rec["tx"]))] = ent
-    if total > max_bytes:
-        raise ValueError(
-            f"halo strips ({total >> 20} MiB) exceed the broadcast cap "
-            f"({max_bytes >> 20} MiB); use halo strategy 'shuffle'"
-        )
-    bc = tdf.sparkSession.sparkContext.broadcast(strips)
+    bc = tdf.sparkSession.sparkContext.broadcast(sdf.toArrow())
+    target = _arrow_schema_of(out_schema)
 
-    def _one(ty, tx, h, w, th, tw, blocks: dict, S) -> pd.DataFrame:
-        oy0, ox0 = ty * th - r, tx * tw - r
-        padded = {}
-        for b in bands:
-            blk = blocks[b]
-            pad = np.full((h + 2 * r, w + 2 * r), np.nan, dtype=blk.dtype)
-            pad[r:r + h, r:r + w] = blk
-            padded[b] = pad
-        for (dy, dx), kind in _NBR_STRIP.items():
-            ent = S.get((ty + dy, tx + dx))
-            if ent is None:
-                continue
-            for b in bands:
-                buf, gy0, gx0, sh, sw, tr = ent[b][kind]
-                src = (_decode(buf, sw, sh).T if tr
-                       else _decode(buf, sh, sw))
-                _clip_place(padded[b], oy0, ox0, gy0, gx0, sh, sw, src)
-        meta = {"ty": ty, "tx": tx, "h": h, "w": w, "th": th, "tw": tw}
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", category=RuntimeWarning)
-            return reduce_fn(meta, padded)
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        strip = _strip_lookup(bc.value, bands, r)
+        for rb in batches:
+            keys = _key_arrays(rb)
+            blobs = {b: rb.column(b) for b in bands}
+            for i in range(rb.num_rows):
+                meta = {c: int(keys[c][i]) for c in TILE_KEY_COLS}
+                ty, tx = meta["ty"], meta["tx"]
+                centre = {b: _blob_view(blobs[b], i, meta["h"], meta["w"])
+                          for b in bands}
+                pieces = [p for (dy, dx), kind in _NBR_STRIP.items()
+                          if (p := strip((ty + dy, tx + dx), kind)) is not None]
+                yield _reduce_tile(meta, centre, pieces, r, reduce_fn, target)
 
-    if _arrow_assemble_enabled(tdf.sparkSession):
-        import pyarrow as pa
-
-        target = _arrow_schema_of(out_schema)
-
-        def _run_arrow(batches):
-            S = bc.value
-            for rb in batches:
-                idx = {c: rb.schema.get_field_index(c)
-                       for c in ("ty", "tx", "h", "w", "th", "tw")}
-                scal = {c: rb.column(i).to_numpy(zero_copy_only=False)
-                        for c, i in idx.items()}
-                blob_cols = {b: rb.column(rb.schema.get_field_index(b))
-                             for b in bands}
-                outs = []
-                for i in range(rb.num_rows):
-                    h, w = int(scal["h"][i]), int(scal["w"][i])
-                    blocks = {}
-                    for b in bands:
-                        buf = blob_cols[b][i].as_buffer()
-                        isz = buf.size // (h * w) if h * w else 8
-                        blocks[b] = np.frombuffer(
-                            buf, dtype=_DTYPES[isz]).reshape(h, w)
-                    outs.append(_one(
-                        int(scal["ty"][i]), int(scal["tx"][i]), h, w,
-                        int(scal["th"][i]), int(scal["tw"][i]), blocks, S,
-                    ))
-                if outs:
-                    pdf = pd.concat(outs, ignore_index=True)
-                    yield pa.RecordBatch.from_arrays(
-                        _arrow_arrays(pdf, target), schema=target
-                    )
-
-        return tdf.mapInArrow(_run_arrow, schema=out_schema)
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        S = bc.value
-        for pdf in batches:
-            outs = []
-            for rec in pdf.itertuples(index=False):
-                h, w = int(rec.h), int(rec.w)
-                blocks = {b: _decode(getattr(rec, b), h, w) for b in bands}
-                outs.append(_one(
-                    int(rec.ty), int(rec.tx), h, w,
-                    int(rec.th), int(rec.tw), blocks, S,
-                ))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return tdf.mapInPandas(_run, schema=out_schema)
+    return tdf.mapInArrow(_run, schema=out_schema)
 
 
 def halo_map_tiled(
@@ -810,7 +709,7 @@ def halo_map_tiled(
     - ``shuffle``: JVM strip emit -> ONE groupBy(ty, tx) shuffle ->
       assemble.  One scan, raster-scale shuffle.  The 100-TB plan.
     - ``broadcast``: perimeter-scale strip collect + broadcast ->
-      shuffle-free mapInPandas.  Two scans, zero shuffle.  The fast
+      shuffle-free mapInArrow.  Two scans, zero shuffle.  The fast
       plan for stored rasters whose strips fit the cap
       (``spark.xrspatial.halo.broadcast.maxBytes``, default 512 MiB);
       raises past the cap.  Requires radius <= EDGE and edge blobs.
@@ -858,63 +757,19 @@ def halo_map_tiled(
         msgs = _jvm_messages(tdf, r, bands)
     else:
         msgs = _python_messages(tdf, r, bands)
-
-    if _arrow_assemble_enabled(tdf.sparkSession):
-        return _assemble_arrow_grouped(msgs, r, bands, reduce_fn, out_schema)
-
-    def _assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        center = pdf[pdf["iscenter"] == 1]
-        if len(center) == 0:
-            return _empty_frame(out_schema)
-        ty, tx = int(key[0]), int(key[1])
-        c = center.iloc[0]
-        h, w = int(c["sh"]), int(c["sw"])
-        th, tw = int(c["th"]), int(c["tw"])
-        oy0, ox0 = ty * th - r, tx * tw - r
-        dts = {b: _decode(c[b], h, w).dtype for b in bands}
-        padded = {
-            b: np.full((h + 2 * r, w + 2 * r), np.nan, dtype=dts[b])
-            for b in bands
-        }
-        for rec in pdf.itertuples(index=False):
-            sh, sw = int(rec.sh), int(rec.sw)
-            for b in bands:
-                buf = getattr(rec, b)
-                if int(rec.transposed):
-                    src = _decode(buf, sw, sh).T
-                else:
-                    src = _decode(buf, sh, sw)
-                _clip_place(padded[b], oy0, ox0, int(rec.gy0),
-                            int(rec.gx0), sh, sw, src)
-        meta = {"ty": ty, "tx": tx, "h": h, "w": w, "th": th, "tw": tw}
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", category=RuntimeWarning)
-            return reduce_fn(meta, padded)
-
-    return msgs.groupBy("ty", "tx").applyInPandas(_assemble, schema=out_schema)
+    return _halo_shuffle(msgs, r, bands, reduce_fn, out_schema)
 
 
-def _arrow_assemble_enabled(spark: SparkSession) -> bool:
-    """Default ON: applyInArrow reads shuffled blobs zero-copy (one
-    less memcpy of the raster per stencil; measured ~5-15% on the
-    536M-cell slope).  ``spark.xrspatial.halo.arrow=false`` restores
-    the applyInPandas twin (same kernels, same results — parity is
-    asserted in tests/test_tiled.py)."""
-    return spark.conf.get("spark.xrspatial.halo.arrow", "true") == "true"
-
-
-def _arrow_schema_of(ddl: str):
+def _arrow_schema_of(ddl: str) -> pa.Schema:
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
     return to_arrow_schema(_parse_datatype_string(ddl))
 
 
-def _arrow_arrays(pdf: pd.DataFrame, target) -> list:
+def _arrow_arrays(pdf: pd.DataFrame, target: pa.Schema) -> list:
     """pandas frame -> arrow arrays against the TARGET schema (pandas
     int defaults are 64-bit; the tiled schema carries int32 fields)."""
-    import pyarrow as pa
-
     arrays = []
     for field in target:
         col = pdf[field.name]
@@ -925,67 +780,39 @@ def _arrow_arrays(pdf: pd.DataFrame, target) -> list:
     return arrays
 
 
-def _assemble_arrow_grouped(
+def _halo_shuffle(
     msgs: DataFrame, r: int, bands: Sequence[str], reduce_fn, out_schema: str
 ) -> DataFrame:
-    """applyInArrow twin of the shuffle-path assemble: blob columns are
-    read zero-copy from the Arrow buffers (``as_buffer`` -> frombuffer)
-    instead of being materialized as Python ``bytes`` by the
-    Arrow->pandas conversion — one less memcpy of the entire shuffled
-    raster per stencil, and no per-group pandas frame construction.
-    reduce_fn still returns a pandas frame; output arrays are built
-    directly against the target Arrow schema (int widths differ from
-    pandas defaults)."""
-    import pyarrow as pa
-
+    """The shuffle strategy's assembly: ONE groupBy(ty, tx) brings each
+    tile's centre message and its neighbours' strips together; every
+    message is a piece read zero-copy from the shuffled Arrow buffers.
+    Groups without a centre (strips addressed past the raster edge)
+    emit nothing."""
     target = _arrow_schema_of(out_schema)
 
-    def _to_table(pdf: pd.DataFrame) -> pa.Table:
-        return pa.Table.from_arrays(_arrow_arrays(pdf, target), schema=target)
-
-    def _assemble(key: tuple, tbl: "pa.Table") -> "pa.Table":
-        n = tbl.num_rows
-        scal = {
-            c: tbl.column(c).to_numpy(zero_copy_only=False)
-            for c in ("iscenter", "sh", "sw", "th", "tw", "gy0", "gx0",
-                      "transposed")
-        }
-        centers = np.flatnonzero(scal["iscenter"] == 1)
-        if len(centers) == 0:
+    def _assemble(key: tuple, tbl: pa.Table) -> pa.Table:
+        m = {c: tbl.column(c).to_numpy(zero_copy_only=False)
+             for c in ("iscenter", "gy0", "gx0", "sh", "sw",
+                       "transposed", "th", "tw")}
+        centres = np.flatnonzero(m["iscenter"] == 1)
+        if len(centres) == 0:
             return target.empty_table()
-        ci = int(centers[0])
-        ty = int(key[0].as_py() if hasattr(key[0], "as_py") else key[0])
-        tx = int(key[1].as_py() if hasattr(key[1], "as_py") else key[1])
-        h, w = int(scal["sh"][ci]), int(scal["sw"][ci])
-        th, tw = int(scal["th"][ci]), int(scal["tw"][ci])
-        oy0, ox0 = ty * th - r, tx * tw - r
-        blob_cols = {b: tbl.column(b).combine_chunks() for b in bands}
+        blobs = {b: tbl.column(b) for b in bands}
 
-        def _view(b: str, i: int) -> np.ndarray:
-            buf = blob_cols[b][i].as_buffer()
-            area = int(scal["sh"][i]) * int(scal["sw"][i])
-            isz = buf.size // area if area else 8
-            return np.frombuffer(buf, dtype=_DTYPES[isz])
+        def piece(i: int) -> tuple:
+            sh, sw = int(m["sh"][i]), int(m["sw"][i])
+            tr = bool(m["transposed"][i])
+            return int(m["gy0"][i]), int(m["gx0"][i]), sh, sw, {
+                b: _blob_view(blobs[b], i, sh, sw, tr) for b in bands
+            }
 
-        padded = {}
-        for b in bands:
-            cbuf = _view(b, ci)
-            padded[b] = np.full((h + 2 * r, w + 2 * r), np.nan,
-                                dtype=cbuf.dtype)
-        for i in range(n):
-            sh, sw = int(scal["sh"][i]), int(scal["sw"][i])
-            for b in bands:
-                flat = _view(b, i)
-                if int(scal["transposed"][i]):
-                    src = flat.reshape(sw, sh).T
-                else:
-                    src = flat.reshape(sh, sw)
-                _clip_place(padded[b], oy0, ox0, int(scal["gy0"][i]),
-                            int(scal["gx0"][i]), sh, sw, src)
-        meta = {"ty": ty, "tx": tx, "h": h, "w": w, "th": th, "tw": tw}
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", category=RuntimeWarning)
-            return _to_table(reduce_fn(meta, padded))
+        ci = int(centres[0])
+        _, _, h, w, centre = piece(ci)
+        meta = {"ty": int(key[0].as_py()), "tx": int(key[1].as_py()),
+                "h": h, "w": w, "th": int(m["th"][ci]), "tw": int(m["tw"][ci])}
+        pieces = [piece(i) for i in range(tbl.num_rows) if i != ci]
+        return pa.Table.from_batches(
+            [_reduce_tile(meta, centre, pieces, r, reduce_fn, target)])
 
     return msgs.groupBy("ty", "tx").applyInArrow(_assemble, schema=out_schema)
 
@@ -1251,70 +1078,3 @@ def fuse_stencils(stages: "Sequence[tuple[StencilFn, int]]") -> tuple[StencilFn,
         return cur
 
     return _fused, total
-
-
-# ---------------------------------------------------------------------------
-# experimental JVM kernel path (jvm/xss_kernels.jar)
-# ---------------------------------------------------------------------------
-
-def jvm_kernels_jar() -> str | None:
-    """Path to the compiled kernel jar (scripts/build_jvm_kernels.sh),
-    or None when it hasn't been built."""
-    import os
-
-    p = os.path.join(os.path.dirname(os.path.dirname(__file__)),
-                     "jvm", "xss_kernels.jar")
-    return p if os.path.exists(p) else None
-
-
-def slope_tiled_jvm(tdf: DataFrame, value_col: str = "value") -> DataFrame:
-    """Horn slope with a compiled JVM kernel: the same one-shuffle
-    strip plan as the shuffle halo strategy, but the halo assembly AND
-    the kernel run inside the JVM (collect_list of strip pieces ->
-    Java UDF), so raster bytes never cross into Python at all.
-
-    The experiment that quantifies the stencil family's remaining
-    Python/Arrow overhead (NOTES_r2 measured the kernel at ~6% of the
-    core budget).  Numerics: float32 Horn like the Python kernel;
-    atan comes from the JVM's libm, so results match the Python path
-    to ~1 ulp (tests assert allclose, not bit-equality).  Raises if
-    the jar isn't built."""
-    jar = jvm_kernels_jar()
-    if jar is None:
-        raise RuntimeError(
-            "JVM kernels not built; run scripts/build_jvm_kernels.sh"
-        )
-    spark = tdf.sparkSession
-    if not spark.conf.get("spark.xrspatial.jvmkernels.loaded", None):
-        from pyspark.sql.types import ArrayType, BinaryType
-
-        spark.sql(f"ADD JAR '{jar}'")
-        spark.udf.registerJavaFunction(
-            "xss_slope_tile", "xss.SlopeTile", ArrayType(BinaryType())
-        )
-        spark.conf.set("spark.xrspatial.jvmkernels.loaded", "true")
-
-    msgs = _jvm_messages(tdf, 1, [value_col])
-    grouped = (
-        msgs.groupBy("ty", "tx")
-        .agg(
-            F.max(F.when(F.col("iscenter") == 1, F.col("sh"))).alias("h"),
-            F.max(F.when(F.col("iscenter") == 1, F.col("sw"))).alias("w"),
-            F.first("th").alias("th"),
-            F.first("tw").alias("tw"),
-            F.collect_list(
-                F.struct("gy0", "gx0", "sh", "sw", "iscenter", "transposed",
-                         F.col(value_col).alias("data"))
-            ).alias("pieces"),
-        )
-        .filter(F.col("h").isNotNull())
-    )
-    blobs = F.expr("xss_slope_tile(ty, tx, th, tw, pieces)")
-    out = grouped.select(
-        "ty", "tx", "h", "w", "th", "tw", blobs.alias("_r")
-    )
-    sel = ["ty", "tx", "h", "w", "th", "tw",
-           F.col("_r")[0].alias(value_col)]
-    for i, sfx in enumerate(BLOB_SUFFIXES):
-        sel.append(F.col("_r")[i + 1].alias(f"{value_col}{sfx}"))
-    return out.select(*sel)
