@@ -105,15 +105,31 @@ def test_embedding_neardup(spark):
     ids = list(range(len(vecs)))
     vecs.append(base[7].copy())  # a second row carrying id 7
     ids.append(7)
+    # one skewed bucket: 1200 copies of base[9] (ids 100..1299), scored
+    # block by block over left rows
+    vecs += [base[9].copy() for _ in range(1200)]
+    ids += list(range(100, 1300))
     pdf = pd.DataFrame({"vec_id": ids, "embedding": [list(map(float, v)) for v in vecs]})
     df = spark.createDataFrame(pdf, schema="vec_id long, embedding array<float>")
-    rows = dedup.embedding_neardup_pairs(df, threshold=0.95).collect()
-    assert all(r["id_a"] != r["id_b"] for r in rows)  # no self-pairs
-    got = {(r["id_a"], r["id_b"]): r["cosine"] for r in rows}
+    out = dedup.embedding_neardup_pairs(df, threshold=0.95).toPandas()
+    assert (out["id_a"] != out["id_b"]).all()  # no self-pairs
+    got = dict(zip(zip(out["id_a"], out["id_b"]), out["cosine"]))
+    assert len(got) == len(out)
     assert (4, 21) in got and got[(4, 21)] == pytest.approx(1.0)
     assert (4, 20) in got
-    # random gaussian pairs in dim 16 essentially never reach 0.95
-    assert all(a in (4, 20, 21) and b in (4, 20, 21) for a, b in got)
+    # brute force over every pair of distinct ids: random gaussian pairs
+    # in dim 16 essentially never reach 0.95, so the pairs are exactly
+    # the near-duplicates of id 4 and of id 9
+    v = np.stack(vecs).astype(np.float64)
+    v /= np.linalg.norm(v, axis=1, keepdims=True)
+    cos = v @ v.T
+    want = {
+        (min(ids[i], ids[j]), max(ids[i], ids[j]))
+        for i, j in zip(*np.nonzero(np.triu(cos >= 0.95, k=1)))
+        if ids[i] != ids[j]
+    }
+    assert set(got) == want
+    assert len(want) == 1201 * 1200 // 2 + 3
 
 
 def test_minhash_fast_signatures_estimate(docs):

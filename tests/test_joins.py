@@ -47,6 +47,31 @@ def scattered(spark):
     return pdf, tdf, pts, np.array([(x, y, v) for x, y, v in tv])
 
 
+def test_nearest_join_sizes_small_targets_in_one_job(spark, scattered):
+    """<= EXPR_CAP targets: one Spark job both sizes the target side and
+    collects the rows the expr strategy inlines."""
+    pdf = scattered[0]
+    targets = spark.range(40, numPartitions=4).select(
+        (F.col("id") * 2.5 - 50.0).alias("lon"),
+        (F.col("id") * -2.0 + 40.0).alias("lat"),
+        F.col("id").cast("double").alias("value"),
+    )
+    sc = spark.sparkContext
+    group = "nearest-join-sizing"
+    sc.setJobGroup(group, "size the targets")
+    try:
+        out = joins.nearest_join(pdf, targets, target_payload="value")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    got = out.toPandas().sort_values(["lon", "lat"]).reset_index(drop=True)
+    tx, ty = np.arange(40) * 2.5 - 50.0, np.arange(40) * -2.0 + 40.0
+    p = got[["lon", "lat"]].to_numpy()
+    d = np.hypot(p[:, :1] - tx[None, :], p[:, 1:] - ty[None, :])
+    np.testing.assert_array_equal(got["nearest_payload"], d.argmin(axis=1))
+    np.testing.assert_allclose(got["nearest_dist"], d.min(axis=1), rtol=1e-12)
+
+
 def test_bucket_pruned_matches_dense(spark, scattered):
     """Finite max_distance turns on the grid-bucket index; results must
     equal the dense path exactly (including out-of-range NULLs)."""

@@ -124,7 +124,8 @@ def test_pip_expr_matches_arrow_path(spark):
         }
     )
     df = spark.createDataFrame(pts)
-    polys = {1: SQUARE, 2: TRIANGLE}
+    # zone 3 has zero area (every edge horizontal): it contains no point
+    polys = {1: SQUARE, 2: TRIANGLE, 3: np.array([(0, 5), (10, 5), (20, 5)], np.float64)}
     a = {r["pid"]: r["zone"] for r in pip.pip_join(df, polys).collect()}
     b = {r["pid"]: r["zone"] for r in pip.pip_join_expr(df, polys).collect()}
     for k in a:

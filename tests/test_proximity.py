@@ -7,6 +7,8 @@ manhattan (:70-78), great-circle (:82-90), max_distance=10 (:94-103),
 allocation (:106-113), direction (:130-138).
 """
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -205,28 +207,70 @@ def test_knn_ring_join_matches_broadcast(spark):
     np.testing.assert_allclose(near["got"], near["want"], rtol=1e-9)
 
 
-def test_nearest_expr_matches_broadcast(spark):
-    """Compiled LEAST-chain nearest must equal the Arrow broadcast path."""
-    import pandas as pd
+@pytest.mark.parametrize("metric", ["GREAT_CIRCLE", "EUCLIDEAN", "MANHATTAN"])
+def test_nearest_expr_matches_broadcast(spark, metric):
+    """Compiled LEAST-chain nearest must equal the Arrow broadcast path,
+    with and without ``max_distance``; ``nearest_dist`` must be
+    bit-identical to ``geo.distance_col`` on the chosen target."""
+    from pyspark.sql import functions as F
+
+    from xarray_spatial_spark.functions.geo import distance_col
+    from xarray_spatial_spark.plans.joins import nearest_join
     from xarray_spatial_spark.sources.documents import documents
 
-    docs = documents(spark, 300).select("doc_id", "lon", "lat")
+    # doc -1 sits exactly between targets 9 and 4 (mirrored longitude on
+    # one latitude: equidistant under every metric), so the tie goes to
+    # the smaller payload, 4
+    tie = spark.createDataFrame([(-1, 0.0, 10.0)], "doc_id long, lon double, lat double")
+    docs = documents(spark, 300).select("doc_id", "lon", "lat").unionByName(tie)
     targets = [(-74.006, 40.7128, 1.0), (-0.1278, 51.5074, 2.0),
-               (139.6503, 35.6762, 3.0), (77.209, 28.6139, 4.0)]
-    got = (
-        prox.nearest_expr(docs, targets, metric="GREAT_CIRCLE")
-        .select("doc_id", "nearest_dist", "nearest_payload")
-        .toPandas().set_index("doc_id").sort_index()
-    )
+               (139.6503, 35.6762, 3.0), (77.209, 28.6139, 5.0),
+               (2.0, 10.0, 9.0), (-2.0, 10.0, 4.0)]
     tdf = spark.createDataFrame(
         pd.DataFrame(targets, columns=["lon", "lat", "city"]),
         schema="lon double, lat double, city double",
     )
-    want = (
-        prox.nearest_broadcast(docs, tdf, target_payload="city",
-                               metric="GREAT_CIRCLE")
-        .select("doc_id", "nearest_dist", "nearest_city")
-        .toPandas().set_index("doc_id").sort_index()
-    )
-    np.testing.assert_allclose(got["nearest_dist"], want["nearest_dist"], rtol=1e-9)
-    np.testing.assert_array_equal(got["nearest_payload"], want["nearest_city"])
+    cols = ["nearest_dist", "nearest_x", "nearest_y"]
+
+    def compiled(df):
+        return (
+            df.select("doc_id", *cols, F.col("nearest_payload").alias("nearest_city"))
+            .toPandas().set_index("doc_id").sort_index()
+        )
+
+    def broadcast(max_distance):
+        return (
+            prox.nearest_broadcast(docs, tdf, target_payload="city", metric=metric,
+                                   max_distance=max_distance)
+            .select("doc_id", *cols, "nearest_city")
+            .toPandas().set_index("doc_id").sort_index()
+        )
+
+    near = prox.nearest_expr(docs, targets, metric=metric)
+    got, want = compiled(near), broadcast(math.inf)
+    np.testing.assert_allclose(got[cols], want[cols], rtol=1e-9)
+    np.testing.assert_array_equal(got["nearest_city"], want["nearest_city"])
+    assert got.loc[-1, "nearest_city"] == 4.0
+    exact = distance_col(F.col("lon"), F.col("nearest_x"), F.col("lat"),
+                         F.col("nearest_y"), metric)
+    assert near.filter(~F.col("nearest_dist").eqNullSafe(exact)).count() == 0
+
+    md = float(np.median(want["nearest_dist"]))
+    got = compiled(nearest_join(docs, tdf, target_payload="city", metric=metric,
+                                max_distance=md))
+    want = broadcast(md)
+    beyond = want["nearest_dist"].isna()
+    assert 0 < beyond.sum() < len(want)
+    np.testing.assert_array_equal(got["nearest_city"].isna(), beyond)
+    np.testing.assert_allclose(got[cols], want[cols], rtol=1e-9)
+    np.testing.assert_array_equal(got["nearest_city"], want["nearest_city"])
+
+
+def test_nearest_expr_one_and_no_target(spark):
+    """One target needs no LEAST; no target gives NULLs, as the
+    broadcast path does."""
+    pts = spark.createDataFrame([(0.0, 0.0), (3.0, 4.0)], "lon double, lat double")
+    one = prox.nearest_expr(pts, [(0.0, 0.0, 7.0)]).orderBy("lon").collect()
+    assert [(r.nearest_dist, r.nearest_payload) for r in one] == [(0.0, 7.0), (5.0, 7.0)]
+    none = prox.nearest_expr(pts, []).collect()
+    assert all(r.nearest_dist is None and r.nearest_payload is None for r in none)

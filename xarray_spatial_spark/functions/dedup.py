@@ -751,10 +751,17 @@ def embedding_neardup_pairs(
         ids = pdf[id_col].to_numpy()[order]
         vecs = np.stack(pdf["vec"].to_numpy())[order]          # float32
         norms = pdf["norm"].to_numpy()[order]                  # float64
-        ia, ib = np.triu_indices(n, k=1)
         out_a, out_b, out_c = [], [], []
-        for lo in range(0, len(ia), 65536):
-            ja, jb = ia[lo: lo + 65536], ib[lo: lo + 65536]
+        # upper-triangle pairs block by block over left rows (row-major,
+        # as np.triu_indices orders them), so index memory is
+        # O(block * n) however large one bucket grows
+        step = max(1, 65536 // n)
+        for lo in range(0, n - 1, step):
+            left = np.arange(lo, min(lo + step, n - 1))
+            width = n - 1 - left                               # pairs per left row
+            ja = np.repeat(left, width)
+            first = np.cumsum(width) - width                   # block offset of each row
+            jb = np.arange(len(ja)) - np.repeat(first - left - 1, width)
             prod = vecs[ja] * vecs[jb]                         # float32 products
             dots = np.cumsum(prod.astype(np.float64), axis=1)[:, -1]
             cos = dots / (norms[ja] * norms[jb])

@@ -46,6 +46,21 @@ def geocode_sql(key_expr: str) -> tuple[str, str]:
     return lat, lon
 
 
+def sql_double(v: float) -> str:
+    """``v`` as an exact Spark SQL double literal.  A bare ``1.5`` parses
+    as DECIMAL; the shortest ``repr`` with a ``D`` suffix round-trips to
+    the same double.  Non-finite values go through a cast."""
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    return f"CAST('{v!r}' AS DOUBLE)"
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def lnglat_to_meters(lon: Column, lat: Column) -> tuple[Column, Column]:
     easting = lon * F.lit(ORIGIN_SHIFT / 180.0)
     northing = F.log(F.tan((F.lit(90.0) + lat) * F.lit(math.pi / 360.0))) * F.lit(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xarray_spatial_spark import grid
+from xarray_spatial_spark.functions.geo import sql_double, sql_ident
 
 
 class PolygonSet:
@@ -92,27 +93,29 @@ def _ray_cast(px: np.ndarray, py: np.ndarray, verts: np.ndarray) -> np.ndarray:
     return inside
 
 
-def pip_expr(lon, lat, verts: np.ndarray):
-    """Compile ONE polygon's even-odd ray-cast into a Column predicate:
-    crossing parity over the edges.  Identical geometry to `_ray_cast`
-    — same half-open conventions — but fully JVM/codegen."""
-    from pyspark.sql import functions as F
-
+def _pip_sql(lon: str, lat: str, verts: np.ndarray) -> str | None:
+    """ONE polygon's even-odd ray-cast as a SQL predicate: crossing
+    parity over the edges.  Same geometry, half-open conventions and
+    arithmetic order as ``_ray_cast``, but fully JVM/codegen.  None when
+    every edge is horizontal: no ray crosses such a (zero-area) polygon,
+    so it contains no point."""
     x1 = verts[:, 0]
     y1 = verts[:, 1]
     x2 = np.roll(x1, -1)
     y2 = np.roll(y1, -1)
-    crossings = None
+    terms = []
     for i in range(len(verts)):
         xi, yi, xj, yj = float(x1[i]), float(y1[i]), float(x2[i]), float(y2[i])
         if yj == yi:
             continue  # horizontal edge never satisfies (yi>lat) != (yj>lat)
-        cond = ((F.lit(yi) > lat) != (F.lit(yj) > lat)) & (
-            lon < (F.lit(xj - xi) * (lat - F.lit(yi)) / F.lit(yj - yi) + F.lit(xi))
+        terms.append(
+            f"CAST((({sql_double(yi)} > {lat}) != ({sql_double(yj)} > {lat}))"
+            f" AND ({lon} < {sql_double(xj - xi)} * ({lat} - {sql_double(yi)})"
+            f" / {sql_double(yj - yi)} + {sql_double(xi)}) AS INT)"
         )
-        c = cond.cast("int")
-        crossings = c if crossings is None else crossings + c
-    return (crossings % 2) == 1
+    if not terms:
+        return None
+    return f"({' + '.join(terms)}) % 2 = 1"
 
 
 def pip_join_expr(
@@ -129,26 +132,27 @@ def pip_join_expr(
 
     The broadcast set becomes literals in generated Java: no Python
     workers, no Arrow transfer, no per-batch allocation — the stage
-    fuses with the scan and the downstream aggregate.  Same first-match
-    (ascending zone id) semantics as ``pip_join``; falls back to the
-    Arrow path above this size."""
-    from pyspark.sql import functions as F
-
+    fuses with the scan and the downstream aggregate.  The whole
+    predicate is one SQL ``CASE`` built with one ``F.expr`` call, with
+    exact double literals.  Same first-match (ascending zone id)
+    semantics as ``pip_join``; falls back to the Arrow path above this
+    size."""
     if len(polygons) > max_polygons:
         return pip_join(points, polygons, lon_col, lat_col, zone_col)
-    lon, lat = F.col(lon_col), F.col(lat_col)
-    expr = None
+    lon, lat = sql_ident(lon_col), sql_ident(lat_col)
+    branches = []
     for z in sorted(polygons):
         v = np.asarray(polygons[z], dtype=np.float64)
+        ray = _pip_sql(lon, lat, v)
+        if ray is None:
+            continue
         bbox = (
-            (lon >= float(v[:, 0].min())) & (lon <= float(v[:, 0].max()))
-            & (lat >= float(v[:, 1].min())) & (lat <= float(v[:, 1].max()))
+            f"{lon} >= {sql_double(v[:, 0].min())} AND {lon} <= {sql_double(v[:, 0].max())}"
+            f" AND {lat} >= {sql_double(v[:, 1].min())} AND {lat} <= {sql_double(v[:, 1].max())}"
         )
-        hit = bbox & pip_expr(lon, lat, v)
-        expr = F.when(hit, F.lit(float(z))) if expr is None else expr.when(
-            hit, F.lit(float(z))
-        )
-    return points.withColumn(zone_col, expr.otherwise(F.lit(None)))
+        branches.append(f"WHEN {bbox} AND ({ray}) THEN {sql_double(z)}")
+    zone = f"CASE {' '.join(branches)} END" if branches else "CAST(NULL AS DOUBLE)"
+    return points.withColumn(zone_col, F.expr(zone))
 
 
 def pip_join(

@@ -45,7 +45,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xarray_spatial_spark import grid
-from xarray_spatial_spark.functions.geo import EARTH_RADIUS, distance_col
+from xarray_spatial_spark.functions.geo import (
+    EARTH_RADIUS, distance_col, sql_double, sql_ident,
+)
 
 _BROADCAST_CAP = 5_000_000  # targets above this must use knn_ring_join
 
@@ -256,17 +258,24 @@ def _proximity_family(
     """Shared proximity/allocation/direction plan, routed through the
     plans/joins.py strategy planner: <=64 targets inline into codegen
     (expr), <=5M broadcast with cell-bucket pruning, beyond that the
-    cell-ring shuffle join (requires finite max_distance).  One tiny
-    count job sizes the target side (the Spark analog of the
-    reference's bounded-vs-global dispatch, xrspatial/proximity.py:
-    605-627)."""
-    from xarray_spatial_spark.plans.joins import nearest_join, nearest_plan
+    cell-ring shuffle join (requires finite max_distance).  One job
+    sizes the target side and, at <=64 targets, also collects them for
+    expr (the Spark analog of the reference's bounded-vs-global
+    dispatch, xrspatial/proximity.py:605-627)."""
+    from xarray_spatial_spark.plans.joins import (
+        nearest_join, nearest_plan, sized_targets,
+    )
 
     targets = _targets(raster, value_col, target_values)
-    n_targets = targets.count()
+    rows, n_targets = sized_targets(targets, [x_col, y_col, value_col])
     chosen = strategy or nearest_plan(n_targets, k=1, max_distance=max_distance)
 
-    if chosen == "ring":
+    if chosen == "expr" and rows is not None:
+        near = _nearest_select(
+            raster, [tuple(map(float, r)) for r in rows], x_col, y_col,
+            distance_metric, max_distance,
+        ).withColumnRenamed("nearest_payload", f"nearest_{value_col}")
+    elif chosen == "ring":
         pid = F.struct(F.col(x_col).alias("px"), F.col(y_col).alias("py"))
         pts = raster.withColumn("_pid", pid)
         tgt = targets.withColumn(
@@ -292,11 +301,6 @@ def _proximity_family(
             metric=distance_metric, max_distance=max_distance,
             n_targets=n_targets, strategy=chosen,
         )
-        if chosen == "expr":
-            # expr inlines the payload as nearest_payload; align to the
-            # broadcast naming the mode selectors below use
-            near = near.withColumnRenamed("nearest_payload",
-                                          f"nearest_{value_col}")
     if mode == "proximity":
         out = F.col("nearest_dist")
     elif mode == "allocation":
@@ -369,6 +373,88 @@ def direction(
     )
 
 
+def _key_sql(px: str, py: str, tx: float, ty: float, metric: str) -> str:
+    """SQL ranking key from point (px, py) to one target: haversine
+    ``a`` (GREAT_CIRCLE), squared distance (EUCLIDEAN) or the distance
+    itself (MANHATTAN) -- each monotone in the distance, and built in
+    ``functions/geo.distance_col``'s arithmetic order so the winner's
+    distance comes out bit-identical."""
+    x, y = sql_double(tx), sql_double(ty)
+    m = metric.upper()
+    if m == "EUCLIDEAN":
+        return f"({px} - {x}) * ({px} - {x}) + ({py} - {y}) * ({py} - {y})"
+    if m == "MANHATTAN":
+        return f"abs({px} - {x}) + abs({py} - {y})"
+    if m == "GREAT_CIRCLE":
+        return (
+            f"pow(sin((radians({y}) - radians({py})) / 2), 2)"
+            f" + cos(radians({py})) * cos(radians({y}))"
+            f" * pow(sin((radians({x}) - radians({px})) / 2), 2)"
+        )
+    raise ValueError(f"unknown distance metric {metric!r}")
+
+
+def _dist_sql(key: str, metric: str) -> str:
+    """Distance from a ranking key of ``_key_sql`` (geo.distance_col's
+    last step)."""
+    m = metric.upper()
+    if m == "EUCLIDEAN":
+        return f"sqrt({key})"
+    if m == "GREAT_CIRCLE":
+        return f"{sql_double(2.0 * EARTH_RADIUS)} * asin(sqrt({key}))"
+    return key
+
+
+def _nearest_select(
+    points: DataFrame,
+    targets: list[tuple[float, float, float]],
+    x_col: str,
+    y_col: str,
+    metric: str,
+    max_distance: float,
+) -> DataFrame:
+    """``nearest_expr`` with ``nearest_join``'s ``max_distance`` rule:
+    beyond it all four columns are NULL.  Two projections: the first
+    adds ONE ``least`` over (key, payload, x, y) structs, the second
+    reads its fields, so the optimizer keeps a single LEAST chain however
+    many of the columns a query reads."""
+    px, py = sql_ident(x_col), sql_ident(y_col)
+    structs = [
+        f"named_struct('k', {_key_sql(px, py, tx, ty, metric)}, "
+        f"'p', {sql_double(pl)}, 'x', {sql_double(tx)}, 'y', {sql_double(ty)})"
+        for tx, ty, pl in targets
+    ]
+    if len(structs) > 1:
+        best = f"least({', '.join(structs)})"
+    elif structs:
+        best = structs[0]
+    else:
+        best = "CAST(NULL AS STRUCT<k: DOUBLE, p: DOUBLE, x: DOUBLE, y: DOUBLE>)"
+    tmp = "_nearest"
+    while tmp in points.columns:
+        tmp = "_" + tmp
+    b = sql_ident(tmp)
+    dist = _dist_sql(f"{b}.k", metric)
+    new = {
+        "nearest_dist": dist,
+        "nearest_payload": f"{b}.p",
+        "nearest_x": f"{b}.x",
+        "nearest_y": f"{b}.y",
+    }
+    if math.isfinite(max_distance):
+        beyond = f"{dist} > {sql_double(max_distance)}"
+        new = {c: f"CASE WHEN {beyond} THEN NULL ELSE {e} END"
+               for c, e in new.items()}
+    # replace same-named input columns in place, as withColumn does
+    exprs = [
+        f"{new[c]} AS {sql_ident(c)}" if c in new else sql_ident(c)
+        for c in points.columns
+    ]
+    exprs += [f"{e} AS {sql_ident(c)}" for c, e in new.items()
+              if c not in points.columns]
+    return points.select("*", F.expr(best).alias(tmp)).selectExpr(*exprs)
+
+
 def nearest_expr(
     points: DataFrame,
     targets: list[tuple[float, float, float]],
@@ -378,30 +464,25 @@ def nearest_expr(
     max_targets: int = 64,
 ) -> DataFrame:
     """Compiled nearest-target (kNN-1 / allocation fast path): a SMALL
-    broadcast target set inlines into whole-stage codegen as a LEAST
-    chain over (distance, payload) structs — no Python, no shuffle,
-    fuses with the surrounding stages.  ``targets`` = [(x, y, payload)].
-    Ties break toward the smaller payload (struct ordering), matching
-    ``nearest_broadcast``.  Adds ``nearest_dist`` + ``nearest_payload``."""
+    broadcast target set inlines into whole-stage codegen as one LEAST
+    over (key, payload, x, y) structs -- no Python, no shuffle, fuses
+    with the surrounding stages.  ``targets`` = [(x, y, payload)].
+    Adds ``nearest_dist``, ``nearest_payload``, ``nearest_x`` and
+    ``nearest_y``; no targets -> NULLs.
+
+    Targets rank on a key monotone in the distance (haversine ``a``,
+    squared distance, or the Manhattan distance itself) and only the
+    winner's key becomes ``nearest_dist`` (one ``asin``/``sqrt`` per
+    row), bit-identical to ``functions/geo.distance_col`` on that
+    target.  Equal keys break toward the smaller payload (struct
+    ordering), matching ``nearest_broadcast``.  The one case where this
+    differs from ranking on the distance itself: two keys that differ
+    but round to the same distance -- the truly nearer target wins, not
+    the smaller payload.  The predicate is one SQL string, one
+    ``F.expr`` call, with exact double literals."""
     if len(targets) > max_targets:
         raise ValueError(f"{len(targets)} targets: use nearest_broadcast")
-    px, py = F.col(x_col), F.col(y_col)
-    structs = [
-        F.struct(
-            distance_col(px, F.lit(float(tx)), py, F.lit(float(ty)), metric).alias("d"),
-            F.lit(float(pl)).alias("p"),
-            F.lit(float(tx)).alias("x"),
-            F.lit(float(ty)).alias("y"),
-        )
-        for tx, ty, pl in targets
-    ]
-    best = F.least(*structs)
-    return (
-        points.withColumn("nearest_dist", best["d"])
-        .withColumn("nearest_payload", best["p"])
-        .withColumn("nearest_x", best["x"])
-        .withColumn("nearest_y", best["y"])
-    )
+    return _nearest_select(points, targets, x_col, y_col, metric, math.inf)
 
 
 # ---------------------------------------------------------------------------

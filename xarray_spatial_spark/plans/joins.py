@@ -10,8 +10,10 @@ direction / kNN) routes through one place:
 ========== =========================== ===================================
 strategy   when                        plan
 ========== =========================== ===================================
-expr       k=1 and <= EXPR_CAP targets LEAST chain over (dist, payload)
-                                       structs — whole-stage codegen, no
+expr       k=1 and <= EXPR_CAP targets one LEAST over (key, payload, x,
+                                       y) structs, keyed on a value
+                                       monotone in the distance; one SQL
+                                       string, whole-stage codegen, no
                                        Python, no shuffle, fuses with the
                                        surrounding stages
 broadcast  <= BROADCAST_CAP targets    driver-collected packed arrays +
@@ -25,6 +27,11 @@ ring       anything bigger             knn_ring_join: bucket BOTH sides
                                        to the neighbor ring, equi-join
                                        (AQE skew-join), windowed top-k
 ========== =========================== ===================================
+
+One job sizes the target side (``sized_targets``): the first
+EXPR_CAP + 1 rows come back to the driver, and when that is the whole
+set they are the rows ``expr`` inlines; ``count()`` runs only above
+the cap.
 
 ``ring`` is the only strategy whose cost scales with target count on
 the cluster rather than the driver, so it is the 100-TB default once
@@ -56,6 +63,24 @@ def nearest_plan(
     return "ring"
 
 
+def sized_targets(
+    targets: DataFrame, cols: list[str]
+) -> tuple[list[tuple] | None, int]:
+    """Size the target side with one Spark job: collect the first
+    ``EXPR_CAP + 1`` rows of ``cols``.  At most ``EXPR_CAP`` rows means
+    that is the whole set, returned for the ``expr`` strategy to inline;
+    above the cap a ``count()`` follows and no rows are returned.
+
+    The head comes back through Arrow: a limit's ``collect()`` scans
+    partitions incrementally (a job for the first, then more jobs for the
+    rest), while the Arrow path runs the limit as one job."""
+    head = targets.select(*cols).limit(EXPR_CAP + 1).toArrow()
+    if head.num_rows > EXPR_CAP:
+        return None, targets.count()
+    rows = list(zip(*(c.to_pylist() for c in head.columns)))
+    return rows, len(rows)
+
+
 def ring_zoom(max_distance_deg: float) -> int:
     """Zoom whose grid-cell lon span >= the search radius (in degrees),
     so a 1-cell ring bounds the search exactly like the reference's
@@ -84,44 +109,29 @@ def nearest_join(
 
     ``expr`` / ``broadcast`` (k=1 only) append nearest_* columns to
     ``points``; ``ring`` returns (point_id, target_id, dist, knn_rank)
-    rows.  ``n_targets`` skips the sizing count when the caller knows
+    rows.  ``n_targets`` skips the sizing job when the caller knows
     it."""
     from xarray_spatial_spark.operators.proximity import (
-        knn_ring_join, nearest_broadcast, nearest_expr,
+        _nearest_select, knn_ring_join, nearest_broadcast,
     )
 
+    tcols = [x_col, y_col] + ([target_payload] if target_payload else [])
+    rows = None
     if n_targets is None:
-        n_targets = targets.count()
+        rows, n_targets = sized_targets(targets, tcols)
     chosen = strategy or nearest_plan(n_targets, k=k, max_distance=max_distance)
 
     if chosen == "expr":
-        tcols = [x_col, y_col] + ([target_payload] if target_payload else [])
-        rows = targets.select(*tcols).collect()
+        if rows is None:
+            rows = targets.select(*tcols).collect()
+        if len(rows) > EXPR_CAP:
+            raise ValueError(f"{len(rows)} targets: use nearest_broadcast")
         tlist = [
-            (
-                float(r[x_col]), float(r[y_col]),
-                float(r[target_payload]) if target_payload else 0.0,
-            )
+            (float(r[0]), float(r[1]), float(r[2]) if target_payload else 0.0)
             for r in rows
         ]
-        out = nearest_expr(points, tlist, x_col=x_col, y_col=y_col,
-                           metric=metric)
-        if math.isfinite(max_distance):
-            beyond = F.col("nearest_dist") > max_distance
-            out = out.withColumn(
-                "nearest_dist",
-                F.when(beyond, F.lit(None)).otherwise(F.col("nearest_dist")),
-            ).withColumn(
-                "nearest_payload",
-                F.when(beyond, F.lit(None)).otherwise(F.col("nearest_payload")),
-            ).withColumn(
-                "nearest_x",
-                F.when(beyond, F.lit(None)).otherwise(F.col("nearest_x")),
-            ).withColumn(
-                "nearest_y",
-                F.when(beyond, F.lit(None)).otherwise(F.col("nearest_y")),
-            )
-        return out
+        return _nearest_select(points, tlist, x_col, y_col, metric,
+                               max_distance)
 
     if chosen == "broadcast":
         return nearest_broadcast(
