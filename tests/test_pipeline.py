@@ -123,16 +123,37 @@ def test_pip_expr_matches_arrow_path(spark):
             "lat": rng.uniform(-10, 40, 2000),
         }
     )
-    df = spark.createDataFrame(pts)
+    nan = float("nan")
+    bad = spark.createDataFrame(  # NULL and NaN coordinates match no polygon
+        [(2000, None, 5.0), (2001, 5.0, None), (2002, None, None),
+         (2003, nan, 5.0), (2004, 5.0, nan), (2005, nan, nan)],
+        "pid long, lon double, lat double")
+    df = spark.createDataFrame(pts).unionByName(bad)
     # zone 3 has zero area (every edge horizontal): it contains no point
     polys = {1: SQUARE, 2: TRIANGLE, 3: np.array([(0, 5), (10, 5), (20, 5)], np.float64)}
     a = {r["pid"]: r["zone"] for r in pip.pip_join(df, polys).collect()}
     b = {r["pid"]: r["zone"] for r in pip.pip_join_expr(df, polys).collect()}
+    assert len(a) == len(b) == 2006
     for k in a:
         av, bv = a[k], b[k]
         assert (av is None and bv is None) or av == bv, (k, av, bv)
+    assert all(a[k] is None for k in range(2000, 2006))
     # some of each
     assert any(v == 1.0 for v in b.values()) and any(v is None for v in b.values())
+
+
+def test_pip_join_empty_polygon_set(spark):
+    """No polygons: every zone is NULL on both paths, and an empty
+    GeoJSON collection gives a set that assigns nothing."""
+    from xarray_spatial_spark.sources import geojson
+
+    df = spark.createDataFrame([(0, 5.0, 5.0), (1, None, 1.0)], "pid long, lon double, lat double")
+    for join in (pip.pip_join, pip.pip_join_expr):
+        assert [r["zone"] for r in join(df, {}).orderBy("pid").collect()] == [None, None]
+    pset, attrs = geojson.polygon_set(
+        geojson.parse_feature_collection('{"type": "FeatureCollection", "features": []}'))
+    assert attrs == {} and pset.verts == {}
+    assert np.isnan(pset.assign(np.array([5.0]), np.array([5.0]))).all()
 
 
 def test_pip_matches_bruteforce_on_random_points(spark):
@@ -166,9 +187,9 @@ def test_pip_matches_bruteforce_on_random_points(spark):
 
 
 def test_pip_join_many_polygons_bucketed_path(spark):
-    """2,000-polygon set takes the grid-bucketed candidate path (the
-    broadcast R-tree role at web scale); assignments verified against
-    the analytic ground truth of a disjoint square grid."""
+    """2,000-polygon set through the broadcast R-tree (the web-scale
+    PIP path); assignments verified against the analytic ground truth
+    of a disjoint square grid."""
     import numpy as np
 
     from xarray_spatial_spark.operators import pip
@@ -184,7 +205,7 @@ def test_pip_join_many_polygons_bucketed_path(spark):
                 [lon0, lat0], [lon0 + 0.8, lat0],
                 [lon0 + 0.8, lat0 + 0.8], [lon0, lat0 + 0.8],
             ])
-    assert len(polys) > 64  # forces the bucketed many-polygon path
+    assert len(polys) > 64  # beyond pip_join_expr's compiled CASE
 
     rng = np.random.default_rng(11)
     lons = rng.uniform(-25, 25, 20000)

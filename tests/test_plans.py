@@ -94,11 +94,15 @@ def test_pip_arrow_path_single_python_stage(spark):
     from xarray_spatial_spark.operators import pip
 
     pts = spark.createDataFrame(
-        pd.DataFrame({"lon": [1.0, 2.0], "lat": [1.0, 2.0]})
+        pd.DataFrame({"lon": [1.0, 2.0], "lat": [1.0, 2.0], "text": ["a", "b"]})
     )
     poly = {1: np.array([[0.0, 0.0], [5.0, 0.0], [5.0, 5.0], [0.0, 5.0]])}
     plan = _plan(pip.pip_join(pts, poly))
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("ArrowEvalPython") == 1
+    assert "MapInPandas" not in plan
+    # the UDF reads only the coordinates, not the rest of the row
+    udf_line = next(ln for ln in plan.splitlines() if "ArrowEvalPython" in ln)
+    assert "lon" in udf_line and "lat" in udf_line and "text" not in udf_line
 
 
 def test_broadcast_join_in_stats_to_raster(spark):

@@ -1,4 +1,5 @@
-"""STR-packed R-tree (plans/rtree.py) + the pip_join index dispatch."""
+"""STR-packed R-tree (plans/rtree.py) and the pip_join assignment that
+ray-casts its candidate pairs (operators/pip.py)."""
 
 import numpy as np
 import pytest
@@ -66,57 +67,56 @@ class TestSTRtree:
         assert len(pts) == 0 and len(ents) == 0
 
 
-def _poly_grid(n_side, w=3.0, h=2.5, gap=0.2):
-    """n_side^2 rectangles tiling lon/lat space, zone ids 0..n^2-1."""
-    polys = {}
-    z = 0
-    for iy in range(n_side):
-        for ix in range(n_side):
-            x0 = -170 + ix * (w + gap)
-            y0 = -75 + iy * (h + gap)
-            polys[z] = np.array([[x0, y0], [x0 + w, y0],
-                                 [x0 + w, y0 + h], [x0, y0 + h]])
-            z += 1
-    return polys
+def _star(rng, n, cx, cy, r):
+    """Simple polygon of ``n`` vertices around (cx, cy), radius <= r."""
+    th = np.sort(rng.uniform(0, 2 * np.pi, n))
+    rr = r * rng.uniform(0.3, 1.0, n)
+    return np.stack([cx + rr * np.cos(th), cy + rr * np.sin(th)], axis=1)
 
 
 class TestPipIndexDispatch:
-    def test_rtree_equals_grid_assignments(self, spark):
-        from xarray_spatial_spark.operators.pip import pip_join
-
-        polys = _poly_grid(10)  # 100 polygons -> many-polygons path
-        rng = np.random.RandomState(5)
-        pts = [(i, float(lon), float(lat)) for i, (lon, lat) in enumerate(
-            zip(rng.uniform(-172, -130, 800), rng.uniform(-77, -40, 800)))]
-        df = spark.createDataFrame(pts, "id long, lon double, lat double")
-        a = {r["id"]: r["zone"] for r in
-             pip_join(df, polys, index="grid").collect()}
-        b = {r["id"]: r["zone"] for r in
-             pip_join(df, polys, index="rtree").collect()}
-        assert a == b
-        assert any(v is not None for v in a.values())
-
-    def test_auto_routes_elongated_bboxes_to_rtree(self):
+    def test_polygon_set_rejects_removed_grid_index(self):
         from xarray_spatial_spark.operators.pip import PolygonSet
 
-        # dateline-spanning slivers: each bbox rasterizes onto a whole
-        # cell row at zoom 6 -> auto must pick the R-tree
-        polys = {z: np.array([[-179.0, z * 0.5], [179.0, z * 0.5],
-                              [179.0, z * 0.5 + 0.1], [-179.0, z * 0.5 + 0.1]])
-                 for z in range(80)}
-        ps = PolygonSet(polys, index="auto")
-        assert ps.method == "rtree"
-        compact = PolygonSet(_poly_grid(5), index="auto")
-        assert compact.method == "grid"
+        polys = {0: np.array([[0.0, 0.0], [1.0, 0.0], [0.0, 1.0]])}
+        assert PolygonSet(polys, index="rtree").rtree.n_entries == 1
+        for index in ("grid", "auto"):
+            with pytest.raises(ValueError, match="grid index was removed"):
+                PolygonSet(polys, index=index)
+
+    def test_overlapping_mixed_polygons_match_ray_cast(self, spark):
+        from xarray_spatial_spark.operators.pip import _ray_cast, pip_join
+
+        # 120 overlapping polygons of 3 to ~300 vertices, one closed
+        # ring (last vertex == first) and one zero-area polygon
+        rng = np.random.RandomState(9)
+        polys = {}
+        for z in range(120):
+            n = 3 + (z * 37) % 300 if z % 10 else 3
+            polys[z] = _star(rng, n, *rng.uniform(-8, 8, 2), rng.uniform(1, 10))
+        polys[5] = np.concatenate([polys[5], polys[5][:1]])
+        polys[6] = np.array([[0.0, 1.0], [5.0, 1.0], [9.0, 1.0]])
+        px = rng.uniform(-20, 20, 3000)
+        py = rng.uniform(-20, 20, 3000)
+        px[0], py[0] = polys[5][0]  # on a vertex
+        df = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(px, py))],
+            "id long, lon double, lat double")
+        got = {r["id"]: r["zone"] for r in pip_join(df, polys).collect()}
+        inside = np.array([_ray_cast(px, py, polys[z]) for z in sorted(polys)])
+        want = np.where(inside.any(axis=0), inside.argmax(axis=0), np.nan)
+        got = np.array([np.nan if got[i] is None else got[i] for i in range(len(px))])
+        np.testing.assert_array_equal(got, want)
+        assert (inside.sum(axis=0) >= 2).sum() > 500  # overlaps decide
 
     def test_rtree_first_match_ascending_zone(self, spark):
         from xarray_spatial_spark.operators.pip import pip_join
 
         # 70 overlapping squares sharing a corner region: the LOWEST
-        # zone id containing the point must win, same as the grid path
+        # zone id containing the point must win
         polys = {z: np.array([[0.0, 0.0], [10.0 + z * 0.01, 0.0],
                               [10.0 + z * 0.01, 10.0], [0.0, 10.0]])
                  for z in range(70)}
         df = spark.createDataFrame([(0, 5.0, 5.0)], "id long, lon double, lat double")
-        out = pip_join(df, polys, index="rtree").collect()
+        out = pip_join(df, polys).collect()
         assert out[0]["zone"] == 0.0

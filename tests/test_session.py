@@ -31,3 +31,35 @@ def test_default_driver_memory_capped_and_overridable(monkeypatch):
     assert session.default_driver_memory() == "2048m"
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "6g")
     assert session.default_driver_memory() == "6g"
+
+
+def test_ship_package_zip_follows_sources(monkeypatch, tmp_path):
+    """An edited module ships in a new zip, never the stale one."""
+    import tempfile
+    import zipfile
+
+    pkg = tmp_path / "src" / "xarray_spatial_spark"
+    pkg.mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "mod.py").write_text("X = 1\n")
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(session, "_PKG_DIR", pkg)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    shipped = []
+
+    class _Spark:
+        class sparkContext:
+            addPyFile = staticmethod(shipped.append)
+
+    def ship() -> str:
+        session.ship_package(_Spark)
+        with zipfile.ZipFile(shipped[-1]) as z:
+            return z.read("xarray_spatial_spark/mod.py").decode()
+
+    assert ship() == "X = 1\n"
+    (pkg / "mod.py").write_text("X = 2\n")
+    assert ship() == "X = 2\n"
+    assert shipped[0] != shipped[1]
+    (pkg / "mod.py").write_text("X = 1\n")
+    ship()
+    assert shipped[2] == shipped[0]  # same sources, same zip

@@ -3,77 +3,90 @@
 The reference's zones raster (zonal.py:451-456) generalizes here to a
 polygon set; assignment is a **broadcast spatial join**:
 
-1. Polygons (vertex arrays) are packed into numpy and broadcast
-   together with a driver-built STR-style index: each polygon's bbox
-   plus a coarse cell -> candidate-polygon map at ``index_zoom`` (the
-   role an R-tree plays; grid-bucketed, built from scratch — no deps).
-2. One ``mapInPandas`` pass: points look up their index cell,
-   bbox-filter the candidates, then run a vectorized ray-casting test
-   (even-odd rule) against only those polygons.  Zero shuffles.
+1. :class:`PolygonSet` packs every polygon's edges into flat numpy
+   arrays and bulk-loads an STR R-tree (plans/rtree.py) over the
+   polygons' bounding boxes; the set is broadcast once.
+2. One Arrow UDF reads only the lon/lat columns: the points descend the
+   R-tree to candidate (point, polygon) pairs, and one vectorized
+   ray-cast (even-odd rule) tests every pair at once.  Zero shuffles.
 
 Edge semantics: boundary points follow the standard ray-casting
 half-open convention; first matching polygon in ascending zone order
-wins on overlap (deterministic).
+wins on overlap (deterministic).  Points with a NULL or NaN coordinate
+match no polygon.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xarray_spatial_spark import grid
 from xarray_spatial_spark.functions.geo import sql_double, sql_ident
+from xarray_spatial_spark.plans.rtree import STRtree
 
 
 class PolygonSet:
-    """Driver-side packed polygons + a candidate index: either the
-    grid-bucketed cell map or an STR-packed R-tree (plans/rtree.py).
+    """Driver-side polygons, packed for broadcast: zones ascending,
+    polygon ``k``'s edges at ``off[k] : off[k] + cnt[k]`` of the flat
+    edge arrays (``x1, y1`` -> ``x2, y2``, each ring closed back to its
+    first vertex), and an STR R-tree over the polygons' bounding boxes
+    (None for an empty set).  ``index`` admits only ``"rtree"``."""
 
-    ``index='auto'`` dispatches on the ARITHMETIC rasterization cost:
-    the grid pays (bbox width x height in cells) per polygon — compact
-    bboxes are cheap, a dateline-spanning or high-zoom set explodes —
-    while the R-tree's build/query cost is geometry-independent.  When
-    the average bbox would rasterize onto > 64 cells the set routes to
-    the R-tree; both indexes return identical candidates (superset of
-    containing polygons), so assignment is index-invariant."""
-
-    def __init__(self, polygons: dict[int, np.ndarray], index_zoom: int = 6,
-                 index: str = "auto"):
+    def __init__(self, polygons: dict[int, np.ndarray], index: str = "rtree"):
+        if index != "rtree":
+            raise ValueError(f"index={index!r}: the grid index was removed; "
+                             "PolygonSet always builds the STR R-tree")
         self.zones = np.array(sorted(polygons), dtype=np.int64)
-        self.verts = {int(z): np.asarray(polygons[z], dtype=np.float64) for z in self.zones}
-        self.bbox = {
-            int(z): (v[:, 0].min(), v[:, 1].min(), v[:, 0].max(), v[:, 1].max())
-            for z, v in self.verts.items()
-        }
-        self.index_zoom = index_zoom
-        n = 1 << index_zoom
-        bb = np.array([self.bbox[int(z)] for z in self.zones], np.float64)
-        if index == "auto":
-            x0, y1 = grid.lnglat_to_tile(bb[:, 0], bb[:, 1], index_zoom)
-            x1, y0 = grid.lnglat_to_tile(bb[:, 2], bb[:, 3], index_zoom)
-            cells = (x1 - x0 + 1) * (y1 - y0 + 1)
-            index = "rtree" if cells.mean() > 64 else "grid"
-        self.method = index
-        self.index: dict[int, list[int]] = {}
-        self.rtree = None
-        if index == "rtree":
-            from xarray_spatial_spark.plans.rtree import STRtree
+        self.verts = {int(z): np.asarray(polygons[z], dtype=np.float64)
+                      for z in self.zones}
+        rings = list(self.verts.values())
+        self.cnt = np.array([len(v) for v in rings], dtype=np.int64)
+        self.off = np.cumsum(self.cnt) - self.cnt
+        xy = np.concatenate(rings) if rings else np.empty((0, 2))
+        nxt = np.arange(1, len(xy) + 1)
+        nxt[self.off + self.cnt - 1] = self.off
+        self.x1, self.y1 = xy[:, 0], xy[:, 1]
+        self.x2, self.y2 = self.x1[nxt], self.y1[nxt]
+        bb = np.array([(v[:, 0].min(), v[:, 1].min(), v[:, 0].max(), v[:, 1].max())
+                       for v in rings], dtype=np.float64)
+        self.rtree = STRtree(bb) if len(bb) else None
 
-            self.rtree = STRtree(bb)
-            return
-        # grid: rasterize bboxes onto coarse cells -> candidate lists
-        for z in self.zones:
-            lon0, lat0, lon1, lat1 = self.bbox[int(z)]
-            x0, y1 = grid.lnglat_to_tile(np.array([lon0]), np.array([lat0]), index_zoom)
-            x1, y0 = grid.lnglat_to_tile(np.array([lon1]), np.array([lat1]), index_zoom)
-            for xt in range(int(x0[0]), int(x1[0]) + 1):
-                for yt in range(int(y0[0]), int(y1[0]) + 1):
-                    key = int(xt) * n + int(yt)
-                    self.index.setdefault(key, []).append(int(z))
+    def assign(self, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+        """Zone of the first (lowest-id) polygon containing each point,
+        NaN where none does.  Every candidate pair from the R-tree is
+        ray-cast at once: with the pairs sorted by edge count,
+        descending, the pairs that still have an edge ``k`` are a
+        prefix, so each edge index costs one numpy step over that
+        prefix — O(max vertices) calls, O(pairs) memory.  Same
+        arithmetic as :func:`_ray_cast`, so results are bit-identical."""
+        out = np.full(len(px), np.nan)
+        if self.rtree is None:
+            return out
+        pt, ent = self.rtree.query_pairs(px, py)  # sorted by (point, zone)
+        by_len = np.argsort(-self.cnt[ent])
+        n_edges, edge0 = self.cnt[ent[by_len]], self.off[ent[by_len]]
+        qx, qy = px[pt[by_len]], py[pt[by_len]]
+        # active[k] = number of pairs whose polygon has more than k edges
+        kmax = int(n_edges.max(initial=0))
+        active = len(n_edges) - np.searchsorted(n_edges[::-1], np.arange(kmax), side="right")
+        inside = np.zeros(len(n_edges), dtype=bool)
+        for k, m in enumerate(active):
+            e = edge0[:m] + k
+            xi, yi, xj, yj = self.x1[e], self.y1[e], self.x2[e], self.y2[e]
+            y = qy[:m]
+            cond = (yi > y) != (yj > y)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                xints = (xj - xi) * (y - yi) / (yj - yi) + xi
+            inside[:m] ^= cond & (qx[:m] < xints)
+        hit = np.empty_like(inside)
+        hit[by_len] = inside
+        pt, ent = pt[hit], ent[hit]
+        first = np.ones(len(pt), dtype=bool)
+        first[1:] = pt[1:] != pt[:-1]
+        out[pt[first]] = self.zones[ent[first]]
+        return out
 
 
 def _ray_cast(px: np.ndarray, py: np.ndarray, verts: np.ndarray) -> np.ndarray:
@@ -161,93 +174,16 @@ def pip_join(
     lon_col: str = "lon",
     lat_col: str = "lat",
     zone_col: str = "zone",
-    index_zoom: int = 6,
-    index: str = "auto",
 ) -> DataFrame:
     """Assign each point the id of the (first) polygon containing it;
-    NULL when none does.  ``index`` picks the broadcast candidate
-    structure ('grid' | 'rtree' | 'auto', see :class:`PolygonSet`)."""
-    pset = PolygonSet(polygons, index_zoom, index=index)
-    sc = points.sparkSession.sparkContext
-    bc = sc.broadcast(pset)
+    NULL when none does.  The polygon set is broadcast once and an
+    Arrow UDF over the lon/lat columns alone runs
+    :meth:`PolygonSet.assign`; the rest of the row never leaves the
+    JVM."""
+    bc = points.sparkSession.sparkContext.broadcast(PolygonSet(polygons))
 
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in points.schema)
-    schema += f", {zone_col} double"
+    @F.pandas_udf("double")
+    def _zone(lon: pd.Series, lat: pd.Series) -> pd.Series:
+        return pd.Series(bc.value.assign(lon.to_numpy(np.float64), lat.to_numpy(np.float64)))
 
-    few_polygons = len(pset.zones) <= 64 and pset.method == "grid"
-
-    def _op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ps: PolygonSet = bc.value
-        n = 1 << ps.index_zoom
-        for pdf in batches:
-            px = pdf[lon_col].to_numpy(np.float64)
-            py = pdf[lat_col].to_numpy(np.float64)
-            out = np.full(len(pdf), np.nan)
-            if len(pdf) and few_polygons:
-                # few polygons: one vectorized bbox+ray-cast pass per
-                # polygon over the whole batch — O(P) numpy calls, no
-                # per-cell-group Python loop
-                unassigned = np.ones(len(pdf), dtype=bool)
-                for z in ps.zones:
-                    z = int(z)
-                    lon0, lat0, lon1, lat1 = ps.bbox[z]
-                    m = unassigned & (px >= lon0) & (px <= lon1) & (py >= lat0) & (py <= lat1)
-                    if not m.any():
-                        continue
-                    hit = _ray_cast(px[m], py[m], ps.verts[z])
-                    where = np.flatnonzero(m)[hit]
-                    out[where] = float(z)
-                    unassigned[where] = False
-            elif len(pdf) and ps.method == "rtree":
-                # many polygons, R-tree index: candidate (point, zone)
-                # pairs from one vectorized descent, then ray-cast per
-                # polygon in ASCENDING zone order so first-match
-                # semantics survive (a point already assigned by a
-                # lower zone masks out of later polygons)
-                ppt, pent = ps.rtree.query_pairs(px, py)
-                by_ent = np.argsort(pent, kind="stable")
-                ppt, pent = ppt[by_ent], pent[by_ent]
-                bounds = np.flatnonzero(np.r_[True, pent[1:] != pent[:-1]])
-                unassigned = np.ones(len(pdf), dtype=bool)
-                for s, e in zip(bounds, np.r_[bounds[1:], len(pent)]):
-                    z = int(ps.zones[pent[s]])
-                    idx = ppt[s:e]
-                    idx = idx[unassigned[idx]]
-                    if not len(idx):
-                        continue
-                    hit = _ray_cast(px[idx], py[idx], ps.verts[z])
-                    where = idx[hit]
-                    out[where] = float(z)
-                    unassigned[where] = False
-            elif len(pdf):
-                # many polygons: grid-bucketed candidate lookup
-                xt, yt = grid.lnglat_to_tile(px, py, ps.index_zoom)
-                keys = xt * n + yt
-                order = np.argsort(keys, kind="stable")
-                sorted_keys = keys[order]
-                bounds = np.flatnonzero(
-                    np.r_[True, sorted_keys[1:] != sorted_keys[:-1]]
-                )
-                for s, e in zip(bounds, np.r_[bounds[1:], len(sorted_keys)]):
-                    cands = ps.index.get(int(sorted_keys[s]), [])
-                    if not cands:
-                        continue
-                    idx = order[s:e]
-                    gx, gy = px[idx], py[idx]
-                    unassigned = np.ones(len(idx), dtype=bool)
-                    for z in cands:  # ascending zone id -> deterministic
-                        if not unassigned.any():
-                            break
-                        lon0, lat0, lon1, lat1 = ps.bbox[z]
-                        cand_mask = unassigned & (
-                            (gx >= lon0) & (gx <= lon1) & (gy >= lat0) & (gy <= lat1)
-                        )
-                        if not cand_mask.any():
-                            continue
-                        hit = _ray_cast(gx[cand_mask], gy[cand_mask], ps.verts[z])
-                        where = np.flatnonzero(cand_mask)[hit]
-                        out[idx[where]] = float(z)
-                        unassigned[np.flatnonzero(cand_mask)[hit]] = False
-            yield pdf.assign(**{zone_col: out})
-
-    return points.mapInPandas(_op, schema=schema)
+    return points.withColumn(zone_col, _zone(F.col(lon_col), F.col(lat_col)))

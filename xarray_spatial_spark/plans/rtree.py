@@ -16,11 +16,10 @@ tree in vectorized numpy (no per-point recursion):
   (point, entry) pairs sorted by (point, entry) so consumers keep
   deterministic ascending-id semantics.
 
-Complements the grid-bucketed index in operators/pip.py: the grid
-rasterizes each bbox onto coarse cells (cheap for compact bboxes,
-wasteful for elongated ones — a dateline-spanning polygon touches a
-whole cell row); the R-tree's cost is geometry-independent.
-operators/pip.py auto-dispatches on the arithmetic rasterization cost.
+operators/pip.py builds one over every polygon set it assigns from:
+the query's cost does not depend on the polygons' shapes (a
+dateline-spanning sliver is one box), and its (point, entry) pairs
+are exactly the candidates its vectorized ray-cast tests.
 """
 
 from __future__ import annotations

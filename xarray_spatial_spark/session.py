@@ -8,6 +8,7 @@ cores rather than the 200 default.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -22,12 +23,21 @@ def ship_package(spark: SparkSession) -> None:
     """Make this package importable on executors — the programmatic
     equivalent of ``spark-submit --py-files pkg.zip`` (north rule's
     deployment mode).  Local mode still needs it: Python workers are
-    separate processes that do not inherit the driver's sys.path."""
-    zpath = Path(tempfile.gettempdir()) / "xarray_spatial_spark_pyfiles.zip"
+    separate processes that do not inherit the driver's sys.path.
+
+    The zip is named by a hash of the package sources, so an edited
+    checkout never ships a zip built from older code."""
+    sources = sorted(_PKG_DIR.rglob("*.py"))
+    digest = hashlib.sha256()
+    for p in sources:
+        digest.update(p.relative_to(_PKG_DIR).as_posix().encode() + b"\0")
+        digest.update(p.read_bytes() + b"\0")
+    zpath = (Path(tempfile.gettempdir())
+             / f"xarray_spatial_spark_pyfiles-{digest.hexdigest()[:16]}.zip")
     if not zpath.exists():
         tmp = zpath.with_suffix(".tmp.zip")
         with zipfile.ZipFile(tmp, "w") as z:
-            for p in sorted(_PKG_DIR.rglob("*.py")):
+            for p in sources:
                 z.write(p, Path(_PKG_DIR.name) / p.relative_to(_PKG_DIR))
         os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(str(zpath))

@@ -5,8 +5,8 @@ Two scale regimes, matching how polygon data actually arrives:
 - **Reference polygon sets are small and broadcast** (country/admin
   boundaries, sales territories: thousands of features, MBs) — the
   north-star PIP path keeps them driver-side inside a
-  :class:`~xarray_spatial_spark.operators.pip.PolygonSet` (grid or
-  STR R-tree index) and broadcasts to executors.  :func:`read_geojson`
+  :class:`~xarray_spatial_spark.operators.pip.PolygonSet` (packed
+  edges + STR R-tree) and broadcasts to executors.  :func:`read_geojson`
   parses a FeatureCollection with the stdlib json module and
   :func:`polygon_set` hands it straight to that machinery.
 
@@ -89,15 +89,16 @@ def read_geojson(path: str) -> list[dict[str, Any]]:
 def polygon_set(
     path_or_parts: str | list[dict[str, Any]],
     zone_property: str | None = None,
-    index_zoom: int = 6,
-    index: str = "auto",
     ignore_holes: bool = False,
 ):
-    """GeoJSON -> (PolygonSet, zone -> properties dict) ready for
-    pip_join / assign_zones.  Zones number parts 0..n-1 in document
-    order unless ``zone_property`` names an integer feature property
-    to use (its value must be unique per part — MultiPolygon features
-    need the default numbering or a per-part property)."""
+    """GeoJSON -> (PolygonSet, zone -> properties dict); the set's
+    ``verts`` (zone -> exterior ring) is what pip_join and pip_join_expr
+    take.  Zones number parts 0..n-1 in document order unless
+    ``zone_property`` names an integer feature property to use (its
+    value must be unique per part — MultiPolygon features need the
+    default numbering or a per-part property); ``ignore_holes`` assigns
+    by exterior rings when parts have holes.  An empty collection gives
+    an empty set, which assigns no point."""
     from xarray_spatial_spark.operators.pip import PolygonSet
 
     parts = (read_geojson(path_or_parts)
@@ -119,7 +120,7 @@ def polygon_set(
                              "values must be unique per polygon part")
         polygons[z] = p["exterior"]
         attrs[z] = p["properties"]
-    return PolygonSet(polygons, index_zoom=index_zoom, index=index), attrs
+    return PolygonSet(polygons), attrs
 
 
 def geojson_feature(
