@@ -214,7 +214,7 @@ def tiled_stencil_bench(spark) -> dict[str, float]:
     surface.slope(tdf).write.mode("overwrite").format("noop").save()
     out = {}
     # stored raster + strips under the cap -> the broadcast (zero
-    # shuffle) halo is the honest plan here; the shuffle-path slope is
+    # shuffle) halo is the honest plan here; the default-plan slope is
     # reported alongside as the beyond-cap (100-TB) number
     spark.conf.set("spark.xrspatial.halo.strategy", "broadcast")
     try:
@@ -251,36 +251,13 @@ def tiled_stencil_bench(spark) -> dict[str, float]:
                 out[name] = round(min(out.get(name, float("inf")), dt), 3)
         q.unpersist()
     finally:
-        spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
+        spark.conf.unset("spark.xrspatial.halo.strategy")
     best = float("inf")
     for _ in range(REPS):
         t0 = time.time()
         surface.slope(tdf).write.mode("overwrite").format("noop").save()
         best = min(best, time.time() - t0)
     out["slope_tiled_shuffle"] = round(best, 3)
-
-    # bucketed-table path: write once (untimed), then slope with NO
-    # strategy conf set — the round-3 auto-dispatch must pick the
-    # exchange-free bucket plan from the stored super-tile key
-    name = f"bench_terrain_bucketed_{TILE_RASTER}"
-    bpath = os.path.join(
-        os.environ.get("BENCH_CACHE", "/tmp/xss_bench_cache"),
-        f"terrain_bucket_{TILE_RASTER}",
-    )
-    spark.conf.unset("spark.xrspatial.halo.strategy")
-    try:
-        spark.table(name)
-    except Exception:
-        tiled.write_bucketed(tiled.read(spark, path), name, block=4,
-                             path=bpath)
-    bt = tiled.read_table(spark, name)
-    surface.slope(bt).write.mode("overwrite").format("noop").save()
-    best = float("inf")
-    for _ in range(REPS):
-        t0 = time.time()
-        surface.slope(bt).write.mode("overwrite").format("noop").save()
-        best = min(best, time.time() - t0)
-    out["slope_tiled_bucket"] = round(best, 3)
 
     tiled.table_scan_conf(spark)  # restore the narrow-table batch
     return out

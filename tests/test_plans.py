@@ -152,8 +152,9 @@ def test_no_unpartitioned_windows_in_regions_and_combine(spark):
 
 
 def test_tiled_stencil_single_exchange_no_python_emit(spark):
-    """Tiled halo stencil: strip emission is pure JVM (one explode
-    project), one exchange, one FlatMapGroupsInPandas."""
+    """Tiled halo stencil: message emission is pure JVM (one explode
+    project of super-tile-keyed tiles and strips), one exchange into
+    the groupBy(bk) assembly, one Python group node for the stencil."""
     from xarray_spatial_spark import raster, tiled
     from xarray_spatial_spark.operators import surface
 
@@ -173,6 +174,23 @@ def test_tiled_stencil_single_exchange_no_python_emit(spark):
     # one shuffle between the emit project and the group assemble
     downstream = plan.split("Generate explode")[0]
     assert downstream.count("Exchange hashpartitioning") == 1
+
+
+def test_unfused_stencil_chain_packs_once(spark):
+    """Three chained, unfused focal.mean passes over a computed tile()
+    input: each pass is single-input, so the tile() pack runs once and
+    the plan holds exactly one Python group node per pass."""
+    from xarray_spatial_spark import raster, tiled
+    from xarray_spatial_spark.operators import focal
+
+    rng = np.random.default_rng(0)
+    tdf = tiled.tile(
+        raster.df_from_numpy(spark, rng.uniform(0, 1, (64, 64))),
+        tile_h=16, tile_w=16,
+    )
+    plan = _plan(focal.mean(focal.mean(focal.mean(tdf))))
+    assert plan.count("FlatMapGroupsInPandas") == 1  # the tile() pack
+    assert plan.count("FlatMapGroupsInArrow") == 3  # one per pass
 
 
 def test_hll_distinct_stays_codegen(spark):

@@ -193,8 +193,8 @@ def test_focal_mean_multipass_fused(spark, arr):
 
 @pytest.mark.parametrize("dtype", [np.float64, np.float32])
 def test_broadcast_halo_matches_shuffle(spark, arr, dtype):
-    """Broadcast-strips halo (zero shuffle) must equal the shuffle
-    path bit-for-bit, ragged edge tiles and NaN blobs included, on
+    """Broadcast-strips halo (zero shuffle) must equal the default
+    plan bit-for-bit, ragged edge tiles and NaN blobs included, on
     float64 and float32 blobs."""
     df = raster.df_from_numpy(spark, arr)
     tdf = tiled.tile(df, tile_h=32, tile_w=32, dtype=dtype).persist()
@@ -204,7 +204,7 @@ def test_broadcast_halo_matches_shuffle(spark, arr, dtype):
         got = tiled.numpy_from_tiled(surface.slope(tdf), value_col="value")
         np.testing.assert_array_equal(base, got)
         # radius-2 (multi-column strips through the edge blobs)
-        spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
+        spark.conf.unset("spark.xrspatial.halo.strategy")
         k = np.ones((5, 5))
         b2 = tiled.numpy_from_tiled(
             focal.focal_stats(tdf, k, stats_funcs=("mean",)),
@@ -215,7 +215,7 @@ def test_broadcast_halo_matches_shuffle(spark, arr, dtype):
             value_col="mean")
         np.testing.assert_array_equal(b2, g2)
     finally:
-        spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
+        spark.conf.unset("spark.xrspatial.halo.strategy")
         tdf.unpersist()
 
 
@@ -233,7 +233,7 @@ def test_broadcast_halo_no_shuffle_plan(spark, arr):
         assert "Exchange" not in stencil
         assert "MapInPandas" in stencil or "MapInArrow" in stencil
     finally:
-        spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
+        spark.conf.unset("spark.xrspatial.halo.strategy")
         tdf.unpersist()
 
 
@@ -241,69 +241,14 @@ def test_broadcast_halo_cap(spark, arr):
     df = raster.df_from_numpy(spark, arr)
     tdf = tiled.tile(df, tile_h=32, tile_w=32)
     spark.conf.set("spark.xrspatial.halo.broadcast.maxBytes", "16")
+    spark.conf.set("spark.xrspatial.halo.strategy", "broadcast")
     try:
         with pytest.raises(ValueError, match="broadcast cap"):
             tiled.halo_map_tiled(tdf, 1, ["value"],
-                                 lambda m, p: None, "ty long",
-                                 strategy="broadcast")
+                                 lambda m, p: None, "ty long")
     finally:
         spark.conf.unset("spark.xrspatial.halo.broadcast.maxBytes")
-
-
-@pytest.mark.parametrize("dtype", [np.float64, np.float32])
-def test_bucket_halo_matches_shuffle(spark, arr, dtype):
-    """Co-partitioned (bucket) halo == shuffle path bit-for-bit,
-    cross-super-tile regions, ragged edges and NaN blobs included, on
-    float64 and float32 blobs."""
-    df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=16, tile_w=16, dtype=dtype).persist()
-    try:
-        base = tiled.numpy_from_tiled(surface.slope(tdf), value_col="value")
-        spark.conf.set("spark.xrspatial.halo.strategy", "bucket")
-        spark.conf.set("spark.xrspatial.halo.block", "2")
-        got = tiled.numpy_from_tiled(surface.slope(tdf), value_col="value")
-        np.testing.assert_array_equal(base, got)
-        k = np.ones((5, 5))
-        spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
-        b2 = tiled.numpy_from_tiled(
-            focal.focal_stats(tdf, k, stats_funcs=("mean",)),
-            value_col="mean")
-        spark.conf.set("spark.xrspatial.halo.strategy", "bucket")
-        g2 = tiled.numpy_from_tiled(
-            focal.focal_stats(tdf, k, stats_funcs=("mean",)),
-            value_col="mean")
-        np.testing.assert_array_equal(b2, g2)
-    finally:
-        spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
-        spark.conf.unset("spark.xrspatial.halo.block")
-        tdf.unpersist()
-
-
-def test_bucket_halo_bucketed_table_no_main_exchange(spark, arr, tmp_path):
-    """Over a write_bucketed table the raster side of the cogroup
-    plans WITHOUT an exchange — only the perimeter strips shuffle —
-    and the output still matches the shuffle path."""
-    df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=16, tile_w=16)
-    base = tiled.numpy_from_tiled(surface.slope(tdf), value_col="value")
-    name = tiled.write_bucketed(tdf, "t_bucket_plan", buckets=4, block=2,
-                                path=str(tmp_path / "tbl"))
-    try:
-        bt = spark.table(name)
-        spark.conf.set("spark.xrspatial.halo.strategy", "bucket")
-        spark.conf.set("spark.xrspatial.halo.block", "2")
-        sl = surface.slope(bt)
-        plan = sl._sc._jvm.PythonSQLUtils.explainString(
-            sl._jdf.queryExecution(), "formatted")
-        assert plan.count("Exchange") == 2  # strips side only (+legend)
-        assert ("FlatMapCoGroupsInPandas" in plan
-                    or "FlatMapCoGroupsInArrow" in plan)
-        got = tiled.numpy_from_tiled(sl, value_col="value")
-        np.testing.assert_array_equal(base, got)
-    finally:
-        spark.conf.set("spark.xrspatial.halo.strategy", "shuffle")
-        spark.conf.unset("spark.xrspatial.halo.block")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_plan")
+        spark.conf.unset("spark.xrspatial.halo.strategy")
 
 
 def test_focal_stats_float32_high_dynamic_range(spark):
@@ -351,51 +296,74 @@ def test_heterogeneous_fused_chain_matches_sequential(spark, arr):
     np.testing.assert_allclose(fused, seq, rtol=1e-6, equal_nan=True)
 
 
-def test_auto_dispatch_bucket_for_bucketed_table(spark, arr, tmp_path):
-    """With NO strategy conf set, a write_bucketed raster (carries the
-    bk super-tile key) takes the bucket plan; a plain tiled raster
-    takes shuffle.  Results identical either way."""
+@pytest.mark.parametrize("dtype", [np.float64, np.float32])
+def test_halo_across_super_tiles_matches_long(spark, arr, dtype):
+    """16-px tiles on the 70x93 raster: 5x6 ragged tiles spanning 2x2
+    super-tiles, so halos come both from sibling tiles in the same
+    group and from strips sent across super-tile boundaries.  Slope,
+    focal_stats at r=2 (JVM message projection) and at r=10 (Python
+    emitter) match the long-form path."""
     df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=32, tile_w=32)
-    name = tiled.write_bucketed(tdf, "t_auto_bucket", buckets=4, block=2,
-                                path=str(tmp_path / "t_auto_bucket"))
+    tdf = tiled.tile(df, tile_h=16, tile_w=16, dtype=dtype).persist()
+    rtol = 1e-12 if dtype == np.float64 else 1e-5
+    stats = ("mean", "max")
     try:
-        spark.conf.unset("spark.xrspatial.halo.strategy")
-        bt = tiled.read_table(spark, name)
-        out_b = surface.slope(bt)
-        plan = out_b._jdf.queryExecution().executedPlan().toString()
-        # bucket plan signature: a cogroup node (pandas or arrow flavor)
-        assert ("FlatMapCoGroups" in plan), plan
-        a_bucket = tiled.numpy_from_tiled(out_b)
-        a_shuffle = tiled.numpy_from_tiled(surface.slope(tdf))
-        np.testing.assert_array_equal(a_bucket, a_shuffle)
+        assert tdf.count() == 30
+        np.testing.assert_allclose(
+            tiled.numpy_from_tiled(surface.slope(tdf)),
+            raster.numpy_from_df(surface.slope(df, tile_h=32, tile_w=32)),
+            rtol=max(rtol, 1e-6), equal_nan=True,
+        )
+        for k in (circle_kernel(1, 1, 2.5), np.ones((21, 21))):
+            long_out = focal.focal_stats(df, k, stats_funcs=stats,
+                                         tile_h=32, tile_w=32)
+            tiled_out = focal.focal_stats(tdf, k, stats_funcs=stats)
+            for c in stats:
+                np.testing.assert_allclose(
+                    tiled.numpy_from_tiled(tiled_out, value_col=c),
+                    raster.numpy_from_df(long_out, value_col=c),
+                    rtol=rtol, equal_nan=True,
+                )
     finally:
-        spark.conf.unset("spark.xrspatial.halo.strategy")
-        spark.sql("DROP TABLE IF EXISTS t_auto_bucket")
-        tiled.table_scan_conf(spark)
+        tdf.unpersist()
 
 
-def test_two_bucketed_tables_different_blocks_coexist(spark, arr, tmp_path):
-    """Block size rides each DataFrame's bk metadata: opening a
-    second table with a different block must not poison the first
-    (the round-3 review caught conf last-read-wins doing exactly
-    that)."""
+def test_halo_radius_up_to_tile_size(spark):
+    """A radius equal to the tile size is exact; one past it raises a
+    ValueError naming the radius and the tile, instead of returning
+    cells that miss the halo from tiles two away."""
+    rng = np.random.default_rng(5)
+    a = rng.uniform(0, 10, (72, 72))  # 16-px tiles: 5x5, 2x2 super-tiles
+    df = raster.df_from_numpy(spark, a)
+    tdf = tiled.tile(df, tile_h=16, tile_w=16)
+    k16 = np.ones((33, 33))
+    np.testing.assert_allclose(
+        tiled.numpy_from_tiled(
+            focal.focal_stats(tdf, k16, stats_funcs=("mean",)),
+            value_col="mean"),
+        raster.numpy_from_df(
+            focal.focal_stats(df, k16, stats_funcs=("mean",),
+                              tile_h=32, tile_w=32),
+            value_col="mean"),
+        rtol=1e-12, equal_nan=True,
+    )
+    out = focal.focal_stats(tdf, np.ones((41, 41)), stats_funcs=("mean",))
+    with pytest.raises(Exception, match=r"ValueError: halo radius 20 "
+                                        r"exceeds the 16x16 tile"):
+        out.collect()
+
+
+@pytest.mark.parametrize("value", ["shuffle", "bucket", "brodcast"])
+def test_unknown_halo_strategy_raises(spark, arr, value):
+    """Only 'broadcast' is a halo strategy; the default plan is the
+    unset conf.  Any other value raises instead of silently running
+    some plan."""
     df = raster.df_from_numpy(spark, arr)
     tdf = tiled.tile(df, tile_h=32, tile_w=32)
-    a = tiled.write_bucketed(tdf, "t_blk2", buckets=4, block=2,
-                             path=str(tmp_path / "b2"))
-    b = tiled.write_bucketed(tdf, "t_blk4", buckets=4, block=4,
-                             path=str(tmp_path / "b4"))
+    spark.conf.set("spark.xrspatial.halo.strategy", value)
     try:
-        spark.conf.unset("spark.xrspatial.halo.strategy")
-        da = tiled.read_table(spark, a)
-        db = tiled.read_table(spark, b)  # would clobber a conf-based block
-        out_a = tiled.numpy_from_tiled(surface.slope(da))
-        out_b = tiled.numpy_from_tiled(surface.slope(db))
-        ref = tiled.numpy_from_tiled(surface.slope(tdf))
-        np.testing.assert_array_equal(out_a, ref)
-        np.testing.assert_array_equal(out_b, ref)
+        with pytest.raises(ValueError, match="only accepted value is "
+                                             "'broadcast'"):
+            surface.slope(tdf)
     finally:
-        spark.sql("DROP TABLE IF EXISTS t_blk2")
-        spark.sql("DROP TABLE IF EXISTS t_blk4")
-        tiled.table_scan_conf(spark)
+        spark.conf.unset("spark.xrspatial.halo.strategy")

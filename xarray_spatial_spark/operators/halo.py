@@ -101,14 +101,14 @@ def apply_stencil(
     dense arrays of shape (tile_h+2r, tile_w+2r) and returns
     interior-shaped (tile_h, tile_w) arrays — identical kernels on
     both paths; the tiled path shuffles ~8 bytes/cell instead of
-    ~33 and never touches per-cell rows.
+    ~33 and never touches per-cell rows.  ``tile_h``/``tile_w`` size
+    the long-form path only: a tiled input keeps its own tiles.
     """
     from xarray_spatial_spark import tiled as _tiled
 
     if _tiled.is_tiled(df):
         return _tiled.apply_stencil_tiled(
             df, fn, radius, value_cols=value_cols, out_cols=out_cols,
-            tile_h=tile_h, tile_w=tile_w,
         )
     r = radius
     th, tw = tile_h, tile_w

@@ -7,19 +7,20 @@ row per TILE:
 
     (ty long, tx long, h int, w int, th int, tw int, <band> binary ...)
 
-where each band is the row-major float64 bytes of the (h, w) block
-(NaN = nodata, mirroring the reference's ``boundary=np.nan`` dask
-map_overlap pad, xrspatial/focal.py:70-76).  Tiles are full
+where each band is the row-major float64 (or float32) bytes of the
+(h, w) block (NaN = nodata, mirroring the reference's
+``boundary=np.nan`` dask map_overlap pad, xrspatial/focal.py:70-76),
+followed by its four perimeter blobs.  Tiles are full
 ``tile_h x tile_w`` except the raster's bottom/right edges, which are
 clipped, so the raster extent is implicit in the tile set.
 
-A stencil pass over tiled data is ONE shuffle of ~1.02x the raster
-bytes (full tile to itself + radius-wide border strips to the 8
-neighbors), and every per-cell cost is a vectorized numpy slice —
-no per-cell rows, no pandas scatter.  This is the Spark re-plan of
-dask ``map_overlap`` boundary exchange at ~8 bytes/cell instead of
-~33, and is what makes slope/focal match the reference's numba
-per-core throughput (reference benchmarks/results.md anchors).
+A stencil pass over tiled data is ONE shuffle of about the raster's
+bytes, grouped per 4x4 super-tile: every tile goes to its own
+super-tile's group, plus radius-wide border strips to each
+neighbouring super-tile.  Each group assembles its tiles' NaN-padded
+blocks from its siblings and the strips with vectorized numpy slices —
+no per-cell rows, no pandas scatter.  This is the Spark re-plan of dask
+``map_overlap`` boundary exchange at ~8 bytes/cell instead of ~33.
 
 ``operators.halo.apply_stencil`` dispatches here automatically when
 its input carries the tiled schema, so every stencil operator
@@ -38,6 +39,8 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from xarray_spatial_spark.functions.geo import sql_ident
 
 DEFAULT_TILE = 512
 
@@ -71,11 +74,11 @@ def tiled_schema(bands: Sequence[str]) -> str:
     small perimeter blobs (~6%% of tile bytes at 512px): TRANSPOSED
     leftmost/rightmost ``EDGE`` columns (``__le``/``__re``) and plain
     top/bottom ``EDGE`` rows (``__te``/``__be``).  The transposed edge
-    blobs make every halo strip — vertical ones and corners included —
-    a plain contiguous ``substring`` in whole-stage codegen (column
-    extraction from row-major bytes would need per-element
+    blobs make every vertical and corner halo strip of the default
+    plan a plain contiguous ``substring`` in whole-stage codegen
+    (column extraction from row-major bytes would need per-element
     higher-order functions, which fall out of codegen and copy
-    catastrophically); the row blobs let the broadcast-halo strip
+    catastrophically); the row blobs let the broadcast plan's strip
     projection scan perimeter bytes only, never the block column."""
     cols = ["ty long", "tx long", "h int", "w int", "th int", "tw int"]
     for b in bands:
@@ -98,9 +101,9 @@ BLOB_SUFFIXES = ("__le", "__re", "__te", "__be")
 def _halo_blobs(a: np.ndarray) -> dict[str, bytes]:
     """All four perimeter blobs for one block: transposed left/right
     EDGE columns plus plain top/bottom EDGE rows (row-major, already
-    contiguous).  Stored top/bottom rows let the broadcast-halo strip
-    projection scan ONLY blob columns — no block-column read — so the
-    strips job costs perimeter, not area."""
+    contiguous).  The default halo plan slices its vertical and corner
+    strips from the transposed blobs; the broadcast plan reads only the
+    four blobs, so its strips job costs perimeter, not area."""
     le, re = _edge_blobs(a)
     e = min(EDGE, a.shape[0])
     te = np.ascontiguousarray(a[:e, :]).tobytes()
@@ -195,103 +198,117 @@ def untile(
 # halo-stencil over tiles
 # ---------------------------------------------------------------------------
 
-MSG_FIELDS = ("ty", "tx", "gy0", "gx0", "sh", "sw", "iscenter",
-              "transposed", "th", "tw")
+# Halo groups are 4x4 super-tiles keyed by ``bk``: a tile travels whole
+# to its own super-tile's group, where its siblings read their halos
+# from it, and sends a border strip only to neighbours in another
+# super-tile.
+_BLOCK = 4
+_BK = 1 << 20
+
+MSG_FIELDS = ("bk", "gy0", "gx0", "sh", "sw", "iscenter", "transposed",
+              "th", "tw")
+
+
+def _block_key(ty: int, tx: int) -> int:
+    return (ty // _BLOCK) * _BK + tx // _BLOCK
+
+
+def _block_key_sql(ty: str, tx: str) -> str:
+    return f"(({ty}) div {_BLOCK}) * {_BK} + (({tx}) div {_BLOCK})"
+
+
+def _span_sql(d: int, r: int, n: str, tn: str) -> tuple[str, str]:
+    """(first row, row count) of the part of a tile of ``n`` rows (full
+    size ``tn``) that a neighbour at offset ``d`` along that axis needs."""
+    if d == -1:
+        return "0", f"least({r}, {n})"
+    if d == 0:
+        return "0", n
+    lo = f"greatest({tn} - {r}, 0)"
+    return lo, f"({n} - {lo})"
 
 
 def _jvm_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
-    """All 9 halo messages per tile as ONE select/explode of plain
+    """All halo messages per tile as ONE SQL explode of plain
     substring/concat expressions — zero Python, zero higher-order
     functions, stays in whole-stage codegen.
 
-    dx == 0 strips slice the row-major block directly (contiguous
-    rows).  dx != 0 strips (vertical edges + corners) slice the
-    transposed edge blobs, and arrive transposed=1 ((sw, sh)
+    The centre message is the tile itself (a zero-copy column
+    reference) keyed by its own super-tile.  A strip for neighbour
+    (dy, dx) is emitted only when that neighbour lies in another
+    super-tile.  dx == 0 strips slice the row-major block directly
+    (contiguous rows).  dx != 0 strips (vertical edges + corners) slice
+    the transposed edge blobs, and arrive transposed=1 ((sw, sh)
     row-major); ``r`` is a plan-time int so the per-column concat
     unrolls to <= EDGE substrings."""
-    h, w = F.col("h"), F.col("w")
-    th, tw = F.col("th"), F.col("tw")
-    ty, tx = F.col("ty"), F.col("tx")
+    own = _block_key_sql("ty", "tx")
     structs = []
     for dy in (-1, 0, 1):
-        if dy == -1:
-            rlo, sh = F.lit(0), F.least(F.lit(r), h)
-        elif dy == 0:
-            rlo, sh = F.lit(0), h
-        else:
-            rlo = F.greatest(th - r, F.lit(0))
-            sh = h - rlo
+        rlo, sh = _span_sql(dy, r, "h", "th")
         for dx in (-1, 0, 1):
-            if dx == -1:
-                clo, sw = F.lit(0), F.least(F.lit(r), w)
-            elif dx == 0:
-                clo, sw = F.lit(0), w
-            else:
-                clo = F.greatest(tw - r, F.lit(0))
-                sw = w - clo
-            valid = (sh > 0) & (sw > 0) & (ty + dy >= 0) & (tx + dx >= 0)
+            clo, sw = _span_sql(dx, r, "w", "tw")
+            centre = dy == 0 and dx == 0
+            dest = _block_key_sql(f"ty + {dy}", f"tx + {dx}")
             fields = [
-                (ty + dy).cast("long").alias("ty"),
-                (tx + dx).cast("long").alias("tx"),
-                (ty * th + rlo).cast("long").alias("gy0"),
-                (tx * tw + clo).cast("long").alias("gx0"),
-                sh.cast("int").alias("sh"),
-                sw.cast("int").alias("sw"),
-                F.lit(1 if dy == 0 and dx == 0 else 0).alias("iscenter"),
-                F.lit(0 if dx == 0 else 1).alias("transposed"),
-                th.cast("int").alias("th"),
-                tw.cast("int").alias("tw"),
+                f"CAST({dest} AS LONG) AS bk",
+                f"CAST(ty * th + {rlo} AS LONG) AS gy0",
+                f"CAST(tx * tw + {clo} AS LONG) AS gx0",
+                f"CAST({sh} AS INT) AS sh",
+                f"CAST({sw} AS INT) AS sw",
+                f"{int(centre)} AS iscenter",
+                f"{int(dx != 0)} AS transposed",
+                "CAST(th AS INT) AS th",
+                "CAST(tw AS INT) AS tw",
             ]
             for b in bands:
-                data = F.col(b)
+                data = sql_ident(b)
                 # bytes per cell, from blob length (float32 or float64)
-                isz = (F.length(data) / (h * w)).cast("long")
-                if dy == 0 and dx == 0:
-                    strip = data  # full tile: zero-copy column reference
+                isz = f"CAST(length({data}) / (h * w) AS LONG)"
+                if centre:
+                    strip = data
                 elif dx == 0:
                     # contiguous row band from the row-major block
-                    strip = data.substr(
-                        (rlo * w * isz + 1).cast("int"),
-                        (sh * w * isz).cast("int"),
-                    )
+                    strip = (f"substring({data}, CAST({rlo} * w * {isz} + 1 AS INT), "
+                             f"CAST({sh} * w * {isz} AS INT))")
                 else:
                     # from the transposed edge blob: blob row j = source
                     # column (j for __le; w-e+j for __re), each a
                     # contiguous h-run; slice rows [rlo, rlo+sh) of up
-                    # to r columns and concat (r is a Python int ->
-                    # unrolled, no HOF)
-                    blob = F.col(f"{b}__le" if dx == -1 else f"{b}__re")
-                    e = F.least(F.lit(EDGE), w)  # blob row count
+                    # to r columns and concat (only the first `sw`
+                    # columns exist when w < r)
+                    blob = sql_ident(f"{b}__le" if dx == -1 else f"{b}__re")
                     parts = []
                     for k in range(r):
-                        # k-th needed column, as a blob row index
-                        j = F.lit(k) if dx == -1 else (e - sw + k)
-                        part = blob.substr(
-                            ((j * h + rlo) * isz + 1).cast("int"),
-                            (sh * isz).cast("int"),
-                        )
-                        # only the first `sw` columns exist (w < r case)
-                        parts.append(F.when(F.lit(k) < sw, part)
-                                     .otherwise(F.lit(b"")))
-                    strip = parts[0] if len(parts) == 1 else F.concat(*parts)
-                fields.append(strip.alias(b))
-            structs.append(F.when(valid, F.struct(*fields)).otherwise(F.lit(None)))
+                        j = str(k) if dx == -1 else f"(least({EDGE}, w) - {sw} + {k})"
+                        parts.append(
+                            f"CASE WHEN {k} < {sw} THEN substring({blob}, "
+                            f"CAST(({j} * h + {rlo}) * {isz} + 1 AS INT), "
+                            f"CAST({sh} * {isz} AS INT)) ELSE X'' END")
+                    strip = parts[0] if r == 1 else f"concat({', '.join(parts)})"
+                fields.append(f"{strip} AS {sql_ident(b)}")
+            msg = f"struct({', '.join(fields)})"
+            if not centre:
+                valid = (f"{sh} > 0 AND {sw} > 0 AND ty + {dy} >= 0 "
+                         f"AND tx + {dx} >= 0 AND {dest} != {own}")
+                msg = f"CASE WHEN {valid} THEN {msg} END"
+            structs.append(msg)
     return (
-        tdf.select(F.explode(F.array(*structs)).alias("_m"))
-        .filter(F.col("_m").isNotNull())
-        .select("_m.*")
+        tdf.selectExpr(f"explode(array({', '.join(structs)})) AS _m")
+        .where("_m IS NOT NULL")
+        .selectExpr("_m.*")
     )
 
 
 def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
-    """Fallback message emitter for radius > EDGE (or inputs without
-    edge blobs): views each tile in Python and emits all 9 messages.
-    One extra JVM->Python crossing of the raster; correct for any
-    radius <= tile size."""
+    """Message emitter for radius > EDGE (or inputs without edge
+    blobs): views each tile in Python and emits the same messages as
+    ``_jvm_messages`` — the tile to its own super-tile, a strip to each
+    neighbour in another super-tile — all untransposed.  One extra
+    JVM->Python crossing of the raster."""
     msg_schema = (
-        "ty long, tx long, gy0 long, gx0 long, sh int, sw int, "
+        "bk long, gy0 long, gx0 long, sh int, sw int, "
         "iscenter int, transposed int, th int, tw int, "
-        + ", ".join(f"{b} binary" for b in bands)
+        + ", ".join(f"{sql_ident(b)} binary" for b in bands)
     )
     target = _arrow_schema_of(msg_schema)
 
@@ -303,11 +320,16 @@ def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
             for i in range(rb.num_rows):
                 ty, tx, h, w, th, tw = (int(keys[c][i]) for c in TILE_KEY_COLS)
                 gy, gx = ty * th, tx * tw
+                own = _block_key(ty, tx)
                 arrs = {b: _blob_view(blobs[b], i, h, w) for b in bands}
                 for dy in (-1, 0, 1):
                     for dx in (-1, 0, 1):
                         dty, dtx = ty + dy, tx + dx
+                        centre = dy == 0 and dx == 0
                         if dty < 0 or dtx < 0:
+                            continue
+                        bk = _block_key(dty, dtx)
+                        if bk == own and not centre:
                             continue
                         rlo = max(0, (dty * th - r) - gy)
                         rhi = min(h, (dty * th + th + r) - gy)
@@ -315,8 +337,8 @@ def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
                         chi = min(w, (dtx * tw + tw + r) - gx)
                         if rlo >= rhi or clo >= chi:
                             continue
-                        msg = (dty, dtx, gy + rlo, gx + clo, rhi - rlo,
-                               chi - clo, int(dy == 0 and dx == 0), 0, th, tw)
+                        msg = (bk, gy + rlo, gx + clo, rhi - rlo, chi - clo,
+                               int(centre), 0, th, tw)
                         for k, v in zip(MSG_FIELDS, msg):
                             rows[k].append(v)
                         for b in bands:
@@ -378,8 +400,6 @@ _NBR_STRIP = {
     (1, -1): "top", (1, 0): "top", (1, 1): "top",
 }
 
-_NBRS8 = [(-1, -1), (-1, 0), (-1, 1), (0, -1), (0, 1), (1, -1), (1, 0), (1, 1)]
-
 
 def _clip_place(pad, oy0, ox0, gy0, gx0, sh, sw, src) -> None:
     """Copy the overlap of a source rect (global origin gy0/gx0, shape
@@ -396,11 +416,12 @@ def _clip_place(pad, oy0, ox0, gy0, gx0, sh, sw, src) -> None:
         src[slo_y:shi_y, slo_x:shi_x]
 
 
-# Every halo strategy assembles a tile from the same parts: the centre
-# block plus neighbour "pieces" (gy0, gx0, sh, sw, {band: array}) —
-# whole sibling tiles, shuffled messages or perimeter strips — each a
-# zero-copy view of an Arrow binary cell.  The strategies differ only
-# in how they gather the pieces.
+# Both halo plans assemble a tile from the same parts: the centre block
+# plus neighbour "pieces" (gy0, gx0, sh, sw, {band: array}) — the
+# sibling tiles and strips of its super-tile group, or broadcast
+# perimeter strips — each a zero-copy view of an Arrow binary cell
+# holding true raster values at its own global coordinates.  The plans
+# differ only in how they gather the pieces.
 
 def _blob_view(col, i: int, sh: int, sw: int,
                transposed: bool = False) -> np.ndarray:
@@ -422,8 +443,14 @@ def _reduce_tile(meta: dict, centre: dict, pieces, r: int, reduce_fn,
     """Assemble one tile and reduce it: NaN-pad the centre blocks by
     ``r``, clip every neighbour piece into place, run ``reduce_fn``
     (all-NaN windows' RuntimeWarnings silenced) and convert its pandas
-    frame to the ``target`` Arrow schema."""
+    frame to the ``target`` Arrow schema.  Halos come from the 8
+    neighbour tiles only, so a radius past the tile size is refused."""
     h, w = meta["h"], meta["w"]
+    if r > min(meta["th"], meta["tw"]):
+        raise ValueError(
+            f"halo radius {r} exceeds the {meta['th']}x{meta['tw']} tile; "
+            f"retile with tiles of at least {r} px per side"
+        )
     oy0, ox0 = meta["ty"] * meta["th"] - r, meta["tx"] * meta["tw"] - r
     padded = {}
     for b, blk in centre.items():
@@ -469,169 +496,6 @@ def _strip_lookup(tbl, bands: Sequence[str], r: int):
     return piece
 
 
-# block key: tiles group into (block x block) super-tiles; the bucket
-# halo strategy co-locates a whole super-tile per task, so only strips
-# crossing a super-tile boundary ever shuffle
-_BK = 1 << 20
-
-
-def block_key_col(block: int):
-    return (
-        F.floor(F.col("ty") / block) * _BK + F.floor(F.col("tx") / block)
-    ).cast("long")
-
-
-def _bucket_block(tdf: DataFrame) -> int:
-    """Resolve the super-tile block size for a bucketed raster: the
-    ``bk`` column's schema metadata (attached by ``read_table`` from
-    the stored table property — travels WITH the DataFrame, so two
-    open tables with different blocks can't poison each other), else
-    the session conf, else 4."""
-    if "bk" in tdf.columns:
-        meta = tdf.schema["bk"].metadata or {}
-        if "block" in meta:
-            return int(meta["block"])
-    return int(tdf.sparkSession.conf.get("spark.xrspatial.halo.block", "4"))
-
-
-def write_bucketed(
-    tdf: DataFrame,
-    name: str,
-    buckets: int | None = None,
-    block: int = 4,
-    path: str | None = None,
-) -> str:
-    """Store a tiled raster as a BUCKETED table on the super-tile key:
-    ``spark.table(name)`` then scans with a known HashPartitioning, so
-    the bucket halo strategy's per-block cogroup needs NO exchange on
-    the raster side — the 100-TB stencil plan (shuffle volume = the
-    super-tile-boundary strips only).  Uncompressed parquet (float
-    tiles are incompressible)."""
-    spark = tdf.sparkSession
-    buckets = buckets or spark.sparkContext.defaultParallelism
-    w = (
-        tdf.withColumn("bk", block_key_col(block))
-        .write.mode("overwrite").option("compression", "none")
-        .bucketBy(buckets, "bk").sortBy("ty", "tx")
-        .format("parquet")
-    )
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(name)
-    # the block size is part of the physical layout — carry it as a
-    # table property so read_table can attach it to the bk column's
-    # metadata and the bucket halo's group key matches the stored bk
-    spark.sql(
-        f"ALTER TABLE {name} SET TBLPROPERTIES ('xrspatial.halo.block' = '{block}')"
-    )
-    return name
-
-
-def _block_strip_rows(
-    tdf: DataFrame, r: int, bands: Sequence[str], block: int
-) -> DataFrame:
-    """Strips of tiles on a super-tile boundary, replicated to each
-    NEIGHBOR super-tile that needs them (keyed ``bk``).  Interior
-    tiles emit nothing, so the exchanged volume is the super-tile
-    perimeter — 1/(block*tile) of raster bytes at r=1."""
-    s = _strip_rows(tdf, r, bands)
-    ty, tx = F.col("ty"), F.col("tx")
-    own = F.floor(ty / block) * _BK + F.floor(tx / block)
-    cand = F.array(*[
-        F.when(
-            (ty + dy >= 0) & (tx + dx >= 0),
-            F.floor((ty + dy) / block) * _BK + F.floor((tx + dx) / block),
-        )
-        for dy, dx in _NBRS8
-    ])
-    dests = F.filter(
-        F.array_distinct(cand), lambda d: d.isNotNull() & (d != own)
-    )
-    # fresh aliases (s_*) on every carried column: both cogroup sides
-    # descend from the same scan, and Spark's self-join attribute
-    # dedup otherwise prunes the strip side's tile-key columns away
-    # before the Arrow UDF sees them
-    return s.select(
-        F.explode(dests).alias("bk"),
-        *[F.col(c).alias(f"s_{c}") for c in s.columns],
-    )
-
-
-def _halo_bucket(
-    tdf: DataFrame,
-    r: int,
-    bands: list,
-    reduce_fn,
-    out_schema: str,
-    block: int,
-) -> DataFrame:
-    """Co-partitioned halo exchange: ONE cogroup keyed by the
-    super-tile block key.  Tiles interior to a block take their halos
-    from sibling tiles in the same task; only block-boundary strips
-    (perimeter-scale) shuffle.  Over a ``write_bucketed`` table the
-    raster side plans with NO exchange at all; over any other tiled
-    input it degrades to one raster shuffle (same cost as the shuffle
-    strategy, same results)."""
-    main = tdf if "bk" in tdf.columns else tdf.withColumn(
-        "bk", block_key_col(block)
-    )
-    strips = _block_strip_rows(tdf, r, bands, block)
-    target = _arrow_schema_of(out_schema)
-
-    def _check_block(key0: int, t: tuple) -> None:
-        want = (t[0] // block) * _BK + t[1] // block
-        if key0 != want:
-            # a stored bk from write_bucketed(block=X) grouped the
-            # raster side, but strips were keyed with the session's
-            # block size — silent NaN halos otherwise
-            raise ValueError(
-                f"bucket halo block mismatch: tile {t} sits in "
-                f"group {key0} but block="
-                f"{block} expects {want}; set "
-                "spark.xrspatial.halo.block to the write_bucketed "
-                "block size"
-            )
-
-    def _asm(key: tuple, main_tbl: pa.Table, strips_tbl: pa.Table) -> pa.Table:
-        if main_tbl.num_rows == 0:
-            return target.empty_table()
-        key0 = int(key[0].as_py())
-        keys = _key_arrays(main_tbl)
-        blobs = {b: main_tbl.column(b) for b in bands}
-        tiles: dict = {}
-        for i in range(main_tbl.num_rows):
-            meta = {c: int(keys[c][i]) for c in TILE_KEY_COLS}
-            t = (meta["ty"], meta["tx"])
-            _check_block(key0, t)
-            tiles[t] = (meta, {b: _blob_view(blobs[b], i, meta["h"], meta["w"])
-                               for b in bands})
-        strip = _strip_lookup(
-            strips_tbl.rename_columns([c.removeprefix("s_")
-                                       for c in strips_tbl.column_names]),
-            bands, r,
-        )
-        outs = []
-        for (ty, tx), (meta, centre) in tiles.items():
-            pieces = []
-            for dy, dx in _NBRS8:
-                nb = (ty + dy, tx + dx)
-                if nb in tiles:
-                    m, arrs = tiles[nb]
-                    pieces.append((nb[0] * m["th"], nb[1] * m["tw"],
-                                   m["h"], m["w"], arrs))
-                elif (p := strip(nb, _NBR_STRIP[(dy, dx)])) is not None:
-                    pieces.append(p)
-            outs.append(_reduce_tile(meta, centre, pieces, r, reduce_fn,
-                                     target))
-        return pa.Table.from_batches(outs, schema=target)
-
-    return (
-        main.groupBy("bk")
-        .cogroup(strips.groupBy("bk"))
-        .applyInArrow(_asm, schema=out_schema)
-    )
-
-
 def _halo_broadcast(
     tdf: DataFrame,
     r: int,
@@ -644,11 +508,11 @@ def _halo_broadcast(
     strip projection -> broadcast -> mapInArrow assembles each padded
     block from its own row plus the 8 neighbors' broadcast strips.
 
-    Trade vs the shuffle path: the input is SCANNED twice (strip
+    Trade vs the default plan: the input is SCANNED twice (strip
     projection + stencil pass) instead of shuffled once, and the strip
     volume must fit the driver/broadcast (4r(th+tw)/(th*tw) of raster
     bytes — ~0.8%% at r=1 512^2 f32, so a ~2 TB raster saturates a
-    512 MB cap; beyond that the shuffle path is the plan).  Use it on
+    512 MB cap; beyond that the default plan is the plan).  Use it on
     STORED/cached tiled tables; on computed chains the double scan
     re-executes the upstream plan."""
     sdf = _strip_rows(tdf, r, bands)
@@ -664,7 +528,8 @@ def _halo_broadcast(
     if est > max_bytes:
         raise ValueError(
             f"halo strips ({int(est) >> 20} MiB) exceed the broadcast cap "
-            f"({max_bytes >> 20} MiB); use halo strategy 'shuffle'"
+            f"({max_bytes >> 20} MiB); unset spark.xrspatial.halo.strategy "
+            "for the default plan"
         )
     bc = tdf.sparkSession.sparkContext.broadcast(sdf.toArrow())
     target = _arrow_schema_of(out_schema)
@@ -692,67 +557,46 @@ def halo_map_tiled(
     value_cols: Sequence[str],
     reduce_fn,
     out_schema: str,
-    strategy: str | None = None,
 ) -> DataFrame:
     """The generic halo-exchange primitive: per-tile ``reduce_fn(meta,
     padded)`` where ``meta`` = dict(ty, tx, h, w, th, tw) and
     ``padded`` maps band -> NaN-padded (h+2r, w+2r) array.
     ``reduce_fn`` returns ANY pd.DataFrame matching ``out_schema`` —
-    stencils return one tiled row (apply_stencil_tiled), graph ops
-    return edge lists (regions), etc.
+    stencils return one tiled row (apply_stencil_tiled).  The radius
+    must not exceed the tile size (the task raises ``ValueError``).
 
-    Three physical strategies (``strategy`` param, else the Spark conf
-    ``spark.xrspatial.halo.strategy``; BOTH unset = auto-dispatch:
-    ``bucket`` when the raster carries the ``write_bucketed``
-    super-tile key and is eligible, else ``shuffle``):
+    Default plan: one message projection (``_jvm_messages``, or
+    ``_python_messages`` for radius > EDGE or inputs without edge
+    blobs) sends every tile to its 4x4 super-tile's group and a border
+    strip to each neighbouring super-tile; ONE groupBy(bk) shuffle ->
+    ``_halo_shuffle`` assembles every tile of the group.  One scan,
+    raster-scale shuffle, works on any tiled input.
 
-    - ``shuffle``: JVM strip emit -> ONE groupBy(ty, tx) shuffle ->
-      assemble.  One scan, raster-scale shuffle.  The 100-TB plan.
-    - ``broadcast``: perimeter-scale strip collect + broadcast ->
-      shuffle-free mapInArrow.  Two scans, zero shuffle.  The fast
-      plan for stored rasters whose strips fit the cap
-      (``spark.xrspatial.halo.broadcast.maxBytes``, default 512 MiB);
-      raises past the cap.  Requires radius <= EDGE and edge blobs.
-    - ``bucket``: per-super-tile cogroup (block size from
-      ``spark.xrspatial.halo.block``, default 4): tiles interior to a
-      (block x block) super-tile take halos from siblings in the same
-      task; ONLY super-tile-boundary strips shuffle.  Over a
-      ``write_bucketed`` table the raster side plans with NO exchange
-      — the beyond-broadcast 100-TB plan.  Requires radius <= EDGE
-      and edge blobs.
+    ``spark.xrspatial.halo.strategy=broadcast`` (the only other
+    accepted value) selects ``_halo_broadcast``: perimeter-scale strip
+    collect + broadcast -> shuffle-free mapInArrow.  Two scans, zero
+    shuffle, for stored rasters whose strips fit
+    ``spark.xrspatial.halo.broadcast.maxBytes`` (default 512 MiB;
+    raises past the cap).  Requires radius <= EDGE and edge blobs.
 
-    Strip-addressed groups past the raster edge have no center and
-    emit nothing, so domain edges stay NaN either way."""
+    Domain edges stay NaN on both plans."""
     r = int(radius)
     bands = list(value_cols)
     have_edges = all(f"{b}__le" in tdf.columns for b in bands)
-    if strategy is None:
-        strategy = tdf.sparkSession.conf.get(
-            "spark.xrspatial.halo.strategy", None
-        )
-    if strategy is None:
-        # auto-dispatch: a raster carrying the super-tile bucket key
-        # (written via write_bucketed, scanned with a known
-        # HashPartitioning) defaults to the exchange-free bucket plan
-        # when eligible; everything else takes the works-anywhere
-        # shuffle plan
-        if "bk" in tdf.columns and r <= EDGE and have_edges:
-            strategy = "bucket"
-        else:
-            strategy = "shuffle"
-    if strategy in ("broadcast", "bucket") and (r > EDGE or not have_edges):
-        raise ValueError(
-            f"{strategy} halo needs radius <= EDGE and edge blobs"
-        )
+    strategy = tdf.sparkSession.conf.get("spark.xrspatial.halo.strategy", None)
     if strategy == "broadcast":
+        if r > EDGE or not have_edges:
+            raise ValueError("broadcast halo needs radius <= EDGE and edge blobs")
         max_bytes = int(tdf.sparkSession.conf.get(
             "spark.xrspatial.halo.broadcast.maxBytes", str(512 << 20)
         ))
         return _halo_broadcast(tdf, r, bands, reduce_fn, out_schema,
                                max_bytes)
-    if strategy == "bucket":
-        return _halo_bucket(tdf, r, bands, reduce_fn, out_schema,
-                            _bucket_block(tdf))
+    if strategy is not None:
+        raise ValueError(
+            f"unknown spark.xrspatial.halo.strategy {strategy!r}: the only "
+            "accepted value is 'broadcast'; unset it for the default plan"
+        )
     if r <= EDGE and have_edges:
         msgs = _jvm_messages(tdf, r, bands)
     else:
@@ -783,38 +627,38 @@ def _arrow_arrays(pdf: pd.DataFrame, target: pa.Schema) -> list:
 def _halo_shuffle(
     msgs: DataFrame, r: int, bands: Sequence[str], reduce_fn, out_schema: str
 ) -> DataFrame:
-    """The shuffle strategy's assembly: ONE groupBy(ty, tx) brings each
-    tile's centre message and its neighbours' strips together; every
-    message is a piece read zero-copy from the shuffled Arrow buffers.
+    """The default plan's assembly: ONE groupBy(bk) brings a
+    super-tile's tiles and the strips its neighbours sent together;
+    every message is a piece read zero-copy from the shuffled Arrow
+    buffers.  Each centre tile is reduced with every other piece of its
+    group — ``_clip_place`` drops the pieces outside its window.
     Groups without a centre (strips addressed past the raster edge)
     emit nothing."""
     target = _arrow_schema_of(out_schema)
 
     def _assemble(key: tuple, tbl: pa.Table) -> pa.Table:
         m = {c: tbl.column(c).to_numpy(zero_copy_only=False)
-             for c in ("iscenter", "gy0", "gx0", "sh", "sw",
-                       "transposed", "th", "tw")}
-        centres = np.flatnonzero(m["iscenter"] == 1)
-        if len(centres) == 0:
-            return target.empty_table()
+             for c in MSG_FIELDS}
         blobs = {b: tbl.column(b) for b in bands}
-
-        def piece(i: int) -> tuple:
+        pieces = []
+        for i in range(tbl.num_rows):
             sh, sw = int(m["sh"][i]), int(m["sw"][i])
             tr = bool(m["transposed"][i])
-            return int(m["gy0"][i]), int(m["gx0"][i]), sh, sw, {
+            pieces.append((int(m["gy0"][i]), int(m["gx0"][i]), sh, sw, {
                 b: _blob_view(blobs[b], i, sh, sw, tr) for b in bands
-            }
+            }))
+        outs = []
+        for ci in np.flatnonzero(m["iscenter"] == 1).tolist():
+            gy0, gx0, h, w, centre = pieces[ci]
+            th, tw = int(m["th"][ci]), int(m["tw"][ci])
+            meta = {"ty": gy0 // th, "tx": gx0 // tw, "h": h, "w": w,
+                    "th": th, "tw": tw}
+            outs.append(_reduce_tile(meta, centre,
+                                     pieces[:ci] + pieces[ci + 1:],
+                                     r, reduce_fn, target))
+        return pa.Table.from_batches(outs, schema=target)
 
-        ci = int(centres[0])
-        _, _, h, w, centre = piece(ci)
-        meta = {"ty": int(key[0].as_py()), "tx": int(key[1].as_py()),
-                "h": h, "w": w, "th": int(m["th"][ci]), "tw": int(m["tw"][ci])}
-        pieces = [piece(i) for i in range(tbl.num_rows) if i != ci]
-        return pa.Table.from_batches(
-            [_reduce_tile(meta, centre, pieces, r, reduce_fn, target)])
-
-    return msgs.groupBy("ty", "tx").applyInArrow(_assemble, schema=out_schema)
+    return msgs.groupBy("bk").applyInArrow(_assemble, schema=out_schema)
 
 
 def apply_stencil_tiled(
@@ -823,26 +667,25 @@ def apply_stencil_tiled(
     radius: int,
     value_cols: Sequence[str] = ("value",),
     out_cols: Sequence[str] = ("value",),
-    tile_h: int = DEFAULT_TILE,
-    tile_w: int = DEFAULT_TILE,
 ) -> DataFrame:
     """One halo-stencil pass over a tiled raster.
 
-    Plan: a single JVM-side select/explode emits, per tile, the full
-    tile addressed to itself (a zero-copy column reference) plus <=8
-    border strips (contiguous substrings of the block / its transposed
-    edge blobs) addressed to the neighbor tiles; ONE groupBy(ty, tx)
-    shuffle co-locates them; each task assembles the NaN-padded
-    (h+2r, w+2r) block with numpy slicing, runs ``fn``, and emits the
-    interior (plus refreshed edge blobs) as one tiled row.
+    Plan: a single JVM-side SQL explode emits, per tile, the full tile
+    addressed to its own 4x4 super-tile (a zero-copy column reference)
+    plus the border strips (contiguous substrings of the block / its
+    transposed edge blobs) that neighbours in other super-tiles need;
+    ONE groupBy(bk) shuffle co-locates them; each task assembles every
+    tile's NaN-padded (h+2r, w+2r) block with numpy slicing, runs
+    ``fn``, and emits the interior (plus refreshed edge blobs) as one
+    tiled row per tile.
 
     Raster bytes cross the JVM<->Python boundary exactly once each
     way (the assemble/kernel stage); shuffle volume ~= raster bytes *
-    (1 + 4r(th+tw)/(th*tw)) — ~1.8%% halo overhead at r=1, 512x512.
-    Tiles whose group lacks the center row (strips addressed past the
-    raster edge) emit nothing, so domain edges stay NaN exactly like
-    the long-form path / the reference's NaN boundary
-    (xrspatial/focal.py:70-76 map_overlap boundary=np.nan).
+    (1 + r(th+tw)/(2*th*tw)) — ~0.2%% halo overhead at r=1, 512x512.
+    Groups that hold no tile (strips addressed past the raster edge)
+    emit nothing, so domain edges stay NaN exactly like the long-form
+    path / the reference's NaN boundary (xrspatial/focal.py:70-76
+    map_overlap boundary=np.nan).
     """
     bands = list(value_cols)
     ocols = list(out_cols)
@@ -1009,37 +852,13 @@ def read(spark: SparkSession, path: str, tile_bytes: int | None = None) -> DataF
     return _sized_scan(spark, spark.read.parquet(path), tile_bytes)
 
 
-def read_table(
-    spark: SparkSession, name: str, tile_bytes: int | None = None
-) -> DataFrame:
-    """Open a ``write_bucketed`` tiled table with the same reader-batch
-    sizing as ``read`` — ``spark.table`` alone leaves the 4096-row
-    vectorized-reader default, which aborts/OOMs on multi-MB binary
-    tile cells.  Also attaches the table's stored block-size property
-    as ``bk`` column metadata, so the bucket halo groups match the
-    stored layout per-DataFrame (two open tables with different
-    blocks stay independent — a session conf would be
-    last-read-wins)."""
-    df = spark.table(name)
-    try:
-        props = spark.sql(f"SHOW TBLPROPERTIES {name}").collect()
-        for r in props:
-            if r["key"] == "xrspatial.halo.block" and "bk" in df.columns:
-                # per-DataFrame: rides the bk column's schema metadata
-                df = df.withMetadata("bk", {"block": int(r["value"])})
-    except Exception:
-        pass  # not a catalog table (e.g. direct path read)
-    return _sized_scan(spark, df, tile_bytes)
-
-
 def _sized_scan(
     spark: SparkSession, df: DataFrame, tile_bytes: int | None
 ) -> DataFrame:
     if tile_bytes is None:
         band = next(
             c for c in df.columns
-            if c not in TILE_KEY_COLS and c != "bk"
-            and not c.endswith(BLOB_SUFFIXES)
+            if c not in TILE_KEY_COLS and not c.endswith(BLOB_SUFFIXES)
         )
         spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "4")
         row = df.select(F.length(band).alias("n")).limit(1).collect()
