@@ -1617,10 +1617,10 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected connected components over a deterministic
-    block-structured host graph (functions/graph.py:
+    block-structured host graph (operators/regions.py:
     connected_components; min-label fixed point == the recursive SQL
     twin's, independent of round counts)."""
-    from xarray_spatial_spark.functions import graph
+    from xarray_spatial_spark.operators.regions import connected_components
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     s = (F.col("doc_id") % 300)
@@ -1628,7 +1628,7 @@ def q_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.alias("src"),
         (s - (s % 10) + (s + F.col("doc_id")) % 10).alias("dst"),
     ).distinct()
-    return graph.connected_components(edges).select("node", "label")
+    return connected_components(edges).select("node", "label")
 
 
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -872,6 +872,7 @@ class TestTableStats:
     def test_ndv_stats_roundtrip_and_accuracy(self, spark, tmp_path):
         import numpy as np
 
+        from xarray_spatial_spark.functions import sketch
         from xarray_spatial_spark.sources import iceberg_format as I
 
         t = str(tmp_path / "t")
@@ -881,9 +882,9 @@ class TestTableStats:
             (F.col("id") % 3).cast("string").alias("lang"),
         )
         I.write_iceberg(df, t)
-        path = I.collect_table_stats(spark, t, ["doc_id", "host", "lang"], p=12)
+        path = sketch.collect_table_stats(spark, t, ["doc_id", "host", "lang"], p=12)
         assert path.endswith(".parquet") and "stats" in path
-        got = I.read_table_stats(t)
+        got = sketch.read_table_stats(t)
         assert got["row_count"] == 20_000
         assert got["snapshot_id"] == I.snapshots(t)[-1]["snapshot-id"]
         band = 3 * 1.04 / np.sqrt(1 << 12)
@@ -896,6 +897,7 @@ class TestTableStats:
     def test_stats_pin_to_snapshot_and_merge_across(self, spark, tmp_path):
         import numpy as np
 
+        from xarray_spatial_spark.functions import sketch
         from xarray_spatial_spark.functions.sketch import (
             hll_cardinality, hll_merge)
         from xarray_spatial_spark.sources import iceberg_format as I
@@ -905,15 +907,15 @@ class TestTableStats:
             F.col("id").alias("doc_id"), (F.col("id") % 7).alias("k"))
         I.write_iceberg(a, t)
         s1 = I.snapshots(t)[-1]["snapshot-id"]
-        I.collect_table_stats(spark, t, ["doc_id"], p=12)
+        sketch.collect_table_stats(spark, t, ["doc_id"], p=12)
         b = spark.range(5000, 9000).select(
             F.col("id").alias("doc_id"), (F.col("id") % 7).alias("k"))
         I.write_iceberg(b, t, mode="append")
         s2 = I.snapshots(t)[-1]["snapshot-id"]
-        I.collect_table_stats(spark, t, ["doc_id"], p=12)
+        sketch.collect_table_stats(spark, t, ["doc_id"], p=12)
 
-        old = I.read_table_stats(t, snapshot_id=s1)
-        new = I.read_table_stats(t, snapshot_id=s2)
+        old = sketch.read_table_stats(t, snapshot_id=s1)
+        new = sketch.read_table_stats(t, snapshot_id=s2)
         assert old["row_count"] == 5000 and new["row_count"] == 9000
         # the old artifact still answers for ITS snapshot (time travel)
         band = 3 * 1.04 / np.sqrt(1 << 12)
@@ -928,11 +930,12 @@ class TestTableStats:
             self, spark, tmp_path):
         import pytest as pt
 
+        from xarray_spatial_spark.functions import sketch
         from xarray_spatial_spark.sources import iceberg_format as I
 
         t = str(tmp_path / "t")
         I.write_iceberg(spark.range(10).select(F.col("id").alias("a")), t)
         with pt.raises(ValueError, match="not in table"):
-            I.collect_table_stats(spark, t, ["nope"])
+            sketch.collect_table_stats(spark, t, ["nope"])
         with pt.raises(FileNotFoundError, match="no stats artifact"):
-            I.read_table_stats(t)
+            sketch.read_table_stats(t)

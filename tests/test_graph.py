@@ -91,25 +91,6 @@ def test_pagerank_sink_and_hub(spark):
         assert abs(got[n] - 0.15) < 1e-12
 
 
-def test_connected_components(spark):
-    # two chains + an isolate-ish pair + a self-loop
-    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (12, 12), (20, 21), (21, 10)]
-    df = spark.createDataFrame(edges, schema="src long, dst long")
-    got = {r["node"]: r["label"]
-           for r in graph.connected_components(df).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1,
-                   10: 10, 11: 10, 20: 10, 21: 10, 12: 12}
-
-
-def test_connected_components_long_chain(spark):
-    # a 60-node path exercises many propagation rounds
-    edges = [(i, i + 1) for i in range(60)]
-    df = spark.createDataFrame(edges, schema="src long, dst long")
-    got = {r["node"]: r["label"]
-           for r in graph.connected_components(df).collect()}
-    assert set(got.values()) == {0} and len(got) == 61
-
-
 def test_hits_matches_numpy_power_iteration(spark):
     """HITS scores equal a dense numpy replay of the same normalized
     mutual recursion on a small digraph; hubs/authorities land where

@@ -4,7 +4,7 @@ cross-tile correctness via tiling invariance."""
 import numpy as np
 import pytest
 
-from xarray_spatial_spark.operators.regions import regions
+from xarray_spatial_spark.operators.regions import connected_components, regions
 from xarray_spatial_spark.raster import df_from_numpy, numpy_from_df
 
 
@@ -262,3 +262,22 @@ def test_regions_salt_and_pepper_million_regions(spark):
         assert got.max() == float(n * n - 1)
     finally:
         spark.conf.unset("spark.xrspatial.regions.maxDriverRoster")
+
+
+def test_connected_components(spark):
+    # two chains + an isolate-ish pair + a self-loop
+    edges = [(1, 2), (2, 3), (3, 4), (10, 11), (12, 12), (20, 21), (21, 10)]
+    df = spark.createDataFrame(edges, schema="src long, dst long")
+    got = {r["node"]: r["label"]
+           for r in connected_components(df).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1,
+                   10: 10, 11: 10, 20: 10, 21: 10, 12: 12}
+
+
+def test_connected_components_long_chain(spark):
+    # a 60-node path exercises many propagation rounds
+    edges = [(i, i + 1) for i in range(60)]
+    df = spark.createDataFrame(edges, schema="src long, dst long")
+    got = {r["node"]: r["label"]
+           for r in connected_components(df).collect()}
+    assert set(got.values()) == {0} and len(got) == 61

@@ -149,10 +149,10 @@ def near_dup_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") ->
     is the smallest doc id in the connected cluster — the keep-one
     apply step keeps ``doc_id == group_id``.  Pair generation is
     sub-quadratic LSH; the transitive closure is
-    :func:`graph.connected_components` (pointer-jumped min-label), so
+    :func:`regions.connected_components` (pointer-jumped min-label), so
     chains of pairwise-similar docs collapse into one group even when
     the endpoints were never a candidate pair themselves."""
-    from xarray_spatial_spark.functions.graph import connected_components
+    from xarray_spatial_spark.operators.regions import connected_components
 
     return connected_components(pairs, src=id_a, dst=id_b).select(
         F.col("node").alias("doc_id"), F.col("label").alias("group_id")

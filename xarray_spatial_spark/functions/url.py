@@ -561,10 +561,10 @@ def canonical_aliases(
     did send the client there).
 
     Scale: edges are url-pair strings (no payloads);
-    graph.connected_components is the verified min-label fixed point;
+    regions.connected_components is the verified min-label fixed point;
     the representative pass is two hash aggregates over (label, url).
     """
-    from xarray_spatial_spark.functions.graph import connected_components
+    from xarray_spatial_spark.operators.regions import connected_components
     from xarray_spatial_spark.functions.html import canonical_url
 
     u = F.col(url_col)

@@ -37,7 +37,7 @@ as an exchange):
    group of its right endpoint's cell, so the union of the per-group
    stars preserves global connectivity exactly while shrinking the
    CCL input from O(pairs) to O(points x 9);
-4. cluster labels = graph.connected_components over the star edges
+4. cluster labels = regions.connected_components over the star edges
    (min-label + pointer-jump, O(log diameter) rounds);
 5. border assignment: pass 2 also emits, per non-core point and per
    adjacent local core component, ONE representative edge to the
@@ -57,7 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xarray_spatial_spark.functions.graph import connected_components
+from xarray_spatial_spark.operators.regions import connected_components
 
 
 def neighbor_pairs(

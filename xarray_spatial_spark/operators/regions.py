@@ -244,6 +244,63 @@ def _roster_cap(spark) -> int:
         "spark.xrspatial.regions.maxDriverRoster", "2000000"))
 
 
+def connected_components(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_iters: int = 50,
+) -> DataFrame:
+    """(node, label) where label = the smallest node id in the node's
+    undirected component — min-label propagation with a per-round
+    convergence check and eager checkpoints (caching alone is not
+    enough for an iterative algorithm: the logical plan nests one
+    join+agg per round and the driver OOMs on analysis long before the
+    data does; checkpointing truncates the lineage).
+
+    Each round does a neighbor-min step AND a pointer-jump step
+    (label <- label's label), so propagation distance roughly doubles
+    per round — O(log diameter) rounds, not O(diameter); the classic
+    shortcutting trick (the raster CCL in this module uses the same
+    jump over its run graph)."""
+    sym = (
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+        .union(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
+    )
+    nodes = sym.select(F.col("_s").alias("node")).distinct()
+    # self-loops make one min-aggregation cover both "keep my label"
+    # and "take a neighbor's" — the monotone step of the fixed point
+    adj = sym.union(nodes.select(F.col("node").alias("_s"),
+                                 F.col("node").alias("_d"))).localCheckpoint()
+    labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
+    # convergence check WITHOUT a per-round join: every min-step and
+    # pointer jump can only DECREASE a node's label, so the exact
+    # total (decimal — int64 sums could wrap at web scale) strictly
+    # decreases until the fixed point; equal sums <=> no label moved
+    prev_sum = labels.agg(
+        F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+    for _ in range(max_iters):
+        stepped = (
+            adj.join(labels, adj["_s"] == labels["node"])
+            .groupBy(F.col("_d").alias("node"))
+            .agg(F.min("label").alias("label"))
+        )
+        # pointer jump: every label IS a node id, so label(label) exists
+        m = stepped.select(F.col("node").alias("_ln"),
+                           F.col("label").alias("_ll"))
+        new_labels = (
+            stepped.join(m, stepped["label"] == m["_ln"])
+            .select("node", F.col("_ll").alias("label"))
+            .localCheckpoint()
+        )
+        new_sum = new_labels.agg(
+            F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+        labels = new_labels
+        if new_sum == prev_sum:
+            break
+        prev_sum = new_sum
+    return labels
+
+
 def _distributed_region_map(
     edges_df: DataFrame, labs_df: DataFrame, out_col: str
 ) -> DataFrame:
@@ -254,12 +311,11 @@ def _distributed_region_map(
     path (roots ARE min labels both ways).
 
     Pieces are the existing scale primitives: min-label connected
-    components (functions/graph.py — O(log diameter) pointer-jumping
-    rounds over the PERIMETER-scale edge set) and the two-phase
-    global rank (plans/ranks.py — never a single-task window).  Used
-    only above :func:`_roster_cap`; below it the driver dict costs ~4
-    fewer jobs and the result is broadcast either way."""
-    from xarray_spatial_spark.functions.graph import connected_components
+    components (:func:`connected_components` — O(log diameter)
+    pointer-jumping rounds over the PERIMETER-scale edge set) and the
+    two-phase global rank (plans/ranks.py — never a single-task
+    window).  Used only above :func:`_roster_cap`; below it the driver
+    dict costs ~4 fewer jobs and the result is broadcast either way."""
     from xarray_spatial_spark.plans.ranks import global_row_number
 
     comp = connected_components(edges_df, src="la", dst="lb")

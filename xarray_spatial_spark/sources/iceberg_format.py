@@ -1665,107 +1665,3 @@ def rewrite_data_files(
         f.write(str(version))
     return snap_id
 
-
-def collect_table_stats(
-    spark: SparkSession,
-    table_dir: str,
-    columns: list[str],
-    snapshot_id: int | None = None,
-    p: int = 14,
-) -> str:
-    """Write a table-statistics artifact (the role Iceberg's Puffin
-    stats files play: per-column NDV sketches recorded against a
-    snapshot) for ``columns`` of the given snapshot.
-
-    One Spark job: every column's HyperLogLog registers stack into a
-    single aggregate (per column: max rho per register, exchanged as
-    <= columns x 2^p sparse cells — the bounded-collect contract of
-    sketch.hll_build).  Physically the union holds one column-pruned
-    scan branch PER column, so total I/O equals a single scan reading
-    all requested columns (columnar format: each branch reads only
-    its own column's bytes) — one job, not one job per column.  The
-    exact row count rides a second count job.  The artifact
-    is one parquet of (column, register, rho) rows with the snapshot
-    id, row count and p in the file metadata, stored under
-    ``<table>/stats/`` so `remove_orphan_files`' marker exemption
-    rules don't apply to it (it IS referenced state, swept only with
-    its snapshot).  Registers are mergeable (max), so incremental
-    writers can fold a new snapshot's delta the way streaming
-    hll_sink does.  Returns the artifact path."""
-    from xarray_spatial_spark.functions.sketch import _check_hll_p, _hll_idx_rho
-
-    _check_hll_p(p)
-    md = _read_metadata(table_dir)
-    snap_id = snapshot_id if snapshot_id is not None else md["current-snapshot-id"]
-    df = read_iceberg(spark, table_dir, snapshot_id=snap_id)
-    missing = [c for c in columns if c not in df.columns]
-    if missing:
-        raise ValueError(f"stats columns not in table: {missing}")
-    # one scan: stack (column-tag, register, rho) triples and aggregate
-    stacked = None
-    for c in columns:
-        idx, rho = _hll_idx_rho(F.xxhash64(F.col(c)), p)
-        part = df.filter(F.col(c).isNotNull()).select(
-            F.lit(c).alias("column"), idx.alias("register"), rho.alias("rho"))
-        stacked = part if stacked is None else stacked.unionByName(part)
-    regs = (stacked.groupBy("column", "register")
-            .agg(F.max("rho").alias("rho")).collect())
-    n_rows = df.count()
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    stats_dir = os.path.join(table_dir, "stats")
-    os.makedirs(stats_dir, exist_ok=True)
-    path = os.path.join(stats_dir, f"ndv-{snap_id}.parquet")
-    table = pa.table({
-        "column": pa.array([r["column"] for r in regs], pa.string()),
-        "register": pa.array([r["register"] for r in regs], pa.int32()),
-        "rho": pa.array([r["rho"] for r in regs], pa.int8()),
-    })
-    table = table.replace_schema_metadata({
-        b"stats_snapshot": str(int(snap_id)).encode(),
-        b"stats_rows": str(int(n_rows)).encode(),
-        b"hll_p": str(int(p)).encode(),
-    })
-    tmp = path + ".tmp"
-    pq.write_table(table, tmp)
-    os.replace(tmp, path)
-    return path
-
-
-def read_table_stats(table_dir: str, snapshot_id: int | None = None) -> dict:
-    """Load a :func:`collect_table_stats` artifact ->
-    ``{"snapshot_id", "row_count", "ndv": {column: estimate},
-    "registers": {column: np.ndarray}}``.  NDV estimates come from
-    sketch.hll_cardinality over the stored registers, so they carry
-    its ~1.04/sqrt(2^p) error band; registers are returned for
-    merging across snapshots."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    from xarray_spatial_spark.functions.sketch import hll_cardinality
-
-    if snapshot_id is None:
-        snapshot_id = _read_metadata(table_dir)["current-snapshot-id"]
-    path = os.path.join(table_dir, "stats", f"ndv-{snapshot_id}.parquet")
-    if not os.path.exists(path):
-        raise FileNotFoundError(f"no stats artifact for snapshot {snapshot_id}")
-    meta = pq.read_schema(path).metadata or {}
-    p = int(meta[b"hll_p"])
-    t = pq.read_table(path)
-    cols = t["column"].to_pylist()
-    reg = t["register"].to_numpy()
-    rho = t["rho"].to_numpy()
-    registers: dict = {}
-    for c in sorted(set(cols)):
-        arr = np.zeros(1 << p, np.uint8)
-        mask = np.array([x == c for x in cols])
-        arr[reg[mask]] = rho[mask]
-        registers[c] = arr
-    return {
-        "snapshot_id": int(meta[b"stats_snapshot"]),
-        "row_count": int(meta[b"stats_rows"]),
-        "ndv": {c: hll_cardinality(a) for c, a in registers.items()},
-        "registers": registers,
-    }
