@@ -239,3 +239,74 @@ def test_ring_cell_budget_error(spark):
             zoom=12, max_distance_deg=10.0,
             point_id="doc_id", target_id="target_id",
         ).collect()
+
+
+@pytest.mark.parametrize("max_distance", [math.inf, 3_000_000.0])
+@pytest.mark.parametrize("n_targets", [64, 65])
+def test_nearest_non_finite_points_get_nulls(spark, n_targets, max_distance):
+    """NULL and NaN coordinates have no nearest target on either tier
+    (64 targets -> expr, 65 -> broadcast): all nearest columns NULL,
+    bounded or not, while finite points keep theirs."""
+    rng = np.random.default_rng(3)
+    tv = [(float(x), float(y), float(i))
+          for i, (x, y) in enumerate(rng.uniform(-40, 40, (n_targets, 2)))]
+    tdf = spark.createDataFrame(tv, "lon double, lat double, city double")
+    pts = spark.createDataFrame(
+        [(0, 1.0, 2.0), (1, None, 2.0), (2, 1.0, None),
+         (3, float("nan"), 2.0), (4, -3.0, float("nan"))],
+        "pid long, lon double, lat double",
+    )
+    out = joins.nearest_join(pts, tdf, target_payload="city",
+                             metric="GREAT_CIRCLE", max_distance=max_distance)
+    pay = "nearest_payload" if n_targets <= joins.EXPR_CAP else "nearest_city"
+    cols = ["nearest_dist", "nearest_x", "nearest_y", pay]
+    rows = {r["pid"]: [r[c] for c in cols] for r in out.collect()}
+    assert all(v is not None for v in rows[0])
+    for pid in (1, 2, 3, 4):
+        assert rows[pid] == [None] * 4, (pid, rows[pid])
+
+
+def test_great_circle_bucket_wraps_antimeridian(spark):
+    """Points at +-179.9 deg with targets across the antimeridian: the
+    bucket-pruned broadcast fork (finite max_distance) equals the dense
+    fork cut at max_distance, and the expr tier."""
+    rng = np.random.default_rng(8)
+    n = 200
+    plon = np.where(rng.random(n) < 0.5, 179.9, -179.9)
+    plat = rng.uniform(-60, 60, n)
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(plon, plat))],
+        "pid long, lon double, lat double",
+    )
+    tlon = np.concatenate([rng.uniform(179.0, 180.0, 20),
+                           rng.uniform(-180.0, -179.0, 20)])
+    tlat = rng.uniform(-60, 60, 40)
+    tv = [(float(x), float(y), float(i))
+          for i, (x, y) in enumerate(zip(tlon, tlat))]
+    tdf = spark.createDataFrame(tv, "lon double, lat double, city double")
+    md = 200_000.0
+    cols = ["nearest_dist", "nearest_x", "nearest_y", "nearest_city"]
+
+    def frame(df):
+        return df.toPandas().set_index("pid").sort_index()
+
+    pruned = frame(proximity.nearest_broadcast(
+        pts, tdf, target_payload="city", metric="GREAT_CIRCLE",
+        max_distance=md).select("pid", *cols))
+    dense = frame(proximity.nearest_broadcast(
+        pts, tdf, target_payload="city", metric="GREAT_CIRCLE")
+        .select("pid", *cols))
+    beyond = dense["nearest_dist"] > md
+    dense.loc[beyond, cols] = np.nan
+    assert 0 < beyond.sum() < n
+    np.testing.assert_array_equal(pruned[cols].to_numpy(), dense[cols].to_numpy())
+    # the nearest target of some in-range point lies across the line
+    near = ~beyond
+    assert (np.sign(pruned.loc[near, "nearest_x"])
+            != np.sign(plon[near.to_numpy()])).any()
+    expr = frame(joins.nearest_join(
+        pts, tdf, target_payload="city", metric="GREAT_CIRCLE",
+        max_distance=md, strategy="expr")
+        .select("pid", *cols[:3], F.col("nearest_payload").alias("nearest_city")))
+    np.testing.assert_array_equal(expr["nearest_city"], pruned["nearest_city"])
+    np.testing.assert_allclose(expr[cols[:3]], pruned[cols[:3]], rtol=1e-9)

@@ -166,8 +166,7 @@ def test_tiled_stencil_single_exchange_no_python_emit(spark):
     sl = surface.slope(tdf)
     plan = _plan(sl)
     # exactly two Python nodes: the tile() pack building the fixture
-    # and the stencil assemble (pandas or arrow flavor) — the strip
-    # emit adds NO Python stage
+    # and the stencil assemble — the strip emit adds NO Python stage
     assert (plan.count("FlatMapGroupsInPandas")
             + plan.count("FlatMapGroupsInArrow")) == 2
     assert plan.count("MapInPandas") == 0
@@ -179,7 +178,8 @@ def test_tiled_stencil_single_exchange_no_python_emit(spark):
 def test_unfused_stencil_chain_packs_once(spark):
     """Three chained, unfused focal.mean passes over a computed tile()
     input: each pass is single-input, so the tile() pack runs once and
-    the plan holds exactly one Python group node per pass."""
+    the plan holds exactly one Arrow group node per pass; no tile
+    crosses into Python through pandas."""
     from xarray_spatial_spark import raster, tiled
     from xarray_spatial_spark.operators import focal
 
@@ -189,8 +189,9 @@ def test_unfused_stencil_chain_packs_once(spark):
         tile_h=16, tile_w=16,
     )
     plan = _plan(focal.mean(focal.mean(focal.mean(tdf))))
-    assert plan.count("FlatMapGroupsInPandas") == 1  # the tile() pack
-    assert plan.count("FlatMapGroupsInArrow") == 3  # one per pass
+    assert plan.count("FlatMapGroupsInPandas") == 0
+    # the tile() pack plus one per pass
+    assert plan.count("FlatMapGroupsInArrow") == 4
 
 
 def test_hll_distinct_stays_codegen(spark):

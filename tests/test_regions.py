@@ -281,3 +281,18 @@ def test_connected_components_long_chain(spark):
     got = {r["node"]: r["label"]
            for r in connected_components(df).collect()}
     assert set(got.values()) == {0} and len(got) == 61
+
+
+def test_grouped_kernels_build_without_eval_type_warning(spark):
+    """The grouped pandas kernels of regions and polygonize annotate
+    their key, so PySpark infers the grouped-map eval type without a
+    UserWarning."""
+    import warnings
+
+    from xarray_spatial_spark.operators.polygonize import polygonize
+
+    df = df_from_numpy(spark, np.array([[0.0, 1.0], [1.0, 1.0]]))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        regions(df, tile_h=2, tile_w=2)
+        polygonize(df, tile_h=2, tile_w=2)

@@ -244,8 +244,7 @@ def test_broadcast_halo_cap(spark, arr):
     spark.conf.set("spark.xrspatial.halo.strategy", "broadcast")
     try:
         with pytest.raises(ValueError, match="broadcast cap"):
-            tiled.halo_map_tiled(tdf, 1, ["value"],
-                                 lambda m, p: None, "ty long")
+            tiled.apply_stencil_tiled(tdf, lambda p: p, 1)
     finally:
         spark.conf.unset("spark.xrspatial.halo.broadcast.maxBytes")
         spark.conf.unset("spark.xrspatial.halo.strategy")
@@ -367,3 +366,64 @@ def test_unknown_halo_strategy_raises(spark, arr, value):
             surface.slope(tdf)
     finally:
         spark.conf.unset("spark.xrspatial.halo.strategy")
+
+
+def _assert_tile_format(tdf, bands):
+    """``tdf`` has exactly ``tiled_schema(bands)`` and every row's
+    perimeter blobs are those of its block."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    assert tdf.schema == _parse_datatype_string(tiled.tiled_schema(bands))
+    rows = tdf.collect()
+    assert rows
+    for r in rows:
+        for b in bands:
+            block = tiled._decode(r[b], r["h"], r["w"])
+            for sfx, blob in tiled._halo_blobs(block).items():
+                assert bytes(r[f"{b}{sfx}"]) == blob, (b, sfx, r["ty"], r["tx"])
+
+
+@pytest.mark.parametrize("dtype", [np.float64, np.float32])
+def test_tiled_producers_write_the_one_format(spark, arr, dtype):
+    """tile, map_tiles, apply_stencil_tiled, regions_tiled and
+    generate_terrain_tiled all write tiled_schema's types and blobs
+    consistent with each block (ragged 16x20 tiles of the 70x93
+    raster)."""
+    from xarray_spatial_spark.operators.regions import regions_tiled
+    from xarray_spatial_spark.sources.terrain import generate_terrain_tiled
+
+    df = raster.df_from_numpy(spark, arr)
+    tdf = tiled.tile(df, tile_h=16, tile_w=20, dtype=dtype).persist()
+    try:
+        _assert_tile_format(tdf, ["value"])
+        _assert_tile_format(tiled.map_tiles(
+            tdf, lambda a: {"value": a["value"], "twice": a["value"] * 2},
+            out_cols=("value", "twice")), ["value", "twice"])
+        _assert_tile_format(surface.slope(tdf), ["value"])
+        _assert_tile_format(regions_tiled(tiled.map_tiles(
+            tdf, lambda a: {"value": np.floor(a["value"] / 25)})),
+            ["value", "region"])
+        _assert_tile_format(generate_terrain_tiled(
+            spark, 45, 37, tile=16, dtype=dtype), ["value"])
+    finally:
+        tdf.unpersist()
+
+
+def test_tile_batch_writes_tiled_schema_types(spark):
+    meta = {"ty": 1, "tx": 2, "h": 2, "w": 3, "th": 4, "tw": 3}
+    batch = tiled._tile_batch(meta, {"v": np.zeros((2, 3), np.float32)})
+    want = tiled._arrow_schema_of(tiled.tiled_schema(["v"]))
+    assert batch.schema.names == want.names
+    assert batch.schema.types == want.types
+    (got_meta, arrs), = tiled._tile_rows(batch, ["v"])
+    assert got_meta == meta
+    assert arrs["v"].dtype == np.float32 and arrs["v"].shape == (2, 3)
+
+
+def test_blobless_tiled_frame_raises(spark, arr):
+    """A tiled frame without its perimeter blobs is refused at plan
+    time, naming the missing columns."""
+    tdf = tiled.tile(raster.df_from_numpy(spark, arr), tile_h=32, tile_w=32)
+    bare = tdf.drop("value__le", "value__te")
+    with pytest.raises(ValueError, match="value__le.*value__te"):
+        surface.slope(bare)

@@ -60,7 +60,7 @@ def _fused_label_geometry(
     src = raster.select("y", "x", value_col)
     haloed = with_halo(src, 1, th, tw)
 
-    def _one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ty, tx = int(key[0]), int(key[1])
         H, W = th + 2, tw + 2
         vals = np.full((H, W), np.nan)

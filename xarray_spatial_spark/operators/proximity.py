@@ -48,8 +48,7 @@ from xarray_spatial_spark import grid
 from xarray_spatial_spark.functions.geo import (
     EARTH_RADIUS, distance_col, sql_double, sql_ident,
 )
-
-_BROADCAST_CAP = 5_000_000  # targets above this must use knn_ring_join
+from xarray_spatial_spark.plans.joins import BROADCAST_CAP
 
 
 def _dist_matrix(
@@ -74,6 +73,16 @@ def _dist_matrix(
     raise ValueError(f"unknown metric {metric!r}")
 
 
+def _lon_cell(x: np.ndarray, cell: float, ncol: int) -> np.ndarray:
+    """Grid column of each x: ``floor(x / cell)``, or for great-circle
+    (``ncol`` > 0) one of ``ncol`` equal columns spanning 360 degrees
+    of longitude from -180, so columns ``0`` and ``ncol - 1`` touch
+    across the antimeridian."""
+    if not ncol:
+        return np.floor(x / cell).astype(np.int64)
+    return np.floor((x + 180.0) / (360.0 / ncol)).astype(np.int64) % ncol
+
+
 def _bearing(px, py, tx, ty):
     """Compass direction (reference proximity.py:238-258), vectorized."""
     x = tx - px
@@ -95,17 +104,22 @@ def nearest_broadcast(
 ) -> DataFrame:
     """Append nearest-target columns to ``points``: ``nearest_dist``,
     ``nearest_x``, ``nearest_y``[, ``nearest_<payload>``].  No target in
-    range -> NULLs.  Zero-shuffle broadcast NN join.
+    range, or a point whose distance is not finite (NULL, NaN or
+    infinite coordinates) -> NULLs.  Zero-shuffle broadcast NN join.
 
     With a finite ``max_distance`` the broadcast carries a grid-bucket
     index (cell side = the search radius) and each point only scores
     targets in its 3x3 cell ring — O(local density) per point instead
     of the dense O(P x T) matrix, which is what makes raster proximity
-    (targets = every non-zero cell) survive 100x target counts."""
+    (targets = every non-zero cell) survive 100x target counts.  For
+    great-circle the grid's longitude columns wrap at +-180 degrees.
+
+    The points pass through pandas whole, so a NaN in any float input
+    column (``x_col`` included) comes back NULL."""
     sc = points.sparkSession.sparkContext
     tcols = [x_col, y_col] + ([target_payload] if target_payload else [])
     tpdf = targets.select(*tcols).toPandas()
-    if len(tpdf) > _BROADCAST_CAP:
+    if len(tpdf) > BROADCAST_CAP:
         raise ValueError(
             f"{len(tpdf)} targets exceed broadcast cap; use knn_ring_join"
         )
@@ -119,6 +133,7 @@ def nearest_broadcast(
         "ty": tya,
         "tv": tpdf[target_payload].to_numpy() if target_payload else None,
         "cell": None,
+        "ncol": 0,
         "index": None,
     }
     if math.isfinite(max_distance) and max_distance > 0 and len(tpdf):
@@ -128,14 +143,18 @@ def nearest_broadcast(
         # degree cell widened by the worst-case lon shrink below)
         if metric.upper() == "GREAT_CIRCLE":
             cell = max_distance / 111320.0  # meters -> degrees latitude
+            # wrap longitude: ncol columns of width >= cell span 360 deg
+            ncol = max(1, int(360.0 // cell))
         else:
             cell = float(max_distance)
+            ncol = 0
         index: dict[tuple[int, int], list[int]] = {}
-        cxs = np.floor(txa / cell).astype(np.int64)
+        cxs = _lon_cell(txa, cell, ncol)
         cys = np.floor(tya / cell).astype(np.int64)
         for i, (cx, cy) in enumerate(zip(cxs, cys)):
             index.setdefault((int(cx), int(cy)), []).append(i)
         payload["cell"] = cell
+        payload["ncol"] = ncol
         payload["index"] = {k: np.asarray(v, np.int64) for k, v in index.items()}
     bc = sc.broadcast(payload)
 
@@ -153,6 +172,7 @@ def nearest_broadcast(
         t = bc.value
         tx, ty, tv = t["tx"], t["ty"], t["tv"]
         cell, index = t["cell"], t["index"]
+        ncol = t["ncol"]
         for pdf in batches:
             n = len(pdf)
             dist = np.full(n, np.nan)
@@ -166,7 +186,7 @@ def nearest_broadcast(
                     # bucket-pruned path: per occupied point cell, score
                     # only targets in the 3x3 (lon-widened for
                     # great-circle) neighbor cells
-                    pcx = np.floor(px / cell).astype(np.int64)
+                    pcx = _lon_cell(px, cell, ncol)
                     pcy = np.floor(py / cell).astype(np.int64)
                     order = np.lexsort((pcx, pcy))
                     keys = pcy[order] * (1 << 32) + pcx[order]
@@ -184,10 +204,13 @@ def nearest_broadcast(
                             rx = int(np.ceil(
                                 1.0 / max(np.cos(np.radians(lat_edge)), 1e-3)
                             ))
+                        cols = range(cx - rx, cx + rx + 1)
+                        if ncol:
+                            cols = sorted({c % ncol for c in cols})
                         cand = [
-                            index.get((cx + dx, cy + dy))
+                            index.get((c, cy + dy))
                             for dy in (-1, 0, 1)
-                            for dx in range(-rx, rx + 1)
+                            for c in cols
                         ]
                         cand = [c for c in cand if c is not None]
                         if not cand:
@@ -217,7 +240,7 @@ def nearest_broadcast(
                         by[s:e] = ty[idx]
                         if tv is not None:
                             bv[s:e] = tv[idx]
-                beyond = dist > max_distance
+                beyond = ~np.isfinite(dist) | (dist > max_distance)
                 dist[beyond] = np.nan
                 bx[beyond] = np.nan
                 by[beyond] = np.nan
@@ -414,7 +437,9 @@ def _nearest_select(
     max_distance: float,
 ) -> DataFrame:
     """``nearest_expr`` with ``nearest_join``'s ``max_distance`` rule:
-    beyond it all four columns are NULL.  Two projections: the first
+    beyond it all four columns are NULL, and so they are for a point
+    whose winning key is not finite (NULL, NaN or infinite
+    coordinates).  Two projections: the first
     adds ONE ``least`` over (key, payload, x, y) structs, the second
     reads its fields, so the optimizer keeps a single LEAST chain however
     many of the columns a query reads."""
@@ -441,10 +466,12 @@ def _nearest_select(
         "nearest_x": f"{b}.x",
         "nearest_y": f"{b}.y",
     }
+    # NULL k: NULL coordinates; NaN sorts above +inf in Spark
+    beyond = f"NOT coalesce({b}.k < double('Infinity'), false)"
     if math.isfinite(max_distance):
-        beyond = f"{dist} > {sql_double(max_distance)}"
-        new = {c: f"CASE WHEN {beyond} THEN NULL ELSE {e} END"
-               for c, e in new.items()}
+        beyond += f" OR {dist} > {sql_double(max_distance)}"
+    new = {c: f"CASE WHEN {beyond} THEN NULL ELSE {e} END"
+           for c, e in new.items()}
     # replace same-named input columns in place, as withColumn does
     exprs = [
         f"{new[c]} AS {sql_ident(c)}" if c in new else sql_ident(c)
@@ -468,7 +495,8 @@ def nearest_expr(
     over (key, payload, x, y) structs -- no Python, no shuffle, fuses
     with the surrounding stages.  ``targets`` = [(x, y, payload)].
     Adds ``nearest_dist``, ``nearest_payload``, ``nearest_x`` and
-    ``nearest_y``; no targets -> NULLs.
+    ``nearest_y``; no targets, or a point whose distance is not finite
+    -> NULLs.
 
     Targets rank on a key monotone in the distance (haversine ``a``,
     squared distance, or the Manhattan distance itself) and only the

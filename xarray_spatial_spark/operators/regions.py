@@ -31,6 +31,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -129,7 +130,7 @@ def _tile_label(
         "_tx", F.floor(F.col("x") / tw).cast("long")
     )
 
-    def _label(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _label(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ty, tx = int(key[0]), int(key[1])
         vals = np.full((th, tw), np.nan)
         keys = np.full((th, tw), np.nan)
@@ -170,7 +171,7 @@ def _boundary_pass(
     geometry: polygonize._fused_label_geometry.)"""
     haloed = with_halo(labeled, 1, th, tw)
 
-    def _edges(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _edges(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ty, tx = int(key[0]), int(key[1])
         H, W = th + 2, tw + 2
         vals = np.full((H, W), np.nan)
@@ -427,18 +428,19 @@ def regions_tiled(
     """Connected-component labeling over a dense-tile raster — the
     100-TB path: no per-cell rows anywhere.
 
-    1. map_tiles: per-tile CCL (pointer-jumping min-label) adds a
-       ``lab`` band of global ``y*2^32+x`` keys (float64 exact for
-       rasters under 2^20 rows, same bound as the long-form path).
+    1. per-tile CCL (pointer-jumping min-label) adds a ``lab`` band of
+       global ``y*2^32+x`` keys (float64 exact for rasters under 2^20
+       rows, same bound as the long-form path) and a ``labset`` column
+       (the tile's distinct labels).
     2. perimeter-only boundary compare: each tile ships its 1-wide
-       border strips (JVM substrings of the stored edge blobs — the
-       shuffle is ~0.8%% of raster bytes, never a halo exchange of
-       the full raster) to the shared-boundary key; a tiny pandas
-       kernel emits the cross-tile equal-value label EDGES.
-    3. Driver union-find over collected edges; the label roster
-       (tiny per-tile ``labset`` blobs from pass 1) builds the dense
-       scan-order rank; ONE broadcast lookup array relabels every
-       tile map-side.
+       border strips (``tiled._strip_rows``: JVM substrings of the
+       stored perimeter blobs — the shuffle is ~0.8%% of raster bytes,
+       never a halo exchange of the full raster) to the shared-boundary
+       key; a tiny Arrow kernel emits the cross-tile equal-value label
+       EDGES.
+    3. Driver union-find over collected edges; the label roster (the
+       ``labset`` lists) builds the dense scan-order rank; ONE
+       broadcast lookup array relabels every tile map-side.
 
     Output: tiled raster with bands (value_col, out_col).  Matches
     ``regions`` exactly (tests: untile(regions_tiled(tile(x))) ==
@@ -449,221 +451,160 @@ def regions_tiled(
     from xarray_spatial_spark import tiled as tl
 
     # ---- pass 1: per-tile CCL, lab band ------------------------------
-    # map_tiles has no tile-origin meta; use a dedicated mapInPandas.
-    # The extra ``labset`` blob (distinct labels of the tile, int64)
-    # lets the driver collect the label roster as a tiny column select
-    # later, with no second decode pass over the raster.
-    out_schema = tl.tiled_schema([value_col, "lab"]) + ", labset binary"
+    # The extra ``labset`` list lets the driver collect the label
+    # roster as a tiny column select later, with no second decode pass
+    # over the raster.
+    out_schema = tl.tiled_schema([value_col, "lab"]) + ", labset array<long>"
+    labset_type = tl._arrow_schema_of(out_schema).field("labset").type
 
     def _pass1(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {c.split(" ")[0]: [] for c in out_schema.split(", ")}
-            for rec in pdf.itertuples(index=False):
-                h, w = int(rec.h), int(rec.w)
-                th, tw = int(rec.th), int(rec.tw)
-                ty, tx = int(rec.ty), int(rec.tx)
+        for rb in batches:
+            for meta, arrs in tl._tile_rows(rb, [value_col]):
                 # value band keeps its stored dtype (float32 rasters
                 # stay 4 B/cell through the persisted pass and the
-                # halo exchange); only lab needs float64 key exactness
-                vals = tl._decode(getattr(rec, value_col), h, w)
-                y0, x0 = ty * th, tx * tw
+                # strip exchange); only lab needs float64 key exactness
+                vals = arrs[value_col]
+                h, w = vals.shape
+                y0, x0 = meta["ty"] * meta["th"], meta["tx"] * meta["tw"]
                 yy = (np.arange(h, dtype=np.float64) + y0)[:, None]
                 xx = (np.arange(w, dtype=np.float64) + x0)[None, :]
                 keys = yy * float(_KEY) + xx
                 # NaN VALUES are legitimate cells (their own class);
                 # tiles are dense, so every cell is present
                 lab = _tile_ccl(vals, keys, conn, y0=y0, x0=x0)
-                out["ty"].append(ty)
-                out["tx"].append(tx)
-                out["h"].append(h)
-                out["w"].append(w)
-                out["th"].append(th)
-                out["tw"].append(tw)
-                for name, arr, dt in ((value_col, vals, vals.dtype),
-                                      ("lab", lab, np.float64)):
-                    a = np.ascontiguousarray(arr, dtype=dt)
-                    out[name].append(a.tobytes())
-                    for sfx, blob in tl._halo_blobs(a).items():
-                        out[f"{name}{sfx}"].append(blob)
-                out["labset"].append(
-                    np.unique(lab).astype(np.int64).tobytes()
+                labset = pa.array([np.unique(lab).astype(np.int64)],
+                                  labset_type)
+                yield tl._tile_batch(
+                    meta,
+                    {value_col: vals,
+                     "lab": np.ascontiguousarray(lab, dtype=np.float64)},
+                    extra={"labset": labset},
                 )
-            yield pd.DataFrame(out)
 
-    labeled = tdf.mapInPandas(_pass1, schema=out_schema)
+    labeled = tl._select(tdf, [value_col]).mapInArrow(_pass1, schema=out_schema)
     labeled = labeled.persist()
 
     # ---- pass 2: PERIMETER-ONLY boundary compare ---------------------
     # Cross-tile edges only involve cells touching a tile border, so
-    # instead of a halo exchange that reships ~1.02x the raster bytes
-    # (the round-2/early-round-3 shape), each tile emits its four
-    # 1-wide border strips -- plain JVM substrings of the stored edge
-    # blobs, perimeter bytes only -- keyed by the shared boundary;
-    # one groupBy co-locates the two sides of every boundary (plus
-    # the 4-tile corner singletons for 8-conn) and a tiny pandas
-    # kernel compares them.  Shuffle volume drops from raster-scale
-    # to ~4(th+tw)/(th*tw) of it (~0.8%% at 512px tiles).
-    h_, w_ = F.col("h"), F.col("w")
-    ty_, tx_ = F.col("ty"), F.col("tx")
+    # instead of a halo exchange that reships ~1.02x the raster bytes,
+    # each tile emits its four 1-wide border strips (perimeter bytes
+    # only) keyed by the shared boundary; the 8-connectivity corner
+    # messages carry a top/bottom strip and name its end cell.  Shuffle
+    # volume drops from raster-scale to ~4(th+tw)/(th*tw) of it (~0.8%%
+    # at 512px tiles).
+    strips = tl._strip_rows(labeled, 1, [value_col, "lab"])
+    ty_, tx_, h_, w_ = F.col("ty"), F.col("tx"), F.col("h"), F.col("w")
 
-    def _strip(band, which):
-        isz = (F.length(F.col(band)) / (h_ * w_)).cast("long")
-        e = F.least(F.lit(tl.EDGE), w_)
-        er = F.least(F.lit(tl.EDGE), h_)
-        if which == "left":      # col 0: first blob row of __le
-            return F.col(f"{band}__le").substr(F.lit(1), (h_ * isz).cast("int"))
-        if which == "right":     # col w-1: last blob row of __re
-            return F.col(f"{band}__re").substr(
-                (((e - 1) * h_) * isz + 1).cast("int"), (h_ * isz).cast("int"))
-        if which == "top":       # row 0: first row of __te
-            return F.col(f"{band}__te").substr(F.lit(1), (w_ * isz).cast("int"))
-        if which == "bottom":    # row h-1: last row of __be
-            return F.col(f"{band}__be").substr(
-                (((er - 1) * w_) * isz + 1).cast("int"), (w_ * isz).cast("int"))
-        if which == "nw":
-            return F.col(f"{band}__te").substr(F.lit(1), isz.cast("int"))
-        if which == "ne":
-            return F.col(f"{band}__te").substr(
-                ((w_ - 1) * isz + 1).cast("int"), isz.cast("int"))
-        if which == "sw":
-            return F.col(f"{band}__be").substr(
-                (((er - 1) * w_) * isz + 1).cast("int"), isz.cast("int"))
-        # se
-        return F.col(f"{band}__be").substr(
-            ((((er - 1) * w_) + (w_ - 1)) * isz + 1).cast("int"),
-            isz.cast("int"))
-
-    def _msg(bty, btx, orient, pos, which, valid):
-        fields = [
+    def _msg(bty, btx, orient, pos, kind, cell, valid):
+        n = w_ if kind in ("top", "bot") else h_
+        return F.when(valid, F.struct(
             bty.cast("long").alias("bty"), btx.cast("long").alias("btx"),
             F.lit(orient).alias("orient"), F.lit(pos).alias("pos"),
-            _strip("lab", which).alias("labS"),
-            _strip(value_col, which).alias("valS"),
-        ]
-        return F.when(valid, F.struct(*fields)).otherwise(F.lit(None))
+            n.alias("n"), F.lit(cell).alias("cell"),
+            F.col(f"lab__{kind}").alias("labS"),
+            F.col(f"{value_col}__{kind}").alias("valS"),
+        ))
 
     msgs = [
-        _msg(ty_, tx_, 0, 0, "right", F.lit(True)),
-        _msg(ty_, tx_ - 1, 0, 1, "left", tx_ >= 1),
-        _msg(ty_, tx_, 1, 0, "bottom", F.lit(True)),
-        _msg(ty_ - 1, tx_, 1, 1, "top", ty_ >= 1),
+        _msg(ty_, tx_, 0, 0, "r", 0, F.lit(True)),
+        _msg(ty_, tx_ - 1, 0, 1, "l", 0, tx_ >= 1),
+        _msg(ty_, tx_, 1, 0, "bot", 0, F.lit(True)),
+        _msg(ty_ - 1, tx_, 1, 1, "top", 0, ty_ >= 1),
     ]
     if conn == 8:
+        # corner cells: the end cells of the bottom / top strips
         msgs += [
-            _msg(ty_, tx_, 2, 0, "se", F.lit(True)),
-            _msg(ty_ - 1, tx_ - 1, 2, 1, "nw", (ty_ >= 1) & (tx_ >= 1)),
-            _msg(ty_, tx_ - 1, 3, 0, "sw", tx_ >= 1),
-            _msg(ty_ - 1, tx_, 3, 1, "ne", ty_ >= 1),
+            _msg(ty_, tx_, 2, 0, "bot", -1, F.lit(True)),                # se
+            _msg(ty_ - 1, tx_ - 1, 2, 1, "top", 0,
+                 (ty_ >= 1) & (tx_ >= 1)),                              # nw
+            _msg(ty_, tx_ - 1, 3, 0, "bot", 0, tx_ >= 1),               # sw
+            _msg(ty_ - 1, tx_, 3, 1, "top", -1, ty_ >= 1),              # ne
         ]
-    strips = (
-        labeled.select(F.explode(F.array(*msgs)).alias("_m"))
+    boundary = (
+        strips.select(F.explode(F.array(*msgs)).alias("_m"))
         .filter(F.col("_m").isNotNull())
         .select("_m.*")
     )
 
-    # pair the two sides of every boundary inside ONE mapInPandas per
-    # partition instead of groupBy().applyInPandas(): with hundreds of
-    # 1-2-row groups, the per-group Arrow round trip dominated the
-    # whole operator (~2 s of a 2.9 s run at 67M cells for ~480
-    # boundary groups).  repartition co-locates both sides of a
-    # boundary key; a dict pairs them across arrow batches within the
-    # partition.  Duplicate edges across boundaries are harmless
-    # (union-find is idempotent), so no distinct() shuffle either.
-    def _pair_edges(batches) -> Iterator[pd.DataFrame]:
+    # pair the two sides of every boundary inside ONE mapInArrow per
+    # partition instead of a groupBy: with hundreds of 1-2-row groups,
+    # the per-group Arrow round trip dominated the whole operator.
+    # repartition co-locates both sides of a boundary key; a dict pairs
+    # them across arrow batches within the partition.  Duplicate edges
+    # across boundaries are harmless (union-find is idempotent), so no
+    # distinct() shuffle either.
+    def _pair_edges(batches) -> Iterator[pa.RecordBatch]:
         store: dict[tuple, tuple] = {}
-        acc_a: list[np.ndarray] = []
-        acc_b: list[np.ndarray] = []
+        acc_a: list[np.ndarray] = [np.array([], np.int64)]
+        acc_b: list[np.ndarray] = [np.array([], np.int64)]
 
         def eq(x, y):
             return (x == y) | (np.isnan(x) & np.isnan(y))
 
-        for pdf in batches:
-            for rec in pdf.itertuples(index=False):
-                k = (rec.bty, rec.btx, rec.orient)
+        for rb in batches:
+            m = {c: rb.column(c).to_numpy(zero_copy_only=False).tolist()
+                 for c in ("bty", "btx", "orient", "pos", "n", "cell")}
+            labS, valS = rb.column("labS"), rb.column("valS")
+            for i in range(rb.num_rows):
+                orient, n, cell = m["orient"][i], m["n"][i], m["cell"][i]
+                lab = tl._blob_view(labS, i, 1, n)[0]
+                val = tl._blob_view(valS, i, 1, n)[0]
+                if orient >= 2:  # corner: one end cell of the strip
+                    lab, val = lab[cell:cell + 1 or None], val[cell:cell + 1 or None]
+                k = (m["bty"][i], m["btx"][i], orient)
                 other = store.pop(k, None)
                 if other is None:
-                    store[k] = (int(rec.pos), rec.labS, rec.valS)
+                    store[k] = (m["pos"][i], lab, val)
                     continue
-                if int(rec.pos) == 0:
-                    aL, aV, bL, bV = rec.labS, rec.valS, other[1], other[2]
+                if m["pos"][i] == 0:
+                    la, va, lb, vb = lab, val, other[1], other[2]
                 else:
-                    aL, aV, bL, bV = other[1], other[2], rec.labS, rec.valS
-                la = np.frombuffer(aL, np.float64)
-                lb = np.frombuffer(bL, np.float64)
-                n = len(la)
-                vdt = tl._DTYPES[len(aV) // n]
-                va = np.frombuffer(aV, vdt)
-                vb = np.frombuffer(bV, vdt)
-                m = eq(va, vb)
-                pa = [la[m]]
-                pb = [lb[m]]
-                if conn == 8 and int(rec.orient) in (0, 1) and n > 1:
+                    la, va, lb, vb = other[1], other[2], lab, val
+                ok = eq(va, vb)
+                pa_, pb_ = [la[ok]], [lb[ok]]
+                if conn == 8 and orient in (0, 1) and len(la) > 1:
                     m2 = eq(va[1:], vb[:-1])
-                    pa.append(la[1:][m2]); pb.append(lb[:-1][m2])
+                    pa_.append(la[1:][m2]); pb_.append(lb[:-1][m2])
                     m3 = eq(va[:-1], vb[1:])
-                    pa.append(la[:-1][m3]); pb.append(lb[1:][m3])
-                A = np.concatenate(pa).astype(np.int64)
-                B = np.concatenate(pb).astype(np.int64)
+                    pa_.append(la[:-1][m3]); pb_.append(lb[1:][m3])
+                A = np.concatenate(pa_).astype(np.int64)
+                B = np.concatenate(pb_).astype(np.int64)
                 if len(A):
                     pair = np.unique(  # per-boundary dedup only
                         np.stack([np.minimum(A, B), np.maximum(A, B)], 1),
                         axis=0)
                     acc_a.append(pair[:, 0]); acc_b.append(pair[:, 1])
-        yield pd.DataFrame({
-            "la": np.concatenate(acc_a) if acc_a else np.array([], np.int64),
-            "lb": np.concatenate(acc_b) if acc_b else np.array([], np.int64),
+        yield pa.RecordBatch.from_pydict({
+            "la": np.concatenate(acc_a), "lb": np.concatenate(acc_b),
         })
 
     edges_df = (
-        strips.repartition("bty", "btx", "orient")
-        .mapInPandas(_pair_edges, schema="la long, lb long")
+        boundary.repartition("bty", "btx", "orient")
+        .mapInArrow(_pair_edges, schema="la long, lb long")
     )
 
-    # roster-size guard: the per-tile labset blobs measure the exact
-    # roster the driver would collect (one tiny label-scale agg over
-    # the persisted pass-1 output, labset column only).  Salt-and-
-    # pepper rasters (~1 region/cell) overflow the cap and take the
-    # fully distributed finish.
+    # roster-size guard: the per-tile labsets measure the exact roster
+    # the driver would collect (one tiny label-scale agg over the
+    # persisted pass-1 output, labset column only).  Salt-and-pepper
+    # rasters (~1 region/cell) overflow the cap and take the fully
+    # distributed finish.
     cap = _roster_cap(tdf.sparkSession)
     nlab = labeled.agg(
-        (F.sum(F.length("labset")) / 8).cast("long").alias("n")
+        F.sum(F.size("labset")).alias("n")
     ).collect()[0]["n"] or 0
     if nlab > cap:
         return _relabel_tiled_distributed(
             labeled, edges_df, value_col, out_col)
 
-    edges = edges_df.collect()
-    all_labels = np.concatenate([
-        np.frombuffer(r["labset"], np.int64)
-        for r in labeled.select("labset").collect()
-    ] or [np.array([], np.int64)])
-    all_labels = [int(x) for x in np.unique(all_labels)]
-
     # ---- driver union-find + dense scan-order rank -------------------
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:
-            parent[x], x = root, parent[x]
-        return root
-
-    for e in edges:
-        ra, rb = find(e["la"]), find(e["lb"])
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
-    roots = sorted({find(l) for l in all_labels})
-    rank_of_root = {root: i for i, root in enumerate(roots)}
-    lut_labels = np.array(sorted(all_labels), dtype=np.int64)
-    lut_ranks = np.array(
-        [rank_of_root[find(int(l))] for l in lut_labels], dtype=np.float64
+    root_of = dict(_union_find(edges_df.collect()))
+    lut_labels = np.unique(
+        labeled.select(F.explode("labset").alias("l")).toArrow()
+        .column("l").to_numpy()
     )
+    roots = [root_of.get(l, l) for l in lut_labels.tolist()]
+    rank_of_root = {root: i for i, root in enumerate(sorted(set(roots)))}
+    lut_ranks = np.array([rank_of_root[rt] for rt in roots], dtype=np.float64)
     bc = tdf.sparkSession.sparkContext.broadcast((lut_labels, lut_ranks))
 
     # ---- broadcast relabel, map-side ---------------------------------
@@ -703,24 +644,8 @@ def _relabel_tiled_distributed(
     and never come here."""
     from xarray_spatial_spark import tiled as tl
 
-    def _labs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            tys, txs, labs = [], [], []
-            for rec in pdf.itertuples(index=False):
-                ls = np.frombuffer(rec.labset, np.int64)
-                tys.append(np.full(len(ls), int(rec.ty), np.int64))
-                txs.append(np.full(len(ls), int(rec.tx), np.int64))
-                labs.append(ls)
-            if tys:
-                yield pd.DataFrame({
-                    "ty": np.concatenate(tys),
-                    "tx": np.concatenate(txs),
-                    "_lab": np.concatenate(labs),
-                })
-
     lab_rows = (
-        labeled.select("ty", "tx", "labset")
-        .mapInPandas(_labs, schema="ty long, tx long, _lab long")
+        labeled.select("ty", "tx", F.explode("labset").alias("_lab"))
         .persist()  # feeds the distinct-labels input AND the LUT join
     )
     mapping = _distributed_region_map(
@@ -732,40 +657,24 @@ def _relabel_tiled_distributed(
             F.col("_lab").alias("k"), F.col(out_col).alias("r"),
         )).alias("lutkv"))
     )
-    joined = labeled.select(
-        "ty", "tx", "h", "w", "th", "tw", value_col, "lab"
-    ).join(lut, ["ty", "tx"])
+    joined = tl._select(labeled, [value_col, "lab"]).join(lut, ["ty", "tx"])
 
-    out_schema = tl.tiled_schema([value_col, out_col])
-
-    def _apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {c.split(" ")[0]: [] for c in out_schema.split(", ")}
-            for i in range(len(pdf)):
-                rec = pdf.iloc[i]
-                h, w = int(rec["h"]), int(rec["w"])
-                vals = tl._decode(rec[value_col], h, w)
-                lab = tl._decode(rec["lab"], h, w)  # float64 keys
-                pairs = rec["lutkv"]
-                ks = np.array([p["k"] for p in pairs], np.int64)
-                rs = np.array([p["r"] for p in pairs], np.float64)
+    def _apply(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            luts = rb.column("lutkv")
+            for i, (meta, arrs) in enumerate(
+                    tl._tile_rows(rb, [value_col, "lab"])):
+                kv = luts[i].values
+                ks = kv.field("k").to_numpy()
+                rs = kv.field("r").to_numpy()
                 order = np.argsort(ks)
                 ks, rs = ks[order], rs[order]
+                lab = arrs["lab"]  # float64 keys
                 m = ~np.isnan(lab)
                 ranks = np.full(lab.shape, np.nan)
                 ranks[m] = rs[np.searchsorted(ks, lab[m].astype(np.int64))]
-                out["ty"].append(int(rec["ty"]))
-                out["tx"].append(int(rec["tx"]))
-                out["h"].append(h)
-                out["w"].append(w)
-                out["th"].append(int(rec["th"]))
-                out["tw"].append(int(rec["tw"]))
-                for name, arr, dt in ((value_col, vals, vals.dtype),
-                                      (out_col, ranks, np.float64)):
-                    a = np.ascontiguousarray(arr, dtype=dt)
-                    out[name].append(a.tobytes())
-                    for sfx, blob in tl._halo_blobs(a).items():
-                        out[f"{name}{sfx}"].append(blob)
-            yield pd.DataFrame(out)
+                yield tl._tile_batch(
+                    meta, {value_col: arrs[value_col], out_col: ranks})
 
-    return joined.mapInPandas(_apply, schema=out_schema)
+    return joined.mapInArrow(
+        _apply, schema=tl.tiled_schema([value_col, out_col]))

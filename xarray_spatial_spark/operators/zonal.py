@@ -206,14 +206,13 @@ def _tile_hist(
 
     def _hist(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
+        for rb in batches:
             zs, vs, cs = [], [], []
-            for rec in pdf.itertuples(index=False):
-                h, w = int(rec.h), int(rec.w)
-                z = tl._decode(getattr(rec, zone_band), h, w).ravel()
-                v = tl._decode(getattr(rec, value_band), h, w).ravel()
+            for _, arrs in tl._tile_rows(rb, [zone_band, value_band]):
+                z = arrs[zone_band].ravel()
+                v = arrs[value_band].ravel()
                 m = ~np.isnan(z) & ~np.isnan(v)
                 if nodata_values is not None:
                     m &= v != nodata_values
@@ -231,12 +230,13 @@ def _tile_hist(
                 vs.append(uniq.imag)
                 cs.append(counts.astype(np.int64))
             if zs:
-                yield pd.DataFrame(
+                yield pa.RecordBatch.from_pydict(
                     {"zone": np.concatenate(zs), "_v": np.concatenate(vs),
                      "_c": np.concatenate(cs)}
                 )
 
-    return tdf.mapInPandas(_hist, schema="zone double, _v double, _c long")
+    return tl._select(tdf, [zone_band, value_band]).mapInArrow(
+        _hist, schema="zone double, _v double, _c long")
 
 
 def stats_dataset(

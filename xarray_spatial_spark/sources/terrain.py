@@ -108,37 +108,26 @@ def _raw_tiles(
     """Dense-tile generator: one task per tile, no per-cell rows, no
     shuffle.  ``compute_block(y0, h, x0, w) -> (h, w) float array``.
     Output is the tiled raster format (xarray_spatial_spark.tiled)."""
-    from xarray_spatial_spark.tiled import BLOB_SUFFIXES, tiled_schema, _halo_blobs
+    from xarray_spatial_spark.tiled import _tile_batch, tiled_schema
 
     nty = -(-height // tile)
     ntx = -(-width // tile)
 
     def _op(batches):
-        for pdf in batches:
-            out = {"ty": [], "tx": [], "h": [], "w": [], "th": [], "tw": [],
-                   "value": []}
-            for sfx in BLOB_SUFFIXES:
-                out[f"value{sfx}"] = []
-            for tid in pdf["id"].to_numpy(np.int64):
-                ty, tx = int(tid) // ntx, int(tid) % ntx
+        for rb in batches:
+            for tid in rb.column("id").to_numpy().tolist():
+                ty, tx = tid // ntx, tid % ntx
                 y0, x0 = ty * tile, tx * tile
                 h = min(tile, height - y0)
                 w = min(tile, width - x0)
                 block = compute_block(y0, h, x0, w)
-                out["ty"].append(ty)
-                out["tx"].append(tx)
-                out["h"].append(h)
-                out["w"].append(w)
-                out["th"].append(tile)
-                out["tw"].append(tile)
-                block = np.ascontiguousarray(block, dtype=dtype)
-                out["value"].append(block.tobytes())
-                for sfx, blob in _halo_blobs(block).items():
-                    out[f"value{sfx}"].append(blob)
-            yield pd.DataFrame(out)
+                meta = {"ty": ty, "tx": tx, "h": h, "w": w,
+                        "th": tile, "tw": tile}
+                yield _tile_batch(
+                    meta, {"value": np.ascontiguousarray(block, dtype=dtype)})
 
     par = min(nty * ntx, spark.sparkContext.defaultParallelism * 2)
-    return spark.range(0, nty * ntx, 1, par).mapInPandas(
+    return spark.range(0, nty * ntx, 1, par).mapInArrow(
         _op, schema=tiled_schema(["value"])
     )
 

@@ -10,9 +10,18 @@ row per TILE:
 where each band is the row-major float64 (or float32) bytes of the
 (h, w) block (NaN = nodata, mirroring the reference's
 ``boundary=np.nan`` dask map_overlap pad, xrspatial/focal.py:70-76),
-followed by its four perimeter blobs.  Tiles are full
-``tile_h x tile_w`` except the raster's bottom/right edges, which are
-clipped, so the raster extent is implicit in the tile set.
+followed by its four perimeter blobs.  Every tiled frame carries all
+four blobs of every band; a frame without them is refused at plan
+time.  Tiles are full ``tile_h x tile_w`` except the raster's
+bottom/right edges, which are clipped, so the raster extent is
+implicit in the tile set.
+
+Only this module knows that row format (the blob layout, the
+dtype-by-length rule, the ``EDGE`` width).  Every producer writes tile
+rows with ONE Arrow writer (``_tile_batch``) and every consumer reads
+them with ONE Arrow reader (``_tile_rows``, zero-copy views of the
+binary cells), inside ``mapInArrow`` / ``applyInArrow`` — tile bytes
+never pass through pandas.
 
 A stencil pass over tiled data is ONE shuffle of about the raster's
 bytes, grouped per 4x4 super-tile: every tile goes to its own
@@ -35,7 +44,6 @@ import warnings
 from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +53,7 @@ from xarray_spatial_spark.functions.geo import sql_ident
 DEFAULT_TILE = 512
 
 TILE_KEY_COLS = ("ty", "tx", "h", "w", "th", "tw")
+_KEY_TYPES = (pa.int64(),) * 2 + (pa.int32(),) * 4
 
 StencilFn = Callable[[dict[str, np.ndarray]], dict[str, np.ndarray]]
 
@@ -66,7 +75,9 @@ def _decode(buf: bytes | pa.Buffer, h: int, w: int) -> np.ndarray:
 
 
 EDGE = 8  # columns kept in the transposed edge blobs (supports radius <= 8
-           # in the all-JVM strip path; larger radii use the Python fallback)
+           # in the all-JVM strip path; larger radii use the Python emitter)
+
+BLOB_SUFFIXES = ("__le", "__re", "__te", "__be")
 
 
 def tiled_schema(bands: Sequence[str]) -> str:
@@ -86,29 +97,84 @@ def tiled_schema(bands: Sequence[str]) -> str:
     return ", ".join(cols)
 
 
-def _edge_blobs(a: np.ndarray) -> tuple[bytes, bytes]:
-    """(h, w) block -> transposed left/right edge blobs, each
-    (min(EDGE, w), h) row-major."""
-    e = min(EDGE, a.shape[1])
-    le = np.ascontiguousarray(a[:, :e].T).tobytes()
-    re = np.ascontiguousarray(a[:, a.shape[1] - e:].T).tobytes()
-    return le, re
-
-
-BLOB_SUFFIXES = ("__le", "__re", "__te", "__be")
-
-
 def _halo_blobs(a: np.ndarray) -> dict[str, bytes]:
     """All four perimeter blobs for one block: transposed left/right
-    EDGE columns plus plain top/bottom EDGE rows (row-major, already
-    contiguous).  The default halo plan slices its vertical and corner
+    EDGE columns ((min(EDGE, w), h) row-major) plus plain top/bottom
+    EDGE rows.  The default halo plan slices its vertical and corner
     strips from the transposed blobs; the broadcast plan reads only the
     four blobs, so its strips job costs perimeter, not area."""
-    le, re = _edge_blobs(a)
-    e = min(EDGE, a.shape[0])
-    te = np.ascontiguousarray(a[:e, :]).tobytes()
-    be = np.ascontiguousarray(a[a.shape[0] - e:, :]).tobytes()
-    return {"__le": le, "__re": re, "__te": te, "__be": be}
+    e = min(EDGE, a.shape[1])
+    er = min(EDGE, a.shape[0])
+    return {
+        "__le": np.ascontiguousarray(a[:, :e].T).tobytes(),
+        "__re": np.ascontiguousarray(a[:, a.shape[1] - e:].T).tobytes(),
+        "__te": a[:er, :].tobytes(),
+        "__be": a[a.shape[0] - er:, :].tobytes(),
+    }
+
+
+def _require_blobs(tdf: DataFrame, bands: Sequence[str]) -> None:
+    """Refuse, at plan time, a tiled frame that lacks a band's block or
+    perimeter blobs."""
+    missing = [f"{b}{sfx}" for b in bands for sfx in ("",) + BLOB_SUFFIXES
+               if f"{b}{sfx}" not in tdf.columns]
+    if missing:
+        raise ValueError(f"tiled frame lacks columns {missing}: every "
+                         "tiled frame carries its bands' perimeter blobs")
+
+
+# ---------------------------------------------------------------------------
+# the tile codec: one Arrow writer, one Arrow reader
+# ---------------------------------------------------------------------------
+
+def _tile_batch(
+    meta: dict, blocks: dict[str, np.ndarray],
+    extra: dict[str, pa.Array] | None = None,
+) -> pa.RecordBatch:
+    """The tile writer: one tile row — ``meta``'s key columns (ty, tx,
+    h, w, th, tw) with ``tiled_schema``'s Arrow types, then per band its
+    (h, w) block's bytes (already in the band's output dtype) and four
+    perimeter blobs, then the one-row ``extra`` columns."""
+    cols = {c: pa.array([meta[c]], t) for c, t in zip(TILE_KEY_COLS, _KEY_TYPES)}
+    for b, a in blocks.items():
+        cols[b] = pa.array([a.tobytes()], pa.binary())
+        for sfx, blob in _halo_blobs(a).items():
+            cols[f"{b}{sfx}"] = pa.array([blob], pa.binary())
+    cols.update(extra or {})
+    return pa.RecordBatch.from_pydict(cols)
+
+
+def _tile_rows(batch, bands: Sequence[str]) -> Iterator[tuple[dict, dict]]:
+    """The tile reader: per row of an Arrow record batch or table, its
+    ``meta`` (the key columns as ints) and a zero-copy (h, w) view of
+    each band's block."""
+    keys = _key_arrays(batch)
+    cols = {b: batch.column(b) for b in bands}
+    for i in range(batch.num_rows):
+        meta = {c: int(keys[c][i]) for c in TILE_KEY_COLS}
+        yield meta, {b: _blob_view(cols[b], i, meta["h"], meta["w"])
+                     for b in bands}
+
+
+def _blob_view(col, i: int, sh: int, sw: int,
+               transposed: bool = False) -> np.ndarray:
+    """Zero-copy (sh, sw) view of row ``i`` of an Arrow binary column:
+    ``_decode`` reads the cell's buffer in place (no Python ``bytes``
+    copy).  Transposed strips are stored (sw, sh) row-major."""
+    buf = col[i].as_buffer()
+    return _decode(buf, sw, sh).T if transposed else _decode(buf, sh, sw)
+
+
+def _key_arrays(tbl) -> dict[str, np.ndarray]:
+    """The tile-key columns of an Arrow table / record batch as numpy."""
+    return {c: tbl.column(c).to_numpy(zero_copy_only=False)
+            for c in TILE_KEY_COLS}
+
+
+def _select(tdf: DataFrame, bands: Sequence[str]) -> DataFrame:
+    """The key columns and ``bands`` only: what a reader needs crosses
+    into Python, not the perimeter blobs or other bands."""
+    return tdf.select(*(tdf[c] for c in dict.fromkeys((*TILE_KEY_COLS, *bands))))
 
 
 # ---------------------------------------------------------------------------
@@ -133,26 +199,24 @@ def tile(
     H, W = shape
     bands = list(value_cols)
 
-    def _pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = int(key[0]), int(key[1])
+    def _pack(key: tuple, tbl: pa.Table) -> pa.Table:
+        ty, tx = key[0].as_py(), key[1].as_py()
         h = min(tile_h, H - ty * tile_h)
         w = min(tile_w, W - tx * tile_w)
-        py = pdf["y"].to_numpy(np.int64) - ty * tile_h
-        px = pdf["x"].to_numpy(np.int64) - tx * tile_w
-        out = {"ty": [ty], "tx": [tx], "h": [h], "w": [w],
-               "th": [tile_h], "tw": [tile_w]}
+        py = tbl.column("y").to_numpy(zero_copy_only=False).astype(np.int64) - ty * tile_h
+        px = tbl.column("x").to_numpy(zero_copy_only=False).astype(np.int64) - tx * tile_w
+        blocks = {}
         for b in bands:
             a = np.full((h, w), np.nan, dtype=dtype)
-            a[py, px] = pdf[b].to_numpy(np.float64)
-            out[b] = [a.tobytes()]
-            for sfx, blob in _halo_blobs(a).items():
-                out[f"{b}{sfx}"] = [blob]
-        return pd.DataFrame(out)
+            a[py, px] = tbl.column(b).to_numpy(zero_copy_only=False)
+            blocks[b] = a
+        meta = {"ty": ty, "tx": tx, "h": h, "w": w, "th": tile_h, "tw": tile_w}
+        return pa.Table.from_batches([_tile_batch(meta, blocks)])
 
     keyed = df.withColumn("_ty", F.floor(F.col("y") / tile_h).cast("long")).withColumn(
         "_tx", F.floor(F.col("x") / tile_w).cast("long")
     )
-    return keyed.groupBy("_ty", "_tx").applyInPandas(
+    return keyed.groupBy("_ty", "_tx").applyInArrow(
         _pack, schema=tiled_schema(bands)
     )
 
@@ -163,35 +227,34 @@ def untile(
     drop_nan: bool = False,
 ) -> DataFrame:
     """Tiled -> long-form (y, x, bands...).  Map-side only (no
-    shuffle).  NaN cells become NULL; ``drop_nan`` omits them."""
+    shuffle).  NaN and +-inf cells become NULL; ``drop_nan`` omits
+    NaN cells."""
     bands = list(value_cols)
     schema = "y int, x int, " + ", ".join(f"{b} double" for b in bands)
 
-    def _unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                h, w = int(r.h), int(r.w)
+    def _unpack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            for meta, arrs in _tile_rows(rb, bands):
+                h, w = meta["h"], meta["w"]
                 yy = np.repeat(
-                    np.arange(h, dtype=np.int64) + int(r.ty) * int(r.th), w
-                )
+                    np.arange(h, dtype=np.int64) + meta["ty"] * meta["th"], w
+                ).astype(np.int32)
                 xx = np.tile(
-                    np.arange(w, dtype=np.int64) + int(r.tx) * int(r.tw), h
-                )
-                data = {b: _decode(getattr(r, b), h, w).ravel() for b in bands}
+                    np.arange(w, dtype=np.int64) + meta["tx"] * meta["tw"], h
+                ).astype(np.int32)
+                data = {b: a.ravel().astype(np.float64) for b, a in arrs.items()}
                 if drop_nan:
                     keep = np.zeros(h * w, dtype=bool)
-                    for b in bands:
-                        keep |= ~np.isnan(data[b])
+                    for v in data.values():
+                        keep |= ~np.isnan(v)
                     yy, xx = yy[keep], xx[keep]
                     data = {b: v[keep] for b, v in data.items()}
-                out = pd.DataFrame(
-                    {"y": yy.astype(np.int32), "x": xx.astype(np.int32)}
-                )
-                for b in bands:
-                    out[b] = pd.Series(data[b]).where(np.isfinite(data[b]))
-                yield out
+                cols = {"y": pa.array(yy), "x": pa.array(xx)}
+                for b, v in data.items():
+                    cols[b] = pa.array(v, mask=~np.isfinite(v))
+                yield pa.RecordBatch.from_pydict(cols)
 
-    return tdf.mapInPandas(_unpack, schema=schema)
+    return _select(tdf, bands).mapInArrow(_unpack, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -300,11 +363,10 @@ def _jvm_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
 
 
 def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
-    """Message emitter for radius > EDGE (or inputs without edge
-    blobs): views each tile in Python and emits the same messages as
-    ``_jvm_messages`` — the tile to its own super-tile, a strip to each
-    neighbour in another super-tile — all untransposed.  One extra
-    JVM->Python crossing of the raster."""
+    """Message emitter for radius > EDGE: views each tile in Python and
+    emits the same messages as ``_jvm_messages`` — the tile to its own
+    super-tile, a strip to each neighbour in another super-tile — all
+    untransposed.  One extra JVM->Python crossing of the raster."""
     msg_schema = (
         "bk long, gy0 long, gx0 long, sh int, sw int, "
         "iscenter int, transposed int, th int, tw int, "
@@ -314,14 +376,11 @@ def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
 
     def _emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            keys = _key_arrays(rb)
-            blobs = {b: rb.column(b) for b in bands}
             rows: dict[str, list] = {f.name: [] for f in target}
-            for i in range(rb.num_rows):
-                ty, tx, h, w, th, tw = (int(keys[c][i]) for c in TILE_KEY_COLS)
+            for meta, arrs in _tile_rows(rb, bands):
+                ty, tx, h, w, th, tw = (meta[c] for c in TILE_KEY_COLS)
                 gy, gx = ty * th, tx * tw
                 own = _block_key(ty, tx)
-                arrs = {b: _blob_view(blobs[b], i, h, w) for b in bands}
                 for dy in (-1, 0, 1):
                     for dx in (-1, 0, 1):
                         dty, dtx = ty + dy, tx + dx
@@ -345,42 +404,32 @@ def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
                             rows[b].append(arrs[b][rlo:rhi, clo:chi].tobytes())
             yield pa.RecordBatch.from_pydict(rows, schema=target)
 
-    return tdf.mapInArrow(_emit, schema=msg_schema)
+    return _select(tdf, bands).mapInArrow(_emit, schema=msg_schema)
 
 
 def _strip_rows(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
-    """Narrow JVM projection of each tile's four halo strips — top /
-    bottom row bands sliced from the block, left / right column bands
-    sliced from the transposed edge blobs (all contiguous substrings,
-    whole-stage codegen).  Per-tile bytes ~ 2r(h + w) * isz * n_bands
-    = perimeter scale; this is what the broadcast halo path collects."""
+    """Narrow JVM projection of each tile's four ``r``-wide halo strips
+    (``<band>__top``/``__bot``/``__l``/``__r``): top / bottom row bands
+    sliced from the stored row blobs, left / right column bands
+    (transposed, (r, h) row-major) from the transposed edge blobs — all
+    contiguous substrings in whole-stage codegen that touch NO block
+    column.  Per-tile bytes ~ 2r(h + w) * isz * n_bands = perimeter
+    scale; the broadcast halo plan collects it and ``regions_tiled``
+    pairs its 1-wide strips across tile boundaries."""
     h, w = F.col("h"), F.col("w")
-    have_tb = all(f"{b}__te" in tdf.columns for b in bands)
     cols = [F.col(c) for c in TILE_KEY_COLS]
     for b in bands:
         toph = F.least(F.lit(r), h)
         lc = F.least(F.lit(r), w)
         e = F.least(F.lit(EDGE), w)
-        if have_tb:
-            # stored top/bottom row blobs -> the projection touches NO
-            # block column: the whole strips job scans perimeter bytes
-            isz = (F.length(F.col(f"{b}__le"))
-                   / (F.least(F.lit(EDGE), w) * h)).cast("long")
-            et = F.least(F.lit(EDGE), h)
-            top = F.col(f"{b}__te").substr(
-                F.lit(1), (toph * w * isz).cast("int"))
-            bot = F.col(f"{b}__be").substr(
-                ((et - toph) * w * isz + 1).cast("int"),
-                (toph * w * isz).cast("int"))
-        else:
-            block = F.col(b)
-            isz = (F.length(block) / (h * w)).cast("long")
-            top = block.substr(F.lit(1), (toph * w * isz).cast("int"))
-            bot = block.substr(((h - toph) * w * isz + 1).cast("int"),
-                               (toph * w * isz).cast("int"))
+        et = F.least(F.lit(EDGE), h)
+        isz = (F.length(F.col(f"{b}__le")) / (e * h)).cast("long")
         cols += [
-            top.alias(f"{b}__top"),
-            bot.alias(f"{b}__bot"),
+            F.col(f"{b}__te").substr(F.lit(1), (toph * w * isz).cast("int"))
+            .alias(f"{b}__top"),
+            F.col(f"{b}__be").substr(((et - toph) * w * isz + 1).cast("int"),
+                                     (toph * w * isz).cast("int"))
+            .alias(f"{b}__bot"),
             F.col(f"{b}__le").substr(F.lit(1), (lc * h * isz).cast("int"))
             .alias(f"{b}__l"),
             F.col(f"{b}__re").substr(((e - lc) * h * isz + 1).cast("int"),
@@ -423,28 +472,15 @@ def _clip_place(pad, oy0, ox0, gy0, gx0, sh, sw, src) -> None:
 # holding true raster values at its own global coordinates.  The plans
 # differ only in how they gather the pieces.
 
-def _blob_view(col, i: int, sh: int, sw: int,
-               transposed: bool = False) -> np.ndarray:
-    """Zero-copy (sh, sw) view of row ``i`` of an Arrow binary column:
-    ``_decode`` reads the cell's buffer in place (no Python ``bytes``
-    copy).  Transposed strips are stored (sw, sh) row-major."""
-    buf = col[i].as_buffer()
-    return _decode(buf, sw, sh).T if transposed else _decode(buf, sh, sw)
-
-
-def _key_arrays(tbl) -> dict[str, np.ndarray]:
-    """The tile-key columns of an Arrow table / record batch as numpy."""
-    return {c: tbl.column(c).to_numpy(zero_copy_only=False)
-            for c in TILE_KEY_COLS}
-
-
-def _reduce_tile(meta: dict, centre: dict, pieces, r: int, reduce_fn,
-                 target: pa.Schema) -> pa.RecordBatch:
-    """Assemble one tile and reduce it: NaN-pad the centre blocks by
-    ``r``, clip every neighbour piece into place, run ``reduce_fn``
-    (all-NaN windows' RuntimeWarnings silenced) and convert its pandas
-    frame to the ``target`` Arrow schema.  Halos come from the 8
-    neighbour tiles only, so a radius past the tile size is refused."""
+def _reduce_tile(meta: dict, centre: dict, pieces, r: int, fn: StencilFn,
+                 out_cols: Sequence[str]) -> pa.RecordBatch:
+    """Assemble one tile and run the stencil on it: NaN-pad the centre
+    blocks by ``r``, clip every neighbour piece into place, run ``fn``
+    (all-NaN windows' RuntimeWarnings silenced) and write its interior
+    arrays as one tile row.  An output band keeps the dtype of the
+    input band of the same name (the first input band's for new
+    names).  Halos come from the 8 neighbour tiles only, so a radius
+    past the tile size is refused."""
     h, w = meta["h"], meta["w"]
     if r > min(meta["th"], meta["tw"]):
         raise ValueError(
@@ -460,10 +496,15 @@ def _reduce_tile(meta: dict, centre: dict, pieces, r: int, reduce_fn,
     for gy0, gx0, sh, sw, srcs in pieces:
         for b, src in srcs.items():
             _clip_place(padded[b], oy0, ox0, gy0, gx0, sh, sw, src)
+    first = next(iter(padded.values())).dtype
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", category=RuntimeWarning)
-        pdf = reduce_fn(meta, padded)
-    return pa.RecordBatch.from_arrays(_arrow_arrays(pdf, target), schema=target)
+        outs = fn(padded)
+    return _tile_batch(meta, {
+        b: np.ascontiguousarray(
+            outs[b], dtype=padded[b].dtype if b in padded else first)
+        for b in out_cols
+    })
 
 
 def _strip_lookup(tbl, bands: Sequence[str], r: int):
@@ -500,8 +541,8 @@ def _halo_broadcast(
     tdf: DataFrame,
     r: int,
     bands: list,
-    reduce_fn,
-    out_schema: str,
+    fn: StencilFn,
+    out_cols: Sequence[str],
     max_bytes: int,
 ) -> DataFrame:
     """Shuffle-free halo exchange: ONE perimeter-scale collect of the
@@ -532,76 +573,17 @@ def _halo_broadcast(
             "for the default plan"
         )
     bc = tdf.sparkSession.sparkContext.broadcast(sdf.toArrow())
-    target = _arrow_schema_of(out_schema)
 
     def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         strip = _strip_lookup(bc.value, bands, r)
         for rb in batches:
-            keys = _key_arrays(rb)
-            blobs = {b: rb.column(b) for b in bands}
-            for i in range(rb.num_rows):
-                meta = {c: int(keys[c][i]) for c in TILE_KEY_COLS}
+            for meta, centre in _tile_rows(rb, bands):
                 ty, tx = meta["ty"], meta["tx"]
-                centre = {b: _blob_view(blobs[b], i, meta["h"], meta["w"])
-                          for b in bands}
                 pieces = [p for (dy, dx), kind in _NBR_STRIP.items()
                           if (p := strip((ty + dy, tx + dx), kind)) is not None]
-                yield _reduce_tile(meta, centre, pieces, r, reduce_fn, target)
+                yield _reduce_tile(meta, centre, pieces, r, fn, out_cols)
 
-    return tdf.mapInArrow(_run, schema=out_schema)
-
-
-def halo_map_tiled(
-    tdf: DataFrame,
-    radius: int,
-    value_cols: Sequence[str],
-    reduce_fn,
-    out_schema: str,
-) -> DataFrame:
-    """The generic halo-exchange primitive: per-tile ``reduce_fn(meta,
-    padded)`` where ``meta`` = dict(ty, tx, h, w, th, tw) and
-    ``padded`` maps band -> NaN-padded (h+2r, w+2r) array.
-    ``reduce_fn`` returns ANY pd.DataFrame matching ``out_schema`` —
-    stencils return one tiled row (apply_stencil_tiled).  The radius
-    must not exceed the tile size (the task raises ``ValueError``).
-
-    Default plan: one message projection (``_jvm_messages``, or
-    ``_python_messages`` for radius > EDGE or inputs without edge
-    blobs) sends every tile to its 4x4 super-tile's group and a border
-    strip to each neighbouring super-tile; ONE groupBy(bk) shuffle ->
-    ``_halo_shuffle`` assembles every tile of the group.  One scan,
-    raster-scale shuffle, works on any tiled input.
-
-    ``spark.xrspatial.halo.strategy=broadcast`` (the only other
-    accepted value) selects ``_halo_broadcast``: perimeter-scale strip
-    collect + broadcast -> shuffle-free mapInArrow.  Two scans, zero
-    shuffle, for stored rasters whose strips fit
-    ``spark.xrspatial.halo.broadcast.maxBytes`` (default 512 MiB;
-    raises past the cap).  Requires radius <= EDGE and edge blobs.
-
-    Domain edges stay NaN on both plans."""
-    r = int(radius)
-    bands = list(value_cols)
-    have_edges = all(f"{b}__le" in tdf.columns for b in bands)
-    strategy = tdf.sparkSession.conf.get("spark.xrspatial.halo.strategy", None)
-    if strategy == "broadcast":
-        if r > EDGE or not have_edges:
-            raise ValueError("broadcast halo needs radius <= EDGE and edge blobs")
-        max_bytes = int(tdf.sparkSession.conf.get(
-            "spark.xrspatial.halo.broadcast.maxBytes", str(512 << 20)
-        ))
-        return _halo_broadcast(tdf, r, bands, reduce_fn, out_schema,
-                               max_bytes)
-    if strategy is not None:
-        raise ValueError(
-            f"unknown spark.xrspatial.halo.strategy {strategy!r}: the only "
-            "accepted value is 'broadcast'; unset it for the default plan"
-        )
-    if r <= EDGE and have_edges:
-        msgs = _jvm_messages(tdf, r, bands)
-    else:
-        msgs = _python_messages(tdf, r, bands)
-    return _halo_shuffle(msgs, r, bands, reduce_fn, out_schema)
+    return _select(tdf, bands).mapInArrow(_run, schema=tiled_schema(out_cols))
 
 
 def _arrow_schema_of(ddl: str) -> pa.Schema:
@@ -611,29 +593,18 @@ def _arrow_schema_of(ddl: str) -> pa.Schema:
     return to_arrow_schema(_parse_datatype_string(ddl))
 
 
-def _arrow_arrays(pdf: pd.DataFrame, target: pa.Schema) -> list:
-    """pandas frame -> arrow arrays against the TARGET schema (pandas
-    int defaults are 64-bit; the tiled schema carries int32 fields)."""
-    arrays = []
-    for field in target:
-        col = pdf[field.name]
-        if col.dtype == object:
-            arrays.append(pa.array(col.tolist(), type=field.type))
-        else:
-            arrays.append(pa.array(col.to_numpy(), type=field.type))
-    return arrays
-
-
 def _halo_shuffle(
-    msgs: DataFrame, r: int, bands: Sequence[str], reduce_fn, out_schema: str
+    msgs: DataFrame, r: int, bands: Sequence[str], fn: StencilFn,
+    out_cols: Sequence[str],
 ) -> DataFrame:
     """The default plan's assembly: ONE groupBy(bk) brings a
     super-tile's tiles and the strips its neighbours sent together;
     every message is a piece read zero-copy from the shuffled Arrow
-    buffers.  Each centre tile is reduced with every other piece of its
-    group — ``_clip_place`` drops the pieces outside its window.
+    buffers.  Each centre tile is assembled with every other piece of
+    its group — ``_clip_place`` drops the pieces outside its window.
     Groups without a centre (strips addressed past the raster edge)
     emit nothing."""
+    out_schema = tiled_schema(out_cols)
     target = _arrow_schema_of(out_schema)
 
     def _assemble(key: tuple, tbl: pa.Table) -> pa.Table:
@@ -655,7 +626,7 @@ def _halo_shuffle(
                     "th": th, "tw": tw}
             outs.append(_reduce_tile(meta, centre,
                                      pieces[:ci] + pieces[ci + 1:],
-                                     r, reduce_fn, target))
+                                     r, fn, out_cols))
         return pa.Table.from_batches(outs, schema=target)
 
     return msgs.groupBy("bk").applyInArrow(_assemble, schema=out_schema)
@@ -668,44 +639,58 @@ def apply_stencil_tiled(
     value_cols: Sequence[str] = ("value",),
     out_cols: Sequence[str] = ("value",),
 ) -> DataFrame:
-    """One halo-stencil pass over a tiled raster.
+    """One halo-stencil pass over a tiled raster: per tile, ``fn`` maps
+    the NaN-padded (h+2r, w+2r) arrays of ``value_cols`` to the (h, w)
+    interior arrays of ``out_cols``, written as one tiled row.  The
+    radius must not exceed the tile size (the task raises
+    ``ValueError``); a frame without its perimeter blobs raises at
+    plan time.
 
-    Plan: a single JVM-side SQL explode emits, per tile, the full tile
-    addressed to its own 4x4 super-tile (a zero-copy column reference)
-    plus the border strips (contiguous substrings of the block / its
-    transposed edge blobs) that neighbours in other super-tiles need;
-    ONE groupBy(bk) shuffle co-locates them; each task assembles every
-    tile's NaN-padded (h+2r, w+2r) block with numpy slicing, runs
-    ``fn``, and emits the interior (plus refreshed edge blobs) as one
-    tiled row per tile.
-
-    Raster bytes cross the JVM<->Python boundary exactly once each
-    way (the assemble/kernel stage); shuffle volume ~= raster bytes *
+    Default plan: a single JVM-side SQL explode (``_jvm_messages``;
+    ``_python_messages`` for radius > EDGE) emits, per tile, the full
+    tile addressed to its own 4x4 super-tile (a zero-copy column
+    reference) plus the border strips (contiguous substrings of the
+    block / its transposed edge blobs) that neighbours in other
+    super-tiles need; ONE groupBy(bk) shuffle co-locates them; each
+    task assembles every tile's padded block with numpy slicing
+    (``_halo_shuffle``), runs ``fn``, and writes the interior (plus
+    refreshed perimeter blobs).  Raster bytes cross the JVM<->Python
+    boundary exactly once each way; shuffle volume ~= raster bytes *
     (1 + r(th+tw)/(2*th*tw)) — ~0.2%% halo overhead at r=1, 512x512.
+
+    ``spark.xrspatial.halo.strategy=broadcast`` (the only other
+    accepted value) selects ``_halo_broadcast``: perimeter-scale strip
+    collect + broadcast -> shuffle-free mapInArrow.  Two scans, zero
+    shuffle, for stored rasters whose strips fit
+    ``spark.xrspatial.halo.broadcast.maxBytes`` (default 512 MiB;
+    raises past the cap).  Requires radius <= EDGE.
+
     Groups that hold no tile (strips addressed past the raster edge)
-    emit nothing, so domain edges stay NaN exactly like the long-form
-    path / the reference's NaN boundary (xrspatial/focal.py:70-76
-    map_overlap boundary=np.nan).
-    """
+    emit nothing, so domain edges stay NaN on both plans, exactly like
+    the long-form path / the reference's NaN boundary
+    (xrspatial/focal.py:70-76 map_overlap boundary=np.nan)."""
+    r = int(radius)
     bands = list(value_cols)
     ocols = list(out_cols)
-    out_schema = tiled_schema(ocols)
-
-    def _reduce(meta: dict, padded: dict) -> pd.DataFrame:
-        outs = fn(padded)
-        dts = {b: padded[b].dtype for b in bands}
-        default_dt = next(iter(dts.values()))
-        row = {"ty": [meta["ty"]], "tx": [meta["tx"]],
-               "h": [meta["h"]], "w": [meta["w"]],
-               "th": [meta["th"]], "tw": [meta["tw"]]}
-        for b in ocols:
-            a = np.ascontiguousarray(outs[b], dtype=dts.get(b, default_dt))
-            row[b] = [a.tobytes()]
-            for sfx, blob in _halo_blobs(a).items():
-                row[f"{b}{sfx}"] = [blob]
-        return pd.DataFrame(row)
-
-    return halo_map_tiled(tdf, radius, bands, _reduce, out_schema)
+    _require_blobs(tdf, bands)
+    strategy = tdf.sparkSession.conf.get("spark.xrspatial.halo.strategy", None)
+    if strategy == "broadcast":
+        if r > EDGE:
+            raise ValueError(f"broadcast halo needs radius <= {EDGE}")
+        max_bytes = int(tdf.sparkSession.conf.get(
+            "spark.xrspatial.halo.broadcast.maxBytes", str(512 << 20)
+        ))
+        return _halo_broadcast(tdf, r, bands, fn, ocols, max_bytes)
+    if strategy is not None:
+        raise ValueError(
+            f"unknown spark.xrspatial.halo.strategy {strategy!r}: the only "
+            "accepted value is 'broadcast'; unset it for the default plan"
+        )
+    if r <= EDGE:
+        msgs = _jvm_messages(tdf, r, bands)
+    else:
+        msgs = _python_messages(tdf, r, bands)
+    return _halo_shuffle(msgs, r, bands, fn, ocols)
 
 
 # ---------------------------------------------------------------------------
@@ -717,12 +702,12 @@ def global_stats(tdf: DataFrame, value_col: str = "value") -> dict[str, float]:
     map-side numpy partials + one tiny agg (the tiled analog of
     ``df.agg(avg, stddev_pop)``)."""
 
-    def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         n = s = s2 = 0.0
         lo, hi = np.inf, -np.inf
-        for pdf in batches:
-            for rec in pdf.itertuples(index=False):
-                a = _decode(getattr(rec, value_col), int(rec.h), int(rec.w))
+        for rb in batches:
+            for _, arrs in _tile_rows(rb, [value_col]):
+                a = arrs[value_col]
                 m = np.isfinite(a)
                 if m.any():
                     v = a[m].astype(np.float64, copy=False)
@@ -731,11 +716,11 @@ def global_stats(tdf: DataFrame, value_col: str = "value") -> dict[str, float]:
                     s2 += float((v * v).sum())
                     lo = min(lo, float(v.min()))
                     hi = max(hi, float(v.max()))
-        yield pd.DataFrame(
+        yield pa.RecordBatch.from_pydict(
             {"n": [n], "s": [s], "s2": [s2], "lo": [lo], "hi": [hi]}
         )
 
-    part = tdf.mapInPandas(
+    part = _select(tdf, [value_col]).mapInArrow(
         _partial, schema="n double, s double, s2 double, lo double, hi double"
     )
     row = part.agg(
@@ -771,36 +756,21 @@ def map_tiles(
     ocols = list(out_cols)
     odt = out_dtypes or {}
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"ty": [], "tx": [], "h": [], "w": [], "th": [], "tw": []}
-            for b in ocols:
-                out[b] = []
-                for sfx in BLOB_SUFFIXES:
-                    out[f"{b}{sfx}"] = []
-            for rec in pdf.itertuples(index=False):
-                h, w = int(rec.h), int(rec.w)
-                arrs = {b: _decode(getattr(rec, b), h, w) for b in bands}
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            for meta, arrs in _tile_rows(rb, bands):
                 dts = {b: a.dtype for b, a in arrs.items()}
-                default_dt = next(iter(dts.values()))
+                first = dts[bands[0]]
                 with warnings.catch_warnings():
                     warnings.simplefilter("ignore", category=RuntimeWarning)
                     res = fn(arrs)
-                out["ty"].append(int(rec.ty))
-                out["tx"].append(int(rec.tx))
-                out["h"].append(h)
-                out["w"].append(w)
-                out["th"].append(int(rec.th))
-                out["tw"].append(int(rec.tw))
-                for b in ocols:
-                    a = np.ascontiguousarray(
-                        res[b], dtype=odt.get(b, dts.get(b, default_dt)))
-                    out[b].append(a.tobytes())
-                    for sfx, blob in _halo_blobs(a).items():
-                        out[f"{b}{sfx}"].append(blob)
-            yield pd.DataFrame(out)
+                yield _tile_batch(meta, {
+                    b: np.ascontiguousarray(
+                        res[b], dtype=odt.get(b, dts.get(b, first)))
+                    for b in ocols
+                })
 
-    return tdf.mapInPandas(_run, schema=tiled_schema(ocols))
+    return _select(tdf, bands).mapInArrow(_run, schema=tiled_schema(ocols))
 
 
 def numpy_from_tiled(tdf: DataFrame, value_col: str = "value") -> np.ndarray:
@@ -849,12 +819,7 @@ def read(spark: SparkSession, path: str, tile_bytes: int | None = None) -> DataF
     batch for its tile size (probed from the first row when not
     given).  The conf change persists on the session — flip back with
     ``table_scan_conf`` before big narrow-table scans."""
-    return _sized_scan(spark, spark.read.parquet(path), tile_bytes)
-
-
-def _sized_scan(
-    spark: SparkSession, df: DataFrame, tile_bytes: int | None
-) -> DataFrame:
+    df = spark.read.parquet(path)
     if tile_bytes is None:
         band = next(
             c for c in df.columns
@@ -884,16 +849,12 @@ def fuse_stencils(stages: "Sequence[tuple[StencilFn, int]]") -> tuple[StencilFn,
     Stage i's fn maps {band: padded array} -> {band: interior array};
     output bands of stage i feed stage i+1.
     """
-    radii = [int(r) for _, r in stages]
-    total = sum(radii)
-
     def _fused(arrs: dict) -> dict:
-        cur = arrs
-        for (fn, r), idx in zip(stages, range(len(stages))):
+        for fn, _ in stages:
+            # arrs are padded by the REMAINING radii sum
             with warnings.catch_warnings():
                 warnings.simplefilter("ignore", category=RuntimeWarning)
-                cur = fn(cur)
-            # cur arrays are now padded by the REMAINING radii sum
-        return cur
+                arrs = fn(arrs)
+        return arrs
 
-    return _fused, total
+    return _fused, sum(int(r) for _, r in stages)
