@@ -669,3 +669,15 @@ def test_snapshot_diff_projects_before_join(spark):
     bad = [l for l in plan.splitlines()
            if "html" in l and "Scan ExistingRDD" not in l]
     assert not bad, bad
+
+
+def test_embedding_neardup_builds_without_eval_type_warning(spark):
+    """The per-signature pandas kernel annotates its key, so PySpark
+    infers the grouped-map eval type without a UserWarning."""
+    import warnings
+
+    df = spark.createDataFrame([(0, [1.0, 0.0]), (1, [1.0, 0.0])],
+                               "vec_id long, embedding array<float>")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        dedup.embedding_neardup_pairs(df, threshold=0.95)

@@ -85,7 +85,7 @@ def test_bucket_pruned_matches_dense(spark, scattered):
     ).toPandas().sort_values(["lon", "lat"]).reset_index(drop=True)
     # dense path + manual cutoff == pruned path
     mask = dense["nearest_dist"] > md
-    for c in ("nearest_dist", "nearest_x", "nearest_y", "nearest_value"):
+    for c in ("nearest_dist", "nearest_x", "nearest_y", "nearest_payload"):
         dense.loc[mask, c] = np.nan
         np.testing.assert_allclose(
             pruned[c].to_numpy(np.float64), dense[c].to_numpy(np.float64),
@@ -246,7 +246,8 @@ def test_ring_cell_budget_error(spark):
 def test_nearest_non_finite_points_get_nulls(spark, n_targets, max_distance):
     """NULL and NaN coordinates have no nearest target on either tier
     (64 targets -> expr, 65 -> broadcast): all nearest columns NULL,
-    bounded or not, while finite points keep theirs."""
+    bounded or not, while finite points keep theirs.  Both tiers append
+    the same columns."""
     rng = np.random.default_rng(3)
     tv = [(float(x), float(y), float(i))
           for i, (x, y) in enumerate(rng.uniform(-40, 40, (n_targets, 2)))]
@@ -258,8 +259,8 @@ def test_nearest_non_finite_points_get_nulls(spark, n_targets, max_distance):
     )
     out = joins.nearest_join(pts, tdf, target_payload="city",
                              metric="GREAT_CIRCLE", max_distance=max_distance)
-    pay = "nearest_payload" if n_targets <= joins.EXPR_CAP else "nearest_city"
-    cols = ["nearest_dist", "nearest_x", "nearest_y", pay]
+    cols = ["nearest_dist", "nearest_x", "nearest_y", "nearest_payload"]
+    assert out.columns == ["pid", "lon", "lat", *cols]
     rows = {r["pid"]: [r[c] for c in cols] for r in out.collect()}
     assert all(v is not None for v in rows[0])
     for pid in (1, 2, 3, 4):
@@ -285,7 +286,7 @@ def test_great_circle_bucket_wraps_antimeridian(spark):
           for i, (x, y) in enumerate(zip(tlon, tlat))]
     tdf = spark.createDataFrame(tv, "lon double, lat double, city double")
     md = 200_000.0
-    cols = ["nearest_dist", "nearest_x", "nearest_y", "nearest_city"]
+    cols = ["nearest_dist", "nearest_x", "nearest_y", "nearest_payload"]
 
     def frame(df):
         return df.toPandas().set_index("pid").sort_index()
@@ -307,6 +308,35 @@ def test_great_circle_bucket_wraps_antimeridian(spark):
     expr = frame(joins.nearest_join(
         pts, tdf, target_payload="city", metric="GREAT_CIRCLE",
         max_distance=md, strategy="expr")
-        .select("pid", *cols[:3], F.col("nearest_payload").alias("nearest_city")))
-    np.testing.assert_array_equal(expr["nearest_city"], pruned["nearest_city"])
+        .select("pid", *cols))
+    np.testing.assert_array_equal(expr["nearest_payload"], pruned["nearest_payload"])
     np.testing.assert_allclose(expr[cols[:3]], pruned[cols[:3]], rtol=1e-9)
+
+
+def test_broadcast_keeps_caller_nan(spark):
+    """On the broadcast tier (65 targets) only x/y reach Python: a NaN
+    in the caller's float columns comes back NaN, not NULL."""
+    rng = np.random.default_rng(4)
+    tv = [(float(x), float(y), float(i))
+          for i, (x, y) in enumerate(rng.uniform(-40, 40, (65, 2)))]
+    tdf = spark.createDataFrame(tv, "lon double, lat double, city double")
+    pts = spark.createDataFrame(
+        [(0, 1.0, 2.0, float("nan")), (1, float("nan"), 2.0, 3.5)],
+        "pid long, lon double, lat double, f double",
+    )
+    rows = {r["pid"]: r for r in
+            joins.nearest_join(pts, tdf, target_payload="city").collect()}
+    assert math.isnan(rows[0]["f"]) and math.isnan(rows[1]["lon"])
+    assert rows[0]["nearest_payload"] is not None
+    assert rows[1]["nearest_payload"] is None
+
+
+def test_broadcast_plan_one_python_udf(spark, scattered):
+    """The broadcast tier is one Arrow UDF returning a struct: one
+    Python node holding one UDF call and no MapInPandas, so the search
+    runs once per row however many nearest columns are read."""
+    pdf, tdf = scattered[:2]
+    out = proximity.nearest_broadcast(pdf, tdf, target_payload="value")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1 and "MapInPandas" not in plan
+    assert plan.count("_near(") == 1

@@ -234,7 +234,7 @@ def test_nearest_expr_matches_broadcast(spark, metric):
 
     def compiled(df):
         return (
-            df.select("doc_id", *cols, F.col("nearest_payload").alias("nearest_city"))
+            df.select("doc_id", *cols, "nearest_payload")
             .toPandas().set_index("doc_id").sort_index()
         )
 
@@ -242,15 +242,15 @@ def test_nearest_expr_matches_broadcast(spark, metric):
         return (
             prox.nearest_broadcast(docs, tdf, target_payload="city", metric=metric,
                                    max_distance=max_distance)
-            .select("doc_id", *cols, "nearest_city")
+            .select("doc_id", *cols, "nearest_payload")
             .toPandas().set_index("doc_id").sort_index()
         )
 
     near = prox.nearest_expr(docs, targets, metric=metric)
     got, want = compiled(near), broadcast(math.inf)
     np.testing.assert_allclose(got[cols], want[cols], rtol=1e-9)
-    np.testing.assert_array_equal(got["nearest_city"], want["nearest_city"])
-    assert got.loc[-1, "nearest_city"] == 4.0
+    np.testing.assert_array_equal(got["nearest_payload"], want["nearest_payload"])
+    assert got.loc[-1, "nearest_payload"] == 4.0
     exact = distance_col(F.col("lon"), F.col("nearest_x"), F.col("lat"),
                          F.col("nearest_y"), metric)
     assert near.filter(~F.col("nearest_dist").eqNullSafe(exact)).count() == 0
@@ -261,9 +261,9 @@ def test_nearest_expr_matches_broadcast(spark, metric):
     want = broadcast(md)
     beyond = want["nearest_dist"].isna()
     assert 0 < beyond.sum() < len(want)
-    np.testing.assert_array_equal(got["nearest_city"].isna(), beyond)
+    np.testing.assert_array_equal(got["nearest_payload"].isna(), beyond)
     np.testing.assert_allclose(got[cols], want[cols], rtol=1e-9)
-    np.testing.assert_array_equal(got["nearest_city"], want["nearest_city"])
+    np.testing.assert_array_equal(got["nearest_payload"], want["nearest_payload"])
 
 
 def test_nearest_expr_one_and_no_target(spark):

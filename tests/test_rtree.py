@@ -67,6 +67,81 @@ class TestSTRtree:
         assert len(pts) == 0 and len(ents) == 0
 
 
+def _dense_nearest(px, py, tx, ty, pay, metric, max_distance):
+    """Reference: the whole (points, targets) distance matrix, targets
+    in (payload, x, y) order, first argmin; NaN / -1 beyond
+    ``max_distance`` or where the distance is not finite."""
+    from xarray_spatial_spark.operators.proximity import _distance
+
+    order = np.lexsort((ty, tx, pay))
+    with np.errstate(invalid="ignore"):
+        d = _distance(px[:, None], py[:, None], tx[order][None, :],
+                      ty[order][None, :], metric)
+    idx = np.argmin(d, axis=1)
+    dist = d[np.arange(len(px)), idx]
+    beyond = ~np.isfinite(dist) | (dist > max_distance)
+    dist[beyond] = np.nan
+    idx[beyond] = -1
+    return dist, idx
+
+
+class TestNearest:
+    @pytest.mark.parametrize("metric", ["EUCLIDEAN", "MANHATTAN", "GREAT_CIRCLE"])
+    @pytest.mark.parametrize("n_targets", [1, 65, 2000])
+    @pytest.mark.parametrize("case", ["spread", "ties", "antimeridian"])
+    def test_matches_dense_argmin_bit_for_bit(self, metric, n_targets, case):
+        """The branch-and-bound STR search returns the dense argmin's
+        distance (as raw bits) and winner, ties to the smallest
+        (payload, x, y) included; non-finite points and points beyond
+        ``max_distance`` get (nan, -1)."""
+        from xarray_spatial_spark.operators.proximity import TargetSet
+
+        rng = np.random.default_rng(n_targets)
+        tx, ty = rng.uniform(-180, 180, n_targets), rng.uniform(-75, 75, n_targets)
+        px, py = rng.uniform(-180, 180, 1500), rng.uniform(-80, 80, 1500)
+        if case == "ties":  # snapped to a 2-degree lattice: many equal distances
+            tx, ty, px, py = (np.round(a / 2) * 2 for a in (tx, ty, px, py))
+        if case == "antimeridian":
+            tx = np.where(rng.random(n_targets) < 0.5, rng.uniform(178, 180, n_targets),
+                          rng.uniform(-180, -178, n_targets))
+            px = np.where(rng.random(1500) < 0.5, 179.9, -179.9)
+        pay = rng.integers(0, 1 + n_targets // 3, n_targets).astype(np.float64)
+        px[:5] = [np.nan, np.inf, -np.inf, 0.0, np.nan]
+        py[:5] = [0.0, 0.0, 10.0, np.inf, np.nan]
+        t = TargetSet(tx, ty, pay)
+        max_distance = np.inf
+        for bounded in (False, True):
+            got_d, got_i = t.nearest(px, py, metric, max_distance)
+            want_d, want_i = _dense_nearest(px, py, tx, ty, pay, metric, max_distance)
+            np.testing.assert_array_equal(got_d.view(np.int64), want_d.view(np.int64))
+            np.testing.assert_array_equal(got_i, want_i)
+            assert (got_i[:5] == -1).all()
+            if bounded:  # both regimes
+                assert 0 < (got_i == -1).sum() - 5 < len(px) - 5
+            max_distance = float(np.nanmedian(got_d))
+
+    def test_descent_prunes(self):
+        """An unbounded search over 5000 targets computes far fewer than
+        points x targets exact distances."""
+        from xarray_spatial_spark.operators.proximity import _distance, _lower_bound
+
+        rng = np.random.default_rng(2)
+        tx, ty = rng.uniform(-50, 50, 5000), rng.uniform(-50, 50, 5000)
+        px, py = rng.uniform(-50, 50, 400), rng.uniform(-50, 50, 400)
+        tree = STRtree(np.stack([tx, ty, tx, ty], axis=1))
+        n_exact = []
+
+        def exact(p, j):
+            n_exact.append(len(p))
+            return _distance(px[p], py[p], tx[j], ty[j], "EUCLIDEAN")
+
+        d, _ = tree.nearest(400, exact,
+                            lambda p, b: _lower_bound(px[p], py[p], b, "EUCLIDEAN"))
+        want = _distance(px[:, None], py[:, None], tx, ty, "EUCLIDEAN").min(axis=1)
+        np.testing.assert_array_equal(d, want)
+        assert sum(n_exact) < 400 * 5000 / 20
+
+
 def _star(rng, n, cx, cy, r):
     """Simple polygon of ``n`` vertices around (cx, cy), radius <= r."""
     th = np.sort(rng.uniform(0, 2 * np.pi, n))

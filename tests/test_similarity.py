@@ -527,3 +527,17 @@ def test_opq_encode_and_topk_roundtrip(spark, emb):
         if r["vec_id"] in want.get(r["query_id"], {}):
             assert r["cosine"] == pytest.approx(
                 want[r["query_id"]][r["vec_id"]], rel=1e-9)
+
+
+def test_semantic_dedup_builds_without_eval_type_warning(spark):
+    """The per-bucket pandas kernel annotates its key, so PySpark infers
+    the grouped-map eval type without a UserWarning."""
+    import warnings
+
+    from xarray_spatial_spark.functions.similarity import semantic_dedup
+
+    rows = [(i, [float(i % 3), 1.0]) for i in range(8)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        semantic_dedup(df, threshold=0.99, n_clusters=2)

@@ -107,3 +107,13 @@ def test_write_xyz_layout(spark, tmp_path):
     # parquet artifact readable with the same bytes
     art = spark.read.parquet(os.path.join(out, "_tiles.parquet")).collect()
     assert len(art) == 1 and bytes(art[0].png) == open(p, "rb").read()
+
+
+def test_render_builds_without_eval_type_warning(spark):
+    """The per-tile pandas kernel annotates its key, so PySpark infers
+    the grouped-map eval type without a UserWarning."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        render_xyz_tiles(pixel_df(spark, gradient_world(4, 4)), pixel_zoom=1)

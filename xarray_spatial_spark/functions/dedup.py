@@ -740,7 +740,7 @@ def embedding_neardup_pairs(
     # threshold decisions — are unchanged.
     thr = float(threshold)
 
-    def _pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
         empty = pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
             {"id_a": np.int64, "id_b": np.int64, "cosine": np.float64}

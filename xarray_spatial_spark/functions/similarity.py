@@ -480,7 +480,7 @@ def semantic_dedup(
     # either way, but numpy-speed vs a Catalyst HOF per pair (~50x
     # slower measured at sf0.1).  chunk x b slabs keep peak memory at
     # chunk * max_bucket * 8 bytes instead of b^2 * 8.
-    def _bucket_dupes(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _bucket_dupes(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[id_col].to_numpy(np.int64)
         order = np.argsort(ids)
         ids = ids[order]

@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 from xarray_spatial_spark.functions.geo import sql_double, sql_ident
 from xarray_spatial_spark.plans.rtree import STRtree
 
+# largest polygon set pip_join_expr inlines into codegen
+EXPR_POLYGONS = 64
+
 
 class PolygonSet:
     """Driver-side polygons, packed for broadcast: zones ascending,
@@ -137,7 +140,6 @@ def pip_join_expr(
     lon_col: str = "lon",
     lat_col: str = "lat",
     zone_col: str = "zone",
-    max_polygons: int = 64,
 ) -> DataFrame:
     """Point-in-polygon as a compiled Column expression — the planner's
     fast path when the polygon set is small enough to inline into
@@ -149,8 +151,8 @@ def pip_join_expr(
     predicate is one SQL ``CASE`` built with one ``F.expr`` call, with
     exact double literals.  Same first-match (ascending zone id)
     semantics as ``pip_join``; falls back to the Arrow path above this
-    size."""
-    if len(polygons) > max_polygons:
+    size (``EXPR_POLYGONS``)."""
+    if len(polygons) > EXPR_POLYGONS:
         return pip_join(points, polygons, lon_col, lat_col, zone_col)
     lon, lat = sql_ident(lon_col), sql_ident(lat_col)
     branches = []

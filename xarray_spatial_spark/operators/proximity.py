@@ -15,12 +15,15 @@ Spark re-plan: targets are sparse, so this is a **broadcast
 nearest-neighbor join**, not a scan:
 
 - job 1: extract target cells (a filter; predicate pushed to the scan)
-  and broadcast them (``sc.broadcast`` of packed numpy arrays, the
-  "broadcast R-tree" role).
-- job 2: one ``mapInPandas`` pass over the cells computing vectorized
-  distance-to-all-targets per Arrow batch with running min — zero
+  and broadcast them with an STR tree over their points
+  (:class:`TargetSet`, the "broadcast R-tree" role).
+- job 2: one Arrow UDF over the x/y columns: each batch of points
+  descends the tree by vectorized branch and bound
+  (``plans/rtree.STRtree.nearest``; box lower bounds from
+  ``_lower_bound``, exact distances from ``_distance``) — zero
   shuffles, embarrassingly parallel, identical results at any
-  parallelism.
+  parallelism.  At most 64 targets skip Python altogether: they
+  inline into codegen (``nearest_expr``).
 
 When the target side is too big to broadcast, ``knn_ring_join`` is the
 shuffle path: bucket both sides by grid cell at a zoom matched to the
@@ -37,7 +40,7 @@ deviation — scan order is not defined for a distributed scan).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -48,48 +51,101 @@ from xarray_spatial_spark import grid
 from xarray_spatial_spark.functions.geo import (
     EARTH_RADIUS, distance_col, sql_double, sql_ident,
 )
-from xarray_spatial_spark.plans.joins import BROADCAST_CAP
+from xarray_spatial_spark.plans.joins import BROADCAST_CAP, EXPR_CAP
+from xarray_spatial_spark.plans.rtree import STRtree
 
 
-def _dist_matrix(
+NEAREST_COLS = ("nearest_dist", "nearest_x", "nearest_y", "nearest_payload")
+
+
+def _distance(
     px: np.ndarray, py: np.ndarray, tx: np.ndarray, ty: np.ndarray, metric: str
 ) -> np.ndarray:
-    """(P, T) distances, vectorized numpy. Formulas mirror
-    reference proximity.py:39-221."""
-    dx = px[:, None] - tx[None, :]
-    dy = py[:, None] - ty[None, :]
+    """Elementwise (broadcasting) point-to-target distances. Formulas
+    mirror reference proximity.py:39-221."""
     m = metric.upper()
     if m == "EUCLIDEAN":
+        dx = px - tx
+        dy = py - ty
         return np.sqrt(dx * dx + dy * dy)
     if m == "MANHATTAN":
-        return np.abs(dx) + np.abs(dy)
+        return np.abs(px - tx) + np.abs(py - ty)
     if m == "GREAT_CIRCLE":
-        lat1 = np.radians(py)[:, None]
-        lat2 = np.radians(ty)[None, :]
+        lat1 = np.radians(py)
+        lat2 = np.radians(ty)
         dlat = lat2 - lat1
-        dlon = np.radians(tx)[None, :] - np.radians(px)[:, None]
+        dlon = np.radians(tx) - np.radians(px)
         a = np.sin(dlat / 2.0) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2.0) ** 2
         return EARTH_RADIUS * 2.0 * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
     raise ValueError(f"unknown metric {metric!r}")
 
 
-def _lon_cell(x: np.ndarray, cell: float, ncol: int) -> np.ndarray:
-    """Grid column of each x: ``floor(x / cell)``, or for great-circle
-    (``ncol`` > 0) one of ``ncol`` equal columns spanning 360 degrees
-    of longitude from -180, so columns ``0`` and ``ncol - 1`` touch
-    across the antimeridian."""
-    if not ncol:
-        return np.floor(x / cell).astype(np.int64)
-    return np.floor((x + 180.0) / (360.0 / ncol)).astype(np.int64) % ncol
+def _lower_bound(
+    px: np.ndarray, py: np.ndarray, box: np.ndarray, metric: str
+) -> np.ndarray:
+    """Lower bound of ``_distance`` from each point to every target in
+    its box, a row of (x0, y0, x1, y1): the point's clamped offsets to
+    the box."""
+    x0, y0, x1, y1 = box.T
+    m = metric.upper()
+    if m != "GREAT_CIRCLE":
+        dx = np.maximum(np.maximum(x0 - px, px - x1), 0.0)
+        dy = np.maximum(np.maximum(y0 - py, py - y1), 0.0)
+        return np.sqrt(dx * dx + dy * dy) if m == "EUCLIDEAN" else dx + dy
+    # haversine of the smallest latitude gap, the smallest longitude gap
+    # wrapped at +-180 deg, and cos(lat) of the point times the smallest
+    # cos(lat) of the band: each term is at most its value for any
+    # target in the box.  1e-9 deg off the longitude gap and 1e-12 of
+    # ``a`` cover the rounding of the exact formula near +-pi and a = 1
+    lat = np.radians(py)
+    lat0, lat1 = np.radians(y0), np.radians(y1)
+    dlat = np.maximum(np.maximum(lat0 - lat, lat - lat1), 0.0)
+    inside = np.mod(px - x0, 360.0) <= x1 - x0
+    gap = np.minimum(np.mod(x0 - px, 360.0), np.mod(px - x1, 360.0))
+    dlon = np.radians(np.where(inside, 0.0, np.maximum(gap - 1e-9, 0.0)))
+    cos_band = np.minimum(np.cos(lat0), np.cos(lat1))
+    a = np.sin(dlat / 2.0) ** 2 + np.cos(lat) * cos_band * np.sin(dlon / 2.0) ** 2
+    # the terms are monotone only on latitudes within +-90 deg
+    valid = (np.abs(py) <= 90.0) & (y0 >= -90.0) & (y1 <= 90.0)
+    a = np.where(valid, a * (1.0 - 1e-12), 0.0)
+    return EARTH_RADIUS * 2.0 * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
 
 
-def _bearing(px, py, tx, ty):
-    """Compass direction (reference proximity.py:238-258), vectorized."""
-    x = tx - px
-    y = ty - py
-    d = np.degrees(np.arctan2(-y, x))  # 57.29578 * atan2
-    out = np.where(d < 0, 90.0 - d, np.where(d > 90.0, 450.0 - d, 90.0 - d))
-    return np.where((x == 0) & (y == 0), 0.0, out)
+class TargetSet:
+    """Driver-side nearest targets, packed for broadcast: the targets
+    with finite coordinates, sorted by (payload, x, y) so that a
+    target's index is its tie rank, and an STR tree over their point
+    boxes (None for no target)."""
+
+    def __init__(self, x: np.ndarray, y: np.ndarray, payload: np.ndarray):
+        order = np.lexsort((y, x, payload))
+        keep = order[np.isfinite(x[order]) & np.isfinite(y[order])]
+        self.x, self.y, self.payload = x[keep], y[keep], payload[keep]
+        boxes = np.stack([self.x, self.y, self.x, self.y], axis=1)
+        self.tree = STRtree(boxes) if len(boxes) else None
+
+    def nearest(
+        self, px: np.ndarray, py: np.ndarray, metric: str, max_distance: float
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(distance, target index) of each point's nearest target: the
+        smallest distance, then the smallest index.  (nan, -1) where the
+        distance is not finite (a point with a NaN or infinite
+        coordinate) or exceeds ``max_distance`` (NaN: unbounded)."""
+        dist = np.full(len(px), np.nan)
+        idx = np.full(len(px), -1, dtype=np.int64)
+        ok = np.flatnonzero(np.isfinite(px) & np.isfinite(py))
+        if self.tree is None or not len(ok):
+            return dist, idx
+        qx, qy = px[ok], py[ok]
+        dist[ok], idx[ok] = self.tree.nearest(
+            len(ok),
+            lambda p, j: _distance(qx[p], qy[p], self.x[j], self.y[j], metric),
+            lambda p, box: _lower_bound(qx[p], qy[p], box, metric),
+            math.inf if math.isnan(max_distance) else max_distance,
+        )
+        bad = ~np.isfinite(dist)
+        dist[bad], idx[bad] = np.nan, -1
+        return dist, idx
 
 
 def nearest_broadcast(
@@ -100,160 +156,48 @@ def nearest_broadcast(
     target_payload: str | None = None,
     metric: str = "EUCLIDEAN",
     max_distance: float = math.inf,
-    chunk: int = 1 << 22,
 ) -> DataFrame:
-    """Append nearest-target columns to ``points``: ``nearest_dist``,
-    ``nearest_x``, ``nearest_y``[, ``nearest_<payload>``].  No target in
-    range, or a point whose distance is not finite (NULL, NaN or
-    infinite coordinates) -> NULLs.  Zero-shuffle broadcast NN join.
+    """Append ``nearest_dist``, ``nearest_x``, ``nearest_y`` and
+    ``nearest_payload`` (0.0 without ``target_payload``, as on the
+    ``expr`` tier) to ``points``.  No target within ``max_distance``, or
+    a point whose distance is not finite (NULL, NaN or infinite
+    coordinates) -> NULLs.  Zero-shuffle broadcast NN join.
 
-    With a finite ``max_distance`` the broadcast carries a grid-bucket
-    index (cell side = the search radius) and each point only scores
-    targets in its 3x3 cell ring — O(local density) per point instead
-    of the dense O(P x T) matrix, which is what makes raster proximity
-    (targets = every non-zero cell) survive 100x target counts.  For
-    great-circle the grid's longitude columns wrap at +-180 degrees.
-
-    The points pass through pandas whole, so a NaN in any float input
-    column (``x_col`` included) comes back NULL."""
-    sc = points.sparkSession.sparkContext
+    The targets are broadcast once as a :class:`TargetSet`, and one
+    Arrow UDF over the x/y columns alone runs its branch-and-bound STR
+    tree search (``STRtree.nearest``), returning the four columns as
+    one struct; the rest of the row never leaves the JVM.  Equal
+    distances break toward the smaller payload, then x, then y; a
+    target with a NaN or infinite coordinate is never nearest, as on
+    ``expr``."""
     tcols = [x_col, y_col] + ([target_payload] if target_payload else [])
     tpdf = targets.select(*tcols).toPandas()
     if len(tpdf) > BROADCAST_CAP:
         raise ValueError(
             f"{len(tpdf)} targets exceed broadcast cap; use knn_ring_join"
         )
-    # sort by payload (then coords) so argmin tie-breaks to smallest value
-    sort_cols = ([target_payload] if target_payload else []) + [x_col, y_col]
-    tpdf = tpdf.sort_values(sort_cols, kind="mergesort").reset_index(drop=True)
-    txa = tpdf[x_col].to_numpy(np.float64)
-    tya = tpdf[y_col].to_numpy(np.float64)
-    payload = {
-        "tx": txa,
-        "ty": tya,
-        "tv": tpdf[target_payload].to_numpy() if target_payload else None,
-        "cell": None,
-        "ncol": 0,
-        "index": None,
-    }
-    if math.isfinite(max_distance) and max_distance > 0 and len(tpdf):
-        # bucket targets on a grid whose cell side >= the search radius:
-        # every in-range target of a point lies in its 3x3 cell ring
-        # (euclidean and manhattan balls both fit; great-circle uses a
-        # degree cell widened by the worst-case lon shrink below)
-        if metric.upper() == "GREAT_CIRCLE":
-            cell = max_distance / 111320.0  # meters -> degrees latitude
-            # wrap longitude: ncol columns of width >= cell span 360 deg
-            ncol = max(1, int(360.0 // cell))
-        else:
-            cell = float(max_distance)
-            ncol = 0
-        index: dict[tuple[int, int], list[int]] = {}
-        cxs = _lon_cell(txa, cell, ncol)
-        cys = np.floor(tya / cell).astype(np.int64)
-        for i, (cx, cy) in enumerate(zip(cxs, cys)):
-            index.setdefault((int(cx), int(cy)), []).append(i)
-        payload["cell"] = cell
-        payload["ncol"] = ncol
-        payload["index"] = {k: np.asarray(v, np.int64) for k, v in index.items()}
-    bc = sc.broadcast(payload)
+    tx, ty = tpdf[x_col].to_numpy(np.float64), tpdf[y_col].to_numpy(np.float64)
+    pay = (tpdf[target_payload].to_numpy(np.float64) if target_payload
+           else np.zeros(len(tpdf)))
+    bc = points.sparkSession.sparkContext.broadcast(TargetSet(tx, ty, pay))
 
-    out_fields = "nearest_dist double, nearest_x double, nearest_y double"
-    if target_payload:
-        out_fields += f", nearest_{target_payload} double"
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in points.schema)
-    schema += ", " + out_fields
-
-    empty = len(tpdf) == 0
-
-    gc = metric.upper() == "GREAT_CIRCLE"
-
-    def _op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    @F.pandas_udf(", ".join(f"{c} double" for c in NEAREST_COLS))
+    def _near(x: pd.Series, y: pd.Series) -> pd.DataFrame:
         t = bc.value
-        tx, ty, tv = t["tx"], t["ty"], t["tv"]
-        cell, index = t["cell"], t["index"]
-        ncol = t["ncol"]
-        for pdf in batches:
-            n = len(pdf)
-            dist = np.full(n, np.nan)
-            bx = np.full(n, np.nan)
-            by = np.full(n, np.nan)
-            bv = np.full(n, np.nan)
-            if not empty and n:
-                px = pdf[x_col].to_numpy(np.float64)
-                py = pdf[y_col].to_numpy(np.float64)
-                if index is not None:
-                    # bucket-pruned path: per occupied point cell, score
-                    # only targets in the 3x3 (lon-widened for
-                    # great-circle) neighbor cells
-                    pcx = _lon_cell(px, cell, ncol)
-                    pcy = np.floor(py / cell).astype(np.int64)
-                    order = np.lexsort((pcx, pcy))
-                    keys = pcy[order] * (1 << 32) + pcx[order]
-                    starts = np.flatnonzero(
-                        np.r_[True, keys[1:] != keys[:-1]]
-                    ).tolist() + [n]
-                    for gi in range(len(starts) - 1):
-                        rows = order[starts[gi]:starts[gi + 1]]
-                        cx, cy = int(pcx[rows[0]]), int(pcy[rows[0]])
-                        rx = 1
-                        if gc:
-                            lat_edge = min(
-                                89.0, abs(py[rows[0]]) + 2 * cell
-                            )
-                            rx = int(np.ceil(
-                                1.0 / max(np.cos(np.radians(lat_edge)), 1e-3)
-                            ))
-                        cols = range(cx - rx, cx + rx + 1)
-                        if ncol:
-                            cols = sorted({c % ncol for c in cols})
-                        cand = [
-                            index.get((c, cy + dy))
-                            for dy in (-1, 0, 1)
-                            for c in cols
-                        ]
-                        cand = [c for c in cand if c is not None]
-                        if not cand:
-                            continue
-                        ci = np.sort(np.concatenate(cand))  # payload order
-                        d = _dist_matrix(px[rows], py[rows], tx[ci], ty[ci],
-                                         metric)
-                        loc = np.argmin(d, axis=1)
-                        rr = np.arange(len(rows))
-                        dist[rows] = d[rr, loc]
-                        sel = ci[loc]
-                        bx[rows] = tx[sel]
-                        by[rows] = ty[sel]
-                        if tv is not None:
-                            bv[rows] = tv[sel]
-                else:
-                    # dense path: chunk rows so the (rows, T) matrix
-                    # stays in cache/RAM
-                    step = max(1, chunk // max(1, len(tx)))
-                    for s in range(0, n, step):
-                        e = min(n, s + step)
-                        d = _dist_matrix(px[s:e], py[s:e], tx, ty, metric)
-                        idx = np.argmin(d, axis=1)  # first min => min payload
-                        rows = np.arange(e - s)
-                        dist[s:e] = d[rows, idx]
-                        bx[s:e] = tx[idx]
-                        by[s:e] = ty[idx]
-                        if tv is not None:
-                            bv[s:e] = tv[idx]
-                beyond = ~np.isfinite(dist) | (dist > max_distance)
-                dist[beyond] = np.nan
-                bx[beyond] = np.nan
-                by[beyond] = np.nan
-                bv[beyond] = np.nan
-            res = pdf.copy()
-            res["nearest_dist"] = dist
-            res["nearest_x"] = bx
-            res["nearest_y"] = by
-            if target_payload:
-                res[f"nearest_{target_payload}"] = bv
-            yield res
+        d, i = t.nearest(x.to_numpy(np.float64), y.to_numpy(np.float64),
+                         metric, max_distance)
+        # index -1 reads the appended NaN, which Arrow sends as NULL
+        found = [np.append(a, np.nan)[i] for a in (t.x, t.y, t.payload)]
+        return pd.DataFrame(dict(zip(NEAREST_COLS, [d, *found])))
 
-    return points.mapInPandas(_op, schema=schema)
+    tmp = "_nearest"
+    while tmp in points.columns:
+        tmp = "_" + tmp
+    return (
+        points.withColumn(tmp, _near(F.col(x_col), F.col(y_col)))
+        .withColumns({c: F.col(tmp).getField(c) for c in NEAREST_COLS})
+        .drop(tmp)
+    )
 
 
 def _targets(
@@ -280,7 +224,7 @@ def _proximity_family(
 ) -> DataFrame:
     """Shared proximity/allocation/direction plan, routed through the
     plans/joins.py strategy planner: <=64 targets inline into codegen
-    (expr), <=5M broadcast with cell-bucket pruning, beyond that the
+    (expr), <=5M broadcast STR tree search, beyond that the
     cell-ring shuffle join (requires finite max_distance).  One job
     sizes the target side and, at <=64 targets, also collects them for
     expr (the Spark analog of the reference's bounded-vs-global
@@ -297,7 +241,7 @@ def _proximity_family(
         near = _nearest_select(
             raster, [tuple(map(float, r)) for r in rows], x_col, y_col,
             distance_metric, max_distance,
-        ).withColumnRenamed("nearest_payload", f"nearest_{value_col}")
+        )
     elif chosen == "ring":
         pid = F.struct(F.col(x_col).alias("px"), F.col(y_col).alias("py"))
         pts = raster.withColumn("_pid", pid)
@@ -315,7 +259,7 @@ def _proximity_family(
             .withColumn("nearest_dist", F.col("dist"))
             .withColumn("nearest_x", F.col("_tx"))
             .withColumn("nearest_y", F.col("_ty"))
-            .withColumn(f"nearest_{value_col}", F.col("_tpay"))
+            .withColumn("nearest_payload", F.col("_tpay"))
         )
     else:
         near = nearest_join(
@@ -327,7 +271,7 @@ def _proximity_family(
     if mode == "proximity":
         out = F.col("nearest_dist")
     elif mode == "allocation":
-        out = F.col(f"nearest_{value_col}")
+        out = F.col("nearest_payload")
     else:  # direction: bearing to the nearest target, 0 at the target itself
         rad = math.pi / 180.0
         px, py = F.col(x_col), F.col(y_col)
@@ -460,12 +404,7 @@ def _nearest_select(
         tmp = "_" + tmp
     b = sql_ident(tmp)
     dist = _dist_sql(f"{b}.k", metric)
-    new = {
-        "nearest_dist": dist,
-        "nearest_payload": f"{b}.p",
-        "nearest_x": f"{b}.x",
-        "nearest_y": f"{b}.y",
-    }
+    new = dict(zip(NEAREST_COLS, (dist, f"{b}.x", f"{b}.y", f"{b}.p")))
     # NULL k: NULL coordinates; NaN sorts above +inf in Spark
     beyond = f"NOT coalesce({b}.k < double('Infinity'), false)"
     if math.isfinite(max_distance):
@@ -488,14 +427,13 @@ def nearest_expr(
     x_col: str = "lon",
     y_col: str = "lat",
     metric: str = "EUCLIDEAN",
-    max_targets: int = 64,
 ) -> DataFrame:
     """Compiled nearest-target (kNN-1 / allocation fast path): a SMALL
     broadcast target set inlines into whole-stage codegen as one LEAST
     over (key, payload, x, y) structs -- no Python, no shuffle, fuses
     with the surrounding stages.  ``targets`` = [(x, y, payload)].
-    Adds ``nearest_dist``, ``nearest_payload``, ``nearest_x`` and
-    ``nearest_y``; no targets, or a point whose distance is not finite
+    Adds ``nearest_dist``, ``nearest_x``, ``nearest_y`` and
+    ``nearest_payload``; no targets, or a point whose distance is not finite
     -> NULLs.
 
     Targets rank on a key monotone in the distance (haversine ``a``,
@@ -508,7 +446,7 @@ def nearest_expr(
     but round to the same distance -- the truly nearer target wins, not
     the smaller payload.  The predicate is one SQL string, one
     ``F.expr`` call, with exact double literals."""
-    if len(targets) > max_targets:
+    if len(targets) > EXPR_CAP:
         raise ValueError(f"{len(targets)} targets: use nearest_broadcast")
     return _nearest_select(points, targets, x_col, y_col, metric, math.inf)
 

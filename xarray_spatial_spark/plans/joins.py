@@ -16,17 +16,20 @@ expr       k=1 and <= EXPR_CAP targets one LEAST over (key, payload, x,
                                        string, whole-stage codegen, no
                                        Python, no shuffle, fuses with the
                                        surrounding stages
-broadcast  <= BROADCAST_CAP targets    driver-collected packed arrays +
-                                       grid-bucket index broadcast; one
-                                       mapInPandas pass, zero shuffles;
-                                       finite max_distance prunes each
-                                       point to its 3x3 cell ring
+broadcast  <= BROADCAST_CAP targets    driver-collected targets + STR
+                                       tree broadcast; one Arrow UDF over
+                                       x/y returns a struct, zero
+                                       shuffles; each point descends the
+                                       tree by branch and bound
 ring       anything bigger             knn_ring_join: bucket BOTH sides
                                        by grid cell at a zoom matched to
                                        the search radius, explode points
                                        to the neighbor ring, equi-join
                                        (AQE skew-join), windowed top-k
 ========== =========================== ===================================
+
+``expr`` and ``broadcast`` append the same four columns:
+``nearest_dist``, ``nearest_x``, ``nearest_y`` and ``nearest_payload``.
 
 One job sizes the target side (``sized_targets``): the first
 EXPR_CAP + 1 rows come back to the driver, and when that is the whole
@@ -107,9 +110,10 @@ def nearest_join(
 ) -> DataFrame:
     """Route a nearest-target join through the planned strategy.
 
-    ``expr`` / ``broadcast`` (k=1 only) append nearest_* columns to
-    ``points``; ``ring`` returns (point_id, target_id, dist, knn_rank)
-    rows.  ``n_targets`` skips the sizing job when the caller knows
+    ``expr`` / ``broadcast`` (k=1 only) append ``nearest_dist``,
+    ``nearest_x``, ``nearest_y`` and ``nearest_payload`` (0.0 without
+    ``target_payload``) to ``points``; ``ring`` returns (point_id,
+    target_id, dist, knn_rank) rows.  ``n_targets`` skips the sizing job when the caller knows
     it."""
     from xarray_spatial_spark.operators.proximity import (
         _nearest_select, knn_ring_join, nearest_broadcast,

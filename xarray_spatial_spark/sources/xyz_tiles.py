@@ -78,7 +78,7 @@ def _render_level(pixels: DataFrame, z: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    def _one(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         from xarray_spatial_spark.operators.multimodal import encode_png
 
         tx, ty = int(key[0]), int(key[1])
