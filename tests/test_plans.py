@@ -5,6 +5,8 @@ depends on: column pruning reaching the parquet scan, compiled
 operators staying out of Python, single-exchange aggregates, and
 broadcast joins where a broadcast is intended."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -239,3 +241,47 @@ def test_change_rate_single_exchange(spark):
                  "fingerprint")
     plan = _plan(change_rate(h))
     assert plan.count("Exchange hashpartitioning") == 1
+
+
+def test_python_worker_skips_spark_archives(spark):
+    """A Python task imports pyspark from outside Spark's archives, and
+    no zipimporter is left to re-read on every task except the shipped
+    package zip's.  The task runs the package from that zip, or from the
+    checkout itself when it is the JVM's working directory (``python -m``
+    puts the working directory first on the worker's path); both hold
+    the sources the zip's name hashes."""
+    import pyarrow as pa
+
+    from xarray_spatial_spark import session
+
+    def probe(batches):
+        import os
+        import sys
+        import zipimport
+
+        import pyspark
+        import xarray_spatial_spark
+
+        archives = [k for k, v in sys.path_importer_cache.items()
+                    if isinstance(v, zipimport.zipimporter)]
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([{
+            "pyspark": pyspark.__file__, "pkg": xarray_spatial_spark.__file__,
+            "archives": "\n".join(archives),
+            "zips": "\n".join(p for p in sys.path
+                              if p.endswith((".zip", ".jar")) and os.path.exists(p))}])
+
+    row = (spark.range(1, numPartitions=1)
+           .mapInArrow(probe, "pyspark string, pkg string, archives string, zips string")
+           .collect()[0])
+    assert ".zip" not in row.pyspark and ".jar" not in row.pyspark
+    shipped = row.zips.split("\n")
+    assert len(shipped) == 1, shipped
+    shipped = shipped[0]
+    assert os.path.basename(shipped) in spark.sparkContext._python_includes
+    assert os.path.basename(shipped).startswith("xarray_spatial_spark_pyfiles-")
+    assert all(a == shipped or a.startswith(shipped + os.sep)
+               for a in row.archives.split("\n") if a), row.archives
+    assert (row.pkg.startswith(shipped + os.sep)
+            or row.pkg == str(session._PKG_DIR / "__init__.py")), row.pkg

@@ -123,7 +123,9 @@ class TestNearest:
     def test_descent_prunes(self):
         """An unbounded search over 5000 targets computes far fewer than
         points x targets exact distances."""
-        from xarray_spatial_spark.operators.proximity import _distance, _lower_bound
+        from xarray_spatial_spark.operators.proximity import (
+            _distance, _lower_bound, _node_terms, _point_terms,
+        )
 
         rng = np.random.default_rng(2)
         tx, ty = rng.uniform(-50, 50, 5000), rng.uniform(-50, 50, 5000)
@@ -135,11 +137,71 @@ class TestNearest:
             n_exact.append(len(p))
             return _distance(px[p], py[p], tx[j], ty[j], "EUCLIDEAN")
 
+        pt = _point_terms(px, py, "EUCLIDEAN")
+        nodes = [_node_terms(bb, "EUCLIDEAN") for bb, _, _ in tree.levels]
         d, _ = tree.nearest(400, exact,
-                            lambda p, b: _lower_bound(px[p], py[p], b, "EUCLIDEAN"))
+                            lambda p, li, n: _lower_bound([c[p] for c in pt],
+                                                          [c[n] for c in nodes[li]],
+                                                          "EUCLIDEAN"))
         want = _distance(px[:, None], py[:, None], tx, ty, "EUCLIDEAN").min(axis=1)
         np.testing.assert_array_equal(d, want)
         assert sum(n_exact) < 400 * 5000 / 20
+
+
+def _box_lower_bound(px, py, box, metric):
+    """The box lower bound as it was computed per (point, box) pair
+    before its point and node terms were hoisted: the reference the
+    hoisted bound must match bit for bit."""
+    from xarray_spatial_spark.functions.geo import EARTH_RADIUS
+
+    x0, y0, x1, y1 = box.T
+    m = metric.upper()
+    if m != "GREAT_CIRCLE":
+        dx = np.maximum(np.maximum(x0 - px, px - x1), 0.0)
+        dy = np.maximum(np.maximum(y0 - py, py - y1), 0.0)
+        return np.sqrt(dx * dx + dy * dy) if m == "EUCLIDEAN" else dx + dy
+    lat = np.radians(py)
+    lat0, lat1 = np.radians(y0), np.radians(y1)
+    dlat = np.maximum(np.maximum(lat0 - lat, lat - lat1), 0.0)
+    inside = np.mod(px - x0, 360.0) <= x1 - x0
+    gap = np.minimum(np.mod(x0 - px, 360.0), np.mod(px - x1, 360.0))
+    dlon = np.radians(np.where(inside, 0.0, np.maximum(gap - 1e-9, 0.0)))
+    cos_band = np.minimum(np.cos(lat0), np.cos(lat1))
+    a = np.sin(dlat / 2.0) ** 2 + np.cos(lat) * cos_band * np.sin(dlon / 2.0) ** 2
+    valid = (np.abs(py) <= 90.0) & (y0 >= -90.0) & (y1 <= 90.0)
+    a = np.where(valid, a * (1.0 - 1e-12), 0.0)
+    return EARTH_RADIUS * 2.0 * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
+
+
+@pytest.mark.parametrize("metric", ["EUCLIDEAN", "MANHATTAN", "GREAT_CIRCLE"])
+def test_hoisted_lower_bound_matches_per_pair_bound_bit_for_bit(metric):
+    """Per-point and per-node terms, gathered per pair, give the same
+    bits as the per-pair formula: on random boxes, boxes touching and
+    crossing +-90 deg latitude, boxes spanning the antimeridian, and
+    points beyond +-90 deg."""
+    from xarray_spatial_spark.operators.proximity import (
+        _lower_bound, _node_terms, _point_terms,
+    )
+
+    rng = np.random.default_rng(9)
+    n_boxes, n_pts, n_pairs = 3000, 2000, 50000
+    x0 = rng.uniform(-180, 180, n_boxes)
+    y0 = rng.uniform(-95, 95, n_boxes)
+    x1 = x0 + rng.exponential(20, n_boxes)  # some past +180
+    y1 = y0 + rng.exponential(10, n_boxes)
+    y0[:200], y1[200:400], y0[400:450], y1[400:450] = -90.0, 90.0, -90.0, 90.0
+    x0[450:600], x1[450:600] = rng.uniform(170, 180, 150), rng.uniform(180, 190, 150)
+    x0[600:700], x1[600:700] = -180.0, 180.0
+    box = np.stack([x0, y0, x1, y1], axis=1)
+    px, py = rng.uniform(-180, 180, n_pts), rng.uniform(-92, 92, n_pts)
+    py[:100] = rng.choice([-90.0, 90.0], 100)
+    px[100:300] = rng.choice([-180.0, 180.0, 179.999, -179.999], 200)
+    p, n = rng.integers(0, n_pts, n_pairs), rng.integers(0, n_boxes, n_pairs)
+    pt = [c[p] for c in _point_terms(px, py, metric)]
+    got = _lower_bound(pt, [c[n] for c in _node_terms(box, metric)], metric)
+    want = _box_lower_bound(px[p], py[p], box[n], metric)
+    np.testing.assert_array_equal(got.view(np.int64), want.view(np.int64))
+    assert (want > 0).any() and (want == 0).any()
 
 
 def _star(rng, n, cx, cy, r):

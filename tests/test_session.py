@@ -1,4 +1,5 @@
-"""Session defaults fit the host: no JVM is started here."""
+"""Session defaults fit the host and the worker daemon keeps a safe
+path: no JVM is started here."""
 
 import os
 
@@ -63,3 +64,82 @@ def test_ship_package_zip_follows_sources(monkeypatch, tmp_path):
     (pkg / "mod.py").write_text("X = 1\n")
     ship()
     assert shipped[2] == shipped[0]  # same sources, same zip
+
+
+def _daemon():
+    """``_worker/xss_daemon.py``, loaded by path: its directory is no
+    package."""
+    import importlib.util
+
+    path = session._PKG_DIR / "_worker" / "xss_daemon.py"
+    spec = importlib.util.spec_from_file_location("xss_daemon", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _spark_path(tmp_path, archived=("4.1.2", "0.10.9.9"), installed=("4.1.2", "0.10.9.9")):
+    """A worker-like path: Spark's three archives first, then a
+    site-packages directory with the installed pyspark and py4j
+    (``None`` leaves one out)."""
+    import zipfile
+
+    lib = tmp_path / "lib"
+    site = tmp_path / "site"
+    lib.mkdir(parents=True)
+    site.mkdir()
+    ver = {"pyspark": "__version__: str = '{}'\n", "py4j": "__version__ = '{}'\n"}
+    zips = {"pyspark": lib / "pyspark.zip", "py4j": lib / "py4j-0.10.9.9-src.zip"}
+    for (pkg, fmt), a, i in zip(ver.items(), archived, installed):
+        with zipfile.ZipFile(zips[pkg], "w") as z:
+            z.writestr(f"{pkg}/__init__.py", "")
+            z.writestr(f"{pkg}/version.py", fmt.format(a))
+        if i is not None:
+            (site / pkg).mkdir()
+            (site / pkg / "__init__.py").write_text("")
+            (site / pkg / "version.py").write_text(fmt.format(i))
+    jar = lib / "spark-core_2.13-4.1.2.jar"
+    zipfile.ZipFile(jar, "w").close()
+    return [str(tmp_path / "cwd"), str(zips["pyspark"]), str(zips["py4j"]), str(jar),
+            str(tmp_path / "_worker"), "/nonexistent/python311.zip", str(site)]
+
+
+def test_daemon_drops_spark_archives_when_versions_match(tmp_path):
+    path = _spark_path(tmp_path)
+    assert _daemon().lean_path(path) == [path[0], path[4], path[5], path[6]]
+
+
+def test_daemon_keeps_stock_path_without_matching_install(tmp_path):
+    """No unarchived pyspark or py4j, or another version of either: the
+    daemon's path is the stock one."""
+    lean_path = _daemon().lean_path
+    for i, kw in enumerate([
+        {"installed": (None, "0.10.9.9")},
+        {"installed": ("4.1.2", None)},
+        {"installed": ("4.1.1", "0.10.9.9")},
+        {"installed": ("4.1.2", "0.10.9.7")},
+        {"archived": ("4.2.0", "0.10.9.9")},
+    ]):
+        path = _spark_path(tmp_path / str(i), **kw)
+        assert lean_path(path) == path, kw
+    assert lean_path(["/a", "/b"]) == ["/a", "/b"]
+
+
+def test_worker_conf_local_master_only():
+    worker = str(session._PKG_DIR / "_worker")
+    conf = session.worker_conf("local[4]", {"spark.x": "1"})
+    assert conf == {"spark.x": "1", "spark.python.daemon.module": "xss_daemon",
+                    "spark.executorEnv.PYTHONPATH": worker}
+    assert session.worker_conf("local")["spark.python.daemon.module"] == "xss_daemon"
+    for master in ("spark://host:7077", "yarn", "k8s://https://h:443", "local-cluster[2,1,1024]"):
+        assert session.worker_conf(master) == {}
+        assert session.worker_conf(master, {"spark.x": "1"}) == {"spark.x": "1"}
+
+
+def test_worker_conf_keeps_caller_values():
+    conf = session.worker_conf("local[2]", {
+        "spark.python.daemon.module": "my_daemon",
+        "spark.executorEnv.PYTHONPATH": "/deps"})
+    assert conf["spark.python.daemon.module"] == "my_daemon"
+    assert conf["spark.executorEnv.PYTHONPATH"] == os.pathsep.join(
+        ["/deps", str(session._PKG_DIR / "_worker")])

@@ -20,10 +20,10 @@ nearest-neighbor join**, not a scan:
 - job 2: one Arrow UDF over the x/y columns: each batch of points
   descends the tree by vectorized branch and bound
   (``plans/rtree.STRtree.nearest``; box lower bounds from
-  ``_lower_bound``, exact distances from ``_distance``) — zero
-  shuffles, embarrassingly parallel, identical results at any
-  parallelism.  At most 64 targets skip Python altogether: they
-  inline into codegen (``nearest_expr``).
+  ``_lower_bound`` over node terms computed once per tree level, exact
+  distances from ``_distance``) — zero shuffles, embarrassingly
+  parallel, identical results at any parallelism.  At most 64 targets
+  skip Python altogether: they inline into codegen (``nearest_expr``).
 
 When the target side is too big to broadcast, ``knn_ring_join`` is the
 shuffle path: bucket both sides by grid cell at a zoom matched to the
@@ -80,15 +80,38 @@ def _distance(
     raise ValueError(f"unknown metric {metric!r}")
 
 
-def _lower_bound(
-    px: np.ndarray, py: np.ndarray, box: np.ndarray, metric: str
-) -> np.ndarray:
+def _point_terms(px: np.ndarray, py: np.ndarray, metric: str) -> tuple[np.ndarray, ...]:
+    """Per-point columns of ``_lower_bound``, computed once per batch:
+    (x, y) for the planar metrics; for great-circle (x, lat in radians,
+    cos(lat), whether |lat| <= 90 deg)."""
+    if metric.upper() != "GREAT_CIRCLE":
+        return px, py
+    lat = np.radians(py)
+    return px, lat, np.cos(lat), np.abs(py) <= 90.0
+
+
+def _node_terms(box: np.ndarray, metric: str) -> tuple[np.ndarray, ...]:
+    """Per-node columns of ``_lower_bound``, computed once per tree
+    level from its (x0, y0, x1, y1) rows: the boxes themselves for the
+    planar metrics; for great-circle (x0, x1, the band's latitudes in
+    radians, its smallest cos(lat), whether it lies within +-90 deg)."""
+    x0, y0, x1, y1 = (np.ascontiguousarray(c) for c in box.T)
+    if metric.upper() != "GREAT_CIRCLE":
+        return x0, y0, x1, y1
+    lat0, lat1 = np.radians(y0), np.radians(y1)
+    return (x0, x1, lat0, lat1, np.minimum(np.cos(lat0), np.cos(lat1)),
+            (y0 >= -90.0) & (y1 <= 90.0))
+
+
+def _lower_bound(pt: tuple[np.ndarray, ...], node: tuple[np.ndarray, ...],
+                 metric: str) -> np.ndarray:
     """Lower bound of ``_distance`` from each point to every target in
-    its box, a row of (x0, y0, x1, y1): the point's clamped offsets to
-    the box."""
-    x0, y0, x1, y1 = box.T
+    its node's box, given the ``_point_terms`` and ``_node_terms``
+    columns gathered per pair: the point's clamped offsets to the box."""
     m = metric.upper()
     if m != "GREAT_CIRCLE":
+        px, py = pt
+        x0, y0, x1, y1 = node
         dx = np.maximum(np.maximum(x0 - px, px - x1), 0.0)
         dy = np.maximum(np.maximum(y0 - py, py - y1), 0.0)
         return np.sqrt(dx * dx + dy * dy) if m == "EUCLIDEAN" else dx + dy
@@ -97,17 +120,15 @@ def _lower_bound(
     # cos(lat) of the band: each term is at most its value for any
     # target in the box.  1e-9 deg off the longitude gap and 1e-12 of
     # ``a`` cover the rounding of the exact formula near +-pi and a = 1
-    lat = np.radians(py)
-    lat0, lat1 = np.radians(y0), np.radians(y1)
+    px, lat, cos_lat, point_ok = pt
+    x0, x1, lat0, lat1, cos_band, band_ok = node
     dlat = np.maximum(np.maximum(lat0 - lat, lat - lat1), 0.0)
     inside = np.mod(px - x0, 360.0) <= x1 - x0
     gap = np.minimum(np.mod(x0 - px, 360.0), np.mod(px - x1, 360.0))
     dlon = np.radians(np.where(inside, 0.0, np.maximum(gap - 1e-9, 0.0)))
-    cos_band = np.minimum(np.cos(lat0), np.cos(lat1))
-    a = np.sin(dlat / 2.0) ** 2 + np.cos(lat) * cos_band * np.sin(dlon / 2.0) ** 2
+    a = np.sin(dlat / 2.0) ** 2 + cos_lat * cos_band * np.sin(dlon / 2.0) ** 2
     # the terms are monotone only on latitudes within +-90 deg
-    valid = (np.abs(py) <= 90.0) & (y0 >= -90.0) & (y1 <= 90.0)
-    a = np.where(valid, a * (1.0 - 1e-12), 0.0)
+    a = np.where(point_ok & band_ok, a * (1.0 - 1e-12), 0.0)
     return EARTH_RADIUS * 2.0 * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
 
 
@@ -137,10 +158,14 @@ class TargetSet:
         if self.tree is None or not len(ok):
             return dist, idx
         qx, qy = px[ok], py[ok]
+        # the bound's terms, once per point and once per node of each level
+        pt = _point_terms(qx, qy, metric)
+        nodes = [_node_terms(bb, metric) for bb, _, _ in self.tree.levels]
         dist[ok], idx[ok] = self.tree.nearest(
             len(ok),
             lambda p, j: _distance(qx[p], qy[p], self.x[j], self.y[j], metric),
-            lambda p, box: _lower_bound(qx[p], qy[p], box, metric),
+            lambda p, li, n: _lower_bound([c[p] for c in pt],
+                                          [c[n] for c in nodes[li]], metric),
             math.inf if math.isnan(max_distance) else max_distance,
         )
         bad = ~np.isfinite(dist)

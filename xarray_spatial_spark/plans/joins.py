@@ -113,8 +113,8 @@ def nearest_join(
     ``expr`` / ``broadcast`` (k=1 only) append ``nearest_dist``,
     ``nearest_x``, ``nearest_y`` and ``nearest_payload`` (0.0 without
     ``target_payload``) to ``points``; ``ring`` returns (point_id,
-    target_id, dist, knn_rank) rows.  ``n_targets`` skips the sizing job when the caller knows
-    it."""
+    target_id, dist, knn_rank) rows.  ``n_targets`` skips the sizing
+    job when the caller knows it."""
     from xarray_spatial_spark.operators.proximity import (
         _nearest_select, knn_ring_join, nearest_broadcast,
     )

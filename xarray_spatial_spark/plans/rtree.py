@@ -102,8 +102,10 @@ class STRtree:
     ) -> tuple[np.ndarray, np.ndarray]:
         """Nearest entry of each of ``n_points`` points, by vectorized
         branch and bound.  ``exact(pts, entries)`` is the distance of
-        each (point, entry) pair and ``lower(pts, boxes)`` a lower
-        bound of it over every entry inside each (k, 4) box.
+        each (point, entry) pair and ``lower(pts, level, nodes)`` a
+        lower bound of it over every entry inside each node of tree
+        level ``level`` (an index into ``levels``), so that the caller
+        can compute its node terms once per level.
 
         Level by level, each node's first entry gives an exact
         distance that bounds its point's best (``np.minimum.reduceat``
@@ -120,12 +122,12 @@ class STRtree:
         for li in range(len(self.levels) - 1, -1, -1):
             if not len(pts):
                 return dist, ent
-            bb, cs, cc = self.levels[li]
+            _, cs, cc = self.levels[li]
             starts = _starts(pts)
             first = pts[starts]
             rep = np.minimum.reduceat(exact(pts, self.reps[li][nodes]), starts)
             best[first] = np.minimum(best[first], rep)
-            keep = lower(pts, bb[nodes]) <= best[pts] * (1.0 + 1e-9)
+            keep = lower(pts, li, nodes) <= best[pts] * (1.0 + 1e-9)
             pts, nodes = _children(pts[keep], nodes[keep], cs, cc)
         if not len(pts):
             return dist, ent

@@ -43,6 +43,26 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(str(zpath))
 
 
+def worker_conf(master: str, extra_conf: dict[str, str] | None = None
+                ) -> dict[str, str]:
+    """The caller's ``extra_conf`` plus, on a ``local[...]`` master, the
+    two Spark confs that start Python workers through
+    ``_worker/xss_daemon.py`` (a daemon whose workers skip re-reading
+    ``pyspark.zip`` and the spark-core jar on every task).  A caller's
+    ``spark.python.daemon.module`` wins; a caller's
+    ``spark.executorEnv.PYTHONPATH`` is kept and joined with ours.
+    Other masters get ``extra_conf`` unchanged: the package path of the
+    driver does not exist on a cluster's executors."""
+    conf = dict(extra_conf or {})
+    if not (master == "local" or master.startswith("local[")):
+        return conf
+    conf.setdefault("spark.python.daemon.module", "xss_daemon")
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(
+        p for p in (conf.get(key), str(_PKG_DIR / "_worker")) if p)
+    return conf
+
+
 _MAX_HEAP_MB = 16 << 10
 
 
@@ -127,7 +147,7 @@ def get_spark(
         # than the pruned bytes warrant; 512m keeps task count ~ cores
         .config("spark.sql.files.maxPartitionBytes", "512m")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in worker_conf(master, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
