@@ -207,58 +207,43 @@ def tiled_stencil_bench(spark) -> dict[str, float]:
     throughput headline for the raster side (cells/sec alongside)."""
     from xarray_spatial_spark import tiled
     from xarray_spatial_spark.operators import focal, surface
+    from xarray_spatial_spark.operators.regions import regions_tiled
 
     path = ensure_tiled_terrain(spark)
     tdf = tiled.read(spark, path)  # sizes the reader batch for tiles
     # warm python workers once (not timed)
     surface.slope(tdf).write.mode("overwrite").format("noop").save()
     out = {}
-    # stored raster + strips under the cap -> the broadcast (zero
-    # shuffle) halo is the honest plan here; the default-plan slope is
-    # reported alongside as the beyond-cap (100-TB) number
-    spark.conf.set("spark.xrspatial.halo.strategy", "broadcast")
-    try:
-        from xarray_spatial_spark.operators.regions import regions_tiled
-
-        # distributed CCL input: quantized terrain (same 67M cells)
-        q = tiled.map_tiles(
-            tdf, lambda a: {"value": a["value"] // 400.0},
-            ["value"], ["value"],
-        ).persist()
-        q.count()
-        specs = [
-            ("slope_tiled", lambda d: surface.slope(d)),
-            ("hillshade_tiled", lambda d: surface.hillshade(d)),
-            ("focal_mean_tiled", lambda d: focal.mean(d)),
-            ("summarize_terrain_tiled", lambda d: surface.summarize_terrain(d)),
-            # 3-op sequential chain (smooth -> slope -> smooth) fused
-            # into ONE halo exchange via the public kernel factories —
-            # the multi-op pipeline cost should sit within ~15% of a
-            # single op (tests assert equality with the 3-exchange run)
-            ("fused_chain_tiled", lambda d: tiled.apply_stencil_tiled(
-                d, *_fused_chain_kernel())),
-            ("regions_tiled", lambda d: regions_tiled(q, neighborhood=4)),
-        ]
-        # INTERLEAVED best-of-REPS: full passes over the whole family
-        # per rep, so a host co-tenancy burst taxes one pass of every
-        # query instead of all reps of whichever query it landed on
-        # (single shots on this VM swing 2-3x)
-        for _ in range(REPS):
-            for name, fn in specs:
-                t0 = time.time()
-                fn(tdf).write.mode("overwrite").format("noop").save()
-                dt = time.time() - t0
-                out[name] = round(min(out.get(name, float("inf")), dt), 3)
-        q.unpersist()
-    finally:
-        spark.conf.unset("spark.xrspatial.halo.strategy")
-    best = float("inf")
+    # distributed CCL input: quantized terrain (same 67M cells)
+    q = tiled.map_tiles(
+        tdf, lambda a: {"value": a["value"] // 400.0},
+        ["value"], ["value"],
+    ).persist()
+    q.count()
+    specs = [
+        ("slope_tiled", lambda d: surface.slope(d)),
+        ("hillshade_tiled", lambda d: surface.hillshade(d)),
+        ("focal_mean_tiled", lambda d: focal.mean(d)),
+        ("summarize_terrain_tiled", lambda d: surface.summarize_terrain(d)),
+        # 3-op sequential chain (smooth -> slope -> smooth) fused
+        # into ONE halo exchange via the public kernel factories —
+        # the multi-op pipeline cost should sit within ~15% of a
+        # single op (tests assert equality with the 3-exchange run)
+        ("fused_chain_tiled", lambda d: tiled.apply_stencil_tiled(
+            d, *_fused_chain_kernel())),
+        ("regions_tiled", lambda d: regions_tiled(q, neighborhood=4)),
+    ]
+    # INTERLEAVED best-of-REPS: full passes over the whole family
+    # per rep, so a host co-tenancy burst taxes one pass of every
+    # query instead of all reps of whichever query it landed on
+    # (single shots on this VM swing 2-3x)
     for _ in range(REPS):
-        t0 = time.time()
-        surface.slope(tdf).write.mode("overwrite").format("noop").save()
-        best = min(best, time.time() - t0)
-    out["slope_tiled_shuffle"] = round(best, 3)
-
+        for name, fn in specs:
+            t0 = time.time()
+            fn(tdf).write.mode("overwrite").format("noop").save()
+            dt = time.time() - t0
+            out[name] = round(min(out.get(name, float("inf")), dt), 3)
+    q.unpersist()
     tiled.table_scan_conf(spark)  # restore the narrow-table batch
     return out
 

@@ -1,4 +1,4 @@
-"""plans/joins.py strategy planner + bucket-pruned broadcast NN."""
+"""plans/joins.py strategy planner + the broadcast tier's STR tree NN."""
 
 import math
 
@@ -73,8 +73,9 @@ def test_nearest_join_sizes_small_targets_in_one_job(spark, scattered):
 
 
 def test_bucket_pruned_matches_dense(spark, scattered):
-    """Finite max_distance turns on the grid-bucket index; results must
-    equal the dense path exactly (including out-of-range NULLs)."""
+    """The STR tree search bounded by a finite max_distance equals the
+    unbounded search cut at max_distance (out-of-range NULLs
+    included)."""
     pdf, tdf, pts, tgt = scattered
     md = 7.5
     pruned = proximity.nearest_broadcast(
@@ -83,7 +84,7 @@ def test_bucket_pruned_matches_dense(spark, scattered):
     dense = proximity.nearest_broadcast(
         pdf, tdf, target_payload="value"
     ).toPandas().sort_values(["lon", "lat"]).reset_index(drop=True)
-    # dense path + manual cutoff == pruned path
+    # unbounded search + manual cutoff == bounded search
     mask = dense["nearest_dist"] > md
     for c in ("nearest_dist", "nearest_x", "nearest_y", "nearest_payload"):
         dense.loc[mask, c] = np.nan
@@ -95,6 +96,8 @@ def test_bucket_pruned_matches_dense(spark, scattered):
 
 
 def test_bucket_pruned_great_circle(spark, scattered):
+    """The same bounded-against-unbounded STR tree comparison on the
+    great-circle metric (max_distance in meters)."""
     pdf, tdf, _, _ = scattered
     md = 900_000.0  # meters
     pruned = proximity.nearest_broadcast(
@@ -247,7 +250,8 @@ def test_nearest_non_finite_points_get_nulls(spark, n_targets, max_distance):
     """NULL and NaN coordinates have no nearest target on either tier
     (64 targets -> expr, 65 -> broadcast): all nearest columns NULL,
     bounded or not, while finite points keep theirs.  Both tiers append
-    the same columns."""
+    the same columns, and without ``target_payload`` the same rows with
+    a NULL ``nearest_payload``."""
     rng = np.random.default_rng(3)
     tv = [(float(x), float(y), float(i))
           for i, (x, y) in enumerate(rng.uniform(-40, 40, (n_targets, 2)))]
@@ -265,12 +269,18 @@ def test_nearest_non_finite_points_get_nulls(spark, n_targets, max_distance):
     assert all(v is not None for v in rows[0])
     for pid in (1, 2, 3, 4):
         assert rows[pid] == [None] * 4, (pid, rows[pid])
+    bare = joins.nearest_join(pts, tdf, metric="GREAT_CIRCLE",
+                              max_distance=max_distance)
+    assert bare.columns == out.columns
+    assert {r["pid"]: [r[c] for c in cols] for r in bare.collect()} == {
+        pid: v[:3] + [None] for pid, v in rows.items()}
 
 
 def test_great_circle_bucket_wraps_antimeridian(spark):
     """Points at +-179.9 deg with targets across the antimeridian: the
-    bucket-pruned broadcast fork (finite max_distance) equals the dense
-    fork cut at max_distance, and the expr tier."""
+    broadcast tier's STR tree search bounded by a finite max_distance
+    equals the unbounded search cut at max_distance, and the expr
+    tier."""
     rng = np.random.default_rng(8)
     n = 200
     plon = np.where(rng.random(n) < 0.5, 179.9, -179.9)

@@ -191,65 +191,6 @@ def test_focal_mean_multipass_fused(spark, arr):
             + plan.count("FlatMapGroupsInArrow")) == 2  # pack + one stencil
 
 
-@pytest.mark.parametrize("dtype", [np.float64, np.float32])
-def test_broadcast_halo_matches_shuffle(spark, arr, dtype):
-    """Broadcast-strips halo (zero shuffle) must equal the default
-    plan bit-for-bit, ragged edge tiles and NaN blobs included, on
-    float64 and float32 blobs."""
-    df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=32, tile_w=32, dtype=dtype).persist()
-    try:
-        base = tiled.numpy_from_tiled(surface.slope(tdf), value_col="value")
-        spark.conf.set("spark.xrspatial.halo.strategy", "broadcast")
-        got = tiled.numpy_from_tiled(surface.slope(tdf), value_col="value")
-        np.testing.assert_array_equal(base, got)
-        # radius-2 (multi-column strips through the edge blobs)
-        spark.conf.unset("spark.xrspatial.halo.strategy")
-        k = np.ones((5, 5))
-        b2 = tiled.numpy_from_tiled(
-            focal.focal_stats(tdf, k, stats_funcs=("mean",)),
-            value_col="mean")
-        spark.conf.set("spark.xrspatial.halo.strategy", "broadcast")
-        g2 = tiled.numpy_from_tiled(
-            focal.focal_stats(tdf, k, stats_funcs=("mean",)),
-            value_col="mean")
-        np.testing.assert_array_equal(b2, g2)
-    finally:
-        spark.conf.unset("spark.xrspatial.halo.strategy")
-        tdf.unpersist()
-
-
-def test_broadcast_halo_no_shuffle_plan(spark, arr):
-    """The broadcast strategy's stencil job plans with NO exchange."""
-    df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=32, tile_w=32).persist()
-    try:
-        tdf.count()
-        spark.conf.set("spark.xrspatial.halo.strategy", "broadcast")
-        sl = surface.slope(tdf)
-        plan = sl._sc._jvm.PythonSQLUtils.explainString(
-            sl._jdf.queryExecution(), "formatted")
-        stencil = plan.split("InMemoryTableScan")[0]
-        assert "Exchange" not in stencil
-        assert "MapInPandas" in stencil or "MapInArrow" in stencil
-    finally:
-        spark.conf.unset("spark.xrspatial.halo.strategy")
-        tdf.unpersist()
-
-
-def test_broadcast_halo_cap(spark, arr):
-    df = raster.df_from_numpy(spark, arr)
-    tdf = tiled.tile(df, tile_h=32, tile_w=32)
-    spark.conf.set("spark.xrspatial.halo.broadcast.maxBytes", "16")
-    spark.conf.set("spark.xrspatial.halo.strategy", "broadcast")
-    try:
-        with pytest.raises(ValueError, match="broadcast cap"):
-            tiled.apply_stencil_tiled(tdf, lambda p: p, 1)
-    finally:
-        spark.conf.unset("spark.xrspatial.halo.broadcast.maxBytes")
-        spark.conf.unset("spark.xrspatial.halo.strategy")
-
-
 def test_focal_stats_float32_high_dynamic_range(spark):
     """float32 tiles with |mean| >> std: the slice-stat second moment
     must accumulate in float64 or var/std collapse to rounding noise."""
@@ -352,17 +293,17 @@ def test_halo_radius_up_to_tile_size(spark):
         out.collect()
 
 
-@pytest.mark.parametrize("value", ["shuffle", "bucket", "brodcast"])
+@pytest.mark.parametrize("value", ["shuffle", "bucket", "brodcast", "broadcast"])
 def test_unknown_halo_strategy_raises(spark, arr, value):
-    """Only 'broadcast' is a halo strategy; the default plan is the
-    unset conf.  Any other value raises instead of silently running
-    some plan."""
+    """The halo has one plan and no strategy conf: any value of the
+    retired key, 'broadcast' included, raises and names the key instead
+    of silently running some plan."""
     df = raster.df_from_numpy(spark, arr)
     tdf = tiled.tile(df, tile_h=32, tile_w=32)
     spark.conf.set("spark.xrspatial.halo.strategy", value)
     try:
-        with pytest.raises(ValueError, match="only accepted value is "
-                                             "'broadcast'"):
+        with pytest.raises(ValueError, match=r"spark\.xrspatial\.halo\.strategy"
+                                             r" is set .* one plan"):
             surface.slope(tdf)
     finally:
         spark.conf.unset("spark.xrspatial.halo.strategy")

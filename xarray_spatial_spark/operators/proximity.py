@@ -183,7 +183,7 @@ def nearest_broadcast(
     max_distance: float = math.inf,
 ) -> DataFrame:
     """Append ``nearest_dist``, ``nearest_x``, ``nearest_y`` and
-    ``nearest_payload`` (0.0 without ``target_payload``, as on the
+    ``nearest_payload`` (NULL without ``target_payload``, as on the
     ``expr`` tier) to ``points``.  No target within ``max_distance``, or
     a point whose distance is not finite (NULL, NaN or infinite
     coordinates) -> NULLs.  Zero-shuffle broadcast NN join.
@@ -202,8 +202,10 @@ def nearest_broadcast(
             f"{len(tpdf)} targets exceed broadcast cap; use knn_ring_join"
         )
     tx, ty = tpdf[x_col].to_numpy(np.float64), tpdf[y_col].to_numpy(np.float64)
+    # no payload column: all-NaN payloads tie in the sort, as a constant
+    # would, and come back as NULL
     pay = (tpdf[target_payload].to_numpy(np.float64) if target_payload
-           else np.zeros(len(tpdf)))
+           else np.full(len(tpdf), np.nan))
     bc = points.sparkSession.sparkContext.broadcast(TargetSet(tx, ty, pay))
 
     @F.pandas_udf(", ".join(f"{c} double" for c in NEAREST_COLS))

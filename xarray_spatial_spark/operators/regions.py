@@ -492,7 +492,7 @@ def regions_tiled(
     # messages carry a top/bottom strip and name its end cell.  Shuffle
     # volume drops from raster-scale to ~4(th+tw)/(th*tw) of it (~0.8%%
     # at 512px tiles).
-    strips = tl._strip_rows(labeled, 1, [value_col, "lab"])
+    strips = tl._strip_rows(labeled, [value_col, "lab"])
     ty_, tx_, h_, w_ = F.col("ty"), F.col("tx"), F.col("h"), F.col("w")
 
     def _msg(bty, btx, orient, pos, kind, cell, valid):

@@ -111,7 +111,7 @@ def nearest_join(
     """Route a nearest-target join through the planned strategy.
 
     ``expr`` / ``broadcast`` (k=1 only) append ``nearest_dist``,
-    ``nearest_x``, ``nearest_y`` and ``nearest_payload`` (0.0 without
+    ``nearest_x``, ``nearest_y`` and ``nearest_payload`` (NULL without
     ``target_payload``) to ``points``; ``ring`` returns (point_id,
     target_id, dist, knn_rank) rows.  ``n_targets`` skips the sizing
     job when the caller knows it."""
@@ -134,8 +134,12 @@ def nearest_join(
             (float(r[0]), float(r[1]), float(r[2]) if target_payload else 0.0)
             for r in rows
         ]
-        return _nearest_select(points, tlist, x_col, y_col, metric,
-                               max_distance)
+        out = _nearest_select(points, tlist, x_col, y_col, metric,
+                              max_distance)
+        if not target_payload:
+            # the 0.0 payloads only ordered ties
+            out = out.withColumn("nearest_payload", F.lit(None).cast("double"))
+        return out
 
     if chosen == "broadcast":
         return nearest_broadcast(

@@ -85,12 +85,12 @@ def tiled_schema(bands: Sequence[str]) -> str:
     small perimeter blobs (~6%% of tile bytes at 512px): TRANSPOSED
     leftmost/rightmost ``EDGE`` columns (``__le``/``__re``) and plain
     top/bottom ``EDGE`` rows (``__te``/``__be``).  The transposed edge
-    blobs make every vertical and corner halo strip of the default
-    plan a plain contiguous ``substring`` in whole-stage codegen
-    (column extraction from row-major bytes would need per-element
-    higher-order functions, which fall out of codegen and copy
-    catastrophically); the row blobs let the broadcast plan's strip
-    projection scan perimeter bytes only, never the block column."""
+    blobs make every vertical and corner halo strip a plain contiguous
+    ``substring`` in whole-stage codegen (column extraction from
+    row-major bytes would need per-element higher-order functions,
+    which fall out of codegen and copy catastrophically); the row blobs
+    let ``regions_tiled``'s strip projection (``_strip_rows``) scan
+    perimeter bytes only, never the block column."""
     cols = ["ty long", "tx long", "h int", "w int", "th int", "tw int"]
     for b in bands:
         cols += [f"{b} binary"] + [f"{b}{sfx} binary" for sfx in BLOB_SUFFIXES]
@@ -100,9 +100,10 @@ def tiled_schema(bands: Sequence[str]) -> str:
 def _halo_blobs(a: np.ndarray) -> dict[str, bytes]:
     """All four perimeter blobs for one block: transposed left/right
     EDGE columns ((min(EDGE, w), h) row-major) plus plain top/bottom
-    EDGE rows.  The default halo plan slices its vertical and corner
-    strips from the transposed blobs; the broadcast plan reads only the
-    four blobs, so its strips job costs perimeter, not area."""
+    EDGE rows.  The halo plan slices its vertical and corner strips
+    from the transposed blobs; ``_strip_rows`` (``regions_tiled``'s
+    border compare) reads only the four blobs, so it costs perimeter,
+    not area."""
     e = min(EDGE, a.shape[1])
     er = min(EDGE, a.shape[0])
     return {
@@ -148,7 +149,8 @@ def _tile_rows(batch, bands: Sequence[str]) -> Iterator[tuple[dict, dict]]:
     """The tile reader: per row of an Arrow record batch or table, its
     ``meta`` (the key columns as ints) and a zero-copy (h, w) view of
     each band's block."""
-    keys = _key_arrays(batch)
+    keys = {c: batch.column(c).to_numpy(zero_copy_only=False)
+            for c in TILE_KEY_COLS}
     cols = {b: batch.column(b) for b in bands}
     for i in range(batch.num_rows):
         meta = {c: int(keys[c][i]) for c in TILE_KEY_COLS}
@@ -163,12 +165,6 @@ def _blob_view(col, i: int, sh: int, sw: int,
     copy).  Transposed strips are stored (sw, sh) row-major."""
     buf = col[i].as_buffer()
     return _decode(buf, sw, sh).T if transposed else _decode(buf, sh, sw)
-
-
-def _key_arrays(tbl) -> dict[str, np.ndarray]:
-    """The tile-key columns of an Arrow table / record batch as numpy."""
-    return {c: tbl.column(c).to_numpy(zero_copy_only=False)
-            for c in TILE_KEY_COLS}
 
 
 def _select(tdf: DataFrame, bands: Sequence[str]) -> DataFrame:
@@ -407,47 +403,34 @@ def _python_messages(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
     return _select(tdf, bands).mapInArrow(_emit, schema=msg_schema)
 
 
-def _strip_rows(tdf: DataFrame, r: int, bands: Sequence[str]) -> DataFrame:
-    """Narrow JVM projection of each tile's four ``r``-wide halo strips
-    (``<band>__top``/``__bot``/``__l``/``__r``): top / bottom row bands
-    sliced from the stored row blobs, left / right column bands
-    (transposed, (r, h) row-major) from the transposed edge blobs — all
-    contiguous substrings in whole-stage codegen that touch NO block
-    column.  Per-tile bytes ~ 2r(h + w) * isz * n_bands = perimeter
-    scale; the broadcast halo plan collects it and ``regions_tiled``
-    pairs its 1-wide strips across tile boundaries."""
+def _strip_rows(tdf: DataFrame, bands: Sequence[str]) -> DataFrame:
+    """Narrow JVM projection of each tile's four 1-wide border strips
+    (``<band>__top``/``__bot``/``__l``/``__r``): the top / bottom rows
+    sliced from the stored row blobs, the left / right columns from the
+    transposed edge blobs — all contiguous substrings in whole-stage
+    codegen that touch NO block column, so the per-tile bytes are
+    perimeter scale.  ``regions_tiled`` pairs these strips across tile
+    boundaries; it is the only reader of the ``__te``/``__be`` row
+    blobs."""
     h, w = F.col("h"), F.col("w")
     cols = [F.col(c) for c in TILE_KEY_COLS]
     for b in bands:
-        toph = F.least(F.lit(r), h)
-        lc = F.least(F.lit(r), w)
         e = F.least(F.lit(EDGE), w)
         et = F.least(F.lit(EDGE), h)
         isz = (F.length(F.col(f"{b}__le")) / (e * h)).cast("long")
         cols += [
-            F.col(f"{b}__te").substr(F.lit(1), (toph * w * isz).cast("int"))
+            F.col(f"{b}__te").substr(F.lit(1), (w * isz).cast("int"))
             .alias(f"{b}__top"),
-            F.col(f"{b}__be").substr(((et - toph) * w * isz + 1).cast("int"),
-                                     (toph * w * isz).cast("int"))
+            F.col(f"{b}__be").substr(((et - 1) * w * isz + 1).cast("int"),
+                                     (w * isz).cast("int"))
             .alias(f"{b}__bot"),
-            F.col(f"{b}__le").substr(F.lit(1), (lc * h * isz).cast("int"))
+            F.col(f"{b}__le").substr(F.lit(1), (h * isz).cast("int"))
             .alias(f"{b}__l"),
-            F.col(f"{b}__re").substr(((e - lc) * h * isz + 1).cast("int"),
-                                     (lc * h * isz).cast("int"))
+            F.col(f"{b}__re").substr(((e - 1) * h * isz + 1).cast("int"),
+                                     (h * isz).cast("int"))
             .alias(f"{b}__r"),
         ]
     return tdf.select(*cols)
-
-
-# strip kind consulted per neighbor offset (dy, dx) during assembly:
-# vertical neighbors (and diagonals) contribute row bands, horizontal
-# neighbors contribute column bands; the generic overlap clip trims
-# each full-length strip down to the halo (corners included).
-_NBR_STRIP = {
-    (-1, -1): "bot", (-1, 0): "bot", (-1, 1): "bot",
-    (0, -1): "r", (0, 1): "l",
-    (1, -1): "top", (1, 0): "top", (1, 1): "top",
-}
 
 
 def _clip_place(pad, oy0, ox0, gy0, gx0, sh, sw, src) -> None:
@@ -465,12 +448,10 @@ def _clip_place(pad, oy0, ox0, gy0, gx0, sh, sw, src) -> None:
         src[slo_y:shi_y, slo_x:shi_x]
 
 
-# Both halo plans assemble a tile from the same parts: the centre block
-# plus neighbour "pieces" (gy0, gx0, sh, sw, {band: array}) — the
-# sibling tiles and strips of its super-tile group, or broadcast
-# perimeter strips — each a zero-copy view of an Arrow binary cell
-# holding true raster values at its own global coordinates.  The plans
-# differ only in how they gather the pieces.
+# A tile is assembled from its centre block plus neighbour "pieces"
+# (gy0, gx0, sh, sw, {band: array}) — the sibling tiles and strips of
+# its super-tile group — each a zero-copy view of an Arrow binary cell
+# holding true raster values at its own global coordinates.
 
 def _reduce_tile(meta: dict, centre: dict, pieces, r: int, fn: StencilFn,
                  out_cols: Sequence[str]) -> pa.RecordBatch:
@@ -507,85 +488,6 @@ def _reduce_tile(meta: dict, centre: dict, pieces, r: int, fn: StencilFn,
     })
 
 
-def _strip_lookup(tbl, bands: Sequence[str], r: int):
-    """Arrow table of ``_strip_rows`` rows -> ``piece(tile, kind)``,
-    the tile's ``kind`` strip as a piece with its own global coords, or
-    None when the table has no such tile."""
-    keys = _key_arrays(tbl)
-    row = {t: i for i, t in enumerate(zip(keys["ty"].tolist(),
-                                          keys["tx"].tolist()))}
-    cols = {(b, kind): tbl.column(f"{b}__{kind}")
-            for b in bands for kind in ("top", "bot", "l", "r")}
-
-    def piece(t: tuple, kind: str):
-        i = row.get(t)
-        if i is None:
-            return None
-        h, w = int(keys["h"][i]), int(keys["w"][i])
-        gy, gx = t[0] * int(keys["th"][i]), t[1] * int(keys["tw"][i])
-        toph, lc = min(r, h), min(r, w)
-        gy0, gx0, sh, sw, tr = {
-            "top": (gy, gx, toph, w, False),
-            "bot": (gy + h - toph, gx, toph, w, False),
-            "l": (gy, gx, h, lc, True),
-            "r": (gy, gx + w - lc, h, lc, True),
-        }[kind]
-        return gy0, gx0, sh, sw, {
-            b: _blob_view(cols[(b, kind)], i, sh, sw, tr) for b in bands
-        }
-
-    return piece
-
-
-def _halo_broadcast(
-    tdf: DataFrame,
-    r: int,
-    bands: list,
-    fn: StencilFn,
-    out_cols: Sequence[str],
-    max_bytes: int,
-) -> DataFrame:
-    """Shuffle-free halo exchange: ONE perimeter-scale collect of the
-    strip projection -> broadcast -> mapInArrow assembles each padded
-    block from its own row plus the 8 neighbors' broadcast strips.
-
-    Trade vs the default plan: the input is SCANNED twice (strip
-    projection + stencil pass) instead of shuffled once, and the strip
-    volume must fit the driver/broadcast (4r(th+tw)/(th*tw) of raster
-    bytes — ~0.8%% at r=1 512^2 f32, so a ~2 TB raster saturates a
-    512 MB cap; beyond that the default plan is the plan).  Use it on
-    STORED/cached tiled tables; on computed chains the double scan
-    re-executes the upstream plan."""
-    sdf = _strip_rows(tdf, r, bands)
-    # size the strip volume BEFORE collecting — the cap must protect
-    # the driver, not report an OOM after the fact (one tiny agg job
-    # over the perimeter-scale projection)
-    size_expr = None
-    for b in bands:
-        for sfx in ("__top", "__bot", "__l", "__r"):
-            e = F.length(F.col(f"{b}{sfx}"))
-            size_expr = e if size_expr is None else size_expr + e
-    est = sdf.agg(F.sum(size_expr).alias("n")).collect()[0]["n"] or 0
-    if est > max_bytes:
-        raise ValueError(
-            f"halo strips ({int(est) >> 20} MiB) exceed the broadcast cap "
-            f"({max_bytes >> 20} MiB); unset spark.xrspatial.halo.strategy "
-            "for the default plan"
-        )
-    bc = tdf.sparkSession.sparkContext.broadcast(sdf.toArrow())
-
-    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        strip = _strip_lookup(bc.value, bands, r)
-        for rb in batches:
-            for meta, centre in _tile_rows(rb, bands):
-                ty, tx = meta["ty"], meta["tx"]
-                pieces = [p for (dy, dx), kind in _NBR_STRIP.items()
-                          if (p := strip((ty + dy, tx + dx), kind)) is not None]
-                yield _reduce_tile(meta, centre, pieces, r, fn, out_cols)
-
-    return _select(tdf, bands).mapInArrow(_run, schema=tiled_schema(out_cols))
-
-
 def _arrow_schema_of(ddl: str) -> pa.Schema:
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
@@ -597,7 +499,7 @@ def _halo_shuffle(
     msgs: DataFrame, r: int, bands: Sequence[str], fn: StencilFn,
     out_cols: Sequence[str],
 ) -> DataFrame:
-    """The default plan's assembly: ONE groupBy(bk) brings a
+    """The halo plan's assembly: ONE groupBy(bk) brings a
     super-tile's tiles and the strips its neighbours sent together;
     every message is a piece read zero-copy from the shuffled Arrow
     buffers.  Each centre tile is assembled with every other piece of
@@ -644,9 +546,10 @@ def apply_stencil_tiled(
     interior arrays of ``out_cols``, written as one tiled row.  The
     radius must not exceed the tile size (the task raises
     ``ValueError``); a frame without its perimeter blobs raises at
-    plan time.
+    plan time, and so does the retired halo-strategy conf when it is
+    set (the halo has one plan).
 
-    Default plan: a single JVM-side SQL explode (``_jvm_messages``;
+    The plan: a single JVM-side SQL explode (``_jvm_messages``;
     ``_python_messages`` for radius > EDGE) emits, per tile, the full
     tile addressed to its own 4x4 super-tile (a zero-copy column
     reference) plus the border strips (contiguous substrings of the
@@ -658,34 +561,18 @@ def apply_stencil_tiled(
     boundary exactly once each way; shuffle volume ~= raster bytes *
     (1 + r(th+tw)/(2*th*tw)) — ~0.2%% halo overhead at r=1, 512x512.
 
-    ``spark.xrspatial.halo.strategy=broadcast`` (the only other
-    accepted value) selects ``_halo_broadcast``: perimeter-scale strip
-    collect + broadcast -> shuffle-free mapInArrow.  Two scans, zero
-    shuffle, for stored rasters whose strips fit
-    ``spark.xrspatial.halo.broadcast.maxBytes`` (default 512 MiB;
-    raises past the cap).  Requires radius <= EDGE.
-
     Groups that hold no tile (strips addressed past the raster edge)
-    emit nothing, so domain edges stay NaN on both plans, exactly like
-    the long-form path / the reference's NaN boundary
+    emit nothing, so domain edges stay NaN, exactly like the long-form
+    path / the reference's NaN boundary
     (xrspatial/focal.py:70-76 map_overlap boundary=np.nan)."""
     r = int(radius)
     bands = list(value_cols)
     ocols = list(out_cols)
     _require_blobs(tdf, bands)
-    strategy = tdf.sparkSession.conf.get("spark.xrspatial.halo.strategy", None)
-    if strategy == "broadcast":
-        if r > EDGE:
-            raise ValueError(f"broadcast halo needs radius <= {EDGE}")
-        max_bytes = int(tdf.sparkSession.conf.get(
-            "spark.xrspatial.halo.broadcast.maxBytes", str(512 << 20)
-        ))
-        return _halo_broadcast(tdf, r, bands, fn, ocols, max_bytes)
-    if strategy is not None:
-        raise ValueError(
-            f"unknown spark.xrspatial.halo.strategy {strategy!r}: the only "
-            "accepted value is 'broadcast'; unset it for the default plan"
-        )
+    retired = "spark.xrspatial.halo.strategy"
+    if (strategy := tdf.sparkSession.conf.get(retired, None)) is not None:
+        raise ValueError(f"{retired} is set to {strategy!r}, but the halo "
+                         f"has one plan; unset {retired}")
     if r <= EDGE:
         msgs = _jvm_messages(tdf, r, bands)
     else:
