@@ -885,23 +885,24 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest target through the RING strategy at a real zoom — the
-    planner's beyond-broadcast tier (plans/joins.py), oracle-checked
-    against a brute-force SQL NN.  max_distance=12 deg -> zoom 4
-    (22.5-deg cells); the exact-span ring reads its vertical extent off
-    the tile rows of lat +/- 12, so the search is exact at EVERY
-    latitude (no |lat| restriction)."""
-    from xarray_spatial_spark.plans.joins import nearest_join
+    """Nearest target through the ring join (``knn_ring_join``, the
+    planner's tier beyond the broadcast cap and for k > 1) at a real
+    zoom, oracle-checked against a brute-force SQL NN.
+    max_distance=12 deg -> zoom 4 (22.5-deg cells); the exact-span ring
+    reads its vertical extent off the tile rows of lat +/- 12, so the
+    search is exact at EVERY latitude (no |lat| restriction)."""
+    from xarray_spatial_spark.operators.proximity import knn_ring_join
+    from xarray_spatial_spark.plans.joins import ring_zoom
 
     docs = _docs(spark, sf_dir).select("doc_id", "lat", "lon")
     pts = docs
     tgt = docs.filter(F.col("doc_id") % 13 == 0).select(
         F.col("doc_id").alias("target_id"), "lat", "lon"
     )
-    rj = nearest_join(
-        pts, tgt, x_col="lon", y_col="lat", metric="EUCLIDEAN",
-        max_distance=12.0, k=1, strategy="ring",
-        point_id="doc_id", target_id="target_id",
+    rj = knn_ring_join(
+        pts, tgt, k=1, zoom=ring_zoom(12.0), x_col="lon", y_col="lat",
+        point_id="doc_id", target_id="target_id", metric="EUCLIDEAN",
+        max_distance_deg=12.0,
     )
     return rj.filter(F.col("dist") <= 12.0).select(
         "doc_id", F.round("dist", 6).alias("dist")

@@ -1,4 +1,7 @@
-"""plans/joins.py strategy planner + the broadcast tier's STR tree NN."""
+"""plans/joins.py nearest planner and its tiers: the broadcast tier's
+STR tree NN, the ring tier, and one output shape per k.  Tests reach a
+tier by lowering the planner's caps or by calling the tier directly;
+no caller picks one."""
 
 import math
 
@@ -15,7 +18,7 @@ def test_nearest_plan_tiers():
     assert joins.nearest_plan(5) == "expr"
     assert joins.nearest_plan(64) == "expr"
     assert joins.nearest_plan(65) == "broadcast"
-    assert joins.nearest_plan(64, k=3) == "broadcast"
+    assert joins.nearest_plan(64, k=3) == "ring"
     assert joins.nearest_plan(5_000_001) == "ring"
 
 
@@ -26,12 +29,24 @@ def test_ring_zoom_bounds_radius():
         assert z == 0 or 360.0 / (1 << (z + 1)) < md  # tightest such zoom
 
 
-def test_ring_unbounded_raises(spark):
+def test_ring_unbounded_raises(spark, monkeypatch):
     pts = spark.range(10).select(
         (F.col("id") * 1.0).alias("lon"), (F.col("id") * 1.0).alias("lat")
     )
+    monkeypatch.setattr(joins, "EXPR_CAP", 0)
+    monkeypatch.setattr(joins, "BROADCAST_CAP", 0)
     with pytest.raises(ValueError, match="unbounded"):
-        joins.nearest_join(pts, pts, n_targets=10_000_000, strategy="ring")
+        joins.nearest_join(pts, pts)
+
+
+def test_knn_unbounded_raises_naming_k(spark):
+    """k > 1 plans the ring at any target count, so an unbounded
+    max_distance raises, and the message names k."""
+    pts = spark.range(10).select(
+        (F.col("id") * 1.0).alias("lon"), (F.col("id") * 1.0).alias("lat")
+    )
+    with pytest.raises(ValueError, match=r"k=3\).*unbounded"):
+        joins.nearest_join(pts, pts, k=3)
 
 
 @pytest.fixture(scope="module")
@@ -70,6 +85,37 @@ def test_nearest_join_sizes_small_targets_in_one_job(spark, scattered):
     d = np.hypot(p[:, :1] - tx[None, :], p[:, 1:] - ty[None, :])
     np.testing.assert_array_equal(got["nearest_payload"], d.argmin(axis=1))
     np.testing.assert_allclose(got["nearest_dist"], d.min(axis=1), rtol=1e-12)
+
+
+def test_knn_below_cap_ranked_rows(spark, scattered):
+    """k=3 over 50 targets (below the expr cap) gives each point its up
+    to 3 nearest targets within max_distance as ranked rows, matching a
+    numpy brute force."""
+    _, _, pts, tgt = scattered
+    t, md = tgt[:50], 9.0
+    points = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "doc_id long, lon double, lat double")
+    targets = spark.createDataFrame(
+        [(int(v), float(x), float(y)) for x, y, v in t],
+        "target_id long, lon double, lat double")
+    got = joins.nearest_join(points, targets, k=3, max_distance=md).toPandas()
+    d = np.hypot(pts[:, :1] - t[None, :, 0], pts[:, 1:] - t[None, :, 1])
+    want = {}
+    for i, row in enumerate(d):
+        order = np.argsort(row, kind="stable")
+        near = order[row[order] <= md][:3]
+        if len(near):
+            want[i] = (t[near, 2].astype(np.int64), row[near])
+    assert set(got["doc_id"]) == set(want)
+    for i, g in got.groupby("doc_id"):
+        g = g.sort_values("knn_rank")
+        ids, dist = want[i]
+        assert g["knn_rank"].tolist() == list(range(1, len(ids) + 1))
+        np.testing.assert_array_equal(g["target_id"], ids)
+        np.testing.assert_allclose(g["dist"], dist, rtol=1e-12)
+    sizes = {len(v[0]) for v in want.values()}
+    assert 3 in sizes and len(want) < len(pts)  # full, and some points empty
 
 
 def test_bucket_pruned_matches_dense(spark, scattered):
@@ -116,10 +162,10 @@ def test_bucket_pruned_great_circle(spark, scattered):
     )
 
 
-def test_proximity_ring_strategy_matches_broadcast(spark):
-    """The ring path (forced) must reproduce the broadcast result on a
-    raster whose search radius is bounded — the planner's 100-TB tier
-    exercised at a real zoom."""
+def test_proximity_ring_strategy_matches_broadcast(spark, monkeypatch):
+    """The ring tier (caps lowered) must reproduce the broadcast result
+    on a raster whose search radius is bounded — the planner's 100-TB
+    tier exercised at a real zoom."""
     rng = np.random.default_rng(5)
     a = np.zeros((40, 40))
     ii = rng.integers(0, 40, size=15)
@@ -132,8 +178,10 @@ def test_proximity_ring_strategy_matches_broadcast(spark):
     )
     md = 6.0
     kw = dict(x_col="cx", y_col="cy", max_distance=md)
-    b = proximity.proximity(df, strategy="broadcast", **kw).toPandas()
-    r = proximity.proximity(df, strategy="ring", **kw).toPandas()
+    monkeypatch.setattr(joins, "EXPR_CAP", 0)
+    b = proximity.proximity(df, **kw).toPandas()
+    monkeypatch.setattr(joins, "BROADCAST_CAP", 0)
+    r = proximity.proximity(df, **kw).toPandas()
     b = b.sort_values(["cy", "cx"]).reset_index(drop=True)
     r = r.sort_values(["cy", "cx"]).reset_index(drop=True)
     np.testing.assert_allclose(
@@ -143,7 +191,7 @@ def test_proximity_ring_strategy_matches_broadcast(spark):
     assert np.isnan(r["value"]).any() and np.isfinite(r["value"]).any()
 
 
-def test_allocation_ring_strategy(spark):
+def test_allocation_ring_strategy(spark, monkeypatch):
     rng = np.random.default_rng(6)
     a = np.zeros((30, 30))
     a[3, 4] = 2.0
@@ -155,8 +203,10 @@ def test_allocation_ring_strategy(spark):
         "value",
     )
     kw = dict(x_col="cx", y_col="cy", max_distance=50.0)
-    b = proximity.allocation(df, strategy="broadcast", **kw).toPandas()
-    r = proximity.allocation(df, strategy="ring", **kw).toPandas()
+    monkeypatch.setattr(joins, "EXPR_CAP", 0)
+    b = proximity.allocation(df, **kw).toPandas()
+    monkeypatch.setattr(joins, "BROADCAST_CAP", 0)
+    r = proximity.allocation(df, **kw).toPandas()
     b = b.sort_values(["cy", "cx"]).reset_index(drop=True)
     r = r.sort_values(["cy", "cx"]).reset_index(drop=True)
     np.testing.assert_allclose(
@@ -177,14 +227,9 @@ def test_ring_strategy_high_latitude(spark):
     pdf = spark.createDataFrame(pts, schema="lon double, lat double")
     tdf = spark.createDataFrame(tgts, schema="lon double, lat double, value double")
     md = 6.0
-    pid = F.struct(F.col("lon"), F.col("lat"))
-    rj = joins.nearest_join(
-        pdf.withColumn("_pid", pid), tdf.withColumn("_tid", pid),
-        max_distance=md, strategy="ring", point_id="_pid",
-        target_id="_tid", target_payload="value",
-    ).filter(F.col("dist") <= md)
-    ring_d = {(r["_pid"]["lon"], r["_pid"]["lat"]): r["dist"]
-              for r in rj.collect()}
+    rj = proximity.nearest_ring(pdf, tdf, md, target_payload="value")
+    ring_d = {(r["lon"], r["lat"]): r["nearest_dist"]
+              for r in rj.collect() if r["nearest_dist"] is not None}
     bc = proximity.nearest_broadcast(pdf, tdf, target_payload="value",
                                      max_distance=md)
     miss = 0
@@ -210,14 +255,9 @@ def test_ring_strategy_polar_exact_span(spark):
     pdf = spark.createDataFrame(pts, schema="lon double, lat double")
     tdf = spark.createDataFrame(tgts, schema="lon double, lat double, value double")
     md = 8.0
-    pid = F.struct(F.col("lon"), F.col("lat"))
-    rj = joins.nearest_join(
-        pdf.withColumn("_pid", pid), tdf.withColumn("_tid", pid),
-        max_distance=md, strategy="ring", point_id="_pid",
-        target_id="_tid", target_payload="value",
-    ).filter(F.col("dist") <= md)
-    ring_d = {(r["_pid"]["lon"], r["_pid"]["lat"]): r["dist"]
-              for r in rj.collect()}
+    rj = proximity.nearest_ring(pdf, tdf, md, target_payload="value")
+    ring_d = {(r["lon"], r["lat"]): r["nearest_dist"]
+              for r in rj.collect() if r["nearest_dist"] is not None}
     bc = proximity.nearest_broadcast(pdf, tdf, target_payload="value",
                                      max_distance=md)
     for r in bc.collect():
@@ -246,19 +286,23 @@ def test_ring_cell_budget_error(spark):
 
 @pytest.mark.parametrize("max_distance", [math.inf, 3_000_000.0])
 @pytest.mark.parametrize("n_targets", [64, 65])
-def test_nearest_non_finite_points_get_nulls(spark, n_targets, max_distance):
-    """NULL and NaN coordinates have no nearest target on either tier
-    (64 targets -> expr, 65 -> broadcast): all nearest columns NULL,
-    bounded or not, while finite points keep theirs.  Both tiers append
-    the same columns, and without ``target_payload`` the same rows with
-    a NULL ``nearest_payload``."""
+def test_nearest_non_finite_points_get_nulls(spark, monkeypatch, n_targets,
+                                             max_distance):
+    """NULL and NaN coordinates have no nearest target on any tier
+    (64 targets -> expr, 65 -> broadcast, bounded + caps lowered ->
+    ring): all nearest columns NULL, bounded or not, while finite points
+    keep theirs.  Every tier appends the same columns, and without
+    ``target_payload`` the same rows with a NULL ``nearest_payload``.
+    The ring keeps one row per input row where coordinates repeat, and
+    its rows match ``nearest_broadcast``."""
     rng = np.random.default_rng(3)
     tv = [(float(x), float(y), float(i))
           for i, (x, y) in enumerate(rng.uniform(-40, 40, (n_targets, 2)))]
     tdf = spark.createDataFrame(tv, "lon double, lat double, city double")
     pts = spark.createDataFrame(
         [(0, 1.0, 2.0), (1, None, 2.0), (2, 1.0, None),
-         (3, float("nan"), 2.0), (4, -3.0, float("nan"))],
+         (3, float("nan"), 2.0), (4, -3.0, float("nan")),
+         (5, 1.0, 2.0), (6, 12.0, -7.0), (7, 12.0, -7.0), (8, 150.0, 70.0)],
         "pid long, lon double, lat double",
     )
     out = joins.nearest_join(pts, tdf, target_payload="city",
@@ -274,6 +318,29 @@ def test_nearest_non_finite_points_get_nulls(spark, n_targets, max_distance):
     assert bare.columns == out.columns
     assert {r["pid"]: [r[c] for c in cols] for r in bare.collect()} == {
         pid: v[:3] + [None] for pid, v in rows.items()}
+    if math.isinf(max_distance):
+        return
+    want = {r["pid"]: r for r in proximity.nearest_broadcast(
+        pts, tdf, target_payload="city", metric="GREAT_CIRCLE",
+        max_distance=max_distance).collect()}
+    assert want[8]["nearest_dist"] is None  # beyond max_distance
+    monkeypatch.setattr(joins, "EXPR_CAP", 0)
+    monkeypatch.setattr(joins, "BROADCAST_CAP", 0)
+    for payload in ("city", None):
+        ring = joins.nearest_join(pts, tdf, target_payload=payload,
+                                  metric="GREAT_CIRCLE",
+                                  max_distance=max_distance)
+        assert ring.columns == out.columns
+        got = ring.collect()
+        assert sorted(r["pid"] for r in got) == list(range(9))
+        for r in got:
+            w = want[r["pid"]]
+            assert (r["nearest_x"], r["nearest_y"]) == (w["nearest_x"], w["nearest_y"])
+            assert r["nearest_payload"] == (w["nearest_payload"] if payload else None)
+            if w["nearest_dist"] is None:
+                assert r["nearest_dist"] is None, r
+            else:
+                assert r["nearest_dist"] == pytest.approx(w["nearest_dist"], rel=1e-9)
 
 
 def test_great_circle_bucket_wraps_antimeridian(spark):
@@ -317,7 +384,7 @@ def test_great_circle_bucket_wraps_antimeridian(spark):
             != np.sign(plon[near.to_numpy()])).any()
     expr = frame(joins.nearest_join(
         pts, tdf, target_payload="city", metric="GREAT_CIRCLE",
-        max_distance=md, strategy="expr")
+        max_distance=md)
         .select("pid", *cols))
     np.testing.assert_array_equal(expr["nearest_payload"], pruned["nearest_payload"])
     np.testing.assert_allclose(expr[cols[:3]], pruned[cols[:3]], rtol=1e-9)

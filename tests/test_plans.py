@@ -246,13 +246,11 @@ def test_change_rate_single_exchange(spark):
 def test_python_worker_skips_spark_archives(spark):
     """A Python task imports pyspark from outside Spark's archives, and
     no zipimporter is left to re-read on every task except the shipped
-    package zip's.  The task runs the package from that zip, or from the
-    checkout itself when it is the JVM's working directory (``python -m``
-    puts the working directory first on the worker's path); both hold
-    the sources the zip's name hashes."""
+    package zip's.  The task runs the package from that zip, also when
+    the JVM's working directory holds a checkout of it (``python -m``
+    puts the working directory first on the worker's path, and the
+    daemon drops it)."""
     import pyarrow as pa
-
-    from xarray_spatial_spark import session
 
     def probe(batches):
         import os
@@ -283,5 +281,4 @@ def test_python_worker_skips_spark_archives(spark):
     assert os.path.basename(shipped).startswith("xarray_spatial_spark_pyfiles-")
     assert all(a == shipped or a.startswith(shipped + os.sep)
                for a in row.archives.split("\n") if a), row.archives
-    assert (row.pkg.startswith(shipped + os.sep)
-            or row.pkg == str(session._PKG_DIR / "__init__.py")), row.pkg
+    assert row.pkg.startswith(shipped + os.sep), row.pkg

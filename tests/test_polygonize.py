@@ -3,6 +3,7 @@
 import numpy as np
 import pytest
 
+from xarray_spatial_spark.operators import regions as regions_mod
 from xarray_spatial_spark.operators.polygonize import polygonize
 from xarray_spatial_spark.raster import df_from_numpy
 
@@ -74,8 +75,8 @@ def test_polygonize_plan_one_cell_scale_pass(spark):
     assert "MapInPandas" in plan or "MapInArrow" in plan
 
 
-def test_polygonize_distributed_roster_matches_driver(spark):
-    """Roster cap 0 forces the fully distributed finish (join-resolved
+def test_polygonize_distributed_roster_matches_driver(spark, monkeypatch):
+    """Roster cap (``MAX_DRIVER_ROSTER``) 0 forces the fully distributed finish (join-resolved
     half-edges, components + two-phase rank, shuffle relabel) — every
     field must match the driver path, NaN regions included."""
     rng = np.random.default_rng(11)
@@ -100,9 +101,6 @@ def test_polygonize_distributed_roster_matches_driver(spark):
 
     src = df_from_numpy(spark, data, keep_nonfinite=False)
     base = snap(polygonize(src, tile_h=5, tile_w=7))
-    spark.conf.set("spark.xrspatial.regions.maxDriverRoster", "0")
-    try:
-        got = snap(polygonize(src, tile_h=5, tile_w=7))
-    finally:
-        spark.conf.unset("spark.xrspatial.regions.maxDriverRoster")
+    monkeypatch.setattr(regions_mod, "MAX_DRIVER_ROSTER", 0)
+    got = snap(polygonize(src, tile_h=5, tile_w=7))
     assert got == base

@@ -4,6 +4,7 @@ cross-tile correctness via tiling invariance."""
 import numpy as np
 import pytest
 
+from xarray_spatial_spark.operators import regions as regions_mod
 from xarray_spatial_spark.operators.regions import connected_components, regions
 from xarray_spatial_spark.raster import df_from_numpy, numpy_from_df
 
@@ -188,8 +189,8 @@ def test_tile_ccl_fuzz_vs_bfs():
 
 
 @pytest.mark.parametrize("conn", [4, 8])
-def test_regions_distributed_roster_matches_driver(spark, conn):
-    """Forcing the roster cap to 0 dispatches the long-form finish to
+def test_regions_distributed_roster_matches_driver(spark, monkeypatch, conn):
+    """Forcing the roster cap (``MAX_DRIVER_ROSTER``) to 0 dispatches the long-form finish to
     the fully distributed union-find + rank — output must be
     bit-identical to the driver path (roots ARE min labels both
     ways)."""
@@ -198,15 +199,12 @@ def test_regions_distributed_roster_matches_driver(spark, conn):
     arr[arr == 2] = np.nan
     df = df_from_numpy(spark, arr, keep_nonfinite=False)
     base = _grid(regions(df, neighborhood=conn, tile_h=5, tile_w=7))
-    spark.conf.set("spark.xrspatial.regions.maxDriverRoster", "0")
-    try:
-        got = _grid(regions(df, neighborhood=conn, tile_h=5, tile_w=7))
-    finally:
-        spark.conf.unset("spark.xrspatial.regions.maxDriverRoster")
+    monkeypatch.setattr(regions_mod, "MAX_DRIVER_ROSTER", 0)
+    got = _grid(regions(df, neighborhood=conn, tile_h=5, tile_w=7))
     np.testing.assert_array_equal(base, got)
 
 
-def test_regions_tiled_distributed_roster_matches_driver(spark):
+def test_regions_tiled_distributed_roster_matches_driver(spark, monkeypatch):
     """Same dispatch for the dense-tile path: capped run == driver
     run, tiles stay dense blobs."""
     from xarray_spatial_spark import tiled as tiled_mod
@@ -217,16 +215,13 @@ def test_regions_tiled_distributed_roster_matches_driver(spark):
     tdf = tiled_mod.tile(df_from_numpy(spark, arr), tile_h=5, tile_w=7)
     base = tiled_mod.numpy_from_tiled(
         regions_tiled(tdf, neighborhood=4), value_col="region")
-    spark.conf.set("spark.xrspatial.regions.maxDriverRoster", "0")
-    try:
-        got = tiled_mod.numpy_from_tiled(
-            regions_tiled(tdf, neighborhood=4), value_col="region")
-    finally:
-        spark.conf.unset("spark.xrspatial.regions.maxDriverRoster")
+    monkeypatch.setattr(regions_mod, "MAX_DRIVER_ROSTER", 0)
+    got = tiled_mod.numpy_from_tiled(
+        regions_tiled(tdf, neighborhood=4), value_col="region")
     np.testing.assert_array_equal(base, got)
 
 
-def test_regions_salt_and_pepper_million_regions(spark):
+def test_regions_salt_and_pepper_million_regions(spark, monkeypatch):
     """The degenerate raster the cap exists for: a 1024x1024
     checkerboard has EXACTLY one region per cell under 4-conn (2^20
     regions).  With the cap at 1000 the driver never collects the
@@ -242,26 +237,23 @@ def test_regions_salt_and_pepper_million_regions(spark):
         F.pmod(F.col("id"), F.lit(n)).cast("int").alias("x"),
     ).withColumn(
         "value", F.pmod(F.col("y") + F.col("x"), F.lit(2)).cast("double"))
-    spark.conf.set("spark.xrspatial.regions.maxDriverRoster", "1000")
-    try:
-        out = regions(cells, neighborhood=4, tile_h=256, tile_w=256)
-        stats = out.agg(
-            F.countDistinct("region").alias("n"),
-            F.min("region").alias("lo"),
-            F.max("region").alias("hi"),
-        ).collect()[0]
-        assert stats["n"] == n * n
-        assert stats["lo"] == 0.0 and stats["hi"] == float(n * n - 1)
-        # dense-tile twin takes the distributed finish too
-        tdf = tiled_mod.tile(
-            cells.select("y", "x", "value"), tile_h=256, tile_w=256)
-        tout = regions_tiled(tdf, neighborhood=4)
-        got = tiled_mod.numpy_from_tiled(tout, value_col="region")
-        assert len(np.unique(got)) == n * n
-        assert got[0, 0] == 0.0 and got.min() == 0.0
-        assert got.max() == float(n * n - 1)
-    finally:
-        spark.conf.unset("spark.xrspatial.regions.maxDriverRoster")
+    monkeypatch.setattr(regions_mod, "MAX_DRIVER_ROSTER", 1000)
+    out = regions(cells, neighborhood=4, tile_h=256, tile_w=256)
+    stats = out.agg(
+        F.countDistinct("region").alias("n"),
+        F.min("region").alias("lo"),
+        F.max("region").alias("hi"),
+    ).collect()[0]
+    assert stats["n"] == n * n
+    assert stats["lo"] == 0.0 and stats["hi"] == float(n * n - 1)
+    # dense-tile twin takes the distributed finish too
+    tdf = tiled_mod.tile(
+        cells.select("y", "x", "value"), tile_h=256, tile_w=256)
+    tout = regions_tiled(tdf, neighborhood=4)
+    got = tiled_mod.numpy_from_tiled(tout, value_col="region")
+    assert len(np.unique(got)) == n * n
+    assert got[0, 0] == 0.0 and got.min() == 0.0
+    assert got.max() == float(n * n - 1)
 
 
 def test_connected_components(spark):

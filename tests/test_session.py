@@ -125,6 +125,38 @@ def test_daemon_keeps_stock_path_without_matching_install(tmp_path):
     assert lean_path(["/a", "/b"]) == ["/a", "/b"]
 
 
+def test_daemon_drops_cwd_decoy(tmp_path):
+    """A checkout of the package in the working directory, which
+    ``python -m`` puts first on the daemon's path, no longer shadows the
+    shipped zip that ``setup_spark_files`` inserts at index 1."""
+    import importlib.machinery
+    import zipfile
+
+    daemon = _daemon()
+    path = _spark_path(tmp_path)
+    cwd = path[0]
+    decoy = tmp_path / "cwd" / "xarray_spatial_spark"
+    decoy.mkdir(parents=True)
+    (decoy / "__init__.py").write_text("")
+    shipped = tmp_path / "xarray_spatial_spark_pyfiles-0123.zip"
+    with zipfile.ZipFile(shipped, "w") as z:
+        z.writestr("xarray_spatial_spark/__init__.py", "")
+
+    def origin(p):
+        p = list(p)
+        p.insert(1, str(shipped))
+        spec = importlib.machinery.PathFinder.find_spec("xarray_spatial_spark", p)
+        return spec.origin
+
+    assert origin(daemon.lean_path(path)).startswith(str(decoy))
+    lean = daemon.lean_path(daemon.without_cwd(path, cwd, False))
+    assert cwd not in lean and lean == [path[4], path[5], path[6]]
+    assert origin(lean).startswith(str(shipped) + os.sep)
+    # -P / PYTHONSAFEPATH: the head is a chosen entry, kept
+    assert daemon.without_cwd(path, cwd, True) == path
+    assert daemon.without_cwd(path[1:], cwd, False) == path[1:]
+
+
 def test_worker_conf_local_master_only():
     worker = str(session._PKG_DIR / "_worker")
     conf = session.worker_conf("local[4]", {"spark.x": "1"})

@@ -11,12 +11,15 @@ zip: 16 over the 1,328-entry ``pyspark.zip`` in a warm worker, plus the
 
 When the same pyspark and py4j releases are installed unarchived, this
 module drops those archives from ``sys.path`` and from the importer
-cache and then runs ``pyspark.daemon``; the workers it forks inherit
-the lean path.  Otherwise it runs ``pyspark.daemon`` unchanged.
+cache.  It also drops the JVM's working directory, which ``python -m``
+puts first: a checkout of the package there would shadow the shipped
+zip that ``setup_spark_files`` inserts behind it.  Then it runs
+``pyspark.daemon``; the workers it forks inherit the path.
 
 ``session.get_spark`` selects it on a ``local[...]`` master through
-``spark.python.daemon.module``.  This directory has no ``__init__.py``:
-the daemon never imports the package it sits in.
+``spark.python.daemon.module``; cluster masters keep Spark's stock
+daemon, unchanged.  This directory has no ``__init__.py``: the daemon
+never imports the package it sits in.
 """
 
 from __future__ import annotations
@@ -83,13 +86,21 @@ def lean_path(path: list[str]) -> list[str]:
     return rest
 
 
+def without_cwd(path: list[str], cwd: str, safe_path: bool) -> list[str]:
+    """``path`` without the working directory ``cwd`` that ``python -m``
+    put at its head; unchanged when ``safe_path`` (``-P`` or
+    ``PYTHONSAFEPATH``) kept it off, as the head is then an entry the
+    caller chose."""
+    if not safe_path and path and path[0] == cwd:
+        return list(path[1:])
+    return list(path)
+
+
 def _apply(lean: list[str]) -> None:
     """Make ``lean`` the process's path and forget the importers of
     every entry it dropped, including those of an archive's
     subdirectories (``pyspark.zip/pyspark/sql``)."""
     dropped = [p for p in sys.path if p not in lean]
-    if not dropped:
-        return
     sys.path[:] = lean
     prefixes = tuple(p + os.sep for p in dropped)
     for key in list(sys.path_importer_cache):
@@ -98,7 +109,7 @@ def _apply(lean: list[str]) -> None:
 
 
 if __name__ == "__main__":
-    _apply(lean_path(sys.path))
+    _apply(lean_path(without_cwd(sys.path, os.getcwd(), sys.flags.safe_path)))
     # sys.argv is left as Spark passed it: pyspark.daemon reads the
     # worker module from argv[1]
     runpy.run_module("pyspark.daemon", run_name="__main__")

@@ -286,9 +286,9 @@ def polygonize(
     # roster-size guard (same pattern as regions.regions): collect at
     # most cap+1 rows; a salt-and-pepper raster overflows and takes
     # the fully distributed finish instead of O(regions) driver dicts
-    from xarray_spatial_spark.operators.regions import _roster_cap
+    from xarray_spatial_spark.operators.regions import MAX_DRIVER_ROSTER
 
-    cap = _roster_cap(spark)
+    cap = MAX_DRIVER_ROSTER
     rows = fused.filter(F.col("kind") != 1).select(
         "kind", "la", "lb", "v").limit(cap + 1).collect()
     if len(rows) > cap:

@@ -25,12 +25,14 @@ nearest-neighbor join**, not a scan:
   parallel, identical results at any parallelism.  At most 64 targets
   skip Python altogether: they inline into codegen (``nearest_expr``).
 
-When the target side is too big to broadcast, ``knn_ring_join`` is the
-shuffle path: bucket both sides by grid cell at a zoom matched to the
-search radius, explode query cells to their neighbor ring, equi-join
-on cell (AQE skew-join handles hot cells), exact distance + windowed
-top-k.  Strategy choice mirrors Spark's own broadcast-vs-shuffle
-decision and is explicit in plans/joins.py.
+When the target side is too big to broadcast, or k > 1,
+``knn_ring_join`` is the shuffle path: bucket both sides by grid cell
+at a zoom matched to the search radius, explode query cells to their
+neighbor ring, equi-join on cell (AQE skew-join handles hot cells),
+exact distance + windowed top-k; ``nearest_ring`` joins its rank-1
+rows back as the same four columns the other tiers append.  The tier
+choice mirrors Spark's own broadcast-vs-shuffle decision and is made
+in one place, ``plans/joins.nearest_join``; no caller picks a tier.
 
 Ties in allocation break toward the smallest target value (the
 deterministic analog of the reference's scan-order tie; documented
@@ -51,11 +53,18 @@ from xarray_spatial_spark import grid
 from xarray_spatial_spark.functions.geo import (
     EARTH_RADIUS, distance_col, sql_double, sql_ident,
 )
-from xarray_spatial_spark.plans.joins import BROADCAST_CAP, EXPR_CAP
+from xarray_spatial_spark.plans.joins import BROADCAST_CAP, EXPR_CAP, ring_zoom
 from xarray_spatial_spark.plans.rtree import STRtree
 
 
 NEAREST_COLS = ("nearest_dist", "nearest_x", "nearest_y", "nearest_payload")
+
+
+def _free_name(columns: list[str], name: str) -> str:
+    """``name``, prefixed with underscores until no column has it."""
+    while name in columns:
+        name = "_" + name
+    return name
 
 
 def _distance(
@@ -199,7 +208,7 @@ def nearest_broadcast(
     tpdf = targets.select(*tcols).toPandas()
     if len(tpdf) > BROADCAST_CAP:
         raise ValueError(
-            f"{len(tpdf)} targets exceed broadcast cap; use knn_ring_join"
+            f"{len(tpdf)} targets exceed broadcast cap; use nearest_ring"
         )
     tx, ty = tpdf[x_col].to_numpy(np.float64), tpdf[y_col].to_numpy(np.float64)
     # no payload column: all-NaN payloads tie in the sort, as a constant
@@ -217,11 +226,68 @@ def nearest_broadcast(
         found = [np.append(a, np.nan)[i] for a in (t.x, t.y, t.payload)]
         return pd.DataFrame(dict(zip(NEAREST_COLS, [d, *found])))
 
-    tmp = "_nearest"
-    while tmp in points.columns:
-        tmp = "_" + tmp
+    tmp = _free_name(points.columns, "_nearest")
     return (
         points.withColumn(tmp, _near(F.col(x_col), F.col(y_col)))
+        .withColumns({c: F.col(tmp).getField(c) for c in NEAREST_COLS})
+        .drop(tmp)
+    )
+
+
+def nearest_ring(
+    points: DataFrame,
+    targets: DataFrame,
+    max_distance: float,
+    x_col: str = "lon",
+    y_col: str = "lat",
+    target_payload: str | None = None,
+    metric: str = "EUCLIDEAN",
+    k: int = 1,
+    point_id: str = "doc_id",
+    target_id: str = "target_id",
+) -> DataFrame:
+    """The ``ring`` tier: ``knn_ring_join`` at the zoom whose cells span
+    ``max_distance`` (meters for great-circle, 111,320 to the degree),
+    which must be finite and positive.  k > 1: its (point_id, target_id, dist,
+    knn_rank, _tx, _ty[, _tpay]) rows within ``max_distance``.
+
+    k=1: ``points`` with the same four columns as ``nearest_broadcast``
+    appended.  Points and targets are then keyed by the struct (x, y):
+    equal distances break toward the smaller payload, then x, then y,
+    as on the other tiers, and points with the same coordinates share a
+    key, so the ring keeps one rank-1 row per key.  Those within
+    ``max_distance`` join back on it: every input row keeps its columns
+    and its one row, with NULLs where no target is in range or the point
+    has no finite coordinates."""
+    if not math.isfinite(max_distance) or max_distance <= 0:
+        raise ValueError(
+            f"the ring tier (k={k}) needs a finite, positive max_distance, "
+            f"got {max_distance}: the planner takes it for k > 1 and above "
+            f"{BROADCAST_CAP} targets, and an exact NN join over an unbounded "
+            "radius cannot be ring-pruned (the reference's own global path "
+            "has the same scaling caveat, xrspatial/proximity.py:713-720)."
+        )
+    md_deg = max_distance / (111320.0 if metric.upper() == "GREAT_CIRCLE" else 1.0)
+    key = F.struct(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
+    pts, tgt, pid, tid = points, targets, point_id, target_id
+    if k == 1:
+        pts, tgt, pid, tid = (points.select(x_col, y_col, key.alias("_pid")),
+                              targets.withColumn("_tid", key), "_pid", "_tid")
+    ranked = knn_ring_join(
+        pts, tgt, k=k, zoom=ring_zoom(md_deg), x_col=x_col, y_col=y_col,
+        point_id=pid, target_id=tid, metric=metric,
+        target_payload=target_payload, max_distance_deg=md_deg,
+    ).filter(F.col("dist") <= max_distance)
+    if k > 1:
+        return ranked
+    pay = F.col("_tpay") if target_payload else F.lit(None)
+    found = F.struct(*(c.cast("double").alias(n) for c, n in zip(
+        (F.col("dist"), F.col("_tx"), F.col("_ty"), pay), NEAREST_COLS)))
+    kid = _free_name(points.columns, "_nearest_key")
+    tmp = _free_name(points.columns, "_nearest")
+    near = ranked.select(F.col("_pid").alias(kid), found.alias(tmp))
+    return (
+        points.withColumn(kid, key).join(near, kid, "left").drop(kid)
         .withColumns({c: F.col(tmp).getField(c) for c in NEAREST_COLS})
         .drop(tmp)
     )
@@ -247,54 +313,19 @@ def _proximity_family(
     target_values: Iterable[float] | None,
     max_distance: float,
     distance_metric: str,
-    strategy: str | None = None,
 ) -> DataFrame:
-    """Shared proximity/allocation/direction plan, routed through the
-    plans/joins.py strategy planner: <=64 targets inline into codegen
-    (expr), <=5M broadcast STR tree search, beyond that the
-    cell-ring shuffle join (requires finite max_distance).  One job
-    sizes the target side and, at <=64 targets, also collects them for
-    expr (the Spark analog of the reference's bounded-vs-global
-    dispatch, xrspatial/proximity.py:605-627)."""
-    from xarray_spatial_spark.plans.joins import (
-        nearest_join, nearest_plan, sized_targets,
+    """Shared proximity/allocation/direction plan: one k=1
+    ``nearest_join`` from every cell to the target cells, whose tier
+    the planner picks (the Spark analog of the reference's
+    bounded-vs-global dispatch, xrspatial/proximity.py:605-627), then
+    the mode's column from the four it appends."""
+    from xarray_spatial_spark.plans.joins import nearest_join
+
+    near = nearest_join(
+        raster, _targets(raster, value_col, target_values), x_col=x_col,
+        y_col=y_col, target_payload=value_col, metric=distance_metric,
+        max_distance=max_distance,
     )
-
-    targets = _targets(raster, value_col, target_values)
-    rows, n_targets = sized_targets(targets, [x_col, y_col, value_col])
-    chosen = strategy or nearest_plan(n_targets, k=1, max_distance=max_distance)
-
-    if chosen == "expr" and rows is not None:
-        near = _nearest_select(
-            raster, [tuple(map(float, r)) for r in rows], x_col, y_col,
-            distance_metric, max_distance,
-        )
-    elif chosen == "ring":
-        pid = F.struct(F.col(x_col).alias("px"), F.col(y_col).alias("py"))
-        pts = raster.withColumn("_pid", pid)
-        tgt = targets.withColumn(
-            "_tid", F.struct(F.col(x_col).alias("px"), F.col(y_col).alias("py"))
-        )
-        rj = nearest_join(
-            pts, tgt, x_col=x_col, y_col=y_col, target_payload=value_col,
-            metric=distance_metric, max_distance=max_distance, k=1,
-            n_targets=n_targets, strategy="ring",
-            point_id="_pid", target_id="_tid",
-        ).filter(F.col("dist") <= max_distance)
-        near = (
-            pts.join(rj, "_pid", "left")
-            .withColumn("nearest_dist", F.col("dist"))
-            .withColumn("nearest_x", F.col("_tx"))
-            .withColumn("nearest_y", F.col("_ty"))
-            .withColumn("nearest_payload", F.col("_tpay"))
-        )
-    else:
-        near = nearest_join(
-            raster, targets, x_col=x_col, y_col=y_col,
-            target_payload=value_col,
-            metric=distance_metric, max_distance=max_distance,
-            n_targets=n_targets, strategy=chosen,
-        )
     if mode == "proximity":
         out = F.col("nearest_dist")
     elif mode == "allocation":
@@ -324,12 +355,11 @@ def proximity(
     target_values: Iterable[float] | None = None,
     max_distance: float = math.inf,
     distance_metric: str = "EUCLIDEAN",
-    strategy: str | None = None,
 ) -> DataFrame:
     """Distance from every cell to its nearest target (proximity.py:652-790)."""
     return _proximity_family(
         raster, "proximity", x_col, y_col, value_col, target_values,
-        max_distance, distance_metric, strategy=strategy,
+        max_distance, distance_metric,
     )
 
 
@@ -341,12 +371,11 @@ def allocation(
     target_values: Iterable[float] | None = None,
     max_distance: float = math.inf,
     distance_metric: str = "EUCLIDEAN",
-    strategy: str | None = None,
 ) -> DataFrame:
     """Value of the nearest target — Voronoi assignment (proximity.py:793-928)."""
     return _proximity_family(
         raster, "allocation", x_col, y_col, value_col, target_values,
-        max_distance, distance_metric, strategy=strategy,
+        max_distance, distance_metric,
     )
 
 
@@ -358,12 +387,11 @@ def direction(
     target_values: Iterable[float] | None = None,
     max_distance: float = math.inf,
     distance_metric: str = "EUCLIDEAN",
-    strategy: str | None = None,
 ) -> DataFrame:
     """Compass bearing to the nearest target (proximity.py:931-1071)."""
     return _proximity_family(
         raster, "direction", x_col, y_col, value_col, target_values,
-        max_distance, distance_metric, strategy=strategy,
+        max_distance, distance_metric,
     )
 
 
@@ -426,9 +454,7 @@ def _nearest_select(
         best = structs[0]
     else:
         best = "CAST(NULL AS STRUCT<k: DOUBLE, p: DOUBLE, x: DOUBLE, y: DOUBLE>)"
-    tmp = "_nearest"
-    while tmp in points.columns:
-        tmp = "_" + tmp
+    tmp = _free_name(points.columns, "_nearest")
     b = sql_ident(tmp)
     dist = _dist_sql(f"{b}.k", metric)
     new = dict(zip(NEAREST_COLS, (dist, f"{b}.x", f"{b}.y", f"{b}.p")))
@@ -495,12 +521,12 @@ def knn_ring_join(
     target_id: str = "target_id",
     metric: str = "EUCLIDEAN",
     target_payload: str | None = None,
-    include_xy: bool = False,
     max_distance_deg: float | None = None,
 ) -> DataFrame:
     """Approximate-exact kNN: bucket targets by grid cell at ``zoom``;
     explode each query point to its neighbor-ring cells; equi-join on
-    cell; exact distance; top-k per point.
+    cell; exact distance; top-k per point, as (point_id, target_id,
+    dist, knn_rank, _tx, _ty[, _tpay]) rows.
 
     Exact whenever the true k-th neighbor lies within the ring —
     pick ``zoom`` so one cell spans the expected search radius (the same
@@ -514,8 +540,11 @@ def knn_ring_join(
     4096 guards the polar blow-up (thin cells): beyond it the call
     raises with the zoom to use instead.  Points whose ring holds no
     targets are left out (caller widens the ring or falls back to
-    ``nearest_broadcast``)."""
+    ``nearest_broadcast``), and so are points and targets without
+    finite coordinates: they have no grid cell."""
     r = ring
+    finite = (F.abs(F.col(x_col)) < math.inf) & (F.abs(F.col(y_col)) < math.inf)
+    points, targets = points.filter(finite), targets.filter(finite)
 
     @F.pandas_udf("array<long>")
     def _disk(lon: pd.Series, lat: pd.Series) -> pd.Series:
@@ -579,9 +608,7 @@ def knn_ring_join(
     w = Window.partitionBy(point_id).orderBy(
         F.col("dist").asc(), *tie, F.col(target_id).asc()
     )
-    keep = [point_id, target_id, "dist", "knn_rank"]
-    if include_xy:
-        keep += ["_tx", "_ty"]
+    keep = [point_id, target_id, "dist", "knn_rank", "_tx", "_ty"]
     if target_payload:
         keep += ["_tpay"]
     return (

@@ -234,15 +234,11 @@ def _union_find(edges) -> list[tuple[int, int]]:
     return [(k, find(k)) for k in list(parent)]
 
 
-def _roster_cap(spark) -> int:
-    """Max label-roster rows the driver finish may collect.  The
-    driver union-find + dense rank is O(labels) driver memory — fine
-    for realistic rasters (labels << cells, and the rank map gets
-    broadcast anyway) but a salt-and-pepper raster (~1 region/cell)
-    would OOM the driver.  Above the cap the CCL family dispatches to
-    the fully distributed finish (:func:`_distributed_region_map`)."""
-    return int(spark.conf.get(
-        "spark.xrspatial.regions.maxDriverRoster", "2000000"))
+# Max label-roster rows the driver finish may collect (read at call
+# time): its union-find + dense rank is O(labels) driver memory, which
+# a salt-and-pepper raster (~1 region/cell) would exhaust.  Above it
+# the CCL family takes the distributed finish (_distributed_region_map).
+MAX_DRIVER_ROSTER = 2_000_000
 
 
 def connected_components(
@@ -315,7 +311,7 @@ def _distributed_region_map(
     components (:func:`connected_components` — O(log diameter)
     pointer-jumping rounds over the PERIMETER-scale edge set) and the
     two-phase global rank (plans/ranks.py — never a single-task
-    window).  Used only above :func:`_roster_cap`; below it the driver
+    window).  Used only above ``MAX_DRIVER_ROSTER``; below it the driver
     dict costs ~4 fewer jobs and the result is broadcast either way."""
     from xarray_spatial_spark.plans.ranks import global_row_number
 
@@ -378,7 +374,7 @@ def regions(
     # pepper input (~1 region/cell) overflows the cap and dispatches
     # to the fully distributed finish instead of an O(regions) dict
     spark = df.sparkSession
-    cap = _roster_cap(spark)
+    cap = MAX_DRIVER_ROSTER
     rows = tagged.limit(cap + 1).collect()
     if len(rows) > cap:
         mapping = _distributed_region_map(
@@ -588,7 +584,7 @@ def regions_tiled(
     # persisted pass-1 output, labset column only).  Salt-and-pepper
     # rasters (~1 region/cell) overflow the cap and take the fully
     # distributed finish.
-    cap = _roster_cap(tdf.sparkSession)
+    cap = MAX_DRIVER_ROSTER
     nlab = labeled.agg(
         F.sum(F.size("labset")).alias("n")
     ).collect()[0]["n"] or 0
