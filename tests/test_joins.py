@@ -267,6 +267,38 @@ def test_ring_strategy_polar_exact_span(spark):
             assert abs(ring_d[key] - r["nearest_dist"]) < 1e-9
 
 
+def test_ring_great_circle_high_latitude_lon_span(spark):
+    """A great-circle radius of t degrees spans up to asin(sin t / cos
+    lat) degrees of longitude, far more than t near the pole: at lat
+    76-80 with a 1,500 km radius the ring must still find the same
+    nearest target as the broadcast tier for every point."""
+    rng = np.random.default_rng(76)
+    pts = [(float(rng.uniform(-180, 180)), float(rng.uniform(76, 80)))
+           for _ in range(400)]
+    tgts = [(float(rng.uniform(-180, 180)), float(rng.uniform(76, 80)),
+             float(i + 1)) for i in range(4)]
+    pdf = spark.createDataFrame(pts, schema="lon double, lat double")
+    tdf = spark.createDataFrame(tgts, schema="lon double, lat double, value double")
+    md = 1_500_000.0
+    cols = ["lon", "lat", *proximity.NEAREST_COLS]
+    ring = proximity.nearest_ring(pdf, tdf, md, target_payload="value",
+                                  metric="GREAT_CIRCLE").select(cols).collect()
+    bc = proximity.nearest_broadcast(pdf, tdf, target_payload="value",
+                                     metric="GREAT_CIRCLE",
+                                     max_distance=md).select(cols).collect()
+    assert len(ring) == len(bc) == 400
+    found = {(r["lon"], r["lat"]): r for r in ring}
+    near = 0
+    for r in bc:
+        got = found[(r["lon"], r["lat"])]
+        assert (got["nearest_x"], got["nearest_y"], got["nearest_payload"]) == \
+            (r["nearest_x"], r["nearest_y"], r["nearest_payload"]), r
+        if r["nearest_dist"] is not None:
+            near += 1
+            assert got["nearest_dist"] == pytest.approx(r["nearest_dist"], rel=1e-9)
+    assert near > 300
+
+
 def test_ring_cell_budget_error(spark):
     """Polar blow-up guard: a radius needing >4096 candidate cells per
     point raises with actionable advice instead of exploding the

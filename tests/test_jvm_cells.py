@@ -47,6 +47,8 @@ def test_assign_cells_jvm_equals_udf(spark):
     from xarray_spatial_spark.sources.documents import documents
 
     docs = documents(spark, 500)
-    a = assign_cells(docs, 12, 5, use_jvm=True).select("doc_id", "cell_id", "tile_id")
-    b = assign_cells(docs, 12, 5, use_jvm=False).select("doc_id", "cell_id", "tile_id")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    got = assign_cells(docs, 12, 5).select(
+        "doc_id", "lon", "lat", "cell_id", "tile_id").toPandas()
+    cells = grid.cell_of(got["lon"].to_numpy(), got["lat"].to_numpy(), 12)
+    np.testing.assert_array_equal(got["cell_id"].to_numpy(), cells)
+    np.testing.assert_array_equal(got["tile_id"].to_numpy(), grid.parent(cells, 5))

@@ -1,5 +1,8 @@
 """regions (CCL) ported from reference tests/test_zonal.py:999-1044 +
-cross-tile correctness via tiling invariance."""
+cross-tile correctness via tiling invariance and a whole-raster BFS
+reference, on dense and sparse long-form input."""
+
+from collections import deque
 
 import numpy as np
 import pytest
@@ -11,6 +14,59 @@ from xarray_spatial_spark.raster import df_from_numpy, numpy_from_df
 
 def _grid(df):
     return numpy_from_df(df, value_col="region")
+
+
+def _bfs_ccl(vals, keys, conn):
+    """Reference flood fill: per cell the min key of its component,
+    NaN where the key is NaN (no cell); NaN values connect."""
+    H, W = vals.shape
+    present = ~np.isnan(keys)
+    out = np.full((H, W), np.nan)
+    seen = np.zeros((H, W), dtype=bool)
+    nbrs = [(0, 1), (0, -1), (1, 0), (-1, 0)]
+    if conn == 8:
+        nbrs += [(1, 1), (1, -1), (-1, 1), (-1, -1)]
+
+    def eq(a, b):
+        return (a == b) or (np.isnan(a) and np.isnan(b))
+
+    for sy in range(H):
+        for sx in range(W):
+            if not present[sy, sx] or seen[sy, sx]:
+                continue
+            comp, q = [], deque([(sy, sx)])
+            seen[sy, sx] = True
+            while q:
+                y, x = q.popleft()
+                comp.append((y, x))
+                for dy, dx in nbrs:
+                    ny, nx = y + dy, x + dx
+                    if (0 <= ny < H and 0 <= nx < W
+                            and present[ny, nx] and not seen[ny, nx]
+                            and eq(vals[y, x], vals[ny, nx])):
+                        seen[ny, nx] = True
+                        q.append((ny, nx))
+            root = min(keys[y, x] for y, x in comp)
+            for y, x in comp:
+                out[y, x] = root
+    return out
+
+
+def _regions_ref(vals, conn, present=None):
+    """Spark-free ``regions``: BFS components over the whole raster,
+    numbered 0.. in scan order of their first cell; NaN where no cell."""
+    from xarray_spatial_spark.operators.regions import _KEY
+
+    H, W = vals.shape
+    keys = (np.arange(H, dtype=np.float64)[:, None] * _KEY
+            + np.arange(W, dtype=np.float64)[None, :])
+    if present is not None:
+        keys = np.where(present, keys, np.nan)
+    roots = _bfs_ccl(vals, keys, conn)
+    m = ~np.isnan(roots)
+    out = np.full((H, W), np.nan)
+    out[m] = np.unique(roots[m], return_inverse=True)[1].ravel()
+    return out
 
 
 def test_regions_four_connectivity_int(spark):
@@ -88,6 +144,7 @@ def test_regions_tiled_matches_long(spark, conn):
     out = regions_tiled(tdf, neighborhood=conn)
     got = tiled_mod.numpy_from_tiled(out, value_col="region")
     np.testing.assert_array_equal(base, got)
+    np.testing.assert_array_equal(got, _regions_ref(arr, conn))
     # float32 value band: labels identical, value band stays 4 B/cell
     t32 = tiled_mod.tile(df, tile_h=5, tile_w=7, dtype=np.float32)
     o32 = regions_tiled(t32, neighborhood=conn)
@@ -113,6 +170,7 @@ def test_regions_tiled_snake(spark):
     got = tiled_mod.numpy_from_tiled(
         regions_tiled(tdf, neighborhood=4), value_col="region")
     np.testing.assert_array_equal(base, got)
+    np.testing.assert_array_equal(got, _regions_ref(arr, 4))
 
 
 @pytest.mark.parametrize("conn", [4, 8])
@@ -132,42 +190,7 @@ def test_tile_ccl_fuzz_vs_bfs():
     """Run-based CCL == reference BFS flood fill on random small
     grids: same partition AND same min-key root labels, both
     connectivities, with NaN values and absent cells."""
-    from collections import deque
-
     from xarray_spatial_spark.operators.regions import _KEY, _tile_ccl
-
-    def bfs_ccl(vals, keys, conn):
-        H, W = vals.shape
-        present = ~np.isnan(keys)
-        out = np.full((H, W), np.nan)
-        seen = np.zeros((H, W), dtype=bool)
-        nbrs = [(0, 1), (0, -1), (1, 0), (-1, 0)]
-        if conn == 8:
-            nbrs += [(1, 1), (1, -1), (-1, 1), (-1, -1)]
-
-        def eq(a, b):
-            return (a == b) or (np.isnan(a) and np.isnan(b))
-
-        for sy in range(H):
-            for sx in range(W):
-                if not present[sy, sx] or seen[sy, sx]:
-                    continue
-                comp, q = [], deque([(sy, sx)])
-                seen[sy, sx] = True
-                while q:
-                    y, x = q.popleft()
-                    comp.append((y, x))
-                    for dy, dx in nbrs:
-                        ny, nx = y + dy, x + dx
-                        if (0 <= ny < H and 0 <= nx < W
-                                and present[ny, nx] and not seen[ny, nx]
-                                and eq(vals[y, x], vals[ny, nx])):
-                            seen[ny, nx] = True
-                            q.append((ny, nx))
-                root = min(keys[y, x] for y, x in comp)
-                for y, x in comp:
-                    out[y, x] = root
-        return out
 
     rng = np.random.default_rng(2024)
     for trial in range(60):
@@ -183,9 +206,54 @@ def test_tile_ccl_fuzz_vs_bfs():
             keys[rng.random((H, W)) < 0.25] = np.nan  # absent cells
         conn = 4 if trial % 2 == 0 else 8
         got = _tile_ccl(vals.copy(), keys.copy(), conn)
-        exp = bfs_ccl(vals, keys, conn)
+        exp = _bfs_ccl(vals, keys, conn)
         np.testing.assert_array_equal(got, exp,
                                       err_msg=f"trial={trial} conn={conn}")
+
+
+@pytest.mark.parametrize("conn", [4, 8])
+def test_regions_long_form_sparse(spark, conn):
+    """Long-form regions on sparse rows: absent interior cells, a
+    partial last row, a crop offset from the origin, NULL values (one
+    class, like NaN).  An absent cell joins no region and comes back
+    as no row; every input row comes back once, with (y, x, value,
+    region)."""
+    import pandas as pd
+
+    rng = np.random.default_rng(31)
+    H, W = 23, 31
+    vals = rng.integers(0, 3, (H, W)).astype(float)
+    vals[vals == 2] = np.nan  # NULL values
+    holes = rng.random((H, W)) > 0.3
+    partial = np.ones((H, W), bool)
+    partial[-1, 11:] = False
+    crop = np.zeros((H, W), bool)
+    crop[6:20, 9:27] = True
+    for name, keep in {"holes": holes, "partial_last_row": partial,
+                       "crop": crop}.items():
+        yy, xx = np.nonzero(keep)
+        v = pd.Series(vals[yy, xx])
+        df = spark.createDataFrame(pd.DataFrame({
+            "y": yy.astype(np.int32), "x": xx.astype(np.int32),
+            "value": v.where(v.notna(), None)}), "y int, x int, value double")
+        out = regions(df, neighborhood=conn, tile_h=5, tile_w=7)
+        assert out.columns == ["y", "x", "value", "region"]
+        pdf = out.toPandas()
+        assert len(pdf) == keep.sum(), name
+        got = np.full((H, W), np.nan)
+        got[pdf["y"], pdf["x"]] = pdf["region"]
+        np.testing.assert_array_equal(got, _regions_ref(vals, conn, keep),
+                                      err_msg=name)
+        back = np.full((H, W), np.nan)
+        back[pdf["y"], pdf["x"]] = pdf["value"]
+        np.testing.assert_array_equal(back, np.where(keep, vals, np.nan))
+
+
+def test_regions_negative_cell_raises(spark):
+    df = spark.createDataFrame([(0, 0, 1.0), (2, -4, 1.0)],
+                               "y int, x int, value double")
+    with pytest.raises(Exception, match=r"ValueError: cell \(y=2, x=-4\)"):
+        regions(df, tile_h=4, tile_w=4).collect()
 
 
 @pytest.mark.parametrize("conn", [4, 8])

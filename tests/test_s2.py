@@ -519,28 +519,3 @@ def test_polygon_area_known_values():
     assert cap < cells_area < cap * 1.35  # covering ⊇ cap, modest excess
     with pytest.raises(ValueError):
         s2.polygon_area_steradians([0, 1], [0, 1])
-
-
-def test_cell_col_jvm_twin_matches(spark):
-    """The pure-Catalyst encode twin (documented experiment — see its
-    docstring for why the Arrow UDF is the production path) is
-    bit-identical to the numpy core and keeps Python out of the plan."""
-    import pandas as pd
-
-    n = 800
-    lon = rng.uniform(-180, 180, n)
-    lat = rng.uniform(-85, 85, n)
-    df = spark.createDataFrame(pd.DataFrame({"k": np.arange(n), "lon": lon, "lat": lat}))
-    out = df.select(
-        "k",
-        s2.cell_col_jvm(F.col("lon"), F.col("lat")).alias("leaf"),
-        s2.cell_col_jvm(F.col("lon"), F.col("lat"), 10).alias("c10"),
-    ).orderBy("k").toPandas()
-    want = s2.cell_of(lon, lat)
-    assert np.array_equal(out["leaf"].to_numpy(), want)
-    assert np.array_equal(out["c10"].to_numpy(), s2.parent(want, 10))
-    plan = df.select(s2.cell_col_jvm(F.col("lon"), F.col("lat")))._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "Python" not in plan
-    with pytest.raises(ValueError):
-        s2.cell_col_jvm(F.col("lon"), F.col("lat"), 31)

@@ -1,12 +1,16 @@
-"""Dense-tile raster format: round-trip, stencil parity with the
-long-form path, tiled terrain parity, global stats."""
+"""Dense-tile raster format: round-trip, stencils on both formats
+against the operator's kernel run once on the whole NaN-padded array
+(Spark-free), the long-form adapter on sparse input, tiled terrain
+parity, global stats."""
+
+import warnings
 
 import numpy as np
 import pytest
 
 from xarray_spatial_spark import raster, tiled
 from xarray_spatial_spark.operators import focal, surface
-from xarray_spatial_spark.operators.convolution import circle_kernel
+from xarray_spatial_spark.operators.convolution import circle_kernel, convolve_numpy
 
 
 @pytest.fixture(scope="module")
@@ -16,6 +20,48 @@ def arr():
     a[5, 7] = np.nan
     a[40:44, 60:66] = np.nan
     return a
+
+
+def _whole_array(monkeypatch, mod, op, bands, dtype=np.float64, **kwargs):
+    """Spark-free reference: the ``(fn, radius)`` that ``op`` hands to
+    ``mod.apply_stencil``, run once on the whole raster (``bands``:
+    name -> 2-D array, NaN = no cell) padded by the radius with NaN —
+    dask ``map_overlap``'s ``boundary=np.nan``.  Returns out column ->
+    float64 array, non-finite as NaN."""
+    seen = []
+    with monkeypatch.context() as m:
+        m.setattr(mod, "apply_stencil",
+                  lambda df, fn, radius, value_cols=("value",),
+                  out_cols=("value",), *_, **__:
+                  seen.append((fn, int(radius), list(out_cols))))
+        op(None, **kwargs)
+    (fn, r, ocols), = seen
+    padded = {b: np.pad(np.asarray(a, dtype=np.float64).astype(dtype), r,
+                        constant_values=np.nan) for b, a in bands.items()}
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", category=RuntimeWarning)
+        outs = fn(padded)
+    res = {}
+    for c in ocols:
+        o = np.asarray(outs[c]).astype(dtype).astype(np.float64)
+        res[c] = np.where(np.isfinite(o), o, np.nan)
+    return res
+
+
+def _hotspots_ref(a, kernel):
+    """numpy hotspots: z of the kernel-mean convolution against the
+    raster's global mean / population std, then the 90/95/99 ladder
+    (reference focal.py:882-915); NaN z -> class 0."""
+    finite = a[np.isfinite(a)]
+    r = max(kernel.shape) // 2
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", category=RuntimeWarning)
+        conv = convolve_numpy(np.pad(a, r, constant_values=np.nan),
+                              kernel / kernel.sum())
+    z = (conv - finite.mean()) / finite.std()
+    az = np.abs(z)
+    conf = np.select([az > 2.58, az > 1.96, az > 1.65], [99.0, 95.0, 90.0], 0.0)
+    return np.where(np.isnan(z), 0.0, np.sign(z) * conf)
 
 
 def test_tile_untile_roundtrip(spark, arr):
@@ -47,35 +93,46 @@ def test_tile_partial_edges(spark, arr):
     (surface.curvature, {"cellsize": 2.0}),
     (surface.hillshade, {}),
 ])
-def test_surface_tiled_matches_long(spark, arr, op, kwargs):
+def test_surface_tiled_matches_long(spark, monkeypatch, arr, op, kwargs):
     df = raster.df_from_numpy(spark, arr)
     expected = raster.numpy_from_df(op(df, tile_h=32, tile_w=32, **kwargs))
     tdf = tiled.tile(df, tile_h=32, tile_w=32)
     got = tiled.numpy_from_tiled(op(tdf, **kwargs))
     np.testing.assert_allclose(got, expected, rtol=1e-6, equal_nan=True)
+    ref = _whole_array(monkeypatch, surface, op, {"value": arr}, **kwargs)["value"]
+    np.testing.assert_allclose(got, ref, rtol=1e-6, equal_nan=True)
+    np.testing.assert_allclose(expected, ref, rtol=1e-6, equal_nan=True)
 
 
-def test_focal_mean_tiled_matches_long(spark, arr):
+def test_focal_mean_tiled_matches_long(spark, monkeypatch, arr):
     df = raster.df_from_numpy(spark, arr)
     expected = raster.numpy_from_df(focal.mean(df, tile_h=32, tile_w=32))
     tdf = tiled.tile(df, tile_h=32, tile_w=32)
     got = tiled.numpy_from_tiled(focal.mean(tdf))
     np.testing.assert_allclose(got, expected, rtol=1e-12, equal_nan=True)
+    ref = _whole_array(monkeypatch, focal, focal.mean, {"value": arr})["value"]
+    np.testing.assert_allclose(got, ref, rtol=1e-12, equal_nan=True)
+    np.testing.assert_allclose(expected, ref, rtol=1e-12, equal_nan=True)
 
 
-def test_focal_stats_radius2_tiled(spark, arr):
+def test_focal_stats_radius2_tiled(spark, monkeypatch, arr):
     k = circle_kernel(1, 1, 2.5)
     df = raster.df_from_numpy(spark, arr)
     long_out = focal.focal_stats(df, k, stats_funcs=("mean", "max", "sum"),
                                  tile_h=32, tile_w=32)
     tdf = tiled.tile(df, tile_h=32, tile_w=32)
     tiled_out = focal.focal_stats(tdf, k, stats_funcs=("mean", "max", "sum"))
+    ref = _whole_array(monkeypatch, focal, focal.focal_stats, {"value": arr},
+                       kernel=k, stats_funcs=("mean", "max", "sum"))
     for c in ("mean", "max", "sum"):
         np.testing.assert_allclose(
             tiled.numpy_from_tiled(tiled_out, value_col=c),
             raster.numpy_from_df(long_out, value_col=c),
             rtol=1e-12, equal_nan=True,
         )
+        for got in (tiled.numpy_from_tiled(tiled_out, value_col=c),
+                    raster.numpy_from_df(long_out, value_col=c)):
+            np.testing.assert_allclose(got, ref[c], rtol=1e-12, equal_nan=True)
 
 
 def test_hotspots_tiled_matches_long(spark):
@@ -88,6 +145,10 @@ def test_hotspots_tiled_matches_long(spark):
     tdf = tiled.tile(df, tile_h=32, tile_w=32)
     got = tiled.numpy_from_tiled(focal.hotspots(tdf, k))
     np.testing.assert_allclose(got, expected, equal_nan=True)
+    ref = _hotspots_ref(a, k)
+    assert (np.abs(ref) == 99.0).any()
+    np.testing.assert_array_equal(got, ref)
+    np.testing.assert_array_equal(expected, ref)
 
 
 def test_global_stats(spark, arr):
@@ -237,38 +298,49 @@ def test_heterogeneous_fused_chain_matches_sequential(spark, arr):
 
 
 @pytest.mark.parametrize("dtype", [np.float64, np.float32])
-def test_halo_across_super_tiles_matches_long(spark, arr, dtype):
+def test_halo_across_super_tiles_matches_long(spark, monkeypatch, arr, dtype):
     """16-px tiles on the 70x93 raster: 5x6 ragged tiles spanning 2x2
     super-tiles, so halos come both from sibling tiles in the same
     group and from strips sent across super-tile boundaries.  Slope,
     focal_stats at r=2 (JVM message projection) and at r=10 (Python
-    emitter) match the long-form path."""
+    emitter) match the long-form path and the whole-array kernel."""
     df = raster.df_from_numpy(spark, arr)
     tdf = tiled.tile(df, tile_h=16, tile_w=16, dtype=dtype).persist()
     rtol = 1e-12 if dtype == np.float64 else 1e-5
     stats = ("mean", "max")
     try:
         assert tdf.count() == 30
+        got = tiled.numpy_from_tiled(surface.slope(tdf))
         np.testing.assert_allclose(
-            tiled.numpy_from_tiled(surface.slope(tdf)),
+            got,
             raster.numpy_from_df(surface.slope(df, tile_h=32, tile_w=32)),
             rtol=max(rtol, 1e-6), equal_nan=True,
         )
+        np.testing.assert_allclose(
+            got, _whole_array(monkeypatch, surface, surface.slope,
+                              {"value": arr}, dtype=dtype)["value"],
+            rtol=rtol, equal_nan=True)
         for k in (circle_kernel(1, 1, 2.5), np.ones((21, 21))):
             long_out = focal.focal_stats(df, k, stats_funcs=stats,
                                          tile_h=32, tile_w=32)
             tiled_out = focal.focal_stats(tdf, k, stats_funcs=stats)
+            ref = _whole_array(monkeypatch, focal, focal.focal_stats,
+                               {"value": arr}, dtype=dtype, kernel=k,
+                               stats_funcs=stats)
             for c in stats:
                 np.testing.assert_allclose(
                     tiled.numpy_from_tiled(tiled_out, value_col=c),
                     raster.numpy_from_df(long_out, value_col=c),
                     rtol=rtol, equal_nan=True,
                 )
+                np.testing.assert_allclose(
+                    tiled.numpy_from_tiled(tiled_out, value_col=c), ref[c],
+                    rtol=rtol, equal_nan=True)
     finally:
         tdf.unpersist()
 
 
-def test_halo_radius_up_to_tile_size(spark):
+def test_halo_radius_up_to_tile_size(spark, monkeypatch):
     """A radius equal to the tile size is exact; one past it raises a
     ValueError naming the radius and the tile, instead of returning
     cells that miss the halo from tiles two away."""
@@ -277,16 +349,19 @@ def test_halo_radius_up_to_tile_size(spark):
     df = raster.df_from_numpy(spark, a)
     tdf = tiled.tile(df, tile_h=16, tile_w=16)
     k16 = np.ones((33, 33))
+    got = tiled.numpy_from_tiled(
+        focal.focal_stats(tdf, k16, stats_funcs=("mean",)), value_col="mean")
     np.testing.assert_allclose(
-        tiled.numpy_from_tiled(
-            focal.focal_stats(tdf, k16, stats_funcs=("mean",)),
-            value_col="mean"),
+        got,
         raster.numpy_from_df(
             focal.focal_stats(df, k16, stats_funcs=("mean",),
                               tile_h=32, tile_w=32),
             value_col="mean"),
         rtol=1e-12, equal_nan=True,
     )
+    ref = _whole_array(monkeypatch, focal, focal.focal_stats, {"value": a},
+                       kernel=k16, stats_funcs=("mean",))["mean"]
+    np.testing.assert_allclose(got, ref, rtol=1e-12, equal_nan=True)
     out = focal.focal_stats(tdf, np.ones((41, 41)), stats_funcs=("mean",))
     with pytest.raises(Exception, match=r"ValueError: halo radius 20 "
                                         r"exceeds the 16x16 tile"):
@@ -368,3 +443,103 @@ def test_blobless_tiled_frame_raises(spark, arr):
     bare = tdf.drop("value__le", "value__te")
     with pytest.raises(ValueError, match="value__le.*value__te"):
         surface.slope(bare)
+
+
+def _long_rows(spark, bands, keep):
+    """Long-form rows of the cells where ``keep`` holds, one column
+    per band; non-finite values become NULL."""
+    import pandas as pd
+
+    yy, xx = np.nonzero(keep)
+    data = {"y": yy.astype(np.int32), "x": xx.astype(np.int32)}
+    for b, a in bands.items():
+        v = pd.Series(np.asarray(a, dtype=np.float64)[yy, xx])
+        data[b] = v.where(np.isfinite(v), None)
+    schema = "y int, x int, " + ", ".join(f"{b} double" for b in bands)
+    return spark.createDataFrame(pd.DataFrame(data), schema=schema)
+
+
+def _masks(shape):
+    """Sparse layouts of a long-form raster: absent interior cells, a
+    partial last row (an events raster whose row count is not a
+    multiple of its width) and a crop offset from the origin."""
+    h, w = shape
+    holes = np.random.default_rng(11).random(shape) > 0.25
+    partial = np.ones(shape, bool)
+    partial[-1, w // 3:] = False
+    crop = np.zeros(shape, bool)
+    crop[9:h - 6, 13:w - 4] = True
+    return {"holes": holes, "partial_last_row": partial, "crop": crop}
+
+
+def _scatter(pdf, col, shape):
+    out = np.full(shape, np.nan)
+    out[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf[col].to_numpy(
+        dtype=np.float64, na_value=np.nan)
+    return out
+
+
+def test_long_form_adapter_sparse_stencils(spark, monkeypatch):
+    """Long-form stencils on sparse input, with NULL values: an absent
+    cell is NaN in every window (as it would be in the whole array),
+    and exactly the input's cells come back, one row each."""
+    rng = np.random.default_rng(12)
+    shape = (37, 45)
+    a = rng.uniform(0, 50, shape)
+    a[4, 6] = a[20, 30] = np.nan  # NULL values
+    k = circle_kernel(1, 1, 2.5)
+    cases = [
+        (surface, surface.slope, {}, ("value",)),
+        (focal, focal.focal_stats,
+         {"kernel": k, "stats_funcs": ("mean", "max")}, ("mean", "max")),
+    ]
+    for name, keep in _masks(shape).items():
+        df = _long_rows(spark, {"value": a}, keep)
+        src = np.where(keep, a, np.nan)
+        for mod, op, kw, cols in cases:
+            out = op(df, tile_h=16, tile_w=16, **kw)
+            assert out.columns == ["y", "x", *cols]
+            pdf = out.toPandas()
+            assert len(pdf) == keep.sum(), (name, op.__name__)
+            assert set(zip(pdf["y"], pdf["x"])) == set(zip(*np.nonzero(keep)))
+            ref = _whole_array(monkeypatch, mod, op, {"value": src}, **kw)
+            for c in cols:
+                np.testing.assert_allclose(
+                    _scatter(pdf, c, shape), np.where(keep, ref[c], np.nan),
+                    rtol=1e-12, equal_nan=True, err_msg=f"{name} {c}")
+
+
+def test_long_form_adapter_multiband(spark, monkeypatch):
+    """A multi-band stencil (value, lat, lon) on sparse long-form rows
+    with a NULL latitude matches its kernel on the whole arrays."""
+    rng = np.random.default_rng(13)
+    shape = (30, 41)
+    bands = {
+        "value": rng.uniform(0, 500, shape),
+        "lat": np.linspace(40, 41, shape[0])[:, None] * np.ones((1, shape[1])),
+        "lon": np.linspace(-3, -2, shape[1])[None, :] * np.ones((shape[0], 1)),
+    }
+    bands["lat"][7, 9] = np.nan
+    keep = _masks(shape)["partial_last_row"] & (rng.random(shape) > 0.03)
+    df = _long_rows(spark, bands, keep)
+    pdf = surface.geodesic_slope(df, out_col="s", tile_h=16, tile_w=16).toPandas()
+    assert len(pdf) == keep.sum()
+    ref = _whole_array(monkeypatch, surface, surface.geodesic_slope,
+                       {b: np.where(keep, v, np.nan) for b, v in bands.items()},
+                       out_col="s")["s"]
+    assert np.isfinite(ref[keep]).sum() > keep.sum() // 2
+    np.testing.assert_allclose(_scatter(pdf, "s", shape),
+                               np.where(keep, ref, np.nan),
+                               rtol=1e-12, equal_nan=True)
+
+
+def test_negative_cell_raises(spark):
+    """Tiled rasters start at (0, 0): a negative y or x raises a
+    ValueError naming the cell instead of losing its halo."""
+    df = spark.createDataFrame([(0, 0, 1.0), (-1, 3, 2.0)],
+                               "y int, x int, value double")
+    msg = r"ValueError: cell \(y=-1, x=3\) has a negative coordinate"
+    with pytest.raises(Exception, match=msg):
+        tiled.tile(df, tile_h=4, tile_w=4, shape=(1, 4)).collect()
+    with pytest.raises(Exception, match=msg):
+        surface.slope(df, tile_h=4, tile_w=4).collect()

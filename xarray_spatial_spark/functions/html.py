@@ -281,7 +281,7 @@ def decode_html(html: Column, charset: Column | None = None) -> Column:
 # <ol> item numbering, and table assembly all depend on unbounded
 # context, which Catalyst expressions cannot carry (and the s2
 # experiment showed recursive accumulation DOESN'T codegen — see
-# s2.cell_col_jvm's docstring).  So this is a from-scratch tokenizer
+# SCALING.md's S2 encode note).  So this is a from-scratch tokenizer
 # + renderer that runs vectorized over Arrow batches: one regex pass
 # tokenizes, a small explicit stack renders, no DOM library.
 
@@ -603,7 +603,7 @@ def html_to_markdown(html: Column) -> Column:
     driver participation — the same dispatch argument as the codec
     tier (operators/multimodal.py): per-payload stack-machine work
     Catalyst cannot express (and interpreted recursion re-evaluates
-    its prefix per step — see s2.cell_col_jvm's negative result)."""
+    its prefix per step — see SCALING.md's S2 encode note)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 

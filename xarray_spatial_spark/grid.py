@@ -180,17 +180,18 @@ def neighbors_span(cell: np.ndarray, rx: int, up: int, dn: int) -> np.ndarray:
     poles asymmetrically, so an exact degree-radius cover needs
     per-point up/down spans computed from the tile rows of
     ``lat ± radius`` (see proximity.knn_ring_join).  Shape
-    ``(len(cell), (2rx+1)(up+dn+1))``."""
+    ``(len(cell), min(2rx+1, 2^zoom)(up+dn+1))``: a span wider than
+    the world holds each column once.  ``cell`` shares one zoom."""
     xt, yt, zoom = decode(np.asarray(cell))
     n = (np.int64(1) << zoom.astype(np.int64))
-    ox = np.arange(-rx, rx + 1, dtype=np.int64)
+    z = int(zoom[0]) if len(zoom) else 0
+    ox = np.arange(-rx, rx + 1, dtype=np.int64)[:1 << z]
     oy = np.arange(-up, dn + 1, dtype=np.int64)
     dx, dy = np.meshgrid(ox, oy, indexing="xy")
     dx = dx.ravel()[None, :]
     dy = dy.ravel()[None, :]
     nx = (xt[:, None] + dx) % n[:, None]
     ny = np.clip(yt[:, None] + dy, 0, n[:, None] - 1)
-    z = int(zoom[0]) if len(zoom) else 0
     return encode(nx.ravel(), ny.ravel(), z).reshape(nx.shape)
 
 
@@ -291,8 +292,8 @@ def cell_from_tiles_col(xt: Column, yt: Column, zoom: int) -> Column:
 
 def cell_col(lon: Column, lat: Column, zoom: int) -> Column:
     """Fully JVM-native packed cell id — identical bits to numpy
-    ``cell_of`` but whole-stage-codegen (the production hot path;
-    the pandas-UDF path in operators/tiling.py is the parity twin)."""
+    ``cell_of`` but whole-stage-codegen (the production hot path of
+    ``operators.tiling.assign_cells``; tests pin it to ``cell_of``)."""
     return cell_from_tiles_col(
         tile_x_col(lon, zoom), tile_y_col(lat, zoom), zoom)
 

@@ -1,26 +1,17 @@
-"""Halo exchange + tiled stencil execution — the engine's core custom
-operator (no Spark primitive exists for this).
+"""Halo stencil entry point — the engine's core custom operator (no
+Spark primitive exists for this).
 
 The reference runs every stencil through dask ``map_overlap`` with an
 NaN boundary (focal.py:70-76, 329-340; slope.py:86-98;
-convolution.py:316-325; proximity.py:603-627).  The Spark re-plan:
-
-1. ``with_halo``: each cell row is exploded to its own tile plus any
-   neighbor tile whose ``radius``-window overlaps it (border cells
-   only — interior cells stay single).  Pure Column expressions; the
-   explode factor is (1+overlap)^2 <= 4 for radius << tile size.
-2. ``groupBy(ty, tx).applyInPandas``: each task rebuilds its dense
-   (tile_h+2r, tile_w+2r) numpy tile (NaN-filled = the reference's
-   ``boundary=np.nan``), runs a vectorized numpy kernel, and emits
-   interior cells only.
-3. Cells outside the raster domain never exist as interior rows, so
-   domain edges are NaN-padded automatically and spurious halo-only
-   tiles emit nothing.
-
-One shuffle total, keyed by tile — the same data movement dask's
-map_overlap performs, but scheduled by Spark with AQE handling tile
-skew.  Kernels see Arrow-batched numpy, so per-core throughput matches
-the reference's numba kernels to within vectorization constants.
+convolution.py:316-325; proximity.py:603-627).  The Spark re-plan has
+one halo plan, ``tiled.apply_stencil_tiled``: tiles travel whole to
+their own 4x4 super-tile's group, border strips to neighbouring
+super-tiles, and each group assembles its NaN-padded tiles with numpy
+slices — one shuffle, about the raster's bytes.  ``apply_stencil``
+only picks the input format: a tiled raster runs the plan directly, a
+long-form raster (one row per cell) runs it through ``tiled._via_tiles``,
+whose presence band keeps absent cells NaN in every window and returns
+the input's cells only.
 
 Constraint mirrored from dask (halo depth <= chunk size): radius must
 not exceed tile_h/tile_w.
@@ -28,59 +19,16 @@ not exceed tile_h/tile_w.
 
 from __future__ import annotations
 
-import warnings
 from collections.abc import Callable, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 DEFAULT_TILE = 256
 
 # fn(arrs: dict[col -> (H, W) float64 padded array], radius) ->
 #    dict[out_col -> (tile_h, tile_w) array for the interior]
 StencilFn = Callable[[dict[str, np.ndarray]], dict[str, np.ndarray]]
-
-
-def with_halo(
-    df: DataFrame,
-    radius: int,
-    tile_h: int = DEFAULT_TILE,
-    tile_w: int = DEFAULT_TILE,
-) -> DataFrame:
-    """Add (_ty, _tx, _halo) and replicate border cells to neighbor
-    tiles.  ``_halo`` = 0 on the owning tile's copy."""
-    if radius > min(tile_h, tile_w):
-        raise ValueError(
-            f"radius {radius} exceeds tile size ({tile_h}x{tile_w}); "
-            "use larger tiles (dask mirror: depth <= chunk size)"
-        )
-    ty = F.floor(F.col("y") / tile_h).cast("long")
-    tx = F.floor(F.col("x") / tile_w).cast("long")
-    iy = F.col("y") - ty * tile_h
-    ix = F.col("x") - tx * tile_w
-    r = F.lit(radius)
-
-    def _offsets(i, size):
-        return F.filter(
-            F.array(F.lit(-1), F.lit(0), F.lit(1)),
-            lambda d: (d == 0) | ((d == -1) & (i < r)) | ((d == 1) & (i >= size - r)),
-        )
-
-    out = (
-        df.withColumn("_ty0", ty)
-        .withColumn("_tx0", tx)
-        .withColumn("_dy", F.explode(_offsets(iy, F.lit(tile_h))))
-        .withColumn("_dx", F.explode(_offsets(ix, F.lit(tile_w))))
-        .withColumn("_ty", F.col("_ty0") + F.col("_dy"))
-        .withColumn("_tx", F.col("_tx0") + F.col("_dx"))
-        .withColumn(
-            "_halo", ((F.col("_dy") != 0) | (F.col("_dx") != 0)).cast("int")
-        )
-        .drop("_ty0", "_tx0", "_dy", "_dx")
-    )
-    return out
 
 
 def apply_stencil(
@@ -99,51 +47,37 @@ def apply_stencil(
     ``xarray_spatial_spark.tiled``), detected by schema.  Output
     format matches the input format.  ``fn`` receives NaN-padded
     dense arrays of shape (tile_h+2r, tile_w+2r) and returns
-    interior-shaped (tile_h, tile_w) arrays — identical kernels on
-    both paths; the tiled path shuffles ~8 bytes/cell instead of
-    ~33 and never touches per-cell rows.  ``tile_h``/``tile_w`` size
-    the long-form path only: a tiled input keeps its own tiles.
-    """
+    interior-shaped (tile_h, tile_w) arrays.  ``tile_h``/``tile_w``
+    size the long-form input's tiles only: a tiled input keeps its
+    own.  A long-form output has one row per input cell, non-finite
+    values NULL."""
     from xarray_spatial_spark import tiled as _tiled
 
     if _tiled.is_tiled(df):
         return _tiled.apply_stencil_tiled(
             df, fn, radius, value_cols=value_cols, out_cols=out_cols,
         )
-    r = radius
-    th, tw = tile_h, tile_w
-    haloed = with_halo(df.select("y", "x", *value_cols), r, th, tw)
-
-    out_schema = "y int, x int, " + ", ".join(f"{c} double" for c in out_cols)
-    vcols = list(value_cols)
+    if radius > min(tile_h, tile_w):
+        raise ValueError(
+            f"radius {radius} exceeds tile size ({tile_h}x{tile_w}); "
+            "use larger tiles (dask mirror: depth <= chunk size)"
+        )
+    r = int(radius)
+    bands = list(value_cols)
     ocols = list(out_cols)
+    present = _tiled.PRESENT
 
-    def _run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = int(key[0]), int(key[1])
-        y0 = ty * th - r
-        x0 = tx * tw - r
-        py = pdf["y"].to_numpy(np.int64) - y0
-        px = pdf["x"].to_numpy(np.int64) - x0
-        arrs = {}
-        for c in vcols:
-            a = np.full((th + 2 * r, tw + 2 * r), np.nan, dtype=np.float64)
-            a[py, px] = pdf[c].to_numpy(np.float64)
-            arrs[c] = a
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", category=RuntimeWarning)
-            outs = fn(arrs)
-        interior = pdf["_halo"].to_numpy() == 0
-        iy = py[interior] - r
-        ix = px[interior] - r
-        res = {"y": pdf["y"].to_numpy()[interior], "x": pdf["x"].to_numpy()[interior]}
-        for c in ocols:
-            res[c] = outs[c][iy, ix]
-        out_pdf = pd.DataFrame(res)
-        for c in ocols:
-            out_pdf[c] = out_pdf[c].astype("float64").where(np.isfinite(out_pdf[c]))
-        return out_pdf
+    def _fn(arrs: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
+        p = arrs[present]
+        return {**fn({c: arrs[c] for c in bands}),
+                present: p[r:p.shape[0] - r, r:p.shape[1] - r]}
 
-    return haloed.groupBy("_ty", "_tx").applyInPandas(_run, schema=out_schema)
+    def _run(tdf: DataFrame) -> DataFrame:
+        return _tiled.apply_stencil_tiled(
+            tdf, _fn, r, value_cols=[*bands, present],
+            out_cols=[*ocols, present])
+
+    return _tiled._via_tiles(df, bands, tile_h, tile_w, _run, ocols)
 
 
 def windows(arr: np.ndarray, kh: int, kw: int) -> np.ndarray:

@@ -33,6 +33,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _with_halo(df: DataFrame, th: int, tw: int) -> DataFrame:
+    """Add (_ty, _tx, _halo) and replicate each tile-border cell to the
+    neighbour tiles whose 1-cell halo holds it (at most 4 copies, pure
+    Column expressions); ``_halo`` = 0 on the owning tile's copy."""
+    ty = F.floor(F.col("y") / th).cast("long")
+    tx = F.floor(F.col("x") / tw).cast("long")
+    iy = F.col("y") - ty * th
+    ix = F.col("x") - tx * tw
+
+    def _offsets(i, size):
+        return F.filter(
+            F.array(F.lit(-1), F.lit(0), F.lit(1)),
+            lambda d: (d == 0) | ((d == -1) & (i < 1)) | ((d == 1) & (i >= size - 1)),
+        )
+
+    return (
+        df.withColumn("_ty0", ty)
+        .withColumn("_tx0", tx)
+        .withColumn("_dy", F.explode(_offsets(iy, F.lit(th))))
+        .withColumn("_dx", F.explode(_offsets(ix, F.lit(tw))))
+        .withColumn("_ty", F.col("_ty0") + F.col("_dy"))
+        .withColumn("_tx", F.col("_tx0") + F.col("_dx"))
+        .withColumn(
+            "_halo", ((F.col("_dy") != 0) | (F.col("_dx") != 0)).cast("int")
+        )
+        .drop("_ty0", "_tx0", "_dy", "_dx")
+    )
+
+
 def _fused_label_geometry(
     raster: DataFrame, conn: int, value_col: str, th: int, tw: int
 ) -> DataFrame:
@@ -54,11 +83,10 @@ def _fused_label_geometry(
       1 — directed boundary segment (la = own label, corners x1..y2);
       2 — per-label metadata (la, v);
       3 — border roster: la = own cell key, lb = own label."""
-    from xarray_spatial_spark.operators.halo import with_halo
     from xarray_spatial_spark.operators.regions import _KEY, _tile_ccl
 
     src = raster.select("y", "x", value_col)
-    haloed = with_halo(src, 1, th, tw)
+    haloed = _with_halo(src, th, tw)
 
     def _one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ty, tx = int(key[0]), int(key[1])

@@ -247,8 +247,9 @@ def nearest_ring(
     target_id: str = "target_id",
 ) -> DataFrame:
     """The ``ring`` tier: ``knn_ring_join`` at the zoom whose cells span
-    ``max_distance`` (meters for great-circle, 111,320 to the degree),
-    which must be finite and positive.  k > 1: its (point_id, target_id, dist,
+    ``max_distance`` (meters for great-circle, ``EARTH_RADIUS * pi /
+    180`` = 111,319.49 to the degree of arc), which must be finite and
+    positive.  k > 1: its (point_id, target_id, dist,
     knn_rank, _tx, _ty[, _tpay]) rows within ``max_distance``.
 
     k=1: ``points`` with the same four columns as ``nearest_broadcast``
@@ -267,7 +268,8 @@ def nearest_ring(
             "radius cannot be ring-pruned (the reference's own global path "
             "has the same scaling caveat, xrspatial/proximity.py:713-720)."
         )
-    md_deg = max_distance / (111320.0 if metric.upper() == "GREAT_CIRCLE" else 1.0)
+    md_deg = max_distance / (
+        EARTH_RADIUS * math.pi / 180.0 if metric.upper() == "GREAT_CIRCLE" else 1.0)
     key = F.struct(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
     pts, tgt, pid, tid = points, targets, point_id, target_id
     if k == 1:
@@ -536,13 +538,18 @@ def knn_ring_join(
     ``lat ± max_distance_deg`` (tile_y is monotone in lat, so those
     two rows bound every target within the radius — no cos()
     approximation, no |lat| restriction), widened per point via
-    ``grid.neighbors_span``.  A per-point candidate-cell budget of
+    ``grid.neighbors_span``.  The horizontal span is the radius in
+    degrees, except for ``GREAT_CIRCLE``, where a radius of t degrees
+    of arc spans up to asin(sin t / cos lat) degrees of longitude
+    (every longitude once the cap reaches a pole).  A per-point
+    candidate-cell budget of
     4096 guards the polar blow-up (thin cells): beyond it the call
     raises with the zoom to use instead.  Points whose ring holds no
     targets are left out (caller widens the ring or falls back to
     ``nearest_broadcast``), and so are points and targets without
     finite coordinates: they have no grid cell."""
     r = ring
+    great_circle = metric.upper() == "GREAT_CIRCLE"
     finite = (F.abs(F.col(x_col)) < math.inf) & (F.abs(F.col(y_col)) < math.inf)
     points, targets = points.filter(finite), targets.filter(finite)
 
@@ -554,13 +561,22 @@ def knn_ring_join(
         if max_distance_deg is None:
             return pd.Series(list(grid.neighbors_disk(cells, r)))
         span = 360.0 / (1 << zoom)  # cell lon-span in degrees
-        rx = max(r, int(np.ceil(max_distance_deg / span)))
+        dlon = np.full(len(la), float(max_distance_deg))
+        if great_circle:
+            # a cap of radius t spans asin(sin t / cos p) degrees of
+            # longitude, p the largest |lat| within t of the point;
+            # once the cap reaches the pole it spans every longitude
+            p = np.radians(np.minimum(np.abs(la) + max_distance_deg, 90.0))
+            ratio = np.sin(np.radians(max_distance_deg)) / np.cos(p)
+            dlon = np.where(ratio < 1.0,
+                            np.degrees(np.arcsin(np.minimum(ratio, 1.0))), 180.0)
+        rx = np.maximum(r, np.ceil(dlon / span)).astype(np.int64)
         _, yt = grid.lnglat_to_tile(lo, la, zoom)
         _, ty_top = grid.lnglat_to_tile(lo, la + max_distance_deg, zoom)
         _, ty_bot = grid.lnglat_to_tile(lo, la - max_distance_deg, zoom)
         up = np.maximum(yt - ty_top, r)
         dn = np.maximum(ty_bot - yt, r)
-        ncells = (2 * rx + 1) * (up + dn + 1)
+        ncells = np.minimum(2 * rx + 1, 1 << zoom) * (up + dn + 1)
         if ncells.max() > 4096:
             raise ValueError(
                 f"knn_ring_join: a point near lat {la[int(np.argmax(ncells))]:.2f} "
@@ -570,12 +586,11 @@ def knn_ring_join(
                 f"~{int(np.ceil(np.log2(ncells.max() / 4096) / 2))} levels"
             )
         out = np.empty(len(cells), dtype=object)
-        key = up * (int(dn.max()) + 1) + dn
-        for kv in np.unique(key):
-            idx = np.flatnonzero(key == kv)
-            rect = grid.neighbors_span(
-                cells[idx], rx, int(up[idx[0]]), int(dn[idx[0]])
-            )
+        spans, key = np.unique(np.stack([rx, up, dn], 1), axis=0,
+                               return_inverse=True)
+        for g, (gx, gu, gd) in enumerate(spans.tolist()):
+            idx = np.flatnonzero(key.ravel() == g)
+            rect = grid.neighbors_span(cells[idx], gx, gu, gd)
             for j, i in enumerate(idx):
                 out[i] = rect[j]
         return pd.Series(list(out))

@@ -3,24 +3,25 @@
 Reference: xrspatial/zonal.py:1406-1640 (`_area_connectivity`: two-pass
 scan with label merging, 4/8 connectivity, NaN==NaN counts as equal).
 
-Distributed plan (SURVEY §7 "hard tier"):
+One distributed plan, ``regions_tiled`` (SURVEY §7 "hard tier"); the
+long-form ``regions`` runs it through ``tiled._via_tiles``:
 
-1. **Per-tile CCL** (applyInPandas, no halo): every cell starts with a
-   globally-unique key ``y * 2^32 + x``; vectorized min-label
+1. **Per-tile CCL** (map-side, no shuffle): every cell starts with a
+   globally-unique key ``y * 2^32 + x``; run-based min-label
    relaxation runs to fixpoint inside the tile.  Intra-tile regions
    are exact after this pass.
-2. **Boundary edges** (one halo pass): tiles see neighbor border cells
-   via with_halo(1); equal-valued adjacent (interior, halo) label
-   pairs are emitted as union edges.  Edge count is O(tile perimeter
-   cells), tiny next to the raster.
+2. **Boundary edges** (one perimeter-scale shuffle): each tile ships
+   its 1-wide border strips to the shared boundary; equal-valued
+   adjacent label pairs across it are emitted as union edges.  Edge
+   count is O(tile perimeter cells), tiny next to the raster.
 3. **Driver union-find** over the collected edges (union by min key,
-   path compression) -> broadcast label->root map; one broadcast join
-   relabels.  Min-key roots are then dense-ranked (0-based) in
+   path compression); min-key roots are dense-ranked (0-based) in
    scan order — the same numbering order as the reference's row-major
-   first-encounter labels.
+   first-encounter labels — and one broadcast lookup relabels every
+   tile.  Above ``MAX_DRIVER_ROSTER`` labels the finish is
+   distributed.
 
-Two shuffles + one tiny collect, independent of region shape; no
-iterative multi-job fixpoint because all transitivity lives in the
+No iterative multi-job fixpoint because all transitivity lives in the
 driver union-find (boundary graphs are small even at 100 TB: edges
 scale with the 1-D perimeter, not the 2-D area).
 """
@@ -30,19 +31,14 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from xarray_spatial_spark.operators.halo import with_halo
 
 _KEY = 1 << 32
 
 
-def _tile_ccl(
-    vals: np.ndarray, keys: np.ndarray, conn: int, y0: int = 0, x0: int = 0
-) -> np.ndarray:
+def _tile_ccl(vals: np.ndarray, keys: np.ndarray, conn: int) -> np.ndarray:
     """Run-based CCL on one dense tile: label horizontal RUNS of equal
     values (scan order), connect runs between adjacent rows with
     vectorized comparisons, then min-label + pointer-jump over the RUN
@@ -117,98 +113,6 @@ def _tile_ccl(
                 lab = l2
     out = start_key[lab][run_id.ravel()].reshape(H, W)
     return np.where(present, out, np.nan)
-
-
-def _tile_label(
-    df: DataFrame, conn: int, value_col: str, th: int, tw: int
-) -> DataFrame:
-    """Pass 1: per-tile CCL -> (y, x, value, _lab) with tile-local
-    labels keyed by each component's minimum scan key (y*2^32+x).
-    NOT persisted — callers with multiple consumers persist."""
-    src = df.select("y", "x", value_col)
-    tiles = src.withColumn("_ty", F.floor(F.col("y") / th).cast("long")).withColumn(
-        "_tx", F.floor(F.col("x") / tw).cast("long")
-    )
-
-    def _label(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = int(key[0]), int(key[1])
-        vals = np.full((th, tw), np.nan)
-        keys = np.full((th, tw), np.nan)
-        py = pdf["y"].to_numpy(np.int64) - ty * th
-        px = pdf["x"].to_numpy(np.int64) - tx * tw
-        v = pdf[value_col].to_numpy(np.float64)
-        vals[py, px] = v
-        # NaN VALUES are legitimate cells (their own class); absent cells
-        # are marked by NaN keys only
-        keys[py, px] = (pdf["y"].to_numpy(np.int64) * _KEY + pdf["x"].to_numpy(np.int64))
-        lab = _tile_ccl(vals, keys, conn, y0=ty * th, x0=tx * tw)
-        return pd.DataFrame(
-            {
-                "y": pdf["y"].to_numpy(),
-                "x": pdf["x"].to_numpy(),
-                value_col: pdf[value_col].to_numpy(),
-                "_lab": lab[py, px].astype(np.int64),
-            }
-        )
-
-    return tiles.groupBy("_ty", "_tx").applyInPandas(
-        _label, schema=f"y int, x int, {value_col} double, _lab long"
-    )
-
-
-def _boundary_pass(
-    labeled: DataFrame,
-    conn: int,
-    value_col: str,
-    th: int,
-    tw: int,
-) -> DataFrame:
-    """Pass 2: ONE haloed per-tile pass over the CCL labels emitting
-    cross-tile label equivalence edges ``(la, lb)``.  Callers
-    pre-filter to tile-border rows — cross-tile edges cannot involve
-    interior cells, so the halo exchange carries perimeter rows only.
-    (polygonize has its own fully-fused single pass that also emits
-    geometry: polygonize._fused_label_geometry.)"""
-    haloed = with_halo(labeled, 1, th, tw)
-
-    def _edges(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = int(key[0]), int(key[1])
-        H, W = th + 2, tw + 2
-        vals = np.full((H, W), np.nan)
-        labs = np.full((H, W), np.nan)
-        halo = np.ones((H, W), dtype=bool)
-        py = pdf["y"].to_numpy(np.int64) - (ty * th - 1)
-        px = pdf["x"].to_numpy(np.int64) - (tx * tw - 1)
-        vals[py, px] = pdf[value_col].to_numpy(np.float64)
-        labs[py, px] = pdf["_lab"].to_numpy(np.float64)
-        halo[py, px] = pdf["_halo"].to_numpy() == 1
-
-        def eq(a, b):
-            return (a == b) | (np.isnan(a) & np.isnan(b))
-
-        out_a, out_b = [], []
-        shifts = [(0, 1), (1, 0)] + ([(1, 1), (1, -1)] if conn == 8 else [])
-        for dy, dx in shifts:
-            sa = (slice(dy, None) if dy else slice(None),
-                  slice(dx, None) if dx > 0 else slice(None, dx or None))
-            sb = (slice(None, -dy) if dy else slice(None),
-                  slice(None, -dx or None) if dx > 0 else slice(-dx, None))
-            la, lb = labs[sa], labs[sb]
-            cross = halo[sa] != halo[sb]  # one side interior, one side halo
-            m = eq(vals[sa], vals[sb]) & ~np.isnan(la) & ~np.isnan(lb) & cross
-            if m.any():
-                out_a.append(la[m].astype(np.int64))
-                out_b.append(lb[m].astype(np.int64))
-        if out_a:
-            a = np.concatenate(out_a)
-            b = np.concatenate(out_b)
-            lo, hi = np.minimum(a, b), np.maximum(a, b)
-            return pd.DataFrame({"la": lo, "lb": hi}).drop_duplicates()
-        return pd.DataFrame({"la": pd.Series(dtype="int64"),
-                             "lb": pd.Series(dtype="int64")})
-
-    return haloed.groupBy("_ty", "_tx").applyInPandas(
-        _edges, schema="la long, lb long")
 
 
 def _union_find(edges) -> list[tuple[int, int]]:
@@ -336,77 +240,19 @@ def regions(
     tile_h: int = 256,
     tile_w: int = 256,
 ) -> DataFrame:
-    """Label connected equal-valued regions; output adds ``out_col``
-    with a dense 0-based region id in scan order."""
-    if neighborhood not in (4, 8):
-        raise ValueError("neighborhood must be 4 or 8")
-    conn = neighborhood
-    th, tw = tile_h, tile_w
+    """Label connected equal-valued regions of a long-form raster;
+    output ``(y, x, value_col, out_col)`` adds a dense 0-based region
+    id in scan order.  Runs :func:`regions_tiled` through the long-form
+    adapter (``tiled._via_tiles``): absent cells carry a NaN presence
+    band, so they join no region, and every input cell comes back with
+    its region.  NULL values are one class, like NaN; the value column
+    passes through with non-finite values NULL."""
+    from xarray_spatial_spark import tiled as tl
 
-    # the CCL pass feeds the boundary collect and the final relabel
-    # join — persist it once instead of re-running the per-tile
-    # labeling per action
-    labeled = _tile_label(df, conn, value_col, th, tw).persist()
-
-    # cross-tile equivalences only involve cells on a tile BORDER, so
-    # the halo pass runs over the perimeter rows only — the pass-2
-    # shuffle carries ~(2/th + 2/tw) of the cells instead of all of
-    # them (the long-form analog of regions_tiled's strip exchange).
-    # The label roster comes from a distinct over the labeled cells
-    # (map-side partial combine -> label-scale shuffle), and ONE
-    # collect serves both; duplicate edges (each boundary emits its
-    # pair from both sides) are harmless to the union-find.
-    border = labeled.filter(
-        F.pmod(F.col("y"), F.lit(th)).isin(0, th - 1)
-        | F.pmod(F.col("x"), F.lit(tw)).isin(0, tw - 1)
-    )
-    edges_df = _boundary_pass(border, conn, value_col, th, tw)
-    tagged = edges_df.select(
-        F.lit(0).alias("kind"), "la", "lb"
-    ).unionByName(
-        labeled.select(
-            F.lit(2).alias("kind"), F.col("_lab").alias("la"),
-            F.lit(0).alias("lb"),
-        ).distinct()
-    )
-    # roster-size guard: collect at most cap+1 rows (CollectLimit —
-    # driver memory is bounded no matter the raster); a salt-and-
-    # pepper input (~1 region/cell) overflows the cap and dispatches
-    # to the fully distributed finish instead of an O(regions) dict
-    spark = df.sparkSession
-    cap = MAX_DRIVER_ROSTER
-    rows = tagged.limit(cap + 1).collect()
-    if len(rows) > cap:
-        mapping = _distributed_region_map(
-            edges_df.select("la", "lb"),
-            labeled.select("_lab").distinct(),
-            out_col,
-        )
-        return (
-            labeled.join(mapping, "_lab")
-            .select("y", "x", value_col, out_col)
-        )
-    equiv = [r for r in rows if r["kind"] == 0]
-    labs = [r["la"] for r in rows if r["kind"] == 2]
-
-    # label-count-scale driver finish (same pattern as polygonize):
-    # union-find, dense 0-based ids in scan order (root key = min
-    # y*2^32+x of region, roots sort by it), then ONE broadcast
-    # relabel join lab -> region.  The broadcast LUT existed in the
-    # prior shape too (root map + ranked map); this collapses ~4 rank
-    # jobs and the second join into the collect already being paid.
-    root_of = dict(_union_find(equiv))
-    region_of = {rt: i for i, rt in
-                 enumerate(sorted({root_of.get(l, l) for l in labs}))}
-    lab_region = [
-        (int(l), float(region_of[root_of.get(l, l)])) for l in labs
-    ]
-    map_df = spark.createDataFrame(
-        lab_region, schema=f"_lab long, {out_col} double"
-    )
-    return (
-        labeled.join(F.broadcast(map_df), "_lab")
-        .select("y", "x", value_col, out_col)
+    return tl._via_tiles(
+        df, [value_col], tile_h, tile_w,
+        lambda tdf: regions_tiled(tdf, neighborhood, value_col, out_col),
+        [value_col, out_col], keep=out_col,
     )
 
 
@@ -426,8 +272,10 @@ def regions_tiled(
 
     1. per-tile CCL (pointer-jumping min-label) adds a ``lab`` band of
        global ``y*2^32+x`` keys (float64 exact for rasters under 2^20
-       rows, same bound as the long-form path) and a ``labset`` column
-       (the tile's distinct labels).
+       rows) and a ``labset`` column (the tile's distinct labels).  A
+       ``tiled.PRESENT`` band, when the frame has one (the long-form
+       adapter adds it), marks the cells that exist: the others get a
+       NaN label, join no region and come back NaN.
     2. perimeter-only boundary compare: each tile ships its 1-wide
        border strips (``tiled._strip_rows``: JVM substrings of the
        stored perimeter blobs — the shuffle is ~0.8%% of raster bytes,
@@ -438,9 +286,7 @@ def regions_tiled(
        ``labset`` lists) builds the dense scan-order rank; ONE
        broadcast lookup array relabels every tile map-side.
 
-    Output: tiled raster with bands (value_col, out_col).  Matches
-    ``regions`` exactly (tests: untile(regions_tiled(tile(x))) ==
-    regions(x))."""
+    Output: tiled raster with bands (value_col, out_col)."""
     if neighborhood not in (4, 8):
         raise ValueError("neighborhood must be 4 or 8")
     conn = neighborhood
@@ -452,10 +298,11 @@ def regions_tiled(
     # over the raster.
     out_schema = tl.tiled_schema([value_col, "lab"]) + ", labset array<long>"
     labset_type = tl._arrow_schema_of(out_schema).field("labset").type
+    bands = [value_col] + [tl.PRESENT] * (tl.PRESENT in tdf.columns)
 
     def _pass1(batches):
         for rb in batches:
-            for meta, arrs in tl._tile_rows(rb, [value_col]):
+            for meta, arrs in tl._tile_rows(rb, bands):
                 # value band keeps its stored dtype (float32 rasters
                 # stay 4 B/cell through the persisted pass and the
                 # strip exchange); only lab needs float64 key exactness
@@ -466,9 +313,11 @@ def regions_tiled(
                 xx = (np.arange(w, dtype=np.float64) + x0)[None, :]
                 keys = yy * float(_KEY) + xx
                 # NaN VALUES are legitimate cells (their own class);
-                # tiles are dense, so every cell is present
-                lab = _tile_ccl(vals, keys, conn, y0=y0, x0=x0)
-                labset = pa.array([np.unique(lab).astype(np.int64)],
+                # a NaN key marks an absent cell
+                if tl.PRESENT in arrs:
+                    keys = np.where(np.isnan(arrs[tl.PRESENT]), np.nan, keys)
+                lab = _tile_ccl(vals, keys, conn)
+                labset = pa.array([np.unique(lab[~np.isnan(lab)]).astype(np.int64)],
                                   labset_type)
                 yield tl._tile_batch(
                     meta,
@@ -477,7 +326,7 @@ def regions_tiled(
                     extra={"labset": labset},
                 )
 
-    labeled = tl._select(tdf, [value_col]).mapInArrow(_pass1, schema=out_schema)
+    labeled = tl._select(tdf, bands).mapInArrow(_pass1, schema=out_schema)
     labeled = labeled.persist()
 
     # ---- pass 2: PERIMETER-ONLY boundary compare ---------------------
@@ -563,8 +412,9 @@ def regions_tiled(
                     pa_.append(la[1:][m2]); pb_.append(lb[:-1][m2])
                     m3 = eq(va[:-1], vb[1:])
                     pa_.append(la[:-1][m3]); pb_.append(lb[1:][m3])
-                A = np.concatenate(pa_).astype(np.int64)
-                B = np.concatenate(pb_).astype(np.int64)
+                A, B = np.concatenate(pa_), np.concatenate(pb_)
+                both = ~(np.isnan(A) | np.isnan(B))  # absent cells pair nothing
+                A, B = A[both].astype(np.int64), B[both].astype(np.int64)
                 if len(A):
                     pair = np.unique(  # per-boundary dedup only
                         np.stack([np.minimum(A, B), np.maximum(A, B)], 1),

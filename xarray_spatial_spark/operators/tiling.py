@@ -8,9 +8,10 @@ exchange, manifests, and skew accounting.
 
 Two paths produce identical assignments:
 
-- ``assign_cells``       — Arrow-batched pandas UDF; vectorized numpy
-  bit-interleave (grid.morton_encode).  Used in production because the
-  packed id carries zoom + supports O(1) parent/ring ops downstream.
+- ``assign_cells``       — JVM-native Morton bit-interleave
+  (grid.cell_col), bit-identical to numpy ``grid.cell_of``.  Used in
+  production because the packed id carries zoom + supports O(1)
+  parent/ring ops downstream.
 - ``assign_cells_flat``  — pure Column expressions (``xt * 2^z + yt``),
   JVM-side/codegen, SQL-parity with any ANSI oracle.  Same tile, no
   Morton packing.
@@ -25,7 +26,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from xarray_spatial_spark import grid
 
@@ -37,55 +37,28 @@ def _check_zoom(zoom: int) -> None:
         raise ValueError(f"zoom must be in [0, {grid.MAX_ZOOM}], got {zoom}")
 
 
-def cell_udf(zoom: int):
-    _check_zoom(zoom)
-
-    @F.pandas_udf(T.LongType())
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(grid.cell_of(lon.to_numpy(), lat.to_numpy(), zoom))
-
-    return _cell
-
-
-def parent_udf(parent_zoom: int):
-    _check_zoom(parent_zoom)
-
-    @F.pandas_udf(T.LongType())
-    def _parent(cell: pd.Series) -> pd.Series:
-        return pd.Series(grid.parent(cell.to_numpy(), parent_zoom))
-
-    return _parent
-
-
 def assign_cells(
     df: DataFrame,
     zoom: int,
     tile_zoom: int | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    use_jvm: bool = True,
 ) -> DataFrame:
     """Add ``cell_id`` (at ``zoom``) and, if requested, ``tile_id``
     (ancestor at ``tile_zoom``).
 
-    Default path is fully JVM-native (grid.cell_col — codegen'd bit
-    ops, no Python worker round-trip: measured ~2x the throughput of
-    the Arrow-UDF path on wide rows because non-UDF columns never
-    queue behind the Python stage).  ``use_jvm=False`` switches to the
-    pandas-UDF twin, kept for parity testing and as the template for
-    UDF-only environments."""
-    if use_jvm:
-        out = df.withColumn(
-            "cell_id", grid.cell_col(F.col(lon_col), F.col(lat_col), zoom)
-        )
-        if tile_zoom is not None:
-            out = out.withColumn(
-                "tile_id", grid.parent_col(F.col("cell_id"), zoom, tile_zoom)
-            )
-        return out
-    out = df.withColumn("cell_id", cell_udf(zoom)(F.col(lon_col), F.col(lat_col)))
+    Fully JVM-native (grid.cell_col — codegen'd bit ops, no Python
+    worker round-trip: measured ~2x the throughput of an Arrow-UDF
+    twin on wide rows because non-UDF columns never queue behind a
+    Python stage); bit-identical to numpy ``grid.cell_of`` /
+    ``grid.parent``."""
+    out = df.withColumn(
+        "cell_id", grid.cell_col(F.col(lon_col), F.col(lat_col), zoom)
+    )
     if tile_zoom is not None:
-        out = out.withColumn("tile_id", parent_udf(tile_zoom)(F.col("cell_id")))
+        out = out.withColumn(
+            "tile_id", grid.parent_col(F.col("cell_id"), zoom, tile_zoom)
+        )
     return out
 
 

@@ -736,71 +736,3 @@ def face_col(cell: Column) -> Column:
     """Face 0-5 from the top 3 bits (sign-aware: arithmetic shift then
     mask)."""
     return F.shiftrightunsigned(cell, _FACE_SHIFT).cast("int")
-
-
-def cell_col_jvm(lon: Column, lat: Column, level: int = MAX_LEVEL) -> Column:
-    """PURE-CATALYST S2 encode twin — kept as a documented EXPERIMENT,
-    not the recommended path.  Bit-identical to :func:`cell_col`
-    (pinned in tests), zero Python in the plan, but MEASURED 6-14x
-    SLOWER than the Arrow UDF at 500k rows: the recursive pos/r
-    accumulation references each step's result twice, the expression
-    tree grows past the codegen threshold, and Spark's INTERPRETED
-    projection has no common-subexpression elimination — every step
-    re-evaluates the whole prefix (trig included).  Staged withColumn
-    materialization doesn't help: CollapseProject re-inlines the
-    chain.  Use :func:`cell_col`; this exists so the finding stays
-    reproducible (mercator grid.cell_col codegens fine because its
-    bit math is flat, not recursive)."""
-    if not 0 <= level <= MAX_LEVEL:
-        raise ValueError(f"level must be in [0, {MAX_LEVEL}]")
-    rlon = F.radians(lon)
-    rlat = F.radians(lat)
-    x = F.cos(rlat) * F.cos(rlon)
-    y = F.cos(rlat) * F.sin(rlon)
-    z = F.sin(rlat)
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    face = (
-        F.when((ax >= ay) & (ax >= az), F.when(x >= 0, 0).otherwise(3))
-        .when(ay >= az, F.when(y >= 0, 1).otherwise(4))
-        .otherwise(F.when(z >= 0, 2).otherwise(5))
-    )
-    u = (F.when(face == 0, y / x).when(face == 1, -x / y)
-         .when(face == 2, -x / z).when(face == 3, z / x)
-         .when(face == 4, z / y).otherwise(-y / z))
-    v = (F.when(face == 0, z / x).when(face == 1, z / y)
-         .when(face == 2, -y / z).when(face == 3, y / x)
-         .when(face == 4, -x / y).otherwise(-x / z))
-
-    def st(c):
-        return F.when(c >= 0, 0.5 * F.sqrt(1.0 + 3.0 * c)).otherwise(
-            1.0 - 0.5 * F.sqrt(1.0 - 3.0 * c))
-
-    n = float(1 << MAX_LEVEL)
-    i = F.least(F.greatest(F.floor(st(u) * F.lit(n)), F.lit(0)),
-                F.lit((1 << MAX_LEVEL) - 1)).cast("long")
-    j = F.least(F.greatest(F.floor(st(v) * F.lit(n)), F.lit(0)),
-                F.lit((1 << MAX_LEVEL) - 1)).cast("long")
-    i32 = F.shiftleft(i, 2)
-    j32 = F.shiftleft(j, 2)
-    spread_i = F.array(*[F.lit(int(vv)) for vv in _SPREAD_I])
-    spread_j = F.array(*[F.lit(int(vv)) for vv in _SPREAD_J])
-    lut = F.array(*[F.lit(int(vv)) for vv in _LUT_FWD])
-    r = face.bitwiseAND(F.lit(1))
-    pos = F.lit(0).cast("long")
-    for step in range(7, -1, -1):
-        ni = F.shiftrightunsigned(i32, 4 * step).bitwiseAND(F.lit(15)) \
-            .cast("int")
-        nj = F.shiftrightunsigned(j32, 4 * step).bitwiseAND(F.lit(15)) \
-            .cast("int")
-        ij8 = (F.element_at(spread_i, ni + 1)
-               .bitwiseOR(F.element_at(spread_j, nj + 1)))
-        ent = F.element_at(lut, F.shiftleft(ij8, 2).bitwiseOR(r) + 1)
-        pos = F.shiftleft(pos, 8).bitwiseOR(
-            F.shiftrightunsigned(ent, 2).cast("long"))
-        r = ent.bitwiseAND(F.lit(3))
-    pos = F.shiftrightunsigned(pos, 4)
-    leaf = (F.shiftleft(face.cast("long"), _FACE_SHIFT)
-            .bitwiseOR(F.shiftleft(pos, 1)).bitwiseOR(F.lit(1)))
-    if level == MAX_LEVEL:
-        return leaf
-    return parent_col(leaf, level)

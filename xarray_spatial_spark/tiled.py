@@ -31,11 +31,13 @@ blocks from its siblings and the strips with vectorized numpy slices —
 no per-cell rows, no pandas scatter.  This is the Spark re-plan of dask
 ``map_overlap`` boundary exchange at ~8 bytes/cell instead of ~33.
 
-``operators.halo.apply_stencil`` dispatches here automatically when
-its input carries the tiled schema, so every stencil operator
-(slope/aspect/curvature/hillshade/focal/convolve/hotspots) runs on
-either format with identical kernels and identical results
-(tests/test_tiled.py asserts long==tiled equivalence per op).
+``operators.halo.apply_stencil`` dispatches here when its input
+carries the tiled schema; a long-form input goes through ``_via_tiles``,
+which packs it into full tiles with a presence band, runs the same
+tiled plan and untiles the input's cells.  So every stencil operator
+(slope/aspect/curvature/hillshade/focal/convolve/hotspots) and
+``regions`` have one plan for both formats (tests/test_tiled.py and
+tests/test_regions.py check both against numpy references).
 """
 
 from __future__ import annotations
@@ -188,19 +190,40 @@ def tile(
     """Long-form (y, x, bands...) -> tiled.  One shuffle keyed by tile.
     ``shape`` clips edge tiles; when None it is computed with one tiny
     agg job (max y/x).  ``dtype=np.float32`` halves every downstream
-    byte (stored, shuffled, Arrow-crossed) at float32 precision."""
+    byte (stored, shuffled, Arrow-crossed) at float32 precision.  A
+    cell with a negative ``y`` or ``x`` raises ``ValueError`` naming
+    it: tiled rasters start at (0, 0)."""
     if shape is None:
         row = df.agg(F.max("y").alias("my"), F.max("x").alias("mx")).collect()[0]
         shape = (int(row["my"]) + 1, int(row["mx"]) + 1)
-    H, W = shape
+    return _tile(df, tile_h, tile_w, value_cols, shape, dtype)
+
+
+def _tile(
+    df: DataFrame,
+    tile_h: int,
+    tile_w: int,
+    value_cols: Sequence[str],
+    shape: tuple[int, int] | None,
+    dtype=np.float64,
+) -> DataFrame:
+    """``tile`` without the extent job: ``shape=None`` packs every tile
+    full ``tile_h x tile_w``, NaN where no row lands."""
     bands = list(value_cols)
 
     def _pack(key: tuple, tbl: pa.Table) -> pa.Table:
         ty, tx = key[0].as_py(), key[1].as_py()
-        h = min(tile_h, H - ty * tile_h)
-        w = min(tile_w, W - tx * tile_w)
-        py = tbl.column("y").to_numpy(zero_copy_only=False).astype(np.int64) - ty * tile_h
-        px = tbl.column("x").to_numpy(zero_copy_only=False).astype(np.int64) - tx * tile_w
+        ys = tbl.column("y").to_numpy(zero_copy_only=False).astype(np.int64)
+        xs = tbl.column("x").to_numpy(zero_copy_only=False).astype(np.int64)
+        if ty < 0 or tx < 0:
+            i = int(np.flatnonzero((ys < 0) | (xs < 0))[0])
+            raise ValueError(f"cell (y={ys[i]}, x={xs[i]}) has a negative "
+                             "coordinate; tiled rasters start at (0, 0)")
+        h, w = tile_h, tile_w
+        if shape is not None:
+            h = min(tile_h, shape[0] - ty * tile_h)
+            w = min(tile_w, shape[1] - tx * tile_w)
+        py, px = ys - ty * tile_h, xs - tx * tile_w
         blocks = {}
         for b in bands:
             a = np.full((h, w), np.nan, dtype=dtype)
@@ -251,6 +274,37 @@ def untile(
                 yield pa.RecordBatch.from_pydict(cols)
 
     return _select(tdf, bands).mapInArrow(_unpack, schema=schema)
+
+
+PRESENT = "__present"
+
+
+def _via_tiles(
+    df: DataFrame,
+    value_cols: Sequence[str],
+    tile_h: int,
+    tile_w: int,
+    run: Callable[[DataFrame], DataFrame],
+    out_cols: Sequence[str],
+    keep: str = PRESENT,
+) -> DataFrame:
+    """The long-form adapter: run a tiled operator on a long-form
+    raster.  ``(y, x, value_cols...)`` is packed as float64 into full
+    ``tile_h x tile_w`` tiles (so no extent job) with one more band,
+    ``PRESENT``: 1.0 on every input row, NaN elsewhere.  Absent cells
+    are NaN in every band, so a stencil window sees them exactly as it
+    sees the raster's edge.  ``run`` maps that tiled frame to one whose
+    bands include ``out_cols`` and ``keep``; the result is untiled and
+    the rows where ``keep`` is non-NULL (the input's cells) come back
+    as ``(y int, x int, out_cols double...)``, non-finite values
+    NULL."""
+    bands = list(value_cols)
+    src = df.select("y", "x", *(F.col(c).cast("double").alias(c) for c in bands),
+                    F.lit(1.0).alias(PRESENT))
+    tdf = _tile(src, tile_h, tile_w, [*bands, PRESENT], None)
+    ocols = list(out_cols)
+    return (untile(run(tdf), list(dict.fromkeys([*ocols, keep])))
+            .where(F.col(keep).isNotNull()).select("y", "x", *ocols))
 
 
 # ---------------------------------------------------------------------------
@@ -562,8 +616,8 @@ def apply_stencil_tiled(
     (1 + r(th+tw)/(2*th*tw)) — ~0.2%% halo overhead at r=1, 512x512.
 
     Groups that hold no tile (strips addressed past the raster edge)
-    emit nothing, so domain edges stay NaN, exactly like the long-form
-    path / the reference's NaN boundary
+    emit nothing, so domain edges stay NaN, exactly like the
+    reference's NaN boundary
     (xrspatial/focal.py:70-76 map_overlap boundary=np.nan)."""
     r = int(radius)
     bands = list(value_cols)
