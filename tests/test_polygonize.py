@@ -52,11 +52,11 @@ def test_polygonize_tiling_invariance(spark, tile):
 
 
 def test_polygonize_plan_one_cell_scale_pass(spark):
-    """The fused plan shuffles cell-scale data exactly ONCE: a single
-    haloed applyInPandas (_one) computes CCL + half-edges + segments
-    + metadata + roster together.  A second grouped-pandas kernel
-    would mean the two-shuffle round-3 shape (separate tile CCL then
-    halo pass) crept back."""
+    """Cell rows are shuffled exactly ONCE: the only grouped kernel is
+    ``tiled._tile``'s ``_pack``, which packs them into the tiles that
+    ``regions_tiled`` labels.  Boundary segments come map-side from the
+    labelled tiles, so a grouped-pandas kernel (a cell-row halo pass)
+    would mean a second cell-scale shuffle crept back."""
     import re
 
     import numpy as np
@@ -70,15 +70,17 @@ def test_polygonize_plan_one_cell_scale_pass(spark):
     # count DISTINCT grouped kernels, not node occurrences
     kernels = set(re.findall(
         r"FlatMapGroupsIn(?:Pandas|Arrow) \[[^]]*\], (\w+)\(", plan))
-    assert kernels == {"_one"}, kernels
-    # the ring assembly is a mapInPandas over perimeter rows
-    assert "MapInPandas" in plan or "MapInArrow" in plan
+    assert kernels == {"_pack"}, kernels
+    assert "FlatMapGroupsInPandas" not in plan
+    # segment emission and ring assembly are mapInArrow passes
+    assert "MapInArrow" in plan
 
 
 def test_polygonize_distributed_roster_matches_driver(spark, monkeypatch):
-    """Roster cap (``MAX_DRIVER_ROSTER``) 0 forces the fully distributed finish (join-resolved
-    half-edges, components + two-phase rank, shuffle relabel) — every
-    field must match the driver path, NaN regions included."""
+    """Roster cap (``MAX_DRIVER_ROSTER``) 0 forces ``regions_tiled``'s
+    fully distributed finish (components + two-phase rank, per-tile
+    lookup join) — every field must match the driver path, NaN regions
+    included."""
     rng = np.random.default_rng(11)
     data = rng.integers(0, 3, (13, 17)).astype(float)
     data[data == 2] = np.nan
@@ -104,3 +106,49 @@ def test_polygonize_distributed_roster_matches_driver(spark, monkeypatch):
     monkeypatch.setattr(regions_mod, "MAX_DRIVER_ROSTER", 0)
     got = snap(polygonize(src, tile_h=5, tile_w=7))
     assert got == base
+
+
+def test_polygonize_matches_regions(spark):
+    """Every polygon's (region, value, area) equals regions()'s region
+    id, value class and cell count on the same input: tiles 3/5/256,
+    4- and 8-connectivity, 20%-sparse rows, NaN, NULL and +-inf values.
+    A NaN or NULL class comes back NaN, never NULL, and a non-default
+    value column names the output column."""
+    from xarray_spatial_spark.operators.regions import regions
+
+    rng = np.random.default_rng(16)
+    H, W = 17, 23
+    coarse = rng.integers(0, 6, (H // 3 + 1, W // 3 + 1))
+    cls = np.kron(coarse, np.ones((3, 3), int))[:H, :W]
+    noise = rng.random((H, W)) < 0.15
+    cls[noise] = rng.integers(0, 6, noise.sum())
+    # class -> value; class 3 is NULL, one class with NaN
+    table = [1.0, 2.0, float("nan"), None, float("inf"), float("-inf")]
+    keep = rng.random((H, W)) >= 0.2
+    rows = [(int(y), int(x), table[cls[y, x]]) for y, x in zip(*np.nonzero(keep))]
+
+    def tok(v):
+        return "nan" if v is None or v != v else v
+
+    for tile, conn, col in [(3, 4, "value"), (5, 8, "elev"),
+                            (256, 4, "value"), (256, 8, "value")]:
+        df = spark.createDataFrame(rows, f"y int, x int, {col} double")
+        poly = polygonize(df, conn, col, tile, tile)
+        assert poly.columns == ["region", "n_rings", "exterior", "area", col]
+        prows = poly.collect()
+        assert all(r[col] is not None for r in prows), (tile, conn)
+        got = {r["region"]: (tok(r[col]), r["area"]) for r in prows}
+        want: dict = {}
+        for r in regions(df, conn, col, tile_h=tile, tile_w=tile).collect():
+            v, n = want.get(int(r["region"]), (tok(table[cls[r["y"], r["x"]]]), 0))
+            want[int(r["region"])] = (v, n + 1)
+        assert got == want, (tile, conn)
+
+
+def test_polygonize_negative_cell_raises(spark):
+    """Polygonize packs tiles with ``tiled._tile``, so a negative cell
+    raises naming it, like ``regions`` and ``tile``."""
+    df = spark.createDataFrame([(0, 0, 1.0), (2, -4, 1.0)],
+                               "y int, x int, value double")
+    with pytest.raises(Exception, match=r"ValueError: cell \(y=2, x=-4\)"):
+        polygonize(df, tile_h=4, tile_w=4).collect()

@@ -344,9 +344,9 @@ def test_connected_components_long_chain(spark):
 
 
 def test_grouped_kernels_build_without_eval_type_warning(spark):
-    """The grouped pandas kernels of regions and polygonize annotate
-    their key, so PySpark infers the grouped-map eval type without a
-    UserWarning."""
+    """Building regions and polygonize (whose grouped kernel is
+    ``tiled._tile``'s Arrow pack) raises no UserWarning, e.g. PySpark's
+    eval-type inference warning for an unannotated grouped kernel."""
     import warnings
 
     from xarray_spatial_spark.operators.polygonize import polygonize

@@ -1,223 +1,98 @@
 """Raster -> vector polygonize (reference
 xrspatial/experimental/polygonize.py:1-27 algorithm, :524-613 public).
 
-Distributed plan (SURVEY §7 deferred tier):
+Polygonize is region labelling followed by boundary following, and the
+labelling is the engine's one tiled CCL (SURVEY §7):
 
-1. ONE haloed cell-scale pass (_fused_label_geometry): per-tile CCL
-   plus cross-tile HALF-edges (label, neighbor cell key), directed
-   perimeter segments in corner coordinates (interior-on-the-left),
-   per-label metadata and the tile-border roster together — cell rows
-   are shuffled exactly once,
-2. perimeter-scale finish: driver union-find over the equivalences,
-   scan-order region ids ranked from the metadata, segments
-   relabelled via broadcast, then partition-level ring assembly: walk
-   the directed edges corner-to-corner until closed; the ring with
-   the largest |area| is the exterior, the rest are holes (grouped
-   with their exterior, like the reference).
+1. The long-form rows are packed into full tiles with a presence band
+   (``tiled._tile``, the one cell-scale shuffle) and labelled by
+   :func:`regions.regions_tiled`, so region ids are its dense
+   scan-order ranks (above the driver's label-roster cap its
+   distributed finish runs).
+2. One ``mapInArrow`` over the labelled tiles emits every present
+   cell's directed boundary segments in corner coordinates (interior
+   on the left): a side whose in-tile neighbour has another region or
+   is absent, and every side on the tile's edge.  No halo: a cell
+   never reads another tile.
+3. Segments are repartitioned by region.  Assembly drops a segment
+   whose reverse is in the same region's set, then walks the rest
+   corner-to-corner into closed rings; the ring with the largest
+   |area| is the exterior, the rest are holes (grouped with their
+   exterior, like the reference).
+
+The cancellation is exact.  A directed segment belongs only to the
+region on its left, and exactly one cell emits it.  Its reverse lies in
+the same region only when the cell across the edge is in that region;
+inside a tile the emitter already skips that side, so the reverse pair
+appears only on tile edges.  4-adjacent cells share a region exactly
+when their values are equal (NaN == NaN), for both connectivities, so
+the surviving set is the value-boundary set.
 
 Edge counts are O(region perimeter), so the per-region group is tiny
 relative to region area; ring walking is dict-chasing in Python but
 only over perimeter points.
 
 Output: one row per region —
-  (region, value, n_rings, exterior: array<array<double>> [x, y
-  corner pairs], area: double)   with grid corner coordinates
+  (region, n_rings, exterior: array<array<double>> [x, y corner
+  pairs], area: double, value)   with grid corner coordinates
   (cell (y, x) spans corners (x, y)..(x+1, y+1)).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _with_halo(df: DataFrame, th: int, tw: int) -> DataFrame:
-    """Add (_ty, _tx, _halo) and replicate each tile-border cell to the
-    neighbour tiles whose 1-cell halo holds it (at most 4 copies, pure
-    Column expressions); ``_halo`` = 0 on the owning tile's copy."""
-    ty = F.floor(F.col("y") / th).cast("long")
-    tx = F.floor(F.col("x") / tw).cast("long")
-    iy = F.col("y") - ty * th
-    ix = F.col("x") - tx * tw
-
-    def _offsets(i, size):
-        return F.filter(
-            F.array(F.lit(-1), F.lit(0), F.lit(1)),
-            lambda d: (d == 0) | ((d == -1) & (i < 1)) | ((d == 1) & (i >= size - 1)),
-        )
-
-    return (
-        df.withColumn("_ty0", ty)
-        .withColumn("_tx0", tx)
-        .withColumn("_dy", F.explode(_offsets(iy, F.lit(th))))
-        .withColumn("_dx", F.explode(_offsets(ix, F.lit(tw))))
-        .withColumn("_ty", F.col("_ty0") + F.col("_dy"))
-        .withColumn("_tx", F.col("_tx0") + F.col("_dx"))
-        .withColumn(
-            "_halo", ((F.col("_dy") != 0) | (F.col("_dx") != 0)).cast("int")
-        )
-        .drop("_ty0", "_tx0", "_dy", "_dx")
-    )
+_SEG_SCHEMA = "region long, x1 int, y1 int, x2 int, y2 int, v double"
 
 
-def _fused_label_geometry(
-    raster: DataFrame, conn: int, value_col: str, th: int, tw: int
-) -> DataFrame:
-    """ONE haloed cell-scale pass: per-tile CCL + cross-tile
-    HALF-edges + boundary segments + per-label metadata + border
-    roster, together.
+def _segments(batches: Iterator[pa.RecordBatch], value_col: str,
+              schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """Per labelled tile, the directed boundary segments of its present
+    cells (N, S, W, E sides, each in scan order): a side is emitted when
+    the in-tile neighbour's region differs or is NaN (absent or off the
+    tile), with the cell's region and value."""
+    from xarray_spatial_spark import tiled as tl
 
-    The round-4 rework: the previous shape ran TWO cell-scale
-    shuffles (tile grouping for CCL, then a halo exchange of the
-    LABELS for the boundary pass).  Labels of neighbor tiles cannot
-    exist inside a single pass, so cross-tile equivalences are
-    emitted as half-edges ``(my label, neighbor CELL key)`` and the
-    per-tile BORDER roster ``(cell key, label)`` rides along — both
-    perimeter-scale — letting the driver resolve cell keys to labels
-    with a dict.  Cell rows are shuffled exactly once.
-
-    Output kinds (schema shared with the old geometry pass):
-      0 — half-edge: la = own label, lb = neighbor cell key;
-      1 — directed boundary segment (la = own label, corners x1..y2);
-      2 — per-label metadata (la, v);
-      3 — border roster: la = own cell key, lb = own label."""
-    from xarray_spatial_spark.operators.regions import _KEY, _tile_ccl
-
-    src = raster.select("y", "x", value_col)
-    haloed = _with_halo(src, th, tw)
-
-    def _one(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = int(key[0]), int(key[1])
-        H, W = th + 2, tw + 2
-        vals = np.full((H, W), np.nan)
-        own = np.zeros((H, W), dtype=bool)
-        present = np.zeros((H, W), dtype=bool)
-        py = pdf["y"].to_numpy(np.int64) - (ty * th - 1)
-        px = pdf["x"].to_numpy(np.int64) - (tx * tw - 1)
-        vals[py, px] = pdf[value_col].to_numpy(np.float64)
-        present[py, px] = True
-        own[py, px] = pdf["_halo"].to_numpy() == 0
-
-        # --- per-tile CCL over OWN cells (core window) ---------------
-        core_vals = vals[1:-1, 1:-1]
-        core_own = own[1:-1, 1:-1]
-        keys = np.full((th, tw), np.nan)
-        oy, ox = np.nonzero(core_own)
-        keys[oy, ox] = ((oy + ty * th).astype(np.float64) * float(_KEY)
-                        + (ox + tx * tw))
-        lab_core = _tile_ccl(core_vals, keys, conn)
-        labs = np.full((H, W), np.nan)
-        labs[1:-1, 1:-1] = np.where(core_own, lab_core, np.nan)
-
-        def eq(a, b):
-            return (a == b) | (np.isnan(a) & np.isnan(b))
-
-        # --- half-edges: own cell vs HALO neighbor of equal value ----
-        shifts = [(0, 1), (0, -1), (1, 0), (-1, 0)]
-        if conn == 8:
-            shifts += [(1, 1), (1, -1), (-1, 1), (-1, -1)]
-        he_lab, he_key = [], []
-        halo_cell = present & ~own
-        for dy, dx in shifts:
-            nb = np.roll(np.roll(halo_cell, -dy, axis=0), -dx, axis=1)
-            nv = np.roll(np.roll(vals, -dy, axis=0), -dx, axis=1)
-            # roll wraps; own cells never sit on the padded frame, so
-            # wrapped entries are halo/absent frame cells — excluded
-            # by nb unless genuinely present halo, and a frame cell
-            # can only be reached from a core cell by |dy|,|dx| <= 1
-            m = own & nb & eq(vals, nv)
-            if m.any():
-                my, mx = np.nonzero(m)
-                he_lab.append(labs[my, mx].astype(np.int64))
-                ny = (my - 1) + ty * th + dy
-                nx = (mx - 1) + tx * tw + dx
-                he_key.append(ny * _KEY + nx)
-        he_lab = (np.concatenate(he_lab) if he_lab
-                  else np.array([], np.int64))
-        he_key = (np.concatenate(he_key) if he_key
-                  else np.array([], np.int64))
-
-        # --- border roster: own cells on the tile rim ----------------
-        rim = core_own.copy()
-        rim[1:-1, 1:-1] = False
-        ry, rx = np.nonzero(rim)
-        r_key = ((ry + ty * th) * _KEY + (rx + tx * tw)).astype(np.int64)
-        r_lab = lab_core[ry, rx].astype(np.int64)
-
-        # --- segments + metadata over own cells ----------------------
-        cy, cx = np.nonzero(core_own)
-        pyy, pxx = cy + 1, cx + 1           # padded coords
-        ys = cy + ty * th
-        xs = cx + tx * tw
-        lc_lab = labs[pyy, pxx]
-        lc_val = vals[pyy, pxx]
-
-        def boundary(ny, nx):
-            return ~present[ny, nx] | ~eq(vals[ny, nx], lc_val)
-
-        segs = []
-        m = boundary(pyy - 1, pxx)    # N
-        segs.append((lc_lab[m], xs[m] + 1, ys[m], xs[m], ys[m]))
-        m = boundary(pyy + 1, pxx)    # S
-        segs.append((lc_lab[m], xs[m], ys[m] + 1, xs[m] + 1, ys[m] + 1))
-        m = boundary(pyy, pxx - 1)    # W
-        segs.append((lc_lab[m], xs[m], ys[m], xs[m], ys[m] + 1))
-        m = boundary(pyy, pxx + 1)    # E
-        segs.append((lc_lab[m], xs[m] + 1, ys[m] + 1, xs[m] + 1, ys[m]))
-        g_lab = np.concatenate([a[0] for a in segs]).astype(np.int64)
-        gx1 = np.concatenate([a[1] for a in segs]).astype(np.int32)
-        gy1 = np.concatenate([a[2] for a in segs]).astype(np.int32)
-        gx2 = np.concatenate([a[3] for a in segs]).astype(np.int32)
-        gy2 = np.concatenate([a[4] for a in segs]).astype(np.int32)
-
-        u_lab, u_first = np.unique(lc_lab.astype(np.int64),
-                                   return_index=True)
-        z32 = lambda n: np.zeros(n, dtype=np.int32)  # noqa: E731
-        parts = [
-            pd.DataFrame({
-                "kind": np.zeros(len(he_lab), dtype=np.int32),
-                "la": he_lab, "lb": he_key,
-                "x1": z32(len(he_lab)), "y1": z32(len(he_lab)),
-                "x2": z32(len(he_lab)), "y2": z32(len(he_lab)),
-                "v": np.full(len(he_lab), np.nan),
-            }),
-            pd.DataFrame({
-                "kind": np.ones(len(g_lab), dtype=np.int32), "la": g_lab,
-                "lb": np.zeros(len(g_lab), dtype=np.int64),
-                "x1": gx1, "y1": gy1, "x2": gx2, "y2": gy2,
-                "v": np.full(len(g_lab), np.nan),
-            }),
-            pd.DataFrame({
-                "kind": np.full(len(u_lab), 2, dtype=np.int32),
-                "la": u_lab, "lb": np.zeros(len(u_lab), dtype=np.int64),
-                "x1": z32(len(u_lab)), "y1": z32(len(u_lab)),
-                "x2": z32(len(u_lab)), "y2": z32(len(u_lab)),
-                "v": lc_val[u_first],
-            }),
-            pd.DataFrame({
-                "kind": np.full(len(r_key), 3, dtype=np.int32),
-                "la": r_key, "lb": r_lab,
-                "x1": z32(len(r_key)), "y1": z32(len(r_key)),
-                "x2": z32(len(r_key)), "y2": z32(len(r_key)),
-                "v": np.full(len(r_key), np.nan),
-            }),
-        ]
-        return pd.concat(parts, ignore_index=True)
-
-    schema = ("kind int, la long, lb long, "
-              "x1 int, y1 int, x2 int, y2 int, v double")
-    return haloed.groupBy("_ty", "_tx").applyInPandas(_one, schema=schema)
+    for rb in batches:
+        for meta, arrs in tl._tile_rows(rb, [value_col, "region"]):
+            reg = arrs["region"]
+            pad = np.full((reg.shape[0] + 2, reg.shape[1] + 2), np.nan)
+            pad[1:-1, 1:-1] = reg
+            cy, cx = np.nonzero(~np.isnan(reg))
+            lab = reg[cy, cx]
+            val = arrs[value_col][cy, cx]
+            ys = cy + meta["ty"] * meta["th"]
+            xs = cx + meta["tx"] * meta["tw"]
+            parts = []
+            # per side: neighbour offset, then corner offsets of
+            # (x1, y1, x2, y2) from the cell's (x, y)
+            for dy, dx, (a, b, c, d) in ((-1, 0, (1, 0, 0, 0)),   # N
+                                         (1, 0, (0, 1, 1, 1)),    # S
+                                         (0, -1, (0, 0, 0, 1)),   # W
+                                         (0, 1, (1, 1, 1, 0))):   # E
+                m = pad[cy + 1 + dy, cx + 1 + dx] != lab  # NaN differs
+                parts.append((lab[m], xs[m] + a, ys[m] + b, xs[m] + c,
+                              ys[m] + d, val[m]))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(col), f.type)
+                 for col, f in zip(zip(*parts), schema)], schema=schema)
 
 
-
-def _assemble_one(region: int, pdf: pd.DataFrame) -> dict:
-    """Walk directed segments corner-to-corner into closed rings."""
+def _assemble_one(region: int, x1, y1, x2, y2) -> dict:
+    """Cancel reverse pairs, then walk the directed segments
+    corner-to-corner into closed rings."""
+    segs = list(zip(x1, y1, x2, y2))
+    have = set(segs)
     # successor map: corner -> list of outgoing segments
     succ: dict = {}
-    for x1, y1, x2, y2 in zip(pdf["x1"], pdf["y1"], pdf["x2"], pdf["y2"]):
-        succ.setdefault((int(x1), int(y1)), []).append((int(x2), int(y2)))
+    for a, b, c, d in segs:
+        if (c, d, a, b) not in have:
+            succ.setdefault((a, b), []).append((c, d))
     rings = []
     while succ:
         start = next(iter(succ))
@@ -258,23 +133,36 @@ def _assemble_one(region: int, pdf: pd.DataFrame) -> dict:
     }
 
 
-def _assemble_partition(batches):
+def _assemble_partition(batches: Iterator[pa.RecordBatch], schema: pa.Schema
+                        ) -> Iterator[pa.RecordBatch]:
     """Partition-level assembly — one Python pass over the whole
-    partition instead of per-group applyInPandas (regions are numerous
+    partition instead of a grouped UDF per region (regions are numerous
     and tiny; groups-per-task overhead dominated the runtime).
 
     The partition's Arrow batches are concatenated BEFORE grouping: a
-    region's edges may straddle a 64k-row batch boundary, and a split
-    region would otherwise be assembled twice.  Edge rows are
-    perimeter-scale, so a whole partition fits comfortably."""
-    pdfs = [p for p in batches if len(p)]
-    if not pdfs:
+    region's edges may straddle a batch boundary, and a split region
+    would otherwise be assembled twice.  Edge rows are perimeter-scale,
+    so a whole partition fits comfortably.  The output stays Arrow, so
+    a NaN value comes back NaN (a pandas frame would turn it NULL)."""
+    rbs = [rb for rb in batches if rb.num_rows]
+    if not rbs:
         return
-    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-    out = []
-    for region, grp in pdf.groupby("region", sort=False):
-        out.append(_assemble_one(int(region), grp))
-    yield pd.DataFrame(out)
+    tbl = pa.Table.from_batches(rbs)
+    region = tbl.column("region").to_numpy()
+    order = np.argsort(region, kind="stable")  # keeps emission order
+    cols = {c: tbl.column(c).to_numpy()[order].tolist()
+            for c in ("x1", "y1", "x2", "y2")}
+    region, v = region[order], tbl.column("v").to_numpy()[order]
+    starts = np.flatnonzero(np.r_[True, region[1:] != region[:-1]])
+    ends = np.r_[starts[1:], len(region)]
+    out = {f.name: [] for f in schema}
+    for s, e in zip(starts.tolist(), ends.tolist()):
+        row = _assemble_one(int(region[s]),
+                            *(cols[c][s:e] for c in ("x1", "y1", "x2", "y2")))
+        row[schema[-1].name] = float(v[s])
+        for k, val in row.items():
+            out[k].append(val)
+    yield pa.RecordBatch.from_pydict(out, schema=schema)
 
 
 def polygonize(
@@ -285,126 +173,29 @@ def polygonize(
     tile_w: int = 256,
 ) -> DataFrame:
     """Vectorize connected equal-valued regions.  Returns one row per
-    region: (region, value, n_rings, exterior ring corners, area).
+    region: (region, n_rings, exterior ring corners, area, value_col).
 
-    Fused plan: the cell-scale data is shuffled exactly ONCE —
-    :func:`_fused_label_geometry` computes per-tile CCL, cross-tile
-    half-edges, boundary segments and label metadata in a single
-    haloed pass (the round-2 shape paid two halo passes; round 3 got
-    it to two cell-scale shuffles; round 4 to one).  Everything after
-    is perimeter-scale: the driver resolves half-edge cell keys
-    through the border roster, union-finds, ranks scan-order region
-    ids from the metadata, and the segments relabel through a
-    broadcast map."""
-    if neighborhood not in (4, 8):
-        raise ValueError("neighborhood must be 4 or 8")
-    from xarray_spatial_spark.operators.regions import _union_find
+    One labelled-tile pass: ``(y, x, value_col)`` is packed into full
+    ``tile_h x tile_w`` tiles with a presence band and labelled by
+    :func:`regions.regions_tiled` (region ids are its scan-order
+    ranks); each labelled tile emits its cells' boundary segments with
+    no halo, and the per-region assembly cancels the reverse pairs the
+    tile edges leave before walking the rings.  NULL values are one
+    class with NaN and come back NaN.  A cell with a negative ``y`` or
+    ``x`` raises ``ValueError`` naming it: tiled rasters start at
+    (0, 0)."""
+    from xarray_spatial_spark import tiled as tl
+    from xarray_spatial_spark.operators.regions import regions_tiled
 
-    spark = raster.sparkSession
-    fused = _fused_label_geometry(
-        raster, neighborhood, value_col, tile_h, tile_w
-    ).persist()
-
-    # ONE collect for half-edges, metadata AND the border roster
-    # (kinds 0/2/3 — all perimeter-scale); segments (kind 1) stay
-    # distributed.  Half-edges carry (label, neighbor CELL key); the
-    # roster maps border cell keys to labels, so edge resolution is a
-    # driver dict lookup.  Duplicate edges (each side emits its half)
-    # are harmless to the union-find.
-    # roster-size guard (same pattern as regions.regions): collect at
-    # most cap+1 rows; a salt-and-pepper raster overflows and takes
-    # the fully distributed finish instead of O(regions) driver dicts
-    from xarray_spatial_spark.operators.regions import MAX_DRIVER_ROSTER
-
-    cap = MAX_DRIVER_ROSTER
-    rows = fused.filter(F.col("kind") != 1).select(
-        "kind", "la", "lb", "v").limit(cap + 1).collect()
-    if len(rows) > cap:
-        map_rel, vals_rel = _region_map_distributed(fused, value_col)
-        geom = (
-            fused.filter(F.col("kind") == 1)
-            .select("la", "x1", "y1", "x2", "y2")
-            .join(map_rel, "la")  # label-scale: shuffle join
-            .select("region", "x1", "y1", "x2", "y2")
-        )
-        polys = geom.repartition("region").mapInPandas(
-            _assemble_partition,
-            schema="region long, n_rings int, "
-                   "exterior array<array<double>>, area double",
-        )
-        return polys.join(vals_rel, "region")
-    roster = {r["la"]: r["lb"] for r in rows if r["kind"] == 3}
-    equiv = [
-        {"la": r["la"], "lb": roster[r["lb"]]}
-        for r in rows
-        if r["kind"] == 0
-    ]
-    meta_rows = [r for r in rows if r["kind"] == 2]
-    root_of = dict(_union_find(equiv))
-    root_val: dict = {}
-    for r in meta_rows:
-        root_val.setdefault(root_of.get(r["la"], r["la"]), r["v"])
-    region_of = {root: i for i, root in enumerate(sorted(root_val))}
-    lab_region = [
-        (int(r["la"]), region_of[root_of.get(r["la"], r["la"])])
-        for r in meta_rows
-    ]
-    map_df = spark.createDataFrame(lab_region, schema="la long, region long")
-    vals = spark.createDataFrame(
-        [(region_of[rt], float('nan') if v is None else float(v))
-         for rt, v in root_val.items()],
-        schema=f"region long, {value_col} double",
-    )
-
-    geom = (
-        fused.filter(F.col("kind") == 1)
-        .select("la", "x1", "y1", "x2", "y2")
-        .join(F.broadcast(map_df), "la")
-        .select("region", "x1", "y1", "x2", "y2")
-    )
-    polys = geom.repartition("region").mapInPandas(
-        _assemble_partition,
-        schema="region long, n_rings int, exterior array<array<double>>, area double",
-    )
-    return polys.join(F.broadcast(vals), "region")
-
-
-def _region_map_distributed(fused, value_col):
-    """Distributed twin of polygonize's driver finish, used above the
-    roster cap: half-edge cell keys resolve through the border roster
-    with an equi-join instead of a driver dict, components + dense
-    rank come from :func:`regions._distributed_region_map` (min-label
-    roots, roots sorted ascending — identical numbering to the driver
-    union-find), and per-region values aggregate distributed.
-
-    Returns ``(map_rel, vals_rel)``: (la, region) and
-    (region, value_col) relations, both label/region-scale — joined
-    by shuffle, not broadcast, which is the price of the degenerate
-    ~1-region-per-cell input."""
-    from xarray_spatial_spark.operators.regions import (
-        _distributed_region_map,
-    )
-
-    roster = fused.filter(F.col("kind") == 3).select(
-        F.col("la").alias("_cell"), F.col("lb").alias("_rlab"))
-    equiv = (
-        fused.filter(F.col("kind") == 0)
-        .select("la", F.col("lb").alias("_cell"))
-        .join(roster, "_cell")
-        .select("la", F.col("_rlab").alias("lb"))
-    )
-    meta = fused.filter(F.col("kind") == 2).select(
-        F.col("la").alias("_lab"), "v")
-    mapping = _distributed_region_map(
-        equiv, meta.select("_lab").distinct(), "_rd").persist()
-    map_rel = mapping.select(
-        F.col("_lab").alias("la"), F.col("_rd").cast("long").alias("region"))
-    vals_rel = (
-        meta.join(mapping, "_lab")
-        .groupBy(F.col("_rd").cast("long").alias("region"))
-        .agg(F.min("v").alias("_v"))
-        .select("region",
-                F.coalesce(F.col("_v"), F.lit(float("nan")))
-                .alias(value_col))
-    )
-    return map_rel, vals_rel
+    src = raster.select("y", "x", F.col(value_col).cast("double").alias(value_col),
+                        F.lit(1.0).alias(tl.PRESENT))
+    tdf = tl._tile(src, tile_h, tile_w, [value_col, tl.PRESENT], None)
+    labelled = regions_tiled(tdf, neighborhood, value_col, "region")
+    seg_schema = tl._arrow_schema_of(_SEG_SCHEMA)
+    segs = tl._select(labelled, [value_col, "region"]).mapInArrow(
+        lambda it: _segments(it, value_col, seg_schema), schema=_SEG_SCHEMA)
+    out_ddl = ("region long, n_rings int, exterior array<array<double>>, "
+               f"area double, {value_col} double")
+    out_schema = tl._arrow_schema_of(out_ddl)
+    return segs.repartition("region").mapInArrow(
+        lambda it: _assemble_partition(it, out_schema), schema=out_ddl)
